@@ -20,37 +20,8 @@ after the double→decimal cast's half-up tie diverged cross-engine.
 
 from __future__ import annotations
 
-import os as _os
-import time as _time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-import threading as _threading
-
-_ri_tls = _threading.local()
-
-
-def _tlog(label: str) -> None:
-    """Env-gated stage timer for the RI maintenance ops (measurement
-    aid, guide §1: attribute the op wall to its driver actions before
-    optimizing). No-op unless SPARK_GRAFT_RI_TRACE is set (read per
-    call, so tests/probes can toggle it). The previous-timestamp slot
-    is THREAD-LOCAL and every line also carries the absolute stamp:
-    the legs run on run_concurrent threads, and a single shared slot
-    interleaved deltas across threads into noise (r14 ADVICE)."""
-    if not _os.environ.get("SPARK_GRAFT_RI_TRACE"):
-        return
-    now = _time.time()
-    prev = getattr(_ri_tls, "t0", 0.0)
-    if prev:
-        print(
-            f"[ri-trace] {now % 1000:8.2f} +{now - prev:6.2f}s  {label}",
-            flush=True,
-        )
-    else:
-        print(f"[ri-trace] {now % 1000:8.2f}   start  {label}", flush=True)
-    _ri_tls.t0 = now
 
 
 def pagerank_fixed(
@@ -975,9 +946,7 @@ def hits_fixed(
     # audit); it exists for NON-ANSI sessions, where the overflowed
     # sum silently returns NULL instead.
     _ansi = (
-        str(
-            edges.sparkSession.conf.get("spark.sql.ansi.enabled", "true")
-        ).lower()
+        str(edges.sparkSession.conf.get("spark.sql.ansi.enabled")).lower()
         == "true"
     )
 
@@ -1106,6 +1075,31 @@ def _ri_bucket(cols, n_buckets: int):
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
 
+#: Each state component's bucket column and the keys it hashes.
+_RI_LAYOUT = {
+    "pairs": ("pair_bucket", ["a", "b"]),
+    "items": ("item_bucket", ["item"]),
+    "baskets": ("basket_bucket", ["basket"]),
+    "topk": ("item_bucket", ["item"]),
+}
+
+
+def _ri_bucketed(comp: str, frame: DataFrame, n_buckets: int) -> DataFrame:
+    bucket_col, keys = _RI_LAYOUT[comp]
+    return frame.withColumn(bucket_col, _ri_bucket(keys, n_buckets))
+
+
+def _ri_meta(spark, path: str) -> dict:
+    """The state's meta sidecar, format-checked."""
+    from data_lake_with_spark_spark.sources import cow
+
+    meta = cow.read_json(spark, _ri_meta_uri(path))
+    if meta is None:
+        raise FileNotFoundError(f"no ri_meta.json under {path!r}")
+    _ri_check_format(meta, path)
+    return meta
+
+
 def _ri_read(spark, path: str, component: str, meta: dict) -> DataFrame:
     """Read a state component via ``cow.read_component``, falling back
     to a typed EMPTY frame from the meta sidecar's schema when the
@@ -1228,17 +1222,20 @@ def build_related_items_state(
             .localCheckpoint(),
         ]
     )
-    pairs_w = pairs.withColumn("pair_bucket", _ri_bucket(["a", "b"], n_buckets))
-    items_w = n.withColumn("item_bucket", _ri_bucket(["item"], n_buckets))
-    baskets_w = b.withColumn(
-        "basket_bucket", _ri_bucket(["basket"], n_buckets)
-    )
-    topk_w = _related_topk(pairs, n, k, min_count).withColumn(
-        "item_bucket", _ri_bucket(["item"], n_buckets)
-    )
-    def _write(comp, frame, bucket_col):
+    framed = {
+        comp: _ri_bucketed(comp, frame, n_buckets)
+        for comp, frame in (
+            ("pairs", pairs),
+            ("items", n),
+            ("baskets", b),
+            ("topk", _related_topk(pairs, n, k, min_count)),
+        )
+    }
+
+    def _write(comp):
+        bucket_col = _RI_LAYOUT[comp][0]
         (
-            frame.repartition(n_buckets, bucket_col)
+            framed[comp].repartition(n_buckets, bucket_col)
             .write.mode("overwrite")
             .partitionBy(bucket_col)
             .parquet(f"{path}/{comp}")
@@ -1247,14 +1244,7 @@ def build_related_items_state(
     # the four component writes are independent (pairs/n are already
     # checkpointed, each write targets its own directory) — overlap
     # them so each job's task tail back-fills the others (guide §2.6)
-    run_concurrent(
-        [
-            lambda: _write("pairs", pairs_w, "pair_bucket"),
-            lambda: _write("items", items_w, "item_bucket"),
-            lambda: _write("baskets", baskets_w, "basket_bucket"),
-            lambda: _write("topk", topk_w, "item_bucket"),
-        ]
-    )
+    run_concurrent([lambda c=c: _write(c) for c in framed])
     cow.write_json(
         spark,
         _ri_meta_uri(path),
@@ -1266,15 +1256,7 @@ def build_related_items_state(
             # per-component schemas: a plain-layout component can be
             # legitimately EMPTY (floor nobody crosses), and an empty
             # partitioned write leaves no footer to infer from
-            "schemas": {
-                comp: frame.schema.json()
-                for comp, frame in (
-                    ("pairs", pairs_w),
-                    ("items", items_w),
-                    ("baskets", baskets_w),
-                    ("topk", topk_w),
-                )
-            },
+            "schemas": {comp: f.schema.json() for comp, f in framed.items()},
         },
     )
 
@@ -1333,13 +1315,9 @@ def related_items_health(spark, path: str) -> DataFrame:
     from data_lake_with_spark_spark.operators.similarity import (
         _resolve_index_path,
     )
-    from data_lake_with_spark_spark.sources import cow
 
     path = _resolve_index_path(spark, path)
-    meta = cow.read_json(spark, _ri_meta_uri(path))
-    if meta is None:
-        raise FileNotFoundError(f"no ri_meta.json under {path!r}")
-    _ri_check_format(meta, path)
+    meta = _ri_meta(spark, path)
     n_buckets = int(meta["n_buckets"])
     min_count = int(meta["min_count"])
 
@@ -1416,10 +1394,9 @@ def merge_related_items_state(
 ) -> dict:
     """Delta-update the related-items serving state with a batch of
     NEW baskets (the nightly order feed) — the q108
-    incremental-aggregate pattern applied to the pair-support state,
-    with the CoW promotion the index families use:
+    incremental-aggregate pattern applied to the pair-support state:
 
-    1. The batch's (basket, item) incidence dedups and self-joins into
+    1. The batch's (basket, item) incidence dedups and expands into
        delta pair supports — Σ C(|basket|, 2) rows, bounded by batch
        basket SIZE, never item popularity or history length; the full
        history is never re-paired.
@@ -1428,44 +1405,31 @@ def merge_related_items_state(
        of double-counting — replay the batch minus it, or rebuild).
     3. ``pairs`` / ``items`` / ``baskets`` update by summing deltas
        into EXACTLY the partitions the batch keys hash to (pure hash
-       functions — no scan locates them); every other partition
-       promotes by hard link or manifest entry.
+       functions — no scan locates them).
     4. The serving ``topk`` recomputes for AFFECTED items only:
        batch items (their n_item changed, rescoring every pair they
        touch) plus their pair partners (a partner's ranking sees the
-       changed score). Partner discovery is one column-pruned (a, b)
-       scan of the BASE pair state against the broadcast batch-item
-       set (sufficient: a brand-new pair's endpoints are both batch
-       items) — at 100 TB this is the batch's graph neighborhood,
-       not the catalog. Affected items' rows
-       rewrite within their hash buckets; unaffected items in the
-       same buckets carry verbatim; untouched buckets promote.
+       changed score) — at 100 TB the batch's graph neighborhood, not
+       the catalog. Unaffected items in the same buckets carry
+       verbatim.
 
     Served results are gated bit-identical to a from-scratch
     :func:`related_items` over the full history (q199's oracle is
     O_Q188 verbatim) — the floor/score/rank expressions are shared
     (:func:`_related_topk`), and the floor applies at derivation so
     pairs crossing ``min_count`` in this batch appear exactly as a
-    rebuild would have them. Returns the pairs-component promotion
-    stats plus ``affected_items``/``changed_topk_partitions``
-    counters."""
+    rebuild would have them. Every component commits through
+    ``sources.cow`` (fresh ``out_path``, ``layout`` ``"links"`` or
+    ``"manifest"``). Returns the pairs-component promotion stats plus
+    ``affected_items``/``changed_topk_partitions`` counters."""
     from data_lake_with_spark_spark.sources import cow
 
-    cow.assert_fresh_out("merge_related_items_state", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "pairs"):
-        raise ValueError(
-            "merge_related_items_state: base state uses a manifest "
-            "layout — pass layout='manifest' (nothing complete to "
-            "link from)"
-        )
-    meta = cow.read_json(spark, _ri_meta_uri(base_path))
-    if meta is None:
-        raise FileNotFoundError(f"no ri_meta.json under {base_path!r}")
-    _ri_check_format(meta, base_path)
-    k, min_count, n_buckets = meta["k"], meta["min_count"], meta["n_buckets"]
-
+    cow.check_target(
+        spark, "merge_related_items_state", base_path, out_path, layout,
+        "pairs",
+    )
+    meta = _ri_meta(spark, base_path)
+    n_buckets = meta["n_buckets"]
     nb = (
         new_baskets.select(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
@@ -1478,22 +1442,12 @@ def merge_related_items_state(
     # core's ledger leg; the replay probe itself runs as the core's
     # pre_write_check — concurrent with the (read-only) delta
     # materializations, strictly before any component write.
-    ch_baskets = sorted(
-        r["b"]
-        for r in nb.select(_ri_bucket(["basket"], n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
+    ch_baskets = cow.partition_values(nb, _ri_bucket(["basket"], n_buckets))
 
     def _replay_check():
-        bfilter = (
-            F.col("basket_bucket").isin(ch_baskets)
-            if ch_baskets
-            else F.lit(False)
-        )
         replayed = (
             _ri_read(spark, base_path, "baskets", meta)
-            .where(bfilter)
+            .where(cow.in_partitions("basket_bucket", ch_baskets))
             .join(nb.select("basket").distinct(), "basket", "left_semi")
         )
         if replayed.limit(1).count() > 0:
@@ -1535,14 +1489,13 @@ def delete_from_related_items_state(
     usually are.
 
     1. Victim incidence → NEGATIVE pair/item deltas through the same
-       per-basket self-join as the merge (Σ C(|basket|, 2) rows,
-       bounded by tombstone size, never history length).
+       pair expansion as the merge (Σ C(|basket|, 2) rows, bounded by
+       tombstone size, never history length).
     2. ``pairs`` / ``items`` subtract within exactly the victims'
        hash buckets; supports hitting zero DROP (the pair never
        co-occurred outside the erased baskets); a NEGATIVE result
        raises (state corruption — ledger-driven inversion can never
-       legitimately go below zero). Every other partition promotes by
-       hard link or manifest entry.
+       legitimately go below zero).
     3. The ledger drops the victims' rows; the serving ``topk``
        recomputes for affected items only (victim items plus their
        pair partners), through the shared :func:`_related_topk`
@@ -1570,34 +1523,20 @@ def delete_from_related_items_state(
     Returns the pairs promotion stats plus ``deleted_basket_rows``,
     ``requested_baskets``, ``matched_baskets``, ``affected_items``,
     ``changed_topk_partitions``."""
+    from data_lake_with_spark_spark.session import run_concurrent
     from data_lake_with_spark_spark.sources import cow
 
-    cow.assert_fresh_out(
-        "delete_from_related_items_state", base_path, out_path
+    cow.check_target(
+        spark, "delete_from_related_items_state", base_path, out_path,
+        layout, "pairs",
     )
-    if layout not in ("links", "manifest"):
-        raise ValueError(
-            f"layout must be 'links' or 'manifest', got {layout!r}"
-        )
-    if layout == "links" and cow.read_manifest(spark, base_path, "pairs"):
-        raise ValueError(
-            "delete_from_related_items_state: base state uses a "
-            "manifest layout — pass layout='manifest' (nothing "
-            "complete to link from)"
-        )
-    meta = cow.read_json(spark, _ri_meta_uri(base_path))
-    if meta is None:
-        raise FileNotFoundError(f"no ri_meta.json under {base_path!r}")
-    _ri_check_format(meta, base_path)
+    meta = _ri_meta(spark, base_path)
     n_buckets = meta["n_buckets"]
-
-    _tlog("del:start")
     ids = (
         basket_ids.select(F.col(basket_col).alias("basket"))
         .distinct()
         .localCheckpoint()
     )
-    _tlog("del:ids-ckpt")
     # ONE aggregate yields the victims' bucket list AND the
     # requested-coverage counter (two jobs before — r15 job-count fold)
     idrow = ids.agg(
@@ -1605,18 +1544,13 @@ def delete_from_related_items_state(
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     ch, requested = sorted(idrow["bk"]), int(idrow["n"])
-    _tlog("del:ch-collect")
-    bfilter = F.col("basket_bucket").isin(ch) if ch else F.lit(False)
     victims = (
         _ri_read(spark, base_path, "baskets", meta)
-        .where(bfilter)
+        .where(cow.in_partitions("basket_bucket", ch))
         .join(ids, "basket", "left_semi")
         .select("basket", "item")
         .localCheckpoint()
     )
-    _tlog("del:victims-ckpt")
-    from data_lake_with_spark_spark.session import run_concurrent
-
     # coverage counters (r12 ADVICE): requested vs actually-in-ledger,
     # so erasure pipelines can assert full coverage instead of
     # trusting idempotent success. The aggregate only reads the
@@ -1642,7 +1576,6 @@ def delete_from_related_items_state(
             ).collect()[0],
         ]
     )
-    _tlog("del:delta-core")
     stats["deleted_basket_rows"] = int(vrow["_rows"])
     stats["requested_baskets"] = requested
     stats["matched_baskets"] = int(vrow["_matched"])
@@ -1652,45 +1585,23 @@ def delete_from_related_items_state(
 def compact_related_items_state(spark, path: str, out_path: str) -> dict:
     """Collapse a related-items state (plain, link-promoted, or a
     MANIFEST epoch chain) into one self-contained plain layout at
-    ``out_path`` — the same vacuum/OPTIMIZE step as
-    ``compact_ivf_index``: after compaction the old epoch directories
-    are deletable (caller retires them once readers quiesce — or the
-    streaming ingest's ``vacuum_on_compact`` does it in-stream).
-    Serving from the compacted state is bit-identical by construction
-    (it rewrites the RESOLVED view of every component, meta sidecar
-    carried verbatim). NOTE the ledger is history-sized (the full
-    incidence), so a compact rewrites it whole — that is the
-    compaction cost every self-contained epoch pays, and why
+    ``out_path`` — the vacuum/OPTIMIZE step (``cow.compact``); the
+    meta sidecar carries verbatim. NOTE the ledger is history-sized
+    (the full incidence), so a compact rewrites it whole — that is
+    the compaction cost every self-contained epoch pays, and why
     ``compact_every`` is a cadence knob, not a per-batch step.
     Returns per-component compaction stats ``{component: stats}``
-    (r12 ADVICE: the ledger rewrite cost the docstring warns about is
-    visible in the ``baskets`` entry, not discarded)."""
+    (the ledger rewrite cost is visible in the ``baskets`` entry)."""
     from data_lake_with_spark_spark.sources import cow
 
-    meta = cow.read_json(spark, _ri_meta_uri(path))
-    if meta is None:
-        raise FileNotFoundError(f"no ri_meta.json under {path!r}")
-    _ri_check_format(meta, path)
-    from data_lake_with_spark_spark.session import run_concurrent
-
-    comps = (
-        ("pairs", "pair_bucket"),
-        ("items", "item_bucket"),
-        ("baskets", "basket_bucket"),
-        ("topk", "item_bucket"),
+    _ri_meta(spark, path)
+    return cow.compact(
+        spark,
+        path,
+        out_path,
+        {comp: bucket_col for comp, (bucket_col, _keys) in _RI_LAYOUT.items()},
+        sidecars=("ri_meta.json",),
     )
-    # independent resolved views, disjoint target dirs (guide §2.6)
-    results = run_concurrent(
-        [
-            lambda comp=comp, bc=bc: cow.compact_index_component(
-                spark, path, out_path, comp, bc
-            )
-            for comp, bc in comps
-        ]
-    )
-    stats = {comp: st for (comp, _bc), st in zip(comps, results)}
-    cow.write_json(spark, _ri_meta_uri(out_path), meta)
-    return stats
 
 
 def _apply_ri_state_delta(
@@ -1710,7 +1621,7 @@ def _apply_ri_state_delta(
     the tombstoned baskets' ledger incidence) — ONE implementation so
     "delete is the inverse of merge" holds by construction:
 
-    - signed pair/item deltas from the batch's per-basket self-join
+    - signed pair/item deltas from the batch's pair expansion
       (batch-sized, never history-sized);
     - supports sum into exactly the batch keys' hash buckets (full
       outer join against the bucket-pruned base); results ≤ 0 drop
@@ -1724,14 +1635,10 @@ def _apply_ri_state_delta(
       brand-new pair's endpoints both sit in the batch, so new pairs
       add no partners beyond batch items) — over the UPDATED
       neighborhood, through the shared :func:`_related_topk`
-      expressions; unaffected rows carry verbatim, untouched buckets
-      promote by link or manifest entry.
+      expressions; unaffected rows carry verbatim.
 
-    Execution shape (r15: the op's wall at bench scale was JOB COUNT —
-    90 driver-issued jobs for the GDPR delete at ~150 ms fixed cost
-    each, and the driver's 8-vs-32-core ratios of 0.7–1.0 proved the
-    pool was never the limit): TWO dependency phases, each a
-    ``run_concurrent`` batch —
+    Execution shape: TWO dependency phases, each a ``run_concurrent``
+    batch —
 
     A. everything that READS: per-component chains (batch delta →
        changed-bucket collect → summed component, CHECKPOINTED, with
@@ -1739,51 +1646,58 @@ def _apply_ri_state_delta(
        affected-neighborhood discovery, and the caller's
        ``pre_write_check`` (merge replay validation). A
        detected-corrupt state therefore raises BEFORE any component
-       write starts (r14 ADVICE: the raise used to happen inside one
-       concurrent leg while sibling legs completed their writes).
-    B. all FOUR component writes concurrently — the topk recompute
-       consumes the phase-A checkpoints (summed changed buckets ∪
-       base unchanged buckets — row-identical to the files the
-       sibling legs are writing) instead of re-reading ``out_path``,
-       which removes the write→recompute barrier that serialized the
-       op's two most expensive legs.
+       write starts.
+    B. all FOUR component commits concurrently — the topk recompute
+       reads the updated view as (base rows outside the changed
+       buckets) ∪ (the checkpointed summed rows), row-identical to
+       the files the sibling legs are writing, so it carries no
+       dependency on those writes. An empty changed set means ALL
+       base rows.
 
-    Scalar actions are FOLDED: the affected-item count and its bucket
-    list come from one aggregate; callers pass ``ch_baskets`` (the
-    ledger buckets they already collected — the merge's replay check
-    and the delete's victim probe need the same list) so the ledger
-    leg re-collects nothing. For the delete path ``ch_baskets`` may be
-    a SUPERSET (the requested ids' buckets — ids absent from the
-    ledger contribute a bucket with no victim rows): the anti-join
-    rewrites such a bucket byte-identical instead of promoting it,
-    which is correct either way and free in the common
-    all-ids-matched case."""
+    Callers pass ``ch_baskets`` (the ledger buckets they already
+    collected — the merge's replay check and the delete's victim
+    probe need the same list) so the ledger leg re-collects nothing.
+    For the delete path ``ch_baskets`` may be a SUPERSET (the
+    requested ids' buckets — ids absent from the ledger contribute a
+    bucket with no victim rows): the anti-join rewrites such a bucket
+    byte-identical instead of promoting it, which is correct either
+    way and free in the common all-ids-matched case."""
     from data_lake_with_spark_spark.session import run_concurrent
     from data_lake_with_spark_spark.sources import cow
 
     k, min_count, n_buckets = meta["k"], meta["min_count"], meta["n_buckets"]
     s = F.lit(int(sign)).cast("bigint")
 
-    # --- phase 1: deltas + read-only discovery + caller validation ---
-    def _mk_d_pairs():
-        out = (
-            _pair_supports(nb)
+    def _summed(comp, count_col, delta):
+        """(changed buckets, checkpointed base ⊕ delta over them)."""
+        bucket_col, keys = _RI_LAYOUT[comp]
+        delta = delta.localCheckpoint()
+        ch = cow.partition_values(delta, _ri_bucket(keys, n_buckets))
+        summed = (
+            _ri_read(spark, base_path, comp, meta)
+            .where(cow.in_partitions(bucket_col, ch))
+            .select(*keys, count_col)
+            .join(delta, keys, "full")
             .select(
-                "a", "b", (s * F.col("n_ab")).cast("bigint").alias("d_ab")
+                *keys,
+                (
+                    F.coalesce(F.col(count_col), F.lit(0))
+                    + F.coalesce(F.col("_d"), F.lit(0))
+                ).cast("bigint").alias(count_col),
             )
             .localCheckpoint()
         )
-        _tlog("core:d-pairs")
-        return out
-
-    def _mk_d_items():
-        out = (
-            nb.groupBy("item")
-            .agg((s * F.count(F.lit(1))).cast("bigint").alias("d_item"))
-            .localCheckpoint()
-        )
-        _tlog("core:d-items")
-        return out
+        # integrity gate on the subtract path only (positive deltas
+        # can't go negative), on the exact frame that will be written
+        if sign < 0 and summed.where(F.col(count_col) < 0).limit(1).count():
+            raise ValueError(
+                f"_apply_ri_state_delta: a {comp} count went NEGATIVE — "
+                "the subtracted deltas exceed the stored aggregate, "
+                "which a ledger-driven inversion can never legitimately "
+                "do; the state is corrupt (or the ledger was edited "
+                "out-of-band) — rebuild from the source history"
+            )
+        return ch, summed.where(F.col(count_col) > 0)
 
     def _affected_leg():
         batch_items = nb.select("item").distinct()
@@ -1814,181 +1728,62 @@ def _apply_ri_state_delta(
             batch_items.unionByName(partners).distinct().localCheckpoint()
         )
         # ONE aggregate job yields both the changed-bucket list and the
-        # affected count the stats need (two collects before)
+        # affected count the stats need
         row = affected.agg(
             F.collect_set(_ri_bucket(["item"], n_buckets)).alias("bk"),
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
-        _tlog("core:affected-leg")
         return affected, sorted(row["bk"]), int(row["n"])
 
-    # --- phase A: everything that READS — per-thread chains (delta →
-    # changed buckets → summed component + sign<0 integrity gate), the
-    # affected-neighborhood discovery, and the caller's validation.
-    # The summed frames are checkpointed on BOTH signs: the gate (when
-    # present) must probe a materialized frame, the component write
-    # consumes it, and the topk leg re-reads it IN MEMORY instead of
-    # re-reading the just-written files — which is what lets phase B
-    # run the topk recompute concurrently with the component writes.
-    def _sum_pairs():
-        d_pairs = _mk_d_pairs()
-        ch_pairs = sorted(
-            r["b"]
-            for r in d_pairs.select(
-                _ri_bucket(["a", "b"], n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        pfilter = (
-            F.col("pair_bucket").isin(ch_pairs)
-            if ch_pairs
-            else F.lit(False)
-        )
-        base_pairs = (
-            _ri_read(spark, base_path, "pairs", meta)
-            .where(pfilter)
-            .select("a", "b", "n_ab")
-        )
-        summed_pairs = base_pairs.join(d_pairs, ["a", "b"], "full").select(
-            "a",
-            "b",
-            (
-                F.coalesce(F.col("n_ab"), F.lit(0))
-                + F.coalesce(F.col("d_ab"), F.lit(0))
-            ).cast("bigint").alias("n_ab"),
-        ).localCheckpoint()
-        if sign < 0:
-            # integrity gate on the subtract path only (positive
-            # deltas can't go negative); the probe scans the
-            # checkpointed frame — the exact frame that will be
-            # written — BEFORE any component write starts
-            if summed_pairs.where(F.col("n_ab") < 0).limit(1).count() > 0:
-                raise ValueError(
-                    "_apply_ri_state_delta: a pair support went NEGATIVE "
-                    "— the subtracted deltas exceed the stored aggregate, "
-                    "which a ledger-driven inversion can never "
-                    "legitimately do; the state is corrupt (or the ledger "
-                    "was edited out-of-band) — rebuild from the source "
-                    "history"
-                )
-        _tlog("core:sum-pairs")
-        return ch_pairs, summed_pairs
-
-    def _sum_items():
-        d_items = _mk_d_items()
-        ch_items = sorted(
-            r["b"]
-            for r in d_items.select(
-                _ri_bucket(["item"], n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        ifilter = (
-            F.col("item_bucket").isin(ch_items)
-            if ch_items
-            else F.lit(False)
-        )
-        summed_items = (
-            _ri_read(spark, base_path, "items", meta)
-            .where(ifilter)
-            .select("item", "n_item")
-            .join(d_items, "item", "full")
-            .select(
-                "item",
-                (
-                    F.coalesce(F.col("n_item"), F.lit(0))
-                    + F.coalesce(F.col("d_item"), F.lit(0))
-                ).cast("bigint").alias("n_item"),
-            )
-            .localCheckpoint()
-        )
-        if sign < 0:
-            if summed_items.where(F.col("n_item") < 0).limit(1).count() > 0:
-                raise ValueError(
-                    "_apply_ri_state_delta: an item count went NEGATIVE — "
-                    "see the pair-support message; rebuild from the "
-                    "source history"
-                )
-        _tlog("core:sum-items")
-        return ch_items, summed_items
-
-    phase_a = [_sum_pairs, _sum_items, _affected_leg]
+    phase_a = [
+        lambda: _summed(
+            "pairs",
+            "n_ab",
+            _pair_supports(nb).select(
+                "a", "b", (s * F.col("n_ab")).cast("bigint").alias("_d")
+            ),
+        ),
+        lambda: _summed(
+            "items",
+            "n_item",
+            nb.groupBy("item").agg(
+                (s * F.count(F.lit(1))).cast("bigint").alias("_d")
+            ),
+        ),
+        _affected_leg,
+    ]
     if pre_write_check is not None:
         phase_a.append(pre_write_check)
     (
-        (ch_pairs, summed_pairs),
-        (ch_items, summed_items),
+        (ch_pairs, upd_pairs),
+        (ch_items, upd_items),
         (affected, ch_topk, n_affected),
     ) = run_concurrent(phase_a)[:3]
     if ch_baskets is None:
-        ch_baskets = sorted(
-            r["b"]
-            for r in nb.select(
-                _ri_bucket(["basket"], n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
+        ch_baskets = cow.partition_values(
+            nb, _ri_bucket(["basket"], n_buckets)
         )
-    _tlog("core:phaseA-barrier")
 
-    # --- phase B: the four component writes, ALL concurrent — the
-    # topk recompute consumes the checkpointed summed frames, not the
-    # files the sibling legs are writing, so nothing here depends on
-    # anything else here
-    def _pairs_leg():
-        upd_pairs = summed_pairs.where(F.col("n_ab") > 0).withColumn(
-            "pair_bucket", _ri_bucket(["a", "b"], n_buckets)
+    def _commit(comp, frame, ch):
+        return cow.commit(
+            spark, _ri_bucketed(comp, frame, n_buckets), base_path,
+            out_path, layout, comp, _RI_LAYOUT[comp][0], ch,
         )
-        (
-            upd_pairs.repartition(max(1, len(ch_pairs)), "pair_bucket")
-            .write.mode("overwrite")
-            .partitionBy("pair_bucket")
-            .parquet(f"{out_path}/pairs")
-        )
-        if layout == "manifest":
-            st = cow.promote_via_manifest(
-                spark, base_path, out_path, "pairs", "pair_bucket", ch_pairs
-            )
-        else:
-            st = cow.promote_unchanged_partitions(
-                spark, f"{base_path}/pairs", f"{out_path}/pairs",
-                "pair_bucket", ch_pairs,
-            )
-        _tlog("core:pairs-leg")
-        return st
 
-    def _items_leg():
-        upd_items = summed_items.where(F.col("n_item") > 0).withColumn(
-            "item_bucket", _ri_bucket(["item"], n_buckets)
+    def _updated(comp, rows, ch):
+        """Post-batch view of a support component: base rows outside
+        the changed buckets ∪ the rewritten rows."""
+        return (
+            _ri_read(spark, base_path, comp, meta)
+            .where(~cow.in_partitions(_RI_LAYOUT[comp][0], ch))
+            .select(*rows.columns)
+            .unionByName(rows)
         )
-        (
-            upd_items.repartition(max(1, len(ch_items)), "item_bucket")
-            .write.mode("overwrite")
-            .partitionBy("item_bucket")
-            .parquet(f"{out_path}/items")
-        )
-        if layout == "manifest":
-            cow.promote_via_manifest(
-                spark, base_path, out_path, "items", "item_bucket", ch_items
-            )
-        else:
-            cow.promote_unchanged_partitions(
-                spark, f"{base_path}/items", f"{out_path}/items",
-                "item_bucket", ch_items,
-            )
-        _tlog("core:items-leg")
 
     def _baskets_leg():
-        bfilter = (
-            F.col("basket_bucket").isin(ch_baskets)
-            if ch_baskets
-            else F.lit(False)
-        )
         base_led = (
             _ri_read(spark, base_path, "baskets", meta)
-            .where(bfilter)
+            .where(cow.in_partitions("basket_bucket", ch_baskets))
             .select("basket", "item")
         )
         if sign > 0:
@@ -1997,56 +1792,9 @@ def _apply_ri_state_delta(
             upd_baskets = base_led.join(
                 nb.select("basket").distinct(), "basket", "left_anti"
             )
-        upd_baskets = upd_baskets.withColumn(
-            "basket_bucket", _ri_bucket(["basket"], n_buckets)
-        )
-        (
-            upd_baskets.repartition(
-                max(1, len(ch_baskets)), "basket_bucket"
-            )
-            .write.mode("overwrite")
-            .partitionBy("basket_bucket")
-            .parquet(f"{out_path}/baskets")
-        )
-        if layout == "manifest":
-            cow.promote_via_manifest(
-                spark, base_path, out_path, "baskets", "basket_bucket",
-                ch_baskets,
-            )
-        else:
-            cow.promote_unchanged_partitions(
-                spark, f"{base_path}/baskets", f"{out_path}/baskets",
-                "basket_bucket", ch_baskets,
-            )
-        _tlog("core:baskets-leg")
+        _commit("baskets", upd_baskets, ch_baskets)
 
     def _topk_leg():
-        # recompute affected items only, over the UPDATED pairs/items —
-        # reconstructed as (checkpointed summed changed buckets) ∪
-        # (base unchanged buckets), which is row-identical to reading
-        # the files the sibling legs are writing (written = the summed
-        # frames; promoted = the base's unchanged buckets) but carries
-        # no dependency on those writes, so this leg overlaps them.
-        upd_pairs_full = summed_pairs.where(F.col("n_ab") > 0).select(
-            "a", "b", "n_ab"
-        )
-        if ch_pairs:
-            upd_pairs_full = (
-                _ri_read(spark, base_path, "pairs", meta)
-                .where(~F.col("pair_bucket").isin(ch_pairs))
-                .select("a", "b", "n_ab")
-                .unionByName(upd_pairs_full)
-            )
-        upd_items_full = summed_items.where(F.col("n_item") > 0).select(
-            "item", "n_item"
-        )
-        if ch_items:
-            upd_items_full = (
-                _ri_read(spark, base_path, "items", meta)
-                .where(~F.col("item_bucket").isin(ch_items))
-                .select("item", "n_item")
-                .unionByName(upd_items_full)
-            )
         # pre-filter the pair state to the affected NEIGHBORHOOD before
         # the scoring tail (a broadcast membership probe on both
         # endpoints): the recompute's join/window input is then
@@ -2063,7 +1811,8 @@ def _apply_ri_state_delta(
             )
         )
         pairs_near = (
-            upd_pairs_full.join(aff_a, "a", "left")
+            _updated("pairs", upd_pairs, ch_pairs)
+            .join(aff_a, "a", "left")
             .join(aff_b, "b", "left")
             .where(F.col("_fa").isNotNull() | F.col("_fb").isNotNull())
             .select("a", "b", "n_ab")
@@ -2078,50 +1827,30 @@ def _apply_ri_state_delta(
             .unionByName(pairs_near.select(F.col("b").alias("item")))
             .distinct()
         )
-        items_near = upd_items_full.join(endpoints, "item", "left_semi")
-        fresh = _related_topk(
-            pairs_near,
-            items_near,
-            k,
-            min_count,
-            restrict=affected,
+        items_near = _updated("items", upd_items, ch_items).join(
+            endpoints, "item", "left_semi"
         )
-        tfilter = (
-            F.col("item_bucket").isin(ch_topk) if ch_topk else F.lit(False)
+        fresh = _related_topk(
+            pairs_near, items_near, k, min_count, restrict=affected
         )
         carried_topk = (
             _ri_read(spark, base_path, "topk", meta)
-            .where(tfilter)
+            .where(cow.in_partitions("item_bucket", ch_topk))
             .select("item", "other", "n_ab", "score", "rank")
             .join(affected, "item", "left_anti")
         )
-        (
-            carried_topk.unionByName(fresh)
-            .withColumn("item_bucket", _ri_bucket(["item"], n_buckets))
-            .repartition(max(1, len(ch_topk)), "item_bucket")
-            .write.mode("overwrite")
-            .partitionBy("item_bucket")
-            .parquet(f"{out_path}/topk")
-        )
-        if layout == "manifest":
-            cow.promote_via_manifest(
-                spark, base_path, out_path, "topk", "item_bucket", ch_topk
-            )
-        else:
-            cow.promote_unchanged_partitions(
-                spark, f"{base_path}/topk", f"{out_path}/topk",
-                "item_bucket", ch_topk,
-            )
-        _tlog("core:topk-leg")
+        _commit("topk", carried_topk.unionByName(fresh), ch_topk)
 
     stats, _, _, _ = run_concurrent(
-        [_pairs_leg, _items_leg, _baskets_leg, _topk_leg]
+        [
+            lambda: _commit("pairs", upd_pairs, ch_pairs),
+            lambda: _commit("items", upd_items, ch_items),
+            _baskets_leg,
+            _topk_leg,
+        ]
     )
-    _tlog("core:legs-barrier")
     cow.write_json(spark, _ri_meta_uri(out_path), meta)
     stats = dict(stats)
-    # folded into the phase-1 aggregate — no extra count job here
     stats["affected_items"] = n_affected
     stats["changed_topk_partitions"] = ch_topk
-    _tlog("core:stats")
     return stats

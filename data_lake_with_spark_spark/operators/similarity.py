@@ -730,6 +730,35 @@ def _ivf_meta_uri(path: str) -> str:
     return f"{path}/ivf_meta.json"
 
 
+def _ivf_assign(
+    df: DataFrame,
+    cents: DataFrame,
+    id_col: str,
+    vec_col: str,
+    vec_dim: int | None,
+) -> DataFrame:
+    """``(cent_id, id, vec)``: each vector's nearest centroid by 6-dp
+    cosine, cent_id-asc tiebreak — the one assignment kernel of the
+    IVF build and merge. With ``vec_dim`` it runs the Arrow argmax
+    (no corpus-wide window shuffle; bit-identical, see
+    :func:`_assign_argmax_arrow`)."""
+    df = df.select(id_col, vec_col)
+    if vec_dim is not None:
+        return _assign_argmax_arrow(df, cents, vec_col, vec_dim).select(
+            "cent_id", id_col, vec_col
+        )
+    w_assign = Window.partitionBy(id_col).orderBy(
+        F.col("cos_c").desc(), F.col("cent_id").asc()
+    )
+    return (
+        df.crossJoin(F.broadcast(cents))
+        .withColumn("cos_c", F.round(cosine_expr(vec_col, "cent_v"), 6))
+        .withColumn("_rn", F.row_number().over(w_assign))
+        .where(F.col("_rn") == 1)
+        .select("cent_id", id_col, vec_col)
+    )
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -755,25 +784,7 @@ def build_ivf_index(
     cents = corpus.where((F.col(id_col) % centroid_mod) == 0).select(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_v")
     )
-    if vec_dim is None:
-        w_assign = Window.partitionBy(id_col).orderBy(
-            F.col("cos_c").desc(), F.col("cent_id").asc()
-        )
-        assigned = (
-            corpus.select(id_col, vec_col)
-            .crossJoin(F.broadcast(cents))
-            .withColumn("cos_c", F.round(cosine_expr(vec_col, "cent_v"), 6))
-            .withColumn("_rn", F.row_number().over(w_assign))
-            .where(F.col("_rn") == 1)
-            .select("cent_id", id_col, vec_col)
-        )
-    else:
-        # production path: Arrow-kernel argmax (no corpus-wide window
-        # shuffle in the build; bit-identical assignment — see
-        # _assign_argmax_arrow)
-        assigned = _assign_argmax_arrow(
-            corpus.select(id_col, vec_col), cents, vec_col, vec_dim
-        ).select("cent_id", id_col, vec_col)
+    assigned = _ivf_assign(corpus, cents, id_col, vec_col, vec_dim)
     from data_lake_with_spark_spark.session import run_concurrent
 
     # keyed by the partition column with pool-scaled task count: ONE
@@ -827,18 +838,16 @@ def merge_ivf_index(
     layout: str = "links",
 ) -> dict:
     """Incremental IVF index maintenance — the dense-side twin of
-    :func:`text.merge_bm25_index`, completing the persisted-index
-    lifecycle: merge an embedding batch into an existing
-    :func:`build_ivf_index` layout with UPSERT semantics (batch ids
-    already in the index replace their old list entries — re-ingests
-    never double-count; fresh ids append). At 100 TB an embedding
-    corpus re-ingests daily; "rebuild the whole index" is not a plan.
+    :func:`text.merge_bm25_index`: merge an embedding batch into an
+    existing :func:`build_ivf_index` layout with UPSERT semantics
+    (batch ids already in the index replace their old list entries —
+    re-ingests never double-count; fresh ids append).
 
     Centroids are CARRIED VERBATIM from the base index, never
     re-chosen — the frozen-coarse-quantizer contract every IVF system
     shares (FAISS ``add`` does not retrain): batch vectors assign
     against the base centroid matrix through the SAME argmax kernel
-    as the builder, so a merged index is bit-identical to a
+    as the build, so a merged index is bit-identical to a
     from-scratch build over the merged corpus with the same centroid
     set (the q171 gate, applied to the dense side). Replacing a
     CENTROID-SOURCE vector would silently leave the frozen centroid
@@ -847,48 +856,16 @@ def merge_ivf_index(
     batch-sized, not corpus-sized) raises on that instead of
     diverging.
 
-    Cost — incremental in I/O as well as compute (copy-on-write
-    promotion): one assignment pass over the BATCH (never the
-    corpus), one COLUMN-PRUNED ``(cent_id, id)`` scan of the base
-    lists to locate partitions holding replaced ids (two narrow
-    columns — doclens-scale bytes, not vector bytes), then a
-    partitioned Spark write of ONLY the changed ``cent_id=``
-    partitions (those receiving batch vectors ∪ those losing a
-    replaced id). Every unchanged partition directory — byte-identical
-    to the base by construction — is promoted into ``out_path`` by
-    hard link (copy fallback; Hadoop ``FileUtil`` copy on non-local
-    schemes), and the frozen ``centroids`` component is linked whole.
-    Bytes written therefore scale with the batch's partition
-    footprint, not the corpus (asserted by tests via
-    ``sources.cow.written_bytes``). ``out_path`` must be FRESH (the
-    merge reads the base lazily while writing — enforced); promotion
-    into a fresh directory also makes the swap atomic at directory
-    granularity. Returns the promotion stats dict.
-
-    ``layout="manifest"`` promotes by METADATA instead of links —
-    the object-store path (S3 has no link primitive; the FileUtil
-    fallback would copy corpus bytes): only the changed partitions
-    and a small JSON manifest are written; unchanged partitions keep
-    their earlier-epoch owners and readers resolve through
-    ``cow.read_component``. A manifest base REQUIRES manifest
-    promotion (its partitions live across epochs — there is nothing
-    complete to link from); enforced with a raise.
+    Only the BATCH is assigned. The changed ``cent_id=`` partitions
+    (those receiving batch vectors ∪ those losing a replaced id,
+    found by a column-pruned ``(cent_id, id)`` scan) commit through
+    ``sources.cow``: ``out_path`` must be fresh, ``layout`` is
+    ``"links"`` or ``"manifest"``. Returns the promotion stats dict.
     """
+    from data_lake_with_spark_spark.session import run_concurrent
     from data_lake_with_spark_spark.sources import cow
 
-    # normalized-URI compare: catches base == out spelled as the same
-    # remote URI with different formatting, not just local paths
-    cow.assert_fresh_out("merge_ivf_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "lists"):
-        raise ValueError(
-            "merge_ivf_index: base index uses a manifest layout — its "
-            "partitions live across epochs, so there is no complete "
-            "directory to link from; pass layout='manifest'"
-        )
-    from data_lake_with_spark_spark.session import run_concurrent
-
+    _vec_target(spark, "ivf", "merge_ivf_index", base_path, out_path, layout)
     cents = cow.read_component(spark, base_path, "centroids")
     new_ids = new_vecs.select(F.col(id_col)).distinct()
 
@@ -909,107 +886,115 @@ def merge_ivf_index(
             )
 
     def _assign():
-        batch = new_vecs.select(id_col, vec_col)
-        if vec_dim is None:
-            w_assign = Window.partitionBy(id_col).orderBy(
-                F.col("cos_c").desc(), F.col("cent_id").asc()
-            )
-            a = (
-                batch.crossJoin(F.broadcast(cents))
-                .withColumn(
-                    "cos_c", F.round(cosine_expr(vec_col, "cent_v"), 6)
-                )
-                .withColumn("_rn", F.row_number().over(w_assign))
-                .where(F.col("_rn") == 1)
-                .select("cent_id", id_col, vec_col)
-            )
-        else:
-            a = _assign_argmax_arrow(batch, cents, vec_col, vec_dim).select(
-                "cent_id", id_col, vec_col
-            )
-        # pinned: consumed twice (changed-set collect + the write) —
-        # and the collect is size-gated by the frozen centroid budget
-        # (one row per touched centroid, ≤ n_centroids); the collect
-        # rides the same thread so the barrier returns finished sets
+        # pinned: consumed twice (changed-set collect + the write); the
+        # collect rides the same thread so the barrier returns
+        # finished sets
+        a = _ivf_assign(new_vecs, cents, id_col, vec_col, vec_dim)
         a = a.localCheckpoint()
-        new = {
-            r["cent_id"]
-            for r in a.select("cent_id").distinct().collect()
-        }
-        return a, new
+        return a, cow.partition_values(a, "cent_id")
 
-    def _changed_old():
-        # partitions that lose a replaced id: column-pruned scan of
-        # the base lists' (cent_id, id) projection — never the vector
-        # column
-        return {
-            r["cent_id"]
-            for r in cow.read_component(spark, base_path, "lists")
-            .select("cent_id", id_col)
-            .join(new_ids, id_col, "left_semi")
-            .select("cent_id")
-            .distinct()
-            .collect()
-        }
-
-    # the CHEAP stale-centroid check runs FIRST (one bucket-pruned
-    # probe against the broadcast-small centroid frame): a failed
-    # validation must not leave the full assignment job's checkpoint
-    # RDDs persisted nor pay for it at all (r14 ADVICE). The two
-    # remaining prep legs are independent reads — overlap them
-    # (guide §2.6); the write stays sequential.
+    # the CHEAP stale-centroid check runs FIRST: a failed validation
+    # must not pay for (or leave persisted) the assignment checkpoint.
+    # The two remaining prep legs are independent reads — overlap
+    # them (guide §2.6)
     _validate()
     (assigned, changed_new), changed_old = run_concurrent(
-        [_assign, _changed_old]
+        [
+            _assign,
+            lambda: cow.partitions_holding(
+                spark, base_path, "lists", "cent_id", new_ids, id_col
+            ),
+        ]
     )
-    changed = sorted(changed_new | changed_old)
-    part_filter = (
-        F.col("cent_id").isin(changed) if changed else F.lit(False)
-    )
+    changed = sorted(set(changed_new) | set(changed_old))
     base_keep = (
         cow.read_component(spark, base_path, "lists")
-        .where(part_filter)
+        .where(cow.in_partitions("cent_id", changed))
         .select("cent_id", id_col, vec_col)
         .join(new_ids, id_col, "left_anti")
     )
-    merged = base_keep.unionByName(assigned)
-    # keyed by the partition column with pool-scaled task count: ONE
-    # file per touched cell (an unkeyed write emits one file per
-    # upstream partition per cell) and leaf-dir creation parallelizes
-    # (see build_ivfpq_index's codes write)
-    par = (
-        max(len(changed), spark.sparkContext.defaultParallelism)
-        if changed
-        else 1
+    return _vec_commit(
+        spark, "ivf", base_keep.unionByName(assigned), base_path, out_path,
+        layout, changed,
     )
-    merged.repartition(par, "cent_id").write.mode("overwrite").partitionBy(
-        "cent_id"
-    ).parquet(f"{out_path}/lists")
-    _carry_ivf_meta(spark, base_path, out_path)
-    if layout == "manifest":
-        stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "lists", "cent_id", changed
-        )
-        cow.promote_whole_ref(spark, base_path, out_path, "centroids")
-        return stats
-    stats = cow.promote_unchanged_partitions(
-        spark, f"{base_path}/lists", f"{out_path}/lists", "cent_id", changed
-    )
-    cow.promote_dir(
-        spark, f"{base_path}/centroids", f"{out_path}/centroids"
-    )
-    return stats
 
 
-def _carry_ivf_meta(spark, base_path: str, out_path: str) -> None:
-    """Carry the IVF meta sidecar (the stamped centroid_mod) through a
-    maintenance op — tolerant of pre-meta layouts (key absent → the
-    ingest falls back to its constructor parameter)."""
+#: Commit layout of the three vector families: the partitioned
+#: component, its partition columns (the first is the copy-on-write
+#: unit), the frozen whole components, the meta sidecar, and whether
+#: maintenance requires that sidecar (pre-sidecar IVF layouts have
+#: none).
+_VEC_LAYOUT = {
+    "ivf": ("lists", ["cent_id"], ("centroids",), "ivf_meta.json", False),
+    "pq": ("codes", ["id_bucket"], ("codebooks",), "pq_meta.json", True),
+    "ivfpq": (
+        "codes",
+        ["id_bucket", "cent_id"],
+        ("centroids", "codebooks"),
+        "ivfpq_meta.json",
+        True,
+    ),
+}
+
+
+def _vec_target(spark, family, op, base_path, out_path, layout):
+    """Check the commit target and return the base's meta sidecar."""
     from data_lake_with_spark_spark.sources import cow
 
-    meta = cow.read_json(spark, _ivf_meta_uri(base_path))
-    if meta is not None:
-        cow.write_json(spark, _ivf_meta_uri(out_path), meta)
+    comp, _cols, _frozen, meta_name, required = _VEC_LAYOUT[family]
+    cow.check_target(spark, op, base_path, out_path, layout, comp)
+    meta = cow.read_json(spark, f"{base_path}/{meta_name}")
+    if meta is None and required:
+        raise FileNotFoundError(f"no {meta_name} under {base_path!r}")
+    return meta
+
+
+def _vec_commit(spark, family, rows, base_path, out_path, layout, changed):
+    """Write ``rows`` as the changed partitions and promote the rest."""
+    from data_lake_with_spark_spark.sources import cow
+
+    comp, cols, frozen, meta_name, _required = _VEC_LAYOUT[family]
+    return cow.commit(
+        spark, rows, base_path, out_path, layout, comp, cols, changed,
+        frozen=frozen, sidecars=(meta_name,),
+    )
+
+
+def _delete_vectors(
+    spark, family, op, base_path, delete_ids, out_path, id_col, layout
+) -> dict:
+    """The delete body shared by IVF, PQ and IVFPQ: a column-pruned
+    ``(partition, id)`` scan finds the partitions that actually hold a
+    deleted id (an absent id's partition is NOT rewritten); only those
+    are anti-joined and rewritten, and a partition whose rows all die
+    vanishes from the layout."""
+    from data_lake_with_spark_spark.sources import cow
+
+    _vec_target(spark, family, op, base_path, out_path, layout)
+    comp, cols = _VEC_LAYOUT[family][:2]
+    ids = delete_ids.select(F.col(id_col)).distinct()
+    changed = cow.partitions_holding(
+        spark, base_path, comp, cols[0], ids, id_col
+    )
+    kept = (
+        cow.read_component(spark, base_path, comp)
+        .where(cow.in_partitions(cols[0], changed))
+        .join(ids, id_col, "left_anti")
+    )
+    return _vec_commit(
+        spark, family, kept, base_path, out_path, layout, changed
+    )
+
+
+def _compact_vectors(spark, family, index_path: str, out_path: str) -> dict:
+    from data_lake_with_spark_spark.sources import cow
+
+    comp, cols, frozen, meta_name, _required = _VEC_LAYOUT[family]
+    stats = cow.compact(
+        spark, index_path, out_path, {comp: cols, **dict.fromkeys(frozen)},
+        sidecars=(meta_name,),
+    )
+    return stats[comp]
 
 
 def delete_from_ivf_index(
@@ -1029,20 +1014,9 @@ def delete_from_ivf_index(
     keeps the centroid as a geometric anchor — the FAISS
     ``remove_ids`` contract; re-train to move centroids).
     Serve-after-delete is gated identical to an index rebuilt without
-    the ids over the same centroid set.
-
-    Cost — incremental in I/O (copy-on-write promotion, the
-    :func:`merge_ivf_index` contract): one column-pruned
-    ``(cent_id, id)`` scan locates the partitions containing deleted
-    ids; ONLY those are anti-joined and rewritten (a partition whose
-    rows all die simply vanishes from the layout); every other
-    ``cent_id=`` directory and the frozen ``centroids`` component are
-    hard-linked from the base. Bytes written scale with the deleted
-    ids' partition footprint, not the corpus. ``out_path`` must be
-    FRESH, as with :func:`merge_ivf_index`. Returns the promotion
-    stats dict. ``layout="manifest"`` promotes by metadata (the
-    object-store path — see :func:`merge_ivf_index`); a manifest
-    base requires it.
+    the ids over the same centroid set. Only the ``cent_id=``
+    partitions holding a deleted id are rewritten. Returns the
+    promotion stats dict.
 
     GDPR retention caveat (manifest layout): erasure is POINTER-LEVEL
     until compaction — the deleted ids' vectors physically remain in
@@ -1056,85 +1030,20 @@ def delete_from_ivf_index(
     full delete → compact → vacuum sequence (composed and gated in
     tests/test_gdpr_pipeline.py).
     """
-    from data_lake_with_spark_spark.sources import cow
-
-    cow.assert_fresh_out("delete_from_ivf_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "lists"):
-        raise ValueError(
-            "delete_from_ivf_index: base index uses a manifest layout "
-            "— pass layout='manifest' (nothing complete to link from)"
-        )
-    ids = delete_ids.select(F.col(id_col)).distinct()
-    changed = sorted(
-        r["cent_id"]
-        for r in cow.read_component(spark, base_path, "lists")
-        .select("cent_id", id_col)
-        .join(ids, id_col, "left_semi")
-        .select("cent_id")
-        .distinct()
-        .collect()
+    return _delete_vectors(
+        spark, "ivf", "delete_from_ivf_index", base_path, delete_ids,
+        out_path, id_col, layout,
     )
-    part_filter = (
-        F.col("cent_id").isin(changed) if changed else F.lit(False)
-    )
-    kept = (
-        cow.read_component(spark, base_path, "lists")
-        .where(part_filter)
-        .join(ids, id_col, "left_anti")
-    )
-    # pool-wide single-file-per-cell write (see build_ivfpq_index)
-    par = (
-        max(len(changed), spark.sparkContext.defaultParallelism)
-        if changed
-        else 1
-    )
-    kept.repartition(par, "cent_id").write.mode("overwrite").partitionBy(
-        "cent_id"
-    ).parquet(f"{out_path}/lists")
-    _carry_ivf_meta(spark, base_path, out_path)
-    if layout == "manifest":
-        stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "lists", "cent_id", changed
-        )
-        cow.promote_whole_ref(spark, base_path, out_path, "centroids")
-        return stats
-    stats = cow.promote_unchanged_partitions(
-        spark, f"{base_path}/lists", f"{out_path}/lists", "cent_id", changed
-    )
-    cow.promote_dir(
-        spark, f"{base_path}/centroids", f"{out_path}/centroids"
-    )
-    return stats
 
 
 def compact_ivf_index(spark, index_path: str, out_path: str) -> dict:
     """Collapse an IVF index (plain, link-promoted, or a MANIFEST
     epoch chain) into one self-contained plain layout at ``out_path``
     — the vacuum/OPTIMIZE step that bounds manifest read
-    amplification: after compaction the old epoch directories are
-    deletable (caller retires them once no reader needs them, the
-    Delta-VACUUM discipline). Serving from the compacted index is
-    bit-identical by construction (it rewrites the RESOLVED view;
-    gated in tests/test_index_manifest.py)."""
-    from data_lake_with_spark_spark.session import run_concurrent
-    from data_lake_with_spark_spark.sources import cow
-
-    # the two component rewrites read independent resolved views and
-    # write disjoint directories — overlap them (guide §2.6)
-    stats, _ = run_concurrent(
-        [
-            lambda: cow.compact_index_component(
-                spark, index_path, out_path, "lists", "cent_id"
-            ),
-            lambda: cow.compact_index_component(
-                spark, index_path, out_path, "centroids", None
-            ),
-        ]
-    )
-    _carry_ivf_meta(spark, index_path, out_path)
-    return stats
+    amplification (``cow.compact``). Serving from the compacted index
+    is bit-identical (gated in tests/test_index_manifest.py). Returns
+    the ``lists`` compaction stats."""
+    return _compact_vectors(spark, "ivf", index_path, out_path)
 
 
 def ivf_topk_indexed(
@@ -2006,45 +1915,29 @@ def merge_pq_index(
     validate_codebooks: bool = True,
     layout: str = "links",
 ) -> dict:
-    """Incremental PQ index maintenance — completing the third index
-    family's lifecycle (IVF and BM25 gained theirs in rounds 8–10):
-    merge an embedding batch into a :func:`build_pq_index` layout with
-    UPSERT semantics (batch ids replace their old codes; fresh ids
-    append). Codebooks are CARRIED VERBATIM — the frozen-quantizer
-    contract (FAISS ``add`` never retrains) — and the batch encodes
-    against them through the SAME argmin kernel as the builder, so the
-    merged index is bit-identical to a from-scratch build over the
-    merged corpus with the same codebook set (the q176 gate, PQ side).
-    Replacing a CODEBOOK-SOURCE vector would leave the frozen codebook
-    stale relative to a retrain; ``validate_codebooks=True`` (an
-    ids-only semi-join against the broadcast-small codebook frame)
-    raises on that instead of diverging.
+    """Incremental PQ index maintenance: merge an embedding batch into
+    a :func:`build_pq_index` layout with UPSERT semantics (batch ids
+    replace their old codes; fresh ids append). Codebooks are CARRIED
+    VERBATIM — the frozen-quantizer contract (FAISS ``add`` never
+    retrains) — and the batch encodes against them through the SAME
+    argmin kernel as the build, so the merged index is
+    bit-identical to a from-scratch build over the merged corpus with
+    the same codebook set (the q176 gate, PQ side). Replacing a
+    CODEBOOK-SOURCE vector would leave the frozen codebook stale
+    relative to a retrain; ``validate_codebooks=True`` (an ids-only
+    semi-join against the broadcast-small codebook frame) raises on
+    that instead of diverging.
 
-    Cost — incremental in I/O as well as compute: the bucket is a
-    pure function of the id (``pmod(xxhash64(id), n_buckets)``), so
-    the changed set is EXACTLY the batch ids' buckets — an upsert's
-    new rows and the rows they replace share a partition, and no base
-    scan is needed to locate them. Only those partitions are
-    anti-joined and rewritten; unchanged partitions promote by hard
-    link (``layout="links"``) or manifest entry
-    (``layout="manifest"`` — the object-store path); the frozen
-    codebooks promote whole; the meta sidecar rewrites (bytes-trivial).
-    ``out_path`` must be FRESH (normalized-URI enforced). Returns the
-    promotion stats dict."""
+    The bucket is a pure function of the id (``pmod(xxhash64(id),
+    n_buckets)``), so the changed set is EXACTLY the batch ids'
+    buckets — an upsert's new rows and the rows they replace share a
+    partition, and no base scan is needed to locate them. The commit
+    goes through ``sources.cow`` (fresh ``out_path``, ``layout``
+    ``"links"`` or ``"manifest"``). Returns the promotion stats
+    dict."""
     from data_lake_with_spark_spark.sources import cow
 
-    cow.assert_fresh_out("merge_pq_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "codes"):
-        raise ValueError(
-            "merge_pq_index: base index uses a manifest layout — its "
-            "partitions live across epochs, so there is no complete "
-            "directory to link from; pass layout='manifest'"
-        )
-    meta = cow.read_json(spark, _pq_meta_uri(base_path))
-    if meta is None:
-        raise FileNotFoundError(f"no pq_meta.json under {base_path!r}")
+    meta = _vec_target(spark, "pq", "merge_pq_index", base_path, out_path, layout)
     dim, m, n_buckets = meta["dim"], meta["m"], meta["n_buckets"]
     cb = cow.read_component(spark, base_path, "codebooks")
     new_ids = new_vecs.select(F.col(id_col)).distinct()
@@ -2067,47 +1960,19 @@ def merge_pq_index(
         new_vecs.select(id_col, vec_col), cb, dim=dim, m=m,
         id_col=id_col, vec_col=vec_col,
     ).withColumn("id_bucket", _pq_bucket(id_col, n_buckets))
-    # changed buckets: a pure function of the batch ids — size-gated
-    # collect (distinct buckets ≤ n_buckets rows)
-    changed = sorted(
-        r["id_bucket"]
-        for r in new_ids.select(
-            _pq_bucket(id_col, n_buckets).alias("id_bucket")
-        )
-        .distinct()
-        .collect()
-    )
-    part_filter = (
-        F.col("id_bucket").isin(changed) if changed else F.lit(False)
+    changed = cow.partition_values(
+        new_ids, _pq_bucket(id_col, n_buckets).alias("id_bucket")
     )
     base_keep = (
         cow.read_component(spark, base_path, "codes")
-        .where(part_filter)
+        .where(cow.in_partitions("id_bucket", changed))
         .select(id_col, "subspace", "code", "id_bucket")
         .join(new_ids, id_col, "left_anti")
     )
-    merged = base_keep.unionByName(batch_codes)
-    (
-        merged.repartition(max(1, len(changed)), "id_bucket")
-        .write.mode("overwrite")
-        .partitionBy("id_bucket")
-        .parquet(f"{out_path}/codes")
+    return _vec_commit(
+        spark, "pq", base_keep.unionByName(batch_codes), base_path,
+        out_path, layout, changed,
     )
-    if layout == "manifest":
-        stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "codes", "id_bucket", changed
-        )
-        cow.promote_whole_ref(spark, base_path, out_path, "codebooks")
-    else:
-        stats = cow.promote_unchanged_partitions(
-            spark, f"{base_path}/codes", f"{out_path}/codes",
-            "id_bucket", changed,
-        )
-        cow.promote_dir(
-            spark, f"{base_path}/codebooks", f"{out_path}/codebooks"
-        )
-    cow.write_json(spark, _pq_meta_uri(out_path), meta)
-    return stats
 
 
 def delete_from_pq_index(
@@ -2118,106 +1983,32 @@ def delete_from_pq_index(
     id_col: str = "vec_id",
     layout: str = "links",
 ) -> dict:
-    """Erasure reaching the PQ serving index — the GDPR path for the
-    third index family: drop the ids' code rows from a
-    :func:`build_pq_index` layout. Codebooks stay FROZEN (deleting a
-    codebook's source vector removes it from every result set but
-    keeps the entry as a geometric anchor — the FAISS ``remove_ids``
-    contract; retrain to move codebooks). Serve-after-delete is gated
-    identical to an index rebuilt without the ids over the same
-    codebook set.
-
-    Cost: a column-pruned ``(id_bucket, id)`` scan confirms which of
-    the ids' hash buckets actually hold rows (an absent id's bucket is
-    NOT rewritten); only those partitions are anti-joined and
-    rewritten — a partition whose rows all die vanishes from the
-    layout (the manifest carries the schema, so even a fully-emptied
-    component still serves an empty typed frame). Unchanged partitions
-    and the frozen codebooks promote as in :func:`merge_pq_index`.
+    """Erasure reaching the PQ serving index: drop the ids' code rows
+    from a :func:`build_pq_index` layout. Codebooks stay FROZEN
+    (deleting a codebook's source vector removes it from every result
+    set but keeps the entry as a geometric anchor — the FAISS
+    ``remove_ids`` contract; retrain to move codebooks).
+    Serve-after-delete is gated identical to an index rebuilt without
+    the ids over the same codebook set; a fully-emptied component
+    still serves an empty typed frame. Returns the promotion stats
+    dict.
 
     GDPR retention caveat (manifest layout): erasure is pointer-level
     until ``compact_pq_index`` + ``cow.vacuum_index`` — see
     :func:`delete_from_ivf_index`; the same delete → compact → vacuum
     sequence applies."""
-    from data_lake_with_spark_spark.sources import cow
-
-    cow.assert_fresh_out("delete_from_pq_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "codes"):
-        raise ValueError(
-            "delete_from_pq_index: base index uses a manifest layout "
-            "— pass layout='manifest' (nothing complete to link from)"
-        )
-    meta = cow.read_json(spark, _pq_meta_uri(base_path))
-    if meta is None:
-        raise FileNotFoundError(f"no pq_meta.json under {base_path!r}")
-    ids = delete_ids.select(F.col(id_col)).distinct()
-    changed = sorted(
-        r["id_bucket"]
-        for r in cow.read_component(spark, base_path, "codes")
-        .select("id_bucket", id_col)
-        .join(ids, id_col, "left_semi")
-        .select("id_bucket")
-        .distinct()
-        .collect()
+    return _delete_vectors(
+        spark, "pq", "delete_from_pq_index", base_path, delete_ids,
+        out_path, id_col, layout,
     )
-    part_filter = (
-        F.col("id_bucket").isin(changed) if changed else F.lit(False)
-    )
-    kept = (
-        cow.read_component(spark, base_path, "codes")
-        .where(part_filter)
-        .join(ids, id_col, "left_anti")
-    )
-    (
-        kept.repartition(max(1, len(changed)), "id_bucket")
-        .write.mode("overwrite")
-        .partitionBy("id_bucket")
-        .parquet(f"{out_path}/codes")
-    )
-    if layout == "manifest":
-        stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "codes", "id_bucket", changed
-        )
-        cow.promote_whole_ref(spark, base_path, out_path, "codebooks")
-    else:
-        stats = cow.promote_unchanged_partitions(
-            spark, f"{base_path}/codes", f"{out_path}/codes",
-            "id_bucket", changed,
-        )
-        cow.promote_dir(
-            spark, f"{base_path}/codebooks", f"{out_path}/codebooks"
-        )
-    cow.write_json(spark, _pq_meta_uri(out_path), meta)
-    return stats
 
 
 def compact_pq_index(spark, index_path: str, out_path: str) -> dict:
     """Collapse a PQ index (plain, link-promoted, or a MANIFEST epoch
-    chain) into one self-contained plain layout at ``out_path`` — the
-    vacuum/OPTIMIZE step (see :func:`compact_ivf_index`); pair with
-    ``cow.vacuum_index`` to retire the old epochs. Serving from the
-    compacted index is bit-identical (it rewrites the RESOLVED
-    view)."""
-    from data_lake_with_spark_spark.session import run_concurrent
-    from data_lake_with_spark_spark.sources import cow
-
-    # independent resolved views, disjoint target dirs (guide §2.6)
-    stats, _ = run_concurrent(
-        [
-            lambda: cow.compact_index_component(
-                spark, index_path, out_path, "codes", "id_bucket"
-            ),
-            lambda: cow.compact_index_component(
-                spark, index_path, out_path, "codebooks", None
-            ),
-        ]
-    )
-    meta = cow.read_json(spark, _pq_meta_uri(index_path))
-    if meta is not None:
-        cow.write_json(spark, _pq_meta_uri(out_path), meta)
-    return stats
+    chain) into one self-contained plain layout at ``out_path`` (see
+    :func:`compact_ivf_index`); pair with ``cow.vacuum_index`` to
+    retire the old epochs. Returns the ``codes`` compaction stats."""
+    return _compact_vectors(spark, "pq", index_path, out_path)
 
 
 # Self-enforcing IVFPQ layout rule (MEASUREMENTS_r11 §1b, promoted
@@ -2699,49 +2490,33 @@ def merge_ivfpq_index(
     validate_frozen: bool = True,
     layout: str = "links",
 ) -> dict:
-    """Incremental IVFPQ maintenance — the fourth index family's
-    lifecycle, under a DOUBLY-frozen quantizer contract: both the
-    coarse centroids AND the residual codebooks are carried verbatim
-    (FAISS ``IndexIVFPQ.add`` retrains neither); the batch assigns and
-    encodes through the SAME kernels as the builder, so the merged
-    index is bit-identical to a from-scratch build over the merged
-    corpus with the same seed sets (the q176/q196 gate, composed).
-    UPSERT semantics: batch ids replace their old codes — including
-    when the re-ingested vector MOVED CELLS (old and new code rows
-    share the id's hash bucket, so the swap is local to one
-    maintenance partition). ``validate_frozen=True`` raises if the
-    batch replaces a centroid-source or codebook-source vector
-    (either frozen artifact would go stale relative to a retrain).
+    """Incremental IVFPQ maintenance under a DOUBLY-frozen quantizer
+    contract: both the coarse centroids AND the residual codebooks
+    are carried verbatim (FAISS ``IndexIVFPQ.add`` retrains neither);
+    the batch assigns and encodes through the SAME kernels as the
+    build, so the merged index is bit-identical to a from-scratch
+    build over the merged corpus with the same seed sets (the
+    q176/q196 gate, composed). UPSERT semantics: batch ids replace
+    their old codes — including when the re-ingested vector MOVED
+    CELLS (old and new code rows share the id's hash bucket, so the
+    swap is local to one maintenance partition).
+    ``validate_frozen=True`` raises if the batch replaces a
+    centroid-source or codebook-source vector (either frozen artifact
+    would go stale relative to a retrain).
 
-    Cost: one assignment+encode pass over the BATCH, then a
-    partitioned write of only the changed ``id_bucket=`` partitions —
-    the bucket is a pure function of the id (no base scan locates
-    replaced rows; they share the new rows' buckets by construction),
-    so the changed set is EXACTLY the batch ids' ≤ min(|batch|,
-    n_buckets) hash buckets and written bytes are batch-proportional
-    (see :func:`build_ivfpq_index` on why the maintenance unit is
-    the bucket, not the cell). Unchanged buckets promote by hard
-    link (``layout="links"``) or manifest entry
-    (``layout="manifest"`` — the object-store path); both frozen
-    components promote whole. ``out_path`` must be FRESH
-    (normalized-URI enforced). Returns the promotion stats dict."""
+    One assignment+encode pass over the BATCH; the changed set is
+    EXACTLY the batch ids' ≤ min(|batch|, n_buckets) ``id_bucket=``
+    partitions (see :func:`build_ivfpq_index` on why the maintenance
+    unit is the bucket, not the cell), committed through
+    ``sources.cow`` (fresh ``out_path``, ``layout`` ``"links"`` or
+    ``"manifest"``). Returns the promotion stats dict."""
+    from data_lake_with_spark_spark.session import run_concurrent
     from data_lake_with_spark_spark.sources import cow
 
-    cow.assert_fresh_out("merge_ivfpq_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "codes"):
-        raise ValueError(
-            "merge_ivfpq_index: base index uses a manifest layout — its "
-            "partitions live across epochs, so there is no complete "
-            "directory to link from; pass layout='manifest'"
-        )
-    meta = cow.read_json(spark, _ivfpq_meta_uri(base_path))
-    if meta is None:
-        raise FileNotFoundError(f"no ivfpq_meta.json under {base_path!r}")
+    meta = _vec_target(
+        spark, "ivfpq", "merge_ivfpq_index", base_path, out_path, layout
+    )
     dim, m, n_buckets = meta["dim"], meta["m"], meta["n_buckets"]
-    from data_lake_with_spark_spark.session import run_concurrent
-
     cents = cow.read_component(spark, base_path, "centroids")
     cb = cow.read_component(spark, base_path, "codebooks")
     new_ids = new_vecs.select(F.col(id_col)).distinct()
@@ -2764,74 +2539,33 @@ def merge_ivfpq_index(
                 "False to accept doubly-frozen semantics explicitly)"
             )
 
-    def _changed():
-        # changed buckets: a pure function of the batch ids — replaced
-        # rows share them by construction (no base scan); size-gated
-        # collect (distinct buckets ≤ n_buckets rows)
-        return sorted(
-            r["id_bucket"]
-            for r in new_ids.select(
-                _pq_bucket(id_col, n_buckets).alias("id_bucket")
-            )
-            .distinct()
-            .collect()
-        )
-
     # both prep legs are read-only; overlap them (guide §2.6) — a
     # validation failure still raises at the barrier, before the write
-    _, changed = run_concurrent([_validate, _changed])
+    _, changed = run_concurrent(
+        [
+            _validate,
+            lambda: cow.partition_values(
+                new_ids, _pq_bucket(id_col, n_buckets).alias("id_bucket")
+            ),
+        ]
+    )
     assigned = _ivfpq_assign_resid(
         new_vecs.select(id_col, vec_col), cents, id_col, vec_col, vec_dim
     )
     batch_codes = _ivfpq_encode(assigned, cb, dim, m, id_col).withColumn(
         "id_bucket", _pq_bucket(id_col, n_buckets)
     )
-    part_filter = (
-        F.col("id_bucket").isin(changed) if changed else F.lit(False)
-    )
+    cols = ["id_bucket", "cent_id", id_col, "subspace", "code"]
     base_keep = (
         cow.read_component(spark, base_path, "codes")
-        .where(part_filter)
-        .select("id_bucket", "cent_id", id_col, "subspace", "code")
+        .where(cow.in_partitions("id_bucket", changed))
+        .select(*cols)
         .join(new_ids, id_col, "left_anti")
     )
-    merged = base_keep.unionByName(
-        batch_codes.select("id_bucket", "cent_id", id_col, "subspace", "code")
+    return _vec_commit(
+        spark, "ivfpq", base_keep.unionByName(batch_codes.select(*cols)),
+        base_path, out_path, layout, changed,
     )
-    # keyed by both partition columns, task count from the pool (not
-    # the changed-bucket count): one file per touched leaf either
-    # way, but leaf-dir creation parallelizes across the executors
-    # (see build_ivfpq_index's codes write)
-    par = (
-        max(len(changed), spark.sparkContext.defaultParallelism)
-        if changed
-        else 1
-    )
-    (
-        merged.repartition(par, "id_bucket", "cent_id")
-        .write.mode("overwrite")
-        .partitionBy("id_bucket", "cent_id")
-        .parquet(f"{out_path}/codes")
-    )
-    if layout == "manifest":
-        stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "codes", "id_bucket", changed
-        )
-        cow.promote_whole_ref(spark, base_path, out_path, "centroids")
-        cow.promote_whole_ref(spark, base_path, out_path, "codebooks")
-    else:
-        stats = cow.promote_unchanged_partitions(
-            spark, f"{base_path}/codes", f"{out_path}/codes",
-            "id_bucket", changed,
-        )
-        cow.promote_dir(
-            spark, f"{base_path}/centroids", f"{out_path}/centroids"
-        )
-        cow.promote_dir(
-            spark, f"{base_path}/codebooks", f"{out_path}/codebooks"
-        )
-    cow.write_json(spark, _ivfpq_meta_uri(out_path), meta)
-    return stats
 
 
 def delete_from_ivfpq_index(
@@ -2848,106 +2582,23 @@ def delete_from_ivfpq_index(
     removes it from every result set but keeps the geometric anchor —
     the FAISS ``remove_ids`` contract; retrain to move quantizers).
     Serve-after-delete is gated identical to a rebuild without the
-    ids over the same seed sets. Cost: a column-pruned ``(id_bucket,
-    id)`` scan confirms which of the ids' hash buckets actually hold
-    rows (an absent id's bucket is NOT rewritten); only those are
-    anti-joined and rewritten; the rest promote by link or manifest
-    entry. GDPR retention caveat (manifest layout): erasure is
+    ids over the same seed sets. Returns the promotion stats dict.
+    GDPR retention caveat (manifest layout): erasure is
     pointer-level until ``compact_ivfpq_index`` + ``cow.vacuum_index``
     — see :func:`delete_from_ivf_index`."""
-    from data_lake_with_spark_spark.sources import cow
-
-    cow.assert_fresh_out("delete_from_ivfpq_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "codes"):
-        raise ValueError(
-            "delete_from_ivfpq_index: base index uses a manifest layout "
-            "— pass layout='manifest' (nothing complete to link from)"
-        )
-    meta = cow.read_json(spark, _ivfpq_meta_uri(base_path))
-    if meta is None:
-        raise FileNotFoundError(f"no ivfpq_meta.json under {base_path!r}")
-    ids = delete_ids.select(F.col(id_col)).distinct()
-    changed = sorted(
-        r["id_bucket"]
-        for r in cow.read_component(spark, base_path, "codes")
-        .select("id_bucket", id_col)
-        .join(ids, id_col, "left_semi")
-        .select("id_bucket")
-        .distinct()
-        .collect()
+    return _delete_vectors(
+        spark, "ivfpq", "delete_from_ivfpq_index", base_path, delete_ids,
+        out_path, id_col, layout,
     )
-    part_filter = (
-        F.col("id_bucket").isin(changed) if changed else F.lit(False)
-    )
-    kept = (
-        cow.read_component(spark, base_path, "codes")
-        .where(part_filter)
-        .join(ids, id_col, "left_anti")
-    )
-    # pool-wide leaf write, keyed by both partition columns (see
-    # build_ivfpq_index's codes write)
-    par = (
-        max(len(changed), spark.sparkContext.defaultParallelism)
-        if changed
-        else 1
-    )
-    (
-        kept.repartition(par, "id_bucket", "cent_id")
-        .write.mode("overwrite")
-        .partitionBy("id_bucket", "cent_id")
-        .parquet(f"{out_path}/codes")
-    )
-    if layout == "manifest":
-        stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "codes", "id_bucket", changed
-        )
-        cow.promote_whole_ref(spark, base_path, out_path, "centroids")
-        cow.promote_whole_ref(spark, base_path, out_path, "codebooks")
-    else:
-        stats = cow.promote_unchanged_partitions(
-            spark, f"{base_path}/codes", f"{out_path}/codes",
-            "id_bucket", changed,
-        )
-        cow.promote_dir(
-            spark, f"{base_path}/centroids", f"{out_path}/centroids"
-        )
-        cow.promote_dir(
-            spark, f"{base_path}/codebooks", f"{out_path}/codebooks"
-        )
-    cow.write_json(spark, _ivfpq_meta_uri(out_path), meta)
-    return stats
 
 
 def compact_ivfpq_index(spark, index_path: str, out_path: str) -> dict:
     """Collapse an IVFPQ index (plain, link-promoted, or a MANIFEST
-    epoch chain) into one self-contained plain layout — the
-    vacuum/OPTIMIZE step (see :func:`compact_ivf_index`); pair with
-    ``cow.vacuum_index`` to retire the old epochs. The nested
-    ``(id_bucket, cent_id)`` codes layout is preserved."""
-    from data_lake_with_spark_spark.session import run_concurrent
-    from data_lake_with_spark_spark.sources import cow
-
-    # independent resolved views, disjoint target dirs (guide §2.6)
-    stats, _, _ = run_concurrent(
-        [
-            lambda: cow.compact_index_component(
-                spark, index_path, out_path, "codes",
-                ["id_bucket", "cent_id"],
-            ),
-            lambda: cow.compact_index_component(
-                spark, index_path, out_path, "centroids", None
-            ),
-            lambda: cow.compact_index_component(
-                spark, index_path, out_path, "codebooks", None
-            ),
-        ]
-    )
-    meta = cow.read_json(spark, _ivfpq_meta_uri(index_path))
-    if meta is not None:
-        cow.write_json(spark, _ivfpq_meta_uri(out_path), meta)
-    return stats
+    epoch chain) into one self-contained plain layout (see
+    :func:`compact_ivf_index`); the nested ``(id_bucket, cent_id)``
+    codes layout is preserved. Returns the ``codes`` compaction
+    stats."""
+    return _compact_vectors(spark, "ivfpq", index_path, out_path)
 
 
 # --- retrain-and-reindex: the epoch op the frozen quantizers need ---

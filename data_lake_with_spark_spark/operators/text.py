@@ -1214,22 +1214,19 @@ def _bm25_pruned_postings(
 def compact_bm25_index(spark, index_path: str, out_path: str) -> dict:
     """Collapse a BM25 index (plain, link-promoted, or a MANIFEST
     epoch chain) into one self-contained plain layout at ``out_path``
-    (the vacuum/OPTIMIZE step — see
-    :func:`similarity.compact_ivf_index`): postings re-sort within
-    buckets so the tok-sorted row-group-skipping contract holds in
-    the compacted files; doclens and stats rewrite verbatim."""
+    (the vacuum/OPTIMIZE step, ``cow.compact``): postings re-sort
+    within buckets so the tok-sorted row-group-skipping contract holds
+    in the compacted files; doclens and stats rewrite verbatim.
+    Returns the ``postings`` compaction stats."""
     from data_lake_with_spark_spark.sources import cow
 
-    stats = cow.compact_index_component(
-        spark, index_path, out_path, "postings", "tok_bucket", sort_col="tok"
-    )
-    spark.read.parquet(f"{index_path}/doclens").write.mode(
-        "overwrite"
-    ).parquet(f"{out_path}/doclens")
-    spark.read.parquet(f"{index_path}/stats").write.mode(
-        "overwrite"
-    ).parquet(f"{out_path}/stats")
-    return stats
+    return cow.compact(
+        spark,
+        index_path,
+        out_path,
+        {"postings": "tok_bucket", "doclens": None, "stats": None},
+        sort_cols={"postings": "tok"},
+    )["postings"]
 
 
 def bm25_topk_indexed(
@@ -1707,6 +1704,45 @@ def boilerplate_prefixes(
     )
 
 
+def _bm25_commit(
+    spark, base_path, out_path, layout, post, changed, n_buckets, ids,
+    id_col, new_dl=None,
+):
+    """Commit a BM25 maintenance epoch: the changed postings buckets
+    (sorted by ``tok`` per task, as the build does) through
+    ``sources.cow``, then the doclens (base minus
+    ``ids``, plus ``new_dl``) and the corpus stats (n_corpus, avgdl)
+    recomputed from them — both doc-count-sized, rewritten whole."""
+    from data_lake_with_spark_spark.sources import cow
+
+    stats = cow.commit(
+        spark, post, base_path, out_path, layout, "postings", "tok_bucket",
+        changed, sort_col="tok",
+    )
+    dl = spark.read.parquet(f"{base_path}/doclens").join(
+        ids, id_col, "left_anti"
+    )
+    if new_dl is not None:
+        dl = dl.unionByName(new_dl)
+    dl.write.mode("overwrite").parquet(f"{out_path}/doclens")
+    dl.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
+        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
+    ).withColumn("n_buckets", F.lit(int(n_buckets)).cast("int")).write.mode(
+        "overwrite"
+    ).parquet(f"{out_path}/stats")
+    return stats
+
+
+def _bm25_n_buckets(spark, op, base_path, out_path, layout) -> int:
+    """Check the commit target; return the base's bucket count."""
+    from data_lake_with_spark_spark.sources import cow
+
+    cow.check_target(spark, op, base_path, out_path, layout, "postings")
+    stats = spark.read.parquet(f"{base_path}/stats")
+    return stats.select("n_buckets").first()["n_buckets"]
+
+
 def merge_bm25_index(
     spark,
     base_path: str,
@@ -1723,62 +1759,35 @@ def merge_bm25_index(
     semantics (ids present in the batch replace their old postings —
     re-ingests don't double-count; fresh ids append).
 
-    Mechanics: the batch tokenizes exactly as the builder does; base
+    Mechanics: the batch tokenizes exactly as the build does; base
     postings/doclens drop replaced ids via a keyed anti join, union
     the batch frames, and rewrite with the SAME bucket function
     (n_buckets read from the base stats, never re-chosen — a changed
     bucket count would silently split tokens across layouts); corpus
-    stats (n_corpus, avgdl) recompute from the merged doclens — one
-    agg over a doc-count-sized frame. Serving equality is the
-    contract: :func:`bm25_topk_indexed` over the merged index returns
-    BIT-identical results to an index built from scratch over the
-    merged corpus (gated in tests and by q171 sharing the from-raw
-    oracle).
+    stats (n_corpus, avgdl) recompute from the merged doclens. Serving
+    equality is the contract: :func:`bm25_topk_indexed` over the
+    merged index returns BIT-identical results to an index built from
+    scratch over the merged corpus (gated in tests and by q171
+    sharing the from-raw oracle).
 
-    I/O — incremental via copy-on-write promotion: only the CHANGED
-    ``tok_bucket=`` partitions (buckets the batch's tokens hash to ∪
-    buckets holding a replaced id's postings, located by a
-    column-pruned ``(tok_bucket, id)`` scan) are anti-joined,
-    re-sorted, and Spark-written; every unchanged bucket directory is
-    hard-linked from the base (copy fallback / Hadoop-``FileUtil`` on
-    non-local schemes). Bytes written scale with the batch's BUCKET
-    footprint — note the honest caveat: natural-language batches have
-    broad vocabulary coverage, so a doc batch touches
+    Only the CHANGED ``tok_bucket=`` partitions (buckets the batch's
+    tokens hash to ∪ buckets holding a replaced id's postings) are
+    rewritten, through ``sources.cow`` (fresh ``out_path``, ``layout``
+    ``"links"`` or ``"manifest"``). Honest caveat: natural-language
+    batches have broad vocabulary coverage, so a doc batch touches
     ~min(|batch vocab|, n_buckets) buckets; the win is large exactly
     when it matters (small/targeted batches, or production bucket
-    counts in the thousands), and degenerates gracefully to the full
-    rewrite when every bucket changes. The doclens and stats
-    components rewrite whole — they are doc-count-sized (no token
-    dimension), orders of magnitude below postings bytes.
-
-    ``out_path`` must be a FRESH directory, never ``base_path`` (the
-    merge reads the base lazily while writing — enforced with a
-    raise). The three component writes (postings, doclens, stats) are
-    not mutually atomic; a mid-merge failure leaves a partial
-    ``out_path``, which is why merging never overwrites the base:
-    the base index stays serveable, and deployment promotes the new
-    directory with one rename after all three writes land. Returns
-    the promotion stats dict. ``layout="manifest"`` promotes by
-    metadata (the object-store path — no link primitive needed, only
-    the changed buckets + one small JSON are written; see
-    ``sources.cow``); a manifest base requires it.
+    counts in the thousands) and degenerates to the full rewrite when
+    every bucket changes. The postings, doclens and stats writes are
+    not mutually atomic, which is why the base is never overwritten:
+    it stays serveable until the new directory is published. Returns
+    the promotion stats dict.
     """
     from data_lake_with_spark_spark.sources import cow
 
-    # the merged frames read base_path LAZILY while the
-    # mode('overwrite') write deletes it — an in-place merge would
-    # consume its own deletion; normalized-URI compare catches the
-    # same remote URI spelled two ways, not just local paths
-    cow.assert_fresh_out("merge_bm25_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "postings"):
-        raise ValueError(
-            "merge_bm25_index: base index uses a manifest layout — "
-            "pass layout='manifest' (nothing complete to link from)"
-        )
-    stats = spark.read.parquet(f"{base_path}/stats")
-    n_buckets = stats.select("n_buckets").first()["n_buckets"]
+    n_buckets = _bm25_n_buckets(
+        spark, "merge_bm25_index", base_path, out_path, layout
+    )
     new_ids = new_docs.select(F.col(id_col)).distinct()
     bucket = F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).cast("int")
     new_ctf = (
@@ -1790,74 +1799,28 @@ def merge_bm25_index(
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         .localCheckpoint()
     )
-    # changed buckets: batch-token buckets ∪ replaced-id buckets. Both
-    # collects are size-gated by n_buckets (one row per bucket); the
-    # replaced-id probe is a column-pruned (tok_bucket, id) scan —
-    # never the tok/tf payload columns.
-    changed_new = {
-        r["tok_bucket"]
-        for r in new_ctf.select(bucket.alias("tok_bucket"))
-        .distinct()
-        .collect()
-    }
-    changed_old = {
-        r["tok_bucket"]
-        for r in cow.read_component(spark, base_path, "postings")
-        .select("tok_bucket", id_col)
-        .join(new_ids, id_col, "left_semi")
-        .select("tok_bucket")
-        .distinct()
-        .collect()
-    }
-    changed = sorted(changed_new | changed_old)
-    part_filter = (
-        F.col("tok_bucket").isin(changed) if changed else F.lit(False)
+    # changed buckets: batch-token buckets ∪ replaced-id buckets
+    changed_new = cow.partition_values(new_ctf, bucket.alias("tok_bucket"))
+    changed_old = cow.partitions_holding(
+        spark, base_path, "postings", "tok_bucket", new_ids, id_col
     )
+    changed = sorted(set(changed_new) | set(changed_old))
     base_post = (
         cow.read_component(spark, base_path, "postings")
-        .where(part_filter)
+        .where(cow.in_partitions("tok_bucket", changed))
         .select(id_col, "tok", "tf", "tok_bucket")
         .join(new_ids, id_col, "left_anti")
     )
     merged = base_post.unionByName(
         new_ctf.select(id_col, "tok", "tf").withColumn("tok_bucket", bucket)
     )
-    # re-sort within buckets so the tok-sorted row-group-skipping
-    # layout contract survives the rewrite (same as the builder)
-    (
-        merged.repartition(int(n_buckets), "tok_bucket")
-        .sortWithinPartitions("tok")
-        .write.mode("overwrite")
-        .partitionBy("tok_bucket")
-        .parquet(f"{out_path}/postings")
-    )
-    if layout == "manifest":
-        cow_stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "postings", "tok_bucket", changed
-        )
-    else:
-        cow_stats = cow.promote_unchanged_partitions(
-            spark,
-            f"{base_path}/postings",
-            f"{out_path}/postings",
-            "tok_bucket",
-            changed,
-        )
     new_dl = new_ctf.groupBy(id_col).agg(
         F.sum("tf").cast("bigint").alias("dl")
     )
-    dl = (
-        spark.read.parquet(f"{base_path}/doclens")
-        .join(new_ids, id_col, "left_anti")
-        .unionByName(new_dl)
+    return _bm25_commit(
+        spark, base_path, out_path, layout, merged, changed, n_buckets,
+        new_ids, id_col, new_dl,
     )
-    dl.write.mode("overwrite").parquet(f"{out_path}/doclens")
-    out_stats = dl.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    ).withColumn("n_buckets", F.lit(int(n_buckets)).cast("int"))
-    out_stats.write.mode("overwrite").parquet(f"{out_path}/stats")
-    return cow_stats
 
 
 def delete_from_bm25_index(
@@ -1879,21 +1842,11 @@ def delete_from_bm25_index(
     minus the ids (the same equality the merge gate pins; gated in
     tests and by the registered entry's rebuild-shaped oracle).
 
-    I/O — incremental via copy-on-write promotion (the
-    :func:`merge_bm25_index` contract): a column-pruned
-    ``(tok_bucket, id)`` scan locates the buckets holding any deleted
-    id's postings; ONLY those are anti-joined, re-sorted (the
-    tok-sorted row-group-skipping layout survives), and
-    Spark-written; every other bucket directory is hard-linked from
-    the base. A deleted doc's postings live wherever its tokens
-    hashed, so the changed set is ~min(|deleted docs' vocab|,
-    n_buckets) buckets — small GDPR batches touch few. The doclens
-    and stats components rewrite whole (doc-count-sized). The bucket
-    layout (n_buckets) carries unchanged. ``out_path`` must be FRESH
-    (the delete reads the base lazily while writing — enforced, same
-    as :func:`merge_bm25_index`). Returns the promotion stats dict.
-    ``layout="manifest"`` promotes by metadata (the object-store
-    path); a manifest base requires it.
+    Only the buckets holding a deleted id's postings are rewritten —
+    a deleted doc's postings live wherever its tokens hashed, so the
+    changed set is ~min(|deleted docs' vocab|, n_buckets) buckets and
+    small GDPR batches touch few. The bucket layout (n_buckets)
+    carries unchanged. Returns the promotion stats dict.
 
     GDPR retention caveat (manifest layout): erasure is POINTER-LEVEL
     until compaction — the deleted docs' postings physically remain
@@ -1909,66 +1862,22 @@ def delete_from_bm25_index(
     """
     from data_lake_with_spark_spark.sources import cow
 
-    cow.assert_fresh_out("delete_from_bm25_index", base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and cow.read_manifest(spark, base_path, "postings"):
-        raise ValueError(
-            "delete_from_bm25_index: base index uses a manifest "
-            "layout — pass layout='manifest' (nothing complete to "
-            "link from)"
-        )
-    stats = spark.read.parquet(f"{base_path}/stats")
-    n_buckets = stats.select("n_buckets").first()["n_buckets"]
-    ids = delete_ids.select(F.col(id_col)).distinct()
-    changed = sorted(
-        r["tok_bucket"]
-        for r in cow.read_component(spark, base_path, "postings")
-        .select("tok_bucket", id_col)
-        .join(ids, id_col, "left_semi")
-        .select("tok_bucket")
-        .distinct()
-        .collect()
+    n_buckets = _bm25_n_buckets(
+        spark, "delete_from_bm25_index", base_path, out_path, layout
     )
-    part_filter = (
-        F.col("tok_bucket").isin(changed) if changed else F.lit(False)
+    ids = delete_ids.select(F.col(id_col)).distinct()
+    changed = cow.partitions_holding(
+        spark, base_path, "postings", "tok_bucket", ids, id_col
     )
     kept_post = (
         cow.read_component(spark, base_path, "postings")
-        .where(part_filter)
+        .where(cow.in_partitions("tok_bucket", changed))
         .join(ids, id_col, "left_anti")
     )
-    # re-sort within buckets so the tok-sorted row-group-skipping
-    # layout contract survives the rewrite (same as the builder)
-    (
-        kept_post.repartition(int(n_buckets), "tok_bucket")
-        .sortWithinPartitions("tok")
-        .write.mode("overwrite")
-        .partitionBy("tok_bucket")
-        .parquet(f"{out_path}/postings")
+    return _bm25_commit(
+        spark, base_path, out_path, layout, kept_post, changed, n_buckets,
+        ids, id_col,
     )
-    if layout == "manifest":
-        cow_stats = cow.promote_via_manifest(
-            spark, base_path, out_path, "postings", "tok_bucket", changed
-        )
-    else:
-        cow_stats = cow.promote_unchanged_partitions(
-            spark,
-            f"{base_path}/postings",
-            f"{out_path}/postings",
-            "tok_bucket",
-            changed,
-        )
-    dl = spark.read.parquet(f"{base_path}/doclens").join(
-        ids, id_col, "left_anti"
-    )
-    dl.write.mode("overwrite").parquet(f"{out_path}/doclens")
-    out_stats = dl.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    ).withColumn("n_buckets", F.lit(int(n_buckets)).cast("int"))
-    out_stats.write.mode("overwrite").parquet(f"{out_path}/stats")
-    return cow_stats
 
 
 def collocations(

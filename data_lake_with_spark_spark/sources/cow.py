@@ -1,45 +1,60 @@
-"""Copy-on-write partition promotion for persisted-index maintenance.
+"""Copy-on-write commit path for persisted-index maintenance.
 
-The index-maintenance operators (``similarity.merge_ivf_index`` /
-``delete_from_ivf_index``, ``text.merge_bm25_index`` /
-``delete_from_bm25_index``) are incremental in COMPUTE — only the
-batch assigns/tokenizes — but before round 10 they were corpus-sized
-in I/O: every merge/delete rewrote the ENTIRE ``cent_id=`` /
-``tok_bucket=`` partition layout to the fresh ``out_path``. At 100 TB
-a 0.1% daily batch must rewrite ~the touched partitions, not 100% of
-the index bytes.
+The five index families (IVF, PQ, IVFPQ, BM25 and related items) store
+each component as Hive-partitioned Parquet (``cent_id=``,
+``id_bucket=``, ``tok_bucket=``, ``pair_bucket=`` ...) and keep it
+current by rewriting only the partitions a batch changes. Every
+merge, delete and compact op commits through this module, in one
+sequence:
 
-This module is the missing half, in TWO layouts:
+1. :func:`check_target` — ``out_path`` is fresh (an op reads its base
+   lazily while ``mode("overwrite")`` deletes the target, so an
+   in-place rewrite would destroy the index mid-read), ``layout`` is
+   ``"links"`` or ``"manifest"``, and a manifest base requires
+   ``layout="manifest"`` (its partitions live across epochs, so there
+   is no complete directory to link from).
+2. Changed-partition discovery — :func:`partition_values` collects the
+   distinct partition values of a batch-sized frame (the partition is
+   a pure hash of the batch keys, so no base scan is needed), and
+   :func:`partitions_holding` runs a column-pruned ``(partition, id)``
+   semi-join scan of the base for partitions losing a replaced or
+   deleted id. Both collects are bounded by the partition count.
+3. :func:`commit` — Spark-writes ONLY the changed partitions to
+   ``{out_path}/{component}`` (keyed repartition with a pool-scaled
+   task count: one file per partition directory, directory creation
+   spread over the executors), promotes every unchanged partition from
+   the base, promotes the frozen whole components (centroids,
+   codebooks) and carries the JSON meta sidecars. A changed partition
+   with no surviving rows vanishes from the layout.
+4. :func:`compact` — rewrites the resolved view of a {component:
+   partition columns} map into one self-contained plain layout, the
+   vacuum/OPTIMIZE step that ends a manifest chain.
 
-1. **links** (default): after the maintenance op Spark-writes ONLY
-   the partitions whose content changed into ``out_path``, the
-   UNCHANGED partition directories are promoted from the base index
-   by hard link (same bytes, new name — zero data written) with
-   per-file copy fallback (cross-device / filesystems without
-   links), so the resulting directory is a complete, self-contained
-   index layout that readers consume exactly as before. Remote
-   (non-``file:``) schemes fall back to a Hadoop-``FileUtil``
-   directory copy — object stores have no link primitive.
+The caller then publishes the new epoch with :func:`set_current`.
 
-2. **manifest**: the metadata redirect (the Iceberg/Delta answer,
-   and the only truly incremental option on an object store): the
-   maintenance op Spark-writes ONLY the changed partitions into its
-   own epoch directory and writes a small
-   ``{component}_manifest.json`` mapping EVERY partition directory
-   name to the epoch URI that owns its current bytes — unchanged
-   partitions keep pointing at earlier epochs, chains stay FLAT
-   (owners are resolved, never recursive). Readers resolve through
-   :func:`read_component`; bytes written = changed partitions + one
-   small JSON, with NO link/copy at all on any scheme. The trade:
-   epochs accumulate until a rebuild compacts them, and the index
-   directory is no longer self-contained (deleting an old epoch
-   breaks the chain — the same vacuum discipline every
-   manifest-based table format carries).
+Promotion comes in two layouts:
 
-Every promotion function returns a stats dict (``linked_files`` /
-``copied_files`` / ``linked_bytes`` / ``carried_entries`` …) so tests
-and MEASUREMENTS can assert the bytes-written-∝-batch contract
-instead of trusting it.
+- **links** (default): unchanged partition directories are hard-linked
+  from the base (same bytes, new name — zero data written), with a
+  per-file copy fallback where links are refused and a Hadoop
+  ``FileUtil`` copy on remote schemes, which have no link primitive.
+  The result is a complete, self-contained directory.
+- **manifest**: the metadata redirect (the Iceberg/Delta answer, and
+  the only truly incremental option on an object store). A small
+  ``{component}_manifest.json`` maps every partition directory name to
+  the epoch URI that owns its current bytes; chains stay flat (owners
+  are resolved, never recursive) and readers resolve through
+  :func:`read_component`. Bytes written are the changed partitions
+  plus one small JSON. The trade: epochs accumulate until
+  :func:`compact` collapses them and :func:`vacuum_index` retires the
+  unreferenced ones.
+
+:func:`commit` returns the promotion stats dict (``partition_col``,
+``changed_partitions``, ``promoted_dirs``, ``linked_files``,
+``copied_files``, ``linked_bytes``, ``remote_copied_dirs``, plus
+``carried_entries``/``rewritten_entries`` for manifests) — the ops
+return it so tests can assert bytes-written-∝-batch instead of
+trusting it.
 """
 
 from __future__ import annotations
@@ -152,28 +167,20 @@ def written_bytes(path: str) -> int:
     return total
 
 
-def promote_unchanged_partitions(
+def _promote_partitions(
     spark,
     base_dir: str,
     out_dir: str,
     partition_col: str,
     changed_values,
 ) -> dict:
-    """Promote every ``{partition_col}=value`` directory of
-    ``base_dir`` whose value is NOT in ``changed_values`` into
-    ``out_dir`` by hard link (copy fallback). The maintenance op must
-    already have Spark-written the changed partitions into
-    ``out_dir``; afterwards ``out_dir`` is a complete layout.
-
-    ``changed_values`` may hold any scalar type; comparison is on the
-    Hive directory-suffix string (Spark writes ``cent_id=5`` for
-    bigint 5), so ints and their string forms match either way. A
-    directory whose suffix parses to no changed value is treated as
-    unchanged — by construction the maintenance ops compute the
-    changed set EXACTLY (it is the union of partitions receiving batch
-    rows and partitions containing replaced/deleted ids), so anything
-    outside it is byte-identical to the base.
-    """
+    """Links layout: promote every ``{partition_col}=value`` directory
+    of ``base_dir`` whose value is NOT in ``changed_values`` into
+    ``out_dir`` by hard link (copy fallback; Hadoop copy on remote
+    schemes). Values compare as Hive directory-suffix strings (Spark
+    writes ``cent_id=5`` for bigint 5), so ints and their string forms
+    match either way. The changed set is exact by construction, so
+    anything outside it is byte-identical to the base."""
     changed = {str(v) for v in changed_values}
     stats = {
         "partition_col": partition_col,
@@ -362,7 +369,7 @@ def base_partition_owners(
     return {n: owner for n in names}
 
 
-def promote_via_manifest(
+def _promote_manifest(
     spark,
     base_path: str,
     out_path: str,
@@ -370,17 +377,14 @@ def promote_via_manifest(
     partition_col: str,
     changed_values,
 ) -> dict:
-    """Manifest promotion: after the maintenance op Spark-wrote the
-    CHANGED partitions into ``{out_path}/{component}``, write a
-    manifest at ``out_path`` that re-points those names at the new
-    epoch and carries every unchanged name's owner forward from the
-    base (flat chain — owners are final URIs). A changed partition
-    with no surviving rows produces no directory and drops out of
-    the mapping entirely. Zero bytes linked or copied on ANY
-    scheme. The manifest also carries the component SCHEMA (read from
-    the base's resolved view — a footer-only read) so a later epoch
-    that empties the component entirely can still serve an empty
-    frame with the right columns."""
+    """Manifest layout: after the changed partitions landed in
+    ``{out_path}/{component}``, write a manifest that points those
+    names at the new epoch and carries every unchanged name's owner
+    forward from the base (flat chain — owners are final URIs). The
+    manifest also carries the component SCHEMA (a footer-only read of
+    the base's resolved view), so a later epoch that empties the
+    component entirely still serves an empty frame with the right
+    columns."""
     import json
 
     changed = {str(v) for v in changed_values}
@@ -392,14 +396,9 @@ def promote_via_manifest(
         ).items()
         if name[len(partition_col) + 1:] not in changed
     }
-    # dirs the maintenance op just wrote → owned by the new epoch
-    written = base_partition_owners(
-        spark,
-        out_path,
-        component,
-        partition_col,
-    )
-    # (out has no manifest yet, so this is the plain dir listing)
+    # dirs the op just wrote → owned by the new epoch (out has no
+    # manifest yet, so this is the plain dir listing)
+    written = base_partition_owners(spark, out_path, component, partition_col)
     entries = {**carried, **written}
     manifest = {
         "component": component,
@@ -426,19 +425,26 @@ def promote_via_manifest(
     }
 
 
-def promote_whole_ref(spark, base_path: str, out_path: str, component: str) -> None:
-    """Manifest promotion for an UNPARTITIONED frozen component (the
-    IVF centroids): write a whole-component reference to the URI that
-    owns the base's bytes (following an existing reference, so chains
-    stay flat)."""
+def _promote_whole(
+    spark, base_path: str, out_path: str, component: str, layout: str
+) -> None:
+    """Promote an UNPARTITIONED frozen component (centroids,
+    codebooks) whole: linked (links layout) or referenced by a
+    whole-component manifest pointing at the URI that owns the base's
+    bytes, following an existing reference so chains stay flat."""
     import json
 
+    base_dir = f"{base_path}/{component}"
+    if layout == "links":
+        local_base = _local_path(base_dir)
+        local_out = _local_path(f"{out_path}/{component}")
+        if local_base is not None and local_out is not None:
+            _link_or_copy_tree(local_base, local_out)
+        else:
+            _hadoop_copy_dir(spark, base_dir, f"{out_path}/{component}")
+        return
     m = read_manifest(spark, base_path, component)
-    owner = (
-        m["whole"]
-        if m is not None and m.get("whole")
-        else _abs_uri(f"{base_path}/{component}")
-    )
+    owner = m["whole"] if m is not None and m.get("whole") else _abs_uri(base_dir)
     _fs_write_text(
         spark,
         _manifest_uri(out_path, component),
@@ -455,40 +461,30 @@ def promote_whole_ref(spark, base_path: str, out_path: str, component: str) -> N
     )
 
 
-def compact_index_component(
+def _carry_sidecar(spark, base_path: str, out_path: str, name: str) -> None:
+    """Copy the JSON sidecar ``name`` from base to out, when present
+    (pre-sidecar layouts carry nothing)."""
+    meta = read_json(spark, f"{base_path}/{name}")
+    if meta is not None:
+        write_json(spark, f"{out_path}/{name}", meta)
+
+
+def _compact_component(
     spark,
     index_path: str,
     out_path: str,
     component: str,
-    partition_col: "str | list[str] | None",
+    partition_cols: "str | list[str] | None",
     sort_col: str | None = None,
 ) -> dict:
-    """Collapse a manifest epoch CHAIN back into one self-contained
-    plain component directory — the vacuum/OPTIMIZE step every
-    manifest-based format needs: maintenance epochs accumulate (each
-    holds only its changed partitions; readers touch every owner),
-    and once the chain is longer than the read amplification you'll
-    tolerate, compaction rewrites the CURRENT resolved view into
-    ``{out_path}/{component}`` with no manifest, after which the old
-    epochs are deletable (by the caller, once no reader needs them —
-    the same retire-after-quiesce discipline as Delta VACUUM).
-
-    ``sort_col`` re-establishes a within-partition sort contract
-    (BM25's tok-sorted row-group skipping). Works on plain and
-    link-promoted layouts too (read_component resolves all three),
-    where it doubles as a small-files rewrite. Returns
-    {"partitions": n} for partitioned components.
-
-    ``out_path`` must be FRESH — not the index path itself, and (for
-    a manifest chain) not any epoch that OWNS bytes the resolved view
-    still reads: the compaction reads the source lazily while
-    ``mode("overwrite")`` deletes the target, so writing into any
-    owner would destroy live index bytes mid-read (r10 ADVICE).
-    Enforced here for every compact_* entry point.
-    """
+    """Rewrite one component's resolved view into
+    ``{out_path}/{component}`` with no manifest. ``out_path`` must not
+    be the index nor any epoch that OWNS bytes the resolved view still
+    reads: the rewrite reads lazily while ``mode("overwrite")``
+    deletes the target."""
     from pyspark.sql import functions as F
 
-    assert_fresh_out("compact_index_component", index_path, out_path)
+    assert_fresh_out("compact", index_path, out_path)
     m = read_manifest(spark, index_path, component)
     if m is not None:
         out_n = norm_uri(out_path)
@@ -502,7 +498,7 @@ def compact_index_component(
             # {out}/{component} right on top of it
             if own_n == out_n or own_n.startswith(out_n + "/"):
                 raise ValueError(
-                    "compact_index_component: out_path "
+                    "compact: out_path "
                     f"{out_path!r} owns live bytes of the manifest "
                     f"chain ({owner!r}); compacting into an owning "
                     "epoch would destroy the index mid-read — use a "
@@ -510,13 +506,13 @@ def compact_index_component(
                 )
 
     df = read_component(spark, index_path, component)
-    if partition_col is None:
+    if partition_cols is None:
         df.write.mode("overwrite").parquet(f"{out_path}/{component}")
         return {"partitions": 0}
-    # a nested layout (e.g. IVFPQ's (id_bucket, cent_id)) passes the
-    # column list; the FIRST column is the promotion/manifest unit
-    cols = [partition_col] if isinstance(partition_col, str) else list(
-        partition_col
+    # a nested layout (IVFPQ's (id_bucket, cent_id)) passes the column
+    # list; the FIRST column is the promotion/manifest unit
+    cols = [partition_cols] if isinstance(partition_cols, str) else list(
+        partition_cols
     )
     out = df.repartition(*[F.col(c) for c in cols])
     if sort_col is not None:
@@ -524,36 +520,146 @@ def compact_index_component(
     out.write.mode("overwrite").partitionBy(*cols).parquet(
         f"{out_path}/{component}"
     )
-    n = len(
-        base_partition_owners(spark, out_path, component, cols[0])
-    )
+    n = len(base_partition_owners(spark, out_path, component, cols[0]))
     return {"partitions": n}
 
 
-def promote_dir(spark, base_dir: str, out_dir: str) -> dict:
-    """Promote an ENTIRE unpartitioned component directory (e.g. the
-    frozen IVF ``centroids``) from base to out by link/copy — the
-    degenerate all-unchanged case. The frozen-centroid contract means
-    the bytes are identical by definition; linking makes that free."""
-    local_base = _local_path(base_dir)
-    local_out = _local_path(out_dir)
-    if local_base is not None and local_out is not None:
-        n_l, n_c, b_l = _link_or_copy_tree(local_base, local_out)
-        return {
-            "promoted_dirs": 1,
-            "linked_files": n_l,
-            "copied_files": n_c,
-            "linked_bytes": b_l,
-            "remote_copied_dirs": 0,
-        }
-    _hadoop_copy_dir(spark, base_dir, out_dir)
-    return {
-        "promoted_dirs": 1,
-        "linked_files": 0,
-        "copied_files": 0,
-        "linked_bytes": 0,
-        "remote_copied_dirs": 1,
-    }
+def check_target(
+    spark, op: str, base_path: str, out_path: str, layout: str, component: str
+) -> None:
+    """Commit step 1: raise unless ``out_path`` is fresh, ``layout``
+    is valid, and a manifest base (judged by ``component``, the
+    partitioned one) is maintained with ``layout="manifest"``."""
+    assert_fresh_out(op, base_path, out_path)
+    if layout not in ("links", "manifest"):
+        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
+    if layout == "links" and read_manifest(spark, base_path, component):
+        raise ValueError(
+            f"{op}: base index uses a manifest layout — its partitions "
+            "live across epochs, so there is no complete directory to "
+            "link from; pass layout='manifest'"
+        )
+
+
+def in_partitions(col: str, values):
+    """``col IN values`` — a constant FALSE for an empty set (an empty
+    ``isin`` is not a valid pruning filter)."""
+    from pyspark.sql import functions as F
+
+    return F.col(col).isin(list(values)) if values else F.lit(False)
+
+
+def partition_values(frame, part) -> list:
+    """Commit step 2a: the sorted distinct values of ``part`` (a
+    column name or expression) over a batch-sized frame — one row per
+    partition, so the collect is bounded by the partition count."""
+    return sorted(
+        r[0] for r in frame.select(part).distinct().collect()
+    )
+
+
+def partitions_holding(
+    spark, base_path: str, component: str, partition_col: str, ids, id_col: str
+) -> list:
+    """Commit step 2b: the sorted partitions of the base ``component``
+    holding any of ``ids`` — a column-pruned ``(partition, id)``
+    semi-join scan that never reads the payload columns."""
+    return partition_values(
+        read_component(spark, base_path, component)
+        .select(partition_col, id_col)
+        .join(ids, id_col, "left_semi"),
+        partition_col,
+    )
+
+
+def commit(
+    spark,
+    frame,
+    base_path: str,
+    out_path: str,
+    layout: str,
+    component: str,
+    partition_cols: "str | list[str]",
+    changed,
+    frozen=(),
+    sidecars=(),
+    sort_col: str | None = None,
+) -> dict:
+    """Commit step 3: write ``frame`` — the full new content of the
+    ``changed`` partitions — to ``{out_path}/{component}``, then
+    promote the base's unchanged partitions by ``layout``, promote the
+    ``frozen`` whole components and carry the ``sidecars``. The
+    repartition is keyed by every partition column (one file per leaf
+    directory) with a task count scaled to the executor pool, so leaf
+    creation runs pool-wide; ``sort_col`` sorts each task's rows
+    before the write, as the family's build does. Returns the
+    promotion stats."""
+    cols = [partition_cols] if isinstance(partition_cols, str) else list(
+        partition_cols
+    )
+    par = (
+        max(len(changed), spark.sparkContext.defaultParallelism)
+        if changed
+        else 1
+    )
+    out = frame.repartition(par, *cols)
+    if sort_col is not None:
+        out = out.sortWithinPartitions(sort_col)
+    out.write.mode("overwrite").partitionBy(*cols).parquet(
+        f"{out_path}/{component}"
+    )
+    if layout == "manifest":
+        stats = _promote_manifest(
+            spark, base_path, out_path, component, cols[0], changed
+        )
+    else:
+        stats = _promote_partitions(
+            spark,
+            f"{base_path}/{component}",
+            f"{out_path}/{component}",
+            cols[0],
+            changed,
+        )
+    for name in frozen:
+        _promote_whole(spark, base_path, out_path, name, layout)
+    for name in sidecars:
+        _carry_sidecar(spark, base_path, out_path, name)
+    return stats
+
+
+def compact(
+    spark,
+    index_path: str,
+    out_path: str,
+    components: dict,
+    sidecars=(),
+    sort_cols: "dict | None" = None,
+) -> dict:
+    """Commit step 4: collapse an index (plain, link-promoted, or a
+    manifest epoch chain) into one self-contained plain layout at
+    ``out_path``. ``components`` maps each component to its partition
+    column(s), None for an unpartitioned one; ``sort_cols`` names the
+    per-task sort a component's build applies (BM25's ``tok``). The
+    component rewrites read independent resolved views and write
+    disjoint directories, so they run concurrently; the sidecars
+    carry verbatim. Serving from the result is bit-identical (it
+    rewrites the RESOLVED view); the old epochs are then retired by
+    :func:`vacuum_index`. Returns ``{component: {"partitions": n}}``."""
+    from data_lake_with_spark_spark.session import run_concurrent
+
+    names = list(components)
+    sort_cols = sort_cols or {}
+    results = run_concurrent(
+        [
+            lambda c=c: _compact_component(
+                spark, index_path, out_path, c, components[c], sort_cols.get(c)
+            )
+            for c in names
+        ]
+    )
+    for name in sidecars:
+        _carry_sidecar(spark, index_path, out_path, name)
+    return dict(zip(names, results))
 
 
 # ---------------------------------------------------------------------------

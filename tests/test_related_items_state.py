@@ -107,6 +107,46 @@ def test_replayed_basket_rejected_and_floor_crossing(spark, tmp_path):
         )
 
 
+def _incidence(spark, baskets):
+    return spark.createDataFrame(
+        [(bid, it) for bid, items in baskets.items() for it in items],
+        ["basket", "item"],
+    )
+
+
+@pytest.mark.parametrize("layout", ["links", "manifest"])
+@pytest.mark.parametrize("op", ["merge", "delete"])
+def test_zero_pair_delta_batch_keeps_serving_table(spark, tmp_path, op, layout):
+    """A single-item basket adds or removes no pair support, only an
+    item count. Merging one, or deleting one, must still serve the
+    top-k of the surviving history: every affected item's recompute
+    reads the base pairs outside the (here empty) changed-bucket set,
+    which is ALL of them."""
+    hist = {1: ["a", "b"], 2: ["a", "c"], 4: ["b", "c"]}
+    full = {**hist, 3: ["a"]}
+    base_p, out_p = str(tmp_path / "b"), str(tmp_path / "o")
+    graph.build_related_items_state(
+        _incidence(spark, hist if op == "merge" else full),
+        base_p, k=5, min_count=1, n_buckets=4,
+    )
+    if op == "merge":
+        stats = graph.merge_related_items_state(
+            spark, base_p, _incidence(spark, {3: ["a"]}), out_p, layout=layout
+        )
+        survivors = full
+    else:
+        stats = graph.delete_from_related_items_state(
+            spark, base_p, spark.createDataFrame([(3,)], ["basket"]), out_p,
+            layout=layout,
+        )
+        assert stats["matched_baskets"] == 1
+        survivors = hist
+    assert stats["changed_partitions"] == []
+    exp = _topk_rows(graph.related_items(_incidence(spark, survivors), k=5))
+    assert len(exp) == 6
+    assert _topk_rows(graph.related_items_topk(spark, out_p)) == exp
+
+
 @pytest.mark.slow
 def test_randomized_merge_chain_equals_rebuild(spark, tmp_path):
     """Seeded random chain of manifest merge epochs vs a tracked
