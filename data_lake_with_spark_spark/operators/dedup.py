@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from data_lake_with_spark_spark.functions.texthash import char_shingles
 from data_lake_with_spark_spark.operators.text import fingerprint
+from data_lake_with_spark_spark.session import local_frame
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -392,7 +393,7 @@ def _cc_driver_union_find(
     map_schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("_cc", id_type)]
     )
-    map_df = spark.createDataFrame(mapping, map_schema)
+    map_df = local_frame(spark, mapping, map_schema)
     return (
         nodes.select(F.col(id_col).alias("id"))
         .join(F.broadcast(map_df), on="id", how="left")

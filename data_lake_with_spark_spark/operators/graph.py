@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_lake_with_spark_spark.session import local_frame
+
 
 def pagerank_fixed(
     edges: DataFrame,
@@ -1121,7 +1123,7 @@ def _ri_read(spark, path: str, component: str, meta: dict) -> DataFrame:
             raise
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        return local_frame(spark, [], StructType.fromJson(json.loads(schema)))
 
 
 def build_related_items_state(
@@ -1321,7 +1323,8 @@ def related_items_health(spark, path: str) -> DataFrame:
     n_buckets = int(meta["n_buckets"])
     min_count = int(meta["min_count"])
 
-    stamped = spark.createDataFrame(
+    stamped = local_frame(
+        spark,
         [(int(meta["k"]), min_count, n_buckets)],
         "k_stamped int, min_count_stamped int, n_buckets_stamped int",
     )

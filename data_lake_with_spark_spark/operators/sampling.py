@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_lake_with_spark_spark.session import local_frame
+
 
 def rate_threshold(rate: float, precision: int = 2) -> str:
     """Lowercase-hex threshold t such that P[md5-prefix < t] ≈ rate,
@@ -521,8 +523,8 @@ def mixture_plan(
         .groupBy("stratum")
         .agg(F.sum("_tk").cast("bigint").alias("n_tokens_avail"))
     )
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        df.sparkSession,
         [(s, int(w)) for s, w in sorted(weights.items()) if w > 0],
         "stratum string, weight bigint",
     )

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_lake_with_spark_spark.session import collect_bounded, local_frame
+
 
 def label_centroids(
     df: DataFrame,
@@ -1046,6 +1048,22 @@ def compact_ivf_index(spark, index_path: str, out_path: str) -> dict:
     return _compact_vectors(spark, "ivf", index_path, out_path)
 
 
+def _collect_probes(spark, probes_lazy: DataFrame, op: str):
+    """Collect an indexed serve's probe rows — at most
+    :data:`IVF_MAX_PROBE_ROWS`, else ``ValueError`` — and return their
+    sorted ``cent_id`` set (the partition filter) and the same rows as
+    a local relation (the scoring join's broadcast side, which then
+    runs no job and never re-reads the caller's query frame)."""
+    rows = collect_bounded(
+        probes_lazy,
+        IVF_MAX_PROBE_ROWS,
+        f"{op}: query batch has probe rows (n_queries × nprobe) beyond "
+        "IVF_MAX_PROBE_ROWS; serve it with ivf_topk",
+    )
+    probe_ids = sorted({r["cent_id"] for r in rows})
+    return probe_ids, local_frame(spark, rows, probes_lazy.schema)
+
+
 def ivf_topk_indexed(
     spark,
     path: str,
@@ -1064,8 +1082,10 @@ def ivf_topk_indexed(
     a partition filter; ``.explain`` shows it under PartitionFilters).
 
     Scope: serving-style query batches, where the probe-id union is
-    small. A query set so large it probes every list degenerates to
-    the full scan — use :func:`ivf_topk` for that batch-join shape.
+    small: the probe rows are collected to the driver, at most
+    :data:`IVF_MAX_PROBE_ROWS` of them, else ``ValueError``. A query
+    set so large it probes every list degenerates to the full scan —
+    use :func:`ivf_topk` for that batch-join shape.
 
     Reads resolve through ``cow.read_component``, so plain,
     link-promoted, and manifest-maintained layouts serve through the
@@ -1086,18 +1106,7 @@ def ivf_topk_indexed(
         .where(F.col("_rn") <= nprobe)
         .select("cent_id", "query_id", "qv")
     )
-    # Materialize once by COLLECTING the bounded frame (n_queries ×
-    # nprobe rows — a serving batch by the operator's scope contract):
-    # both consumers need it on the driver anyway (the partition
-    # filter as a scalar list, the scoring join as a broadcast), so
-    # one collect replaces the previous localCheckpoint + separate
-    # distinct-collect — one driver job instead of two, and the
-    # re-uploaded LocalTableScan broadcasts exactly as the checkpoint
-    # did (floats round-trip bit-exact through the driver). r15
-    # job-count audit; the r4-ADVICE double-evaluation stays fixed.
-    probe_rows = probes_lazy.collect()
-    probes = spark.createDataFrame(probe_rows, probes_lazy.schema)
-    probe_ids = sorted({r["cent_id"] for r in probe_rows})
+    probe_ids, probes = _collect_probes(spark, probes_lazy, "ivf_topk_indexed")
     # Empty query batch → no probes; F.lit(False) keeps the result
     # schema while pruning every partition (isin([]) would too, but
     # this makes the short-circuit explicit in the plan).
@@ -1176,8 +1185,8 @@ def all_pairs_blas(
             "for larger corpora."
         )
     if len(pdf) == 0:
-        return emb.sparkSession.createDataFrame(
-            [], schema="id_a bigint, id_b bigint, cos double"
+        return local_frame(
+            emb.sparkSession, [], "id_a bigint, id_b bigint, cos double"
         )
     ids = pdf[id_col].to_numpy(dtype=np.int64)
     mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
@@ -1728,6 +1737,13 @@ def _pq_bucket(id_col: str, n_buckets: int):
 #: per bucket, per-file open cost dominates both the ADC scan and
 #: every bucket-pruned maintenance read (r12 verdict #5).
 PQ_MIN_ROWS_PER_BUCKET = 64
+
+#: Serve-path bound on the ``n_queries × nprobe`` probe rows (each
+#: carrying its query or residual vector) that :func:`ivf_topk_indexed`
+#: and :func:`ivfpq_topk_indexed` collect to the driver — far above
+#: any serving batch (64 queries × nprobe 4 is 256 rows); a batch
+#: beyond it is the batch-join shape of :func:`ivf_topk`.
+IVF_MAX_PROBE_ROWS = 16_384
 
 
 def build_pq_index(
@@ -2362,9 +2378,10 @@ def ivfpq_topk_indexed(
     touches 8 small ints per vector (PQ) in ONLY the probed cells
     (IVF): each query's nprobe nearest centroids (6-dp cosine,
     cent_id-asc — the :func:`ivf_topk_indexed` probe kernel) are
-    collected as a bounded ``n_queries × nprobe`` id list and pushed
-    into the codes scan as a partition filter. Per probed cell the
-    query's RESIDUAL ``q - cent_v`` builds the ADC distance table
+    collected as a bounded ``n_queries × nprobe`` id list (at most
+    :data:`IVF_MAX_PROBE_ROWS` probe rows, else ``ValueError``) and
+    pushed into the codes scan as a partition filter. Per probed cell
+    the query's RESIDUAL ``q - cent_v`` builds the ADC distance table
     (q-residual sub-vector vs every codebook entry — ``n_queries ×
     nprobe × m × |codes|`` rows, broadcast-sized for serving batches),
     and each candidate's distance is the DECIMAL(18,6) sum of its m
@@ -2389,13 +2406,7 @@ def ivfpq_topk_indexed(
             "cent_id", "query_id", _resid_col("qv", "cent_v").alias("qrv")
         )
     )
-    # consumed twice (partition-filter list + the ADC table join);
-    # bounded at n_queries × nprobe rows, so ONE collect serves both
-    # consumers (see ivf_topk_indexed — the r15 job-count fold; the
-    # residual doubles round-trip bit-exact through the driver)
-    probe_rows = probes_lazy.collect()
-    probes = spark.createDataFrame(probe_rows, probes_lazy.schema)
-    probe_ids = sorted({r["cent_id"] for r in probe_rows})
+    probe_ids, probes = _collect_probes(spark, probes_lazy, "ivfpq_topk_indexed")
     probe_filter = (
         F.col("cent_id").isin(probe_ids) if probe_ids else F.lit(False)
     )

@@ -16,6 +16,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from data_lake_with_spark_spark.session import collect_bounded, local_frame
 
 #: Tiny per-language marker-word lists for the n-gram/stopword
 #: heuristic language scorer. Deliberately small + deterministic.
@@ -893,9 +896,7 @@ def vocab_coverage(
     top = global_rank(
         types, [F.col("n_tok").desc(), F.col("tok").asc()], rank_col="_rank"
     ).where(F.col("_rank") <= ranks[-1])
-    ranks_df = df.sparkSession.createDataFrame(
-        [(r,) for r in ranks], "top_r bigint"
-    )
+    ranks_df = local_frame(df.sparkSession, [(r,) for r in ranks], "top_r bigint")
     covered = (
         top.join(F.broadcast(ranks_df), F.col("_rank") <= F.col("top_r"))
         .groupBy("top_r")
@@ -986,40 +987,12 @@ def bm25_topk(
     stats = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    return _bm25_rank(
-        ctf, dl, stats, queries, k, k1, b, max_df_ratio, id_col, text_col,
-        query_id_col,
-    )
-
-
-def _bm25_rank(
-    postings: DataFrame,
-    dl: DataFrame,
-    stats: DataFrame,
-    queries: DataFrame,
-    k: int,
-    k1: float,
-    b: float,
-    max_df_ratio: float,
-    id_col: str,
-    text_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Shared scoring tail of :func:`bm25_topk` and
-    :func:`bm25_topk_indexed` — ONE implementation of the match join,
-    df/idf, saturation, sorted-term fold, and per-query top-k, so the
-    served (indexed) scores are bit-identical to the inline ones by
-    construction, not by parallel maintenance."""
-    from pyspark.sql import Window
-
-    # Both bounded frames feed MULTIPLE consumers (qtok: the vocab
-    # derive + the scoring join; mt: df + the score expansion) — pin
-    # them once or every consumer re-runs the query explode / the
-    # posting match (the lineage-recompute class). qtok is query-set
-    # sized; mt is the candidate working set, i.e. exactly the
-    # Σ_q Σ_{t∈q} df(t) rows the operator's cost is bound by — the
-    # frame a serving deployment stages anyway.
+    ).first()
+    # qtok (the vocab derive + the scoring join) and the candidate
+    # set mt (df + the score expansion) each feed two consumers, and
+    # neither is bounded here — pin them once or every consumer
+    # re-runs the query explode / the posting match. mt is exactly the
+    # Σ_q Σ_{t∈q} df(t) rows the operator's cost is bound by.
     qtok = (
         queries.select(
             F.col(query_id_col),
@@ -1029,33 +1002,64 @@ def _bm25_rank(
         .distinct()
         .localCheckpoint()
     )
-    qvocab = qtok.select("tok").distinct()
-    mt = postings.join(F.broadcast(qvocab), "tok").localCheckpoint()
-    dfsub = mt.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    mt = ctf.join(
+        F.broadcast(qtok.select("tok").distinct()), "tok"
+    ).localCheckpoint()
+    return _bm25_rank(
+        mt, dl, stats["n_corpus"], stats["avgdl"], qtok, k, k1, b,
+        max_df_ratio, id_col, query_id_col,
+    )
+
+
+def _bm25_rank(
+    postings: DataFrame,
+    dl: DataFrame,
+    n_corpus: int,
+    avgdl: float,
+    qtok: DataFrame,
+    k: int,
+    k1: float,
+    b: float,
+    max_df_ratio: float,
+    id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Shared scoring tail of :func:`bm25_topk` and
+    :func:`bm25_topk_indexed` — ONE implementation of df/idf,
+    saturation, sorted-term fold, and per-query top-k, so the served
+    (indexed) scores are bit-identical to the inline ones by
+    construction, not by parallel maintenance. ``postings`` is already
+    restricted to the query vocabulary, ``qtok`` holds the distinct
+    ``(query_id, tok)`` pairs and the corpus stats arrive as driver
+    values (plan literals)."""
+    from pyspark.sql import Window
+
+    # df as a partial-aggregate groupBy over the vocab-pruned postings,
+    # broadcast back (query-vocab-bounded); a window keyed by tok
+    # would put a head term's whole posting list in one task
+    dfsub = postings.groupBy("tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("df")
+    )
+    n_corpus = F.lit(n_corpus).cast("bigint")
     if max_df_ratio < 1.0:
         # prune common terms before the (query × posting) expansion:
         # the df table is query-vocab-bounded, so the filter is a
-        # broadcast-side predicate, and mt shrinks by the pruned
-        # terms' (dominant) posting lists. Exact-integer comparison:
-        # df * 1 vs ratio * N, one multiply each side.
-        dfsub = dfsub.crossJoin(F.broadcast(stats.select("n_corpus"))).where(
-            F.col("df") <= F.lit(max_df_ratio) * F.col("n_corpus")
-        ).select("tok", "df")
-    idf = (F.col("n_corpus") - F.col("df") + F.lit(0.5)) / (
-        F.col("df") + F.lit(0.5)
-    )
+        # broadcast-side predicate, and the candidates shrink by the
+        # pruned terms' (dominant) posting lists. Exact-integer
+        # comparison: df * 1 vs ratio * N, one multiply each side.
+        dfsub = dfsub.where(F.col("df") <= F.lit(max_df_ratio) * n_corpus)
+    idf = (n_corpus - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     norm = F.lit(k1) * (
         (F.lit(1.0) - F.lit(b))
-        + F.lit(b) * (F.col("dl") / F.col("avgdl"))
+        + F.lit(b) * (F.col("dl") / F.lit(avgdl))
     )
     contrib = (
         (F.col("tf") * (F.lit(k1) + F.lit(1.0))) / (F.col("tf") + norm)
     ) * idf
     scored = (
-        mt.join(F.broadcast(dfsub), "tok")
+        postings.join(F.broadcast(dfsub), "tok")
         .join(F.broadcast(qtok), "tok")
         .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
         .select(query_id_col, id_col, F.col("tok"), contrib.alias("_c"))
         .groupBy(query_id_col, id_col)
         .agg(
@@ -1082,6 +1086,22 @@ def _bm25_rank(
 #: vocabulary-pruned probe and the bucket directories become the
 #: object store's problem.
 BM25_MIN_ROWS_PER_BUCKET = 64
+
+#: Serve-path bound on the driver collect of a query batch's
+#: ``(query_id, tok)`` rows in :func:`bm25_topk_indexed` — far above
+#: any serving batch (a 64-query batch is a few hundred rows); a
+#: batch beyond it is a corpus-sized join for :func:`bm25_topk`.
+BM25_MAX_QUERY_TERMS = 65_536
+
+
+#: The one-row corpus stats component every BM25 layout carries.
+_BM25_STATS_SCHEMA = "n_corpus bigint, avgdl double, n_buckets int"
+
+
+def _bm25_stats(spark, path: str):
+    """The index's corpus stats row, read with its fixed schema (no
+    footer-inference job)."""
+    return spark.read.schema(_BM25_STATS_SCHEMA).parquet(f"{path}/stats").first()
 
 
 def build_bm25_index(
@@ -1154,61 +1174,16 @@ def build_bm25_index(
     (
         ctf.withColumn("tok_bucket", bucket)
         # one task per bucket → ≤ n_buckets files, each sorted by tok
+        # (the partition column leads the sort, so the partitioned
+        # writer's own required ordering is met and keeps tok's)
         .repartition(n_buckets, "tok_bucket")
-        .sortWithinPartitions("tok")
+        .sortWithinPartitions("tok_bucket", "tok")
         .write.mode("overwrite")
         .partitionBy("tok_bucket")
         .parquet(f"{path}/postings")
     )
     dl.write.mode("overwrite").parquet(f"{path}/doclens")
     stats.write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def _bm25_pruned_postings(
-    spark,
-    path: str,
-    vocab: "list[str]",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The index probe's scan: postings filtered to the query
-    vocabulary's ``tok_bucket`` partitions (Hive partition pruning —
-    ``.explain`` shows it under PartitionFilters; plan-gated in
-    tests) plus a ``tok IN (...)`` predicate for row-group min/max
-    skipping within the probed buckets (the files are tok-sorted).
-    Downstream (:func:`_bm25_rank`) localCheckpoints the candidate
-    set, which truncates this scan out of the FINAL plan — so the
-    pruning gate inspects this frame directly. Postings resolve
-    through ``cow.read_component`` so manifest-maintained layouts
-    serve through the same path (pruning applies within each owning
-    epoch's explicit dir list)."""
-    from data_lake_with_spark_spark.sources import cow
-
-    n_buckets = (
-        spark.read.parquet(f"{path}/stats").select("n_buckets").first()[
-            "n_buckets"
-        ]
-    )
-    buckets = sorted(
-        {
-            r["b"]
-            for r in spark.createDataFrame([(t,) for t in vocab], "tok string")
-            .select(
-                F.pmod(F.xxhash64("tok"), F.lit(n_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .collect()
-        }
-    ) if vocab else []
-    bucket_filter = (
-        F.col("tok_bucket").isin(buckets) if buckets else F.lit(False)
-    )
-    return (
-        cow.read_component(spark, path, "postings")
-        .where(bucket_filter)
-        .where(F.col("tok").isin(vocab) if vocab else F.lit(False))
-        .select(id_col, "tok", "tf")
-    )
 
 
 def compact_bm25_index(spark, index_path: str, out_path: str) -> dict:
@@ -1244,42 +1219,69 @@ def bm25_topk_indexed(
     """BM25 serving against a :func:`build_bm25_index` layout:
     identical scores to :func:`bm25_topk` over the same corpus (the
     scoring tail is literally shared — :func:`_bm25_rank`), but the
-    corpus never re-tokenizes: the query vocabulary (bounded — a
-    benchmark/eval query set is broadcast-sized by definition, the
-    bm25_topk contract) is collected once, hashed with the index's
-    own bucket function, and pushed into the postings scan as a
-    PARTITION filter on ``tok_bucket`` plus a ``tok IN (...)``
-    row-group filter — so a probe reads |query vocab| buckets of the
-    index, not the corpus."""
+    corpus never re-tokenizes. The batch's ``(query_id, tok)`` rows
+    are collected once with each token's hash — at most
+    :data:`BM25_MAX_QUERY_TERMS` of them, else ``ValueError`` (score
+    larger batches with :func:`bm25_topk`) — and the vocabulary is
+    pushed into the postings scan as a PARTITION filter on
+    ``tok_bucket`` (``.explain`` shows it under PartitionFilters) plus
+    a ``tok IN (...)`` row-group filter (the files are tok-sorted), so
+    a probe reads |query vocab| buckets of the index, not the corpus.
+    Postings resolve through ``cow.read_component``, so
+    manifest-maintained layouts serve through the same path."""
+    from data_lake_with_spark_spark.sources import cow
+
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    # the stats component is ONE row — collect it instead of paying a
-    # localCheckpoint job plus a broadcast build over a persisted RDD
-    # (r15 job-count fold; values round-trip bit-exact)
-    stats_src = spark.read.parquet(f"{path}/stats")
-    stats = spark.createDataFrame(stats_src.collect(), stats_src.schema)
-    dl = spark.read.parquet(f"{path}/doclens")
-    qvocab_rows = (
-        queries.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+    stats = _bm25_stats(spark, path)
+    rows = collect_bounded(
+        queries.select(
+            F.col(query_id_col),
+            F.explode(tokens(F.col(text_col))).alias("tok"),
+        )
         .where(F.col("tok") != "")
-        .distinct()
-        .collect()
+        .select(query_id_col, "tok", F.xxhash64("tok")),
+        BM25_MAX_QUERY_TERMS,
+        "bm25_topk_indexed: query batch has (query, term) rows beyond "
+        "BM25_MAX_QUERY_TERMS; score it with bm25_topk",
     )
-    vocab = [r["tok"] for r in qvocab_rows]
-    postings = _bm25_pruned_postings(spark, path, vocab, id_col=id_col)
+    # the driver-side frames plan as local relations: the scoring
+    # join broadcasts them without re-reading the caller's frame, and
+    # Python % by a positive modulus is Spark's pmod
+    hashes = {tok: h for _, tok, h in rows}
+    vocab = sorted(hashes)
+    buckets = sorted({h % stats["n_buckets"] for h in hashes.values()})
+    qtok = local_frame(
+        spark,
+        list(dict.fromkeys((q, tok) for q, tok, _ in rows)),
+        StructType(
+            [queries.schema[query_id_col], StructField("tok", StringType())]
+        ),
+    )
+    postings = cow.read_component(spark, path, "postings")
+    # doclens share the postings' id column: a known schema, no
+    # footer-inference job
+    dl = spark.read.schema(
+        StructType(
+            [postings.schema[id_col], StructField("dl", LongType())]
+        )
+    ).parquet(f"{path}/doclens")
     return _bm25_rank(
-        postings,
+        postings.where(cow.in_partitions("tok_bucket", buckets))
+        .where(cow.in_partitions("tok", vocab))
+        .select(id_col, "tok", "tf"),
         dl,
-        stats.select("n_corpus", "avgdl"),
-        queries,
+        stats["n_corpus"],
+        stats["avgdl"],
+        qtok,
         k,
         k1,
         b,
         max_df_ratio,
         id_col,
-        text_col,
         query_id_col,
     )
+
 
 def bm25_staleness_report(spark, path: str) -> DataFrame:
     """Index-health report for a :func:`build_bm25_index` layout — the
@@ -1739,8 +1741,7 @@ def _bm25_n_buckets(spark, op, base_path, out_path, layout) -> int:
     from data_lake_with_spark_spark.sources import cow
 
     cow.check_target(spark, op, base_path, out_path, layout, "postings")
-    stats = spark.read.parquet(f"{base_path}/stats")
-    return stats.select("n_buckets").first()["n_buckets"]
+    return _bm25_stats(spark, base_path)["n_buckets"]
 
 
 def merge_bm25_index(

@@ -139,9 +139,8 @@ def clear_persistent_rdds(spark: SparkSession) -> int:
     """Unpersist persistent RDDs this package's operators left behind.
 
     Operators that ``localCheckpoint`` bounded frames (PPJoin's prefix
-    index, CC rounds, IVF probe lists) leave their checkpoint RDDs
-    persisted until the JVM ContextCleaner notices the Python refs are
-    gone — GC-timing-dependent, so a long single-session run (the
+    index, CC rounds) leave their checkpoint RDDs persisted until the
+    JVM ContextCleaner notices the Python refs are gone — GC-timing-dependent, so a long single-session run (the
     driver's 110-query gate, bench) accumulates them in bursts
     (observed up to 19 after the CC queries, dropping to 4 only when
     GC happened to fire). Harness loops call this BETWEEN queries —
@@ -169,6 +168,43 @@ def clear_persistent_rdds(spark: SparkSession) -> int:
         return n
     except Exception:
         return 0
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """A DataFrame over driver-held ``rows`` (tuples in ``schema``
+    order; ``schema`` a StructType or DDL string) that plans as a JVM
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans as a ``LogicalRDD`` over a
+    PythonRDD, so every action touching the frame starts Python-worker
+    tasks to re-serialize the rows. Shipped once as a pyarrow Table,
+    the rows live in the plan itself: collecting the frame or
+    broadcasting it into a join runs no job of its own."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def collect_bounded(frame, bound: int, what: str) -> list:
+    """``frame.collect()`` for a frame whose size a caller's contract
+    bounds: at most ``bound`` rows, read through ``limit(bound + 1)``
+    in the same job, so an oversize batch raises ``ValueError`` (with
+    ``what`` naming the bound and the alternative) instead of filling
+    the driver."""
+    rows = frame.limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise ValueError(f"{what}: more than {bound} rows")
+    return rows
 
 
 def run_concurrent(thunks):

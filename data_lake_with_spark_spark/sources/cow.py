@@ -299,35 +299,38 @@ def read_component(spark, index_path: str, component: str):
     partitions later epochs re-own, and the explicit path list is
     what excludes them. Catalyst partition pruning still applies to
     downstream ``.where`` filters (the listed dirs carry their
-    partition values)."""
+    partition values). Each owner read uses the schema the manifest
+    carries, so no read pays a footer-inference job."""
     import json
+
+    from pyspark.sql.types import StructType
 
     m = read_manifest(spark, index_path, component)
     if m is None:
         return spark.read.parquet(f"{index_path}/{component}")
     if m.get("whole"):
         return spark.read.parquet(m["whole"])
+    schema = (
+        StructType.fromJson(json.loads(m["schema"])) if m.get("schema") else None
+    )
     by_owner: dict[str, list[str]] = {}
     for name, owner in m["entries"].items():
         by_owner.setdefault(owner, []).append(name)
     frames = []
     for owner, names in sorted(by_owner.items()):
-        frames.append(
-            spark.read.option("basePath", owner).parquet(
-                *[f"{owner}/{n}" for n in sorted(names)]
-            )
-        )
+        reader = spark.read.option("basePath", owner)
+        if schema is not None:
+            reader = reader.schema(schema)
+        frames.append(reader.parquet(*[f"{owner}/{n}" for n in sorted(names)]))
     if not frames:
         # Fully-emptied component (every id deleted): the epoch's own
         # partitioned overwrite left only _SUCCESS — no parquet footer
-        # to infer a schema from — so the manifest CARRIES the schema
-        # and we return the promised empty frame with it (r10 ADVICE).
-        if m.get("schema"):
-            from pyspark.sql.types import StructType
+        # to infer a schema from — so the manifest's schema gives the
+        # promised empty frame its columns.
+        if schema is not None:
+            from data_lake_with_spark_spark.session import local_frame
 
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema"]))
-            )
+            return local_frame(spark, [], schema)
         return spark.read.parquet(f"{index_path}/{component}")
     out = frames[0]
     for f in frames[1:]:
@@ -516,7 +519,7 @@ def _compact_component(
     )
     out = df.repartition(*[F.col(c) for c in cols])
     if sort_col is not None:
-        out = out.sortWithinPartitions(sort_col)
+        out = out.sortWithinPartitions(*cols, sort_col)
     out.write.mode("overwrite").partitionBy(*cols).parquet(
         f"{out_path}/{component}"
     )
@@ -591,9 +594,10 @@ def commit(
     ``frozen`` whole components and carry the ``sidecars``. The
     repartition is keyed by every partition column (one file per leaf
     directory) with a task count scaled to the executor pool, so leaf
-    creation runs pool-wide; ``sort_col`` sorts each task's rows
-    before the write, as the family's build does. Returns the
-    promotion stats."""
+    creation runs pool-wide; ``sort_col`` sorts each file's rows, as
+    the family's build does (the sort leads with the partition
+    columns, so the partitioned writer keeps its order instead of
+    re-sorting by partition alone). Returns the promotion stats."""
     cols = [partition_cols] if isinstance(partition_cols, str) else list(
         partition_cols
     )
@@ -604,7 +608,7 @@ def commit(
     )
     out = frame.repartition(par, *cols)
     if sort_col is not None:
-        out = out.sortWithinPartitions(sort_col)
+        out = out.sortWithinPartitions(*cols, sort_col)
     out.write.mode("overwrite").partitionBy(*cols).parquet(
         f"{out_path}/{component}"
     )
@@ -639,7 +643,7 @@ def compact(
     manifest epoch chain) into one self-contained plain layout at
     ``out_path``. ``components`` maps each component to its partition
     column(s), None for an unpartitioned one; ``sort_cols`` names the
-    per-task sort a component's build applies (BM25's ``tok``). The
+    per-file sort a component's build applies (BM25's ``tok``). The
     component rewrites read independent resolved views and write
     disjoint directories, so they run concurrently; the sidecars
     carry verbatim. Serving from the result is bit-identical (it
@@ -1357,7 +1361,10 @@ def maintenance_plan(
         trigger_metric,
         trigger_ratio,
     )
-    return spark.createDataFrame(
+    from data_lake_with_spark_spark.session import local_frame
+
+    return local_frame(
+        spark,
         [row],
         "read_amplification bigint, n_retired bigint, "
         "retired_bytes bigint, retrain_due boolean, "

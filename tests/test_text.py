@@ -538,19 +538,12 @@ def test_bm25_indexed_matches_inline_and_prunes_buckets(
     got = sorted(map(tuple, served.collect()))
     exp = sorted(map(tuple, inline.collect()))
     assert got == exp and len(got) > 0
-    # the candidate set is localCheckpointed (lineage-recompute pin),
-    # which truncates the scan out of the FINAL plan — gate the
-    # operator's own scan-construction path directly
-    scan = text._bm25_pruned_postings(spark, idx, ["the", "zq"])
-    p = explain_shuffles(scan)
-    pf = p.split("PartitionFilters:")[1].splitlines()[0]
-    assert "tok_bucket" in pf  # vocab buckets pushed into pruning
-    # the token predicate reaches the parquet row groups too
-    pushed = p.split("PushedFilters:")[1].splitlines()[0]
-    assert "tok" in pushed
-    # and pruning is real: a 1-token vocab reads ≤ 1 bucket dir
-    one = text._bm25_pruned_postings(spark, idx, ["the"])
-    assert one.count() <= scan.count()
+    # the served frame's own final plan carries the pruned scan: the
+    # vocab buckets under PartitionFilters, the tokens under
+    # PushedFilters (row-group skipping inside the tok-sorted files)
+    lines = explain_shuffles(served).splitlines()
+    assert any("tok_bucket" in ln for ln in lines if "PartitionFilters:" in ln)
+    assert any("tok" in ln for ln in lines if "PushedFilters:" in ln)
 
 
 def test_bm25_index_rejects_bad_buckets(spark, tmp_path):

@@ -20,8 +20,8 @@ in half, and so on: queries sampled from the corpus now carry head
 terms whose posting lists are corpus-sized, which is exactly the
 candidate blow-up ``max_df_ratio`` exists to prune.
 
-Only documents.parquet is written — this fixture feeds the BM25
-max_df A/B (tools/bm25_maxdf_ab.py), nothing else; the appended
+Only documents.parquet is written — this fixture is for BM25
+``max_df_ratio`` measurements, nothing else; the appended
 shared tokens WOULD be a hot-shingle artifact for MinHash/PPJoin
 probes (the lesson the affine cipher encodes), so do not point dedup
 probes at this dir. Output lands outside the repo (/tmp).
