@@ -1138,6 +1138,8 @@ def build_bm25_index(
     per-file open cost makes every vocabulary-pruned probe slower
     than a flat scan.
     """
+    from data_lake_with_spark_spark.sources import cow
+
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     ctf = (
@@ -1171,16 +1173,13 @@ def build_bm25_index(
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
     ).withColumn("n_buckets", F.lit(n_buckets).cast("int"))
     bucket = F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).cast("int")
-    (
-        ctf.withColumn("tok_bucket", bucket)
-        # one task per bucket → ≤ n_buckets files, each sorted by tok
-        # (the partition column leads the sort, so the partitioned
-        # writer's own required ordering is met and keeps tok's)
-        .repartition(n_buckets, "tok_bucket")
-        .sortWithinPartitions("tok_bucket", "tok")
-        .write.mode("overwrite")
-        .partitionBy("tok_bucket")
-        .parquet(f"{path}/postings")
+    # one task per bucket → ≤ n_buckets files, each sorted by tok
+    cow.write_partitioned(
+        ctf.withColumn("tok_bucket", bucket),
+        f"{path}/postings",
+        "tok_bucket",
+        n_tasks=n_buckets,
+        sort_col="tok",
     )
     dl.write.mode("overwrite").parquet(f"{path}/doclens")
     stats.write.mode("overwrite").parquet(f"{path}/stats")

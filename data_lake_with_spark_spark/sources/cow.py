@@ -377,21 +377,40 @@ def _promote_manifest(
     base_path: str,
     out_path: str,
     component: str,
-    partition_col: str,
+    partition_cols: list,
     changed_values,
+    written_schema,
 ) -> dict:
     """Manifest layout: after the changed partitions landed in
     ``{out_path}/{component}``, write a manifest that points those
     names at the new epoch and carries every unchanged name's owner
     forward from the base (flat chain — owners are final URIs). The
-    manifest also carries the component SCHEMA (a footer-only read of
-    the base's resolved view), so a later epoch that empties the
-    component entirely still serves an empty frame with the right
-    columns."""
+    manifest also carries the component SCHEMA, the one every owner
+    read uses: the base's resolved view widened by the columns this
+    epoch wrote (``written_schema``; a batch with a ``long`` id merged
+    into an ``int`` base writes INT64 files, which Spark reads as
+    ``long`` but not as ``int``). Partition columns keep the base's
+    types, since their values live in directory names. A later epoch
+    that empties the component entirely still serves an empty frame
+    with the right columns."""
     import json
 
+    from pyspark.sql.types import StructType
+
+    from data_lake_with_spark_spark.session import local_frame
+
+    partition_col = partition_cols[0]
     changed = {str(v) for v in changed_values}
-    schema_json = read_component(spark, base_path, component).schema.json()
+    written = StructType(
+        [f for f in written_schema.fields if f.name not in partition_cols]
+    )
+    # union of two empty local relations: Spark's own set-operation
+    # type widening, no job
+    schema_json = (
+        local_frame(spark, [], read_component(spark, base_path, component).schema)
+        .unionByName(local_frame(spark, [], written), allowMissingColumns=True)
+        .schema.json()
+    )
     carried = {
         name: owner
         for name, owner in base_partition_owners(
@@ -485,8 +504,6 @@ def _compact_component(
     be the index nor any epoch that OWNS bytes the resolved view still
     reads: the rewrite reads lazily while ``mode("overwrite")``
     deletes the target."""
-    from pyspark.sql import functions as F
-
     assert_fresh_out("compact", index_path, out_path)
     m = read_manifest(spark, index_path, component)
     if m is not None:
@@ -514,17 +531,40 @@ def _compact_component(
         return {"partitions": 0}
     # a nested layout (IVFPQ's (id_bucket, cent_id)) passes the column
     # list; the FIRST column is the promotion/manifest unit
-    cols = [partition_cols] if isinstance(partition_cols, str) else list(
-        partition_cols
-    )
-    out = df.repartition(*[F.col(c) for c in cols])
-    if sort_col is not None:
-        out = out.sortWithinPartitions(*cols, sort_col)
-    out.write.mode("overwrite").partitionBy(*cols).parquet(
-        f"{out_path}/{component}"
-    )
+    cols = _cols(partition_cols)
+    write_partitioned(df, f"{out_path}/{component}", cols, sort_col=sort_col)
     n = len(base_partition_owners(spark, out_path, component, cols[0]))
     return {"partitions": n}
+
+
+def _cols(partition_cols: "str | list[str]") -> list:
+    return [partition_cols] if isinstance(partition_cols, str) else list(
+        partition_cols
+    )
+
+
+def write_partitioned(
+    frame,
+    path: str,
+    partition_cols: "str | list[str]",
+    n_tasks: "int | None" = None,
+    sort_col: "str | None" = None,
+) -> None:
+    """THE partitioned index-file writer (build, commit, compaction):
+    a repartition keyed by every partition column — ``n_tasks`` tasks,
+    else the session's shuffle partition count — so each leaf
+    directory gets one file, then an overwrite ``partitionBy`` write.
+    With ``sort_col`` each file's rows are sorted by it; the per-task
+    sort leads with the partition columns, the order the partitioned
+    writer requires, so the writer keeps ``sort_col``'s order instead
+    of re-sorting by the partition columns alone."""
+    cols = _cols(partition_cols)
+    out = (
+        frame.repartition(n_tasks, *cols) if n_tasks else frame.repartition(*cols)
+    )
+    if sort_col is not None:
+        out = out.sortWithinPartitions(*cols, sort_col)
+    out.write.mode("overwrite").partitionBy(*cols).parquet(path)
 
 
 def check_target(
@@ -591,30 +631,23 @@ def commit(
     """Commit step 3: write ``frame`` — the full new content of the
     ``changed`` partitions — to ``{out_path}/{component}``, then
     promote the base's unchanged partitions by ``layout``, promote the
-    ``frozen`` whole components and carry the ``sidecars``. The
-    repartition is keyed by every partition column (one file per leaf
-    directory) with a task count scaled to the executor pool, so leaf
-    creation runs pool-wide; ``sort_col`` sorts each file's rows, as
-    the family's build does (the sort leads with the partition
-    columns, so the partitioned writer keeps its order instead of
-    re-sorting by partition alone). Returns the promotion stats."""
-    cols = [partition_cols] if isinstance(partition_cols, str) else list(
-        partition_cols
-    )
+    ``frozen`` whole components and carry the ``sidecars``. The write
+    (:func:`write_partitioned`) runs a task count scaled to the
+    executor pool, so leaf creation runs pool-wide; ``sort_col`` sorts
+    each file's rows, as the family's build does. Returns the
+    promotion stats."""
+    cols = _cols(partition_cols)
     par = (
         max(len(changed), spark.sparkContext.defaultParallelism)
         if changed
         else 1
     )
-    out = frame.repartition(par, *cols)
-    if sort_col is not None:
-        out = out.sortWithinPartitions(*cols, sort_col)
-    out.write.mode("overwrite").partitionBy(*cols).parquet(
-        f"{out_path}/{component}"
+    write_partitioned(
+        frame, f"{out_path}/{component}", cols, n_tasks=par, sort_col=sort_col
     )
     if layout == "manifest":
         stats = _promote_manifest(
-            spark, base_path, out_path, component, cols[0], changed
+            spark, base_path, out_path, component, cols, changed, frame.schema
         )
     else:
         stats = _promote_partitions(

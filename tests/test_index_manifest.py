@@ -171,6 +171,44 @@ def test_bm25_manifest_merge_delete_serving(spark, tmp_path):
         )
 
 
+def test_manifest_schema_widens_to_a_wider_batch_id(spark, tmp_path):
+    """A batch whose id column is wider than the base's (long into an
+    int base) writes INT64 files beside the base's INT32 ones. The
+    manifest records the widened schema, so the epoch reads every id
+    back as long, a further manifest epoch maintains it, and the
+    served scores equal the inline bm25_topk over the final corpus."""
+    from pyspark.sql.types import LongType
+
+    vocab = [f"tok{i:02d}" for i in range(40)]
+    rows = [(i, f"{vocab[i % 40]} {vocab[(i * 7) % 40]}") for i in range(600)]
+    batch_rows = [(5000, "tok01 tok02"), (7, "tok03")]
+    base = spark.createDataFrame(rows, "doc_id int, text string")
+    batch = spark.createDataFrame(batch_rows, "doc_id long, text string")
+    base_idx, e1, e2 = (str(tmp_path / d) for d in ("b", "e1", "e2"))
+    text.build_bm25_index(base, base_idx, n_buckets=16)
+    text.merge_bm25_index(spark, base_idx, batch, e1, layout="manifest")
+    owners = set(cow.read_manifest(spark, e1, "postings")["entries"].values())
+    assert len(owners) == 2  # base INT32 buckets and epoch INT64 buckets
+    post = cow.read_component(spark, e1, "postings")
+    assert post.schema["doc_id"].dataType == LongType()
+    assert post.select("doc_id").distinct().count() == 601
+    text.delete_from_bm25_index(
+        spark, e1, spark.createDataFrame([(3,)], "doc_id long"), e2,
+        layout="manifest",
+    )
+    final = spark.createDataFrame(
+        [r for r in rows if r[0] not in (3, 7)] + batch_rows,
+        "doc_id long, text string",
+    )
+    qs = spark.createDataFrame(
+        [(1, "tok01 tok03 tok09"), (2, " ".join(vocab[::3]))],
+        "query_id long, text string",
+    )
+    got = sorted(map(tuple, text.bm25_topk_indexed(spark, e2, qs, k=5).collect()))
+    exp = sorted(map(tuple, text.bm25_topk(final, qs, k=5).collect()))
+    assert got == exp and got
+
+
 @pytest.mark.slow
 def test_compaction_collapses_epoch_chain(spark, tmp_path):
     """compact_*_index rewrites the RESOLVED view into one plain

@@ -539,11 +539,51 @@ def test_bm25_indexed_matches_inline_and_prunes_buckets(
     exp = sorted(map(tuple, inline.collect()))
     assert got == exp and len(got) > 0
     # the served frame's own final plan carries the pruned scan: the
-    # vocab buckets under PartitionFilters, the tokens under
-    # PushedFilters (row-group skipping inside the tok-sorted files)
+    # vocab buckets under PartitionFilters, the token IN list under
+    # PushedFilters (row-group skipping inside the tok-sorted files;
+    # the join adds IsNotNull(tok) there by itself, so match the IN)
     lines = explain_shuffles(served).splitlines()
     assert any("tok_bucket" in ln for ln in lines if "PartitionFilters:" in ln)
-    assert any("tok" in ln for ln in lines if "PushedFilters:" in ln)
+    assert any("In(tok," in ln for ln in lines if "PushedFilters:" in ln)
+    # and pruning is real: a one-token batch reads one bucket file per
+    # postings scan, fewer files and rows than the whole batch reads
+    one = qs.limit(1).withColumn("text", F.lit("the"))
+    one_read = _postings_scans_read(text.bm25_topk_indexed(spark, idx, one, k=5))
+    batch_read = _postings_scans_read(served)
+    assert one_read and all(files == 1 for files, _ in one_read)
+    assert min(files for files, _ in batch_read) > 1
+    assert max(rows for _, rows in one_read) < min(rows for _, rows in batch_read)
+
+
+def _postings_scans_read(frame):
+    """Collect ``frame``, then return ``(files, rows)`` read by each
+    of its executed postings scans (SQL metrics of the final plan)."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.length())]
+
+    def scans(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return scans(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return scans(node.plan())
+        if name == "ReusedExchangeExec":
+            return scans(node.child())
+        out = [node] if name == "FileSourceScanExec" else []
+        for child in seq(node.children()):
+            out += scans(child)
+        return out
+
+    frame.collect()
+    read = []
+    for scan in scans(frame._jdf.queryExecution().executedPlan()):
+        if "postings" in scan.relation().location().rootPaths().toString():
+            m = scan.metrics()
+            read.append(
+                (int(m.apply("numFiles").value()), int(m.apply("numOutputRows").value()))
+            )
+    return read
 
 
 def test_bm25_index_rejects_bad_buckets(spark, tmp_path):
