@@ -939,16 +939,31 @@ _VEC_LAYOUT = {
 }
 
 
-def _vec_target(spark, family, op, base_path, out_path, layout):
-    """Check the commit target and return the base's meta sidecar."""
+def _vec_components(family) -> list:
+    """The manifest-resolvable components a vacuum of ``family`` reads:
+    the partitioned one plus the frozen ones."""
+    comp, _cols, frozen = _VEC_LAYOUT[family][:3]
+    return [comp, *frozen]
+
+
+def _vec_meta(spark, family, base_path):
+    """The base's meta sidecar; raises when ``family`` requires one."""
     from data_lake_with_spark_spark.sources import cow
 
-    comp, _cols, _frozen, meta_name, required = _VEC_LAYOUT[family]
-    cow.check_target(spark, op, base_path, out_path, layout, comp)
+    meta_name, required = _VEC_LAYOUT[family][3:]
     meta = cow.read_json(spark, f"{base_path}/{meta_name}")
     if meta is None and required:
         raise FileNotFoundError(f"no {meta_name} under {base_path!r}")
     return meta
+
+
+def _vec_target(spark, family, op, base_path, out_path, layout):
+    """Check the commit target and return the base's meta sidecar."""
+    from data_lake_with_spark_spark.sources import cow
+
+    comp = _VEC_LAYOUT[family][0]
+    cow.check_target(spark, op, base_path, out_path, layout, comp)
+    return _vec_meta(spark, family, base_path)
 
 
 def _vec_commit(spark, family, rows, base_path, out_path, layout, changed):
@@ -2658,11 +2673,12 @@ def retrain_ivf_index(
     fresh centroids via :func:`build_ivf_index`'s stripe rule over
     the CURRENT id set (``target_centroids`` re-derives the mod from
     the current count — the budget rule tracks churn), re-encodes as
-    one new plain epoch, re-points the pointer LAST, and (default)
-    vacuums the superseded chain — pass ``vacuum=False`` and vacuum
-    out-of-band when long-running readers hold older epochs (the
-    ``cow.vacuum_index`` quiesce discipline). Merges resume against
-    the NEW frozen quantizer. Returns {"epoch", "n_vectors",
+    one new plain epoch, re-points the pointer LAST with a
+    compare-and-set against the epoch it read (``cow.publish``), and
+    (default) vacuums the superseded chain — pass ``vacuum=False`` and
+    vacuum out-of-band when long-running readers hold older epochs
+    (the ``cow.vacuum_index`` quiesce discipline). Merges resume
+    against the NEW frozen quantizer. Returns {"epoch", "n_vectors",
     "n_centroids"[, "vacuum"]}."""
     from data_lake_with_spark_spark.sources import cow
 
@@ -2672,28 +2688,46 @@ def retrain_ivf_index(
         .select("vec_id", "embedding")
         .localCheckpoint()
     )
-    epoch = cow.new_epoch_path(spark, root, label="retrain")
-    build_ivf_index(
-        corpus, epoch, centroid_mod=centroid_mod, vec_dim=vec_dim,
-        target_centroids=target_centroids,
+    epoch, swept = cow.publish(
+        spark, root, "retrain", cur,
+        lambda out: build_ivf_index(
+            corpus, out, centroid_mod=centroid_mod, vec_dim=vec_dim,
+            target_centroids=target_centroids,
+        ),
+        _vec_components("ivf") if vacuum else (),
     )
-    # CAS commit: the retrain derived from `cur`; if a streaming
-    # ingest (or another maintainer) re-pointed the root mid-retrain,
-    # raise instead of silently orphaning its applied epoch
-    cow.set_current(spark, root, epoch, expected=cur)
     out = {
         "epoch": epoch,
         "n_vectors": corpus.count(),
         "n_centroids": spark.read.parquet(f"{epoch}/centroids").count(),
     }
-    if vacuum:
-    # min_age 0 is safe HERE: this op just WON the CAS, so a racing
-    # maintainer's commit raises StalePointerError regardless —
-    # vacuuming its written-not-committed epoch can't corrupt the root
-        out["vacuum"] = cow.vacuum_index(
-            spark, root, ["lists", "centroids"], min_age_seconds=0.0
-        )
-    return out
+    return {**out, "vacuum": swept} if vacuum else out
+
+
+def _retrain_codes(
+    spark, root, family, corpus, id_col, n_buckets, vacuum, build
+):
+    """The PQ/IVFPQ retrain: check that ``corpus`` carries exactly the
+    index's current ids, carry the base's bucket count unless
+    ``n_buckets`` is given, and publish ``build(epoch, n_buckets)`` as
+    the root's next epoch."""
+    from data_lake_with_spark_spark.sources import cow
+
+    cur = cow.get_current(spark, root)
+    idx_ids = (
+        cow.read_component(spark, cur, "codes")
+        .select(F.col(id_col))
+        .distinct()
+    )
+    _retrain_guard_ids(spark, idx_ids, corpus, id_col)
+    meta = cow.read_json(spark, f"{cur}/{_VEC_LAYOUT[family][3]}") or {}
+    nb = n_buckets if n_buckets is not None else meta.get("n_buckets", 32)
+    epoch, swept = cow.publish(
+        spark, root, "retrain", cur, lambda out: build(out, nb),
+        _vec_components(family) if vacuum else (),
+    )
+    out = {"epoch": epoch, "n_vectors": corpus.count()}
+    return {**out, "vacuum": swept} if vacuum else out
 
 
 def retrain_pq_index(
@@ -2719,34 +2753,14 @@ def retrain_pq_index(
     ``n_buckets`` None carries the base layout's bucket count (the
     meta sidecar). See :func:`retrain_ivf_index` for the vacuum
     caveat. Returns {"epoch", "n_vectors"[, "vacuum"]}."""
-    from data_lake_with_spark_spark.sources import cow
-
-    cur = cow.get_current(spark, root)
-    idx_ids = (
-        cow.read_component(spark, cur, "codes")
-        .select(F.col(id_col))
-        .distinct()
+    return _retrain_codes(
+        spark, root, "pq", corpus, id_col, n_buckets, vacuum,
+        lambda out, nb: build_pq_index(
+            corpus, out, dim=dim, m=m, centroid_mod=centroid_mod,
+            target_codes=target_codes, n_buckets=nb,
+            id_col=id_col, vec_col=vec_col,
+        ),
     )
-    _retrain_guard_ids(spark, idx_ids, corpus, id_col)
-    meta = cow.read_json(spark, _pq_meta_uri(cur)) or {}
-    nb = n_buckets if n_buckets is not None else meta.get("n_buckets", 32)
-    epoch = cow.new_epoch_path(spark, root, label="retrain")
-    build_pq_index(
-        corpus, epoch, dim=dim, m=m, centroid_mod=centroid_mod,
-        target_codes=target_codes, n_buckets=nb,
-        id_col=id_col, vec_col=vec_col,
-    )
-    # CAS commit — see retrain_ivf_index
-    cow.set_current(spark, root, epoch, expected=cur)
-    out = {"epoch": epoch, "n_vectors": corpus.count()}
-    if vacuum:
-    # min_age 0 is safe HERE: this op just WON the CAS, so a racing
-    # maintainer's commit raises StalePointerError regardless —
-    # vacuuming its written-not-committed epoch can't corrupt the root
-        out["vacuum"] = cow.vacuum_index(
-            spark, root, ["codes", "codebooks"], min_age_seconds=0.0
-        )
-    return out
 
 
 def retrain_ivfpq_index(
@@ -2779,36 +2793,15 @@ def retrain_ivfpq_index(
     drift stripe reports recall@5 before/after (MEASUREMENTS_r12).
     See :func:`retrain_ivf_index` for the vacuum caveat. Returns
     {"epoch", "n_vectors"[, "vacuum"]}."""
-    from data_lake_with_spark_spark.sources import cow
-
-    cur = cow.get_current(spark, root)
-    idx_ids = (
-        cow.read_component(spark, cur, "codes")
-        .select(F.col(id_col))
-        .distinct()
+    return _retrain_codes(
+        spark, root, "ivfpq", corpus, id_col, n_buckets, vacuum,
+        lambda out, nb: build_ivfpq_index(
+            corpus, out, dim=dim, m=m, centroid_mod=centroid_mod,
+            target_centroids=target_centroids, n_buckets=nb,
+            id_col=id_col, vec_col=vec_col, vec_dim=vec_dim,
+            strict_layout=strict_layout,
+        ),
     )
-    _retrain_guard_ids(spark, idx_ids, corpus, id_col)
-    meta = cow.read_json(spark, _ivfpq_meta_uri(cur)) or {}
-    nb = n_buckets if n_buckets is not None else meta.get("n_buckets", 32)
-    epoch = cow.new_epoch_path(spark, root, label="retrain")
-    build_ivfpq_index(
-        corpus, epoch, dim=dim, m=m, centroid_mod=centroid_mod,
-        target_centroids=target_centroids, n_buckets=nb,
-        id_col=id_col, vec_col=vec_col, vec_dim=vec_dim,
-        strict_layout=strict_layout,
-    )
-    # CAS commit — see retrain_ivf_index
-    cow.set_current(spark, root, epoch, expected=cur)
-    out = {"epoch": epoch, "n_vectors": corpus.count()}
-    if vacuum:
-    # min_age 0 is safe HERE: this op just WON the CAS, so a racing
-    # maintainer's commit raises StalePointerError regardless —
-    # vacuuming its written-not-committed epoch can't corrupt the root
-        out["vacuum"] = cow.vacuum_index(
-            spark, root, ["codes", "codebooks", "centroids"],
-            min_age_seconds=0.0,
-        )
-    return out
 
 
 def _resolve_index_path(spark, path: str) -> str:

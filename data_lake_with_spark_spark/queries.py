@@ -9589,7 +9589,7 @@ _ROTATED_IN = (
     # window) and the hub local-clustering audit (member-pushdown
     # triangle attribution, k-bounded hub collect). Promoted
     # same-round after 30× probes + the synthetic-graph-side probe
-    # (tools/graph_scale_probe.py) + a full driver_sim replay.
+    # + a full driver_sim replay.
     "q188_related_items",
     "q189_hub_clustering",
     # round 10: the weighted-edge authority pair — seeded PageRank

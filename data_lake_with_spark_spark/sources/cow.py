@@ -30,7 +30,10 @@ sequence:
    partition columns} map into one self-contained plain layout, the
    vacuum/OPTIMIZE step that ends a manifest chain.
 
-The caller then publishes the new epoch with :func:`set_current`.
+The caller then publishes the new epoch with :func:`publish` (next
+epoch path, write, compare-and-set :func:`set_current`, optional
+vacuum), the one tail shared by the streaming ingests, their in-stream
+compactions and the retrain ops.
 
 Promotion comes in two layouts:
 
@@ -1068,6 +1071,27 @@ def get_current(spark, root: str) -> str:
             "first epoch and set_current() it"
         )
     return cur
+
+
+def publish(spark, root: str, label: str, expected, write, vacuum=()):
+    """Publish one epoch: take the next epoch path under ``root``, let
+    ``write(epoch)`` fill it, commit it with a compare-and-set against
+    ``expected`` (the pointer the epoch was derived from; ``None`` for
+    a root's first build) and then, when ``vacuum`` names the
+    manifest-resolvable components, retire every epoch the new view no
+    longer references at ``min_age_seconds=0``. The age-0 vacuum is
+    safe only here: this maintainer has just won the CAS, so any racing
+    maintainer's commit raises :class:`StalePointerError` whether or
+    not its written-but-uncommitted epoch survives. Readers of older
+    epochs get no quiesce window; callers with such readers pass no
+    ``vacuum`` and run :func:`vacuum_index` after quiesce. Returns
+    ``(epoch, vacuum stats or None)``."""
+    epoch = new_epoch_path(spark, root, label=label)
+    write(epoch)
+    set_current(spark, root, epoch, expected=expected)
+    if not vacuum:
+        return epoch, None
+    return epoch, vacuum_index(spark, root, list(vacuum), min_age_seconds=0.0)
 
 
 def _tree_bytes(spark, path: str) -> int:

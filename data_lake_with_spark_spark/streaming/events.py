@@ -19,9 +19,62 @@ Components:
 Scale notes: state stores partition by group key; watermarks bound
 state size; at 100 TB/day the source would be Kafka with the same
 transform graph (source/sink swap only).
+
+Index-maintenance ingests — :func:`index_maintenance_ingest` (BM25),
+:func:`vector_index_maintenance_ingest` (IVF),
+:func:`pq_index_maintenance_ingest`,
+:func:`ivfpq_index_maintenance_ingest` and
+:func:`related_items_maintenance_ingest` — keep a serving index under a
+lifecycle root (``sources/cow.py``) current from a stream. All five run
+one cycle per micro-batch (``_maintain``); each function's docstring
+holds only its family's bootstrap stripes, replay rule and first-build
+arguments. The shared contracts:
+
+- **Epochs.** The first batch builds epoch 0 of a root that has no
+  pointer. Every later batch passes its family's admission check and
+  becomes one manifest merge epoch against ``cow.get_current`` (only
+  its changed partitions plus a small JSON are written).
+- **CAS commit and restart.** The pointer moves last, through
+  ``cow.publish``: ``cow.set_current(..., expected=<the pointer the
+  epoch was derived from>)``. A reader resolving ``get_current``
+  mid-stream therefore always sees a complete epoch. If another
+  maintainer (a retrain, an out-of-band merge) moved the pointer
+  meanwhile, the commit raises ``cow.StalePointerError`` and the batch
+  fails; on restart foreachBatch re-delivers it, and the cycle merges
+  it against whatever the other maintainer published.
+- **At-least-once replay safety.** foreachBatch re-delivers a batch
+  that committed but crashed before its checkpoint did. The family's
+  replay rule makes such a batch leave the resolved view unchanged;
+  the only residue is at most one extra epoch directory.
+- **Chain-length compaction gate.** With ``compact_every=N``, once the
+  chain since the last applied compaction (``_epochs_since_compact``,
+  an upper bound on the owner epochs a read spans; not the raw
+  directory count, which deferred vacuum would keep at N or more)
+  reaches N, the trigger compacts the resolved view into one plain
+  ``_compact`` epoch and CAS-commits it. Read amplification stays at
+  most N owners. With ``vacuum_on_compact`` (the default) the cycle
+  then vacuums every epoch the compacted view no longer references,
+  so disk stays near twice the index. ``compact_every=None`` leaves
+  compaction out-of-band.
+- **The ``vacuum_on_compact`` quiesce caveat.** That vacuum gives
+  readers of older epochs no quiesce window. It is correct for the
+  drain-and-stop ``availableNow`` query these functions start and for
+  fleets that re-resolve ``get_current`` between requests. A
+  continuous deployment with long-running readers of older epochs
+  passes ``vacuum_on_compact=False`` and runs ``cow.vacuum_index``
+  after quiesce; compaction still bounds read amplification, only the
+  disk reclaim waits.
+- ``stats_dir`` appends one health row per committed batch (the
+  family's staleness or health report plus ``batch_id`` and
+  ``epoch``). Each ingest returns the started ``availableNow`` query;
+  ``checkpoint_dir=None`` checkpoints to a fresh temporary directory.
 """
 
 from __future__ import annotations
+
+import os
+import tempfile
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +85,11 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from data_lake_with_spark_spark.operators import graph as _graph
+from data_lake_with_spark_spark.operators import similarity as _sim
+from data_lake_with_spark_spark.operators import text as _text
+from data_lake_with_spark_spark.sources import cow
 
 #: Event schema for streaming reads (events.parquet re-written to a
 #: stream dir by tests; ts as TIMESTAMP, not the nanos wart).
@@ -463,22 +521,19 @@ def _epochs_since_compact(spark, root: str) -> int:
     lexical order is creation order), which makes it restart-safe AND
     immune to deferred vacuum: retired-but-unvacuumed directories all
     sort before the compact that superseded them, so they never
-    inflate the count (r11 ADVICE — a raw directory-count gate
-    re-compacted every batch once ``vacuum_on_compact=False`` let
-    them linger).
+    inflate the count (a raw directory count would re-compact every
+    batch once ``vacuum_on_compact=False`` let them linger).
 
-    "Applied" means AT-OR-BEFORE the current pointer (r12 ADVICE): a
-    compact epoch written by a crashed run that never reached
-    ``set_current`` sorts AFTER the pointer and must not reset the
-    counter — anchoring on any ``*_compact`` name under-reported the
-    live chain and deferred the next compaction a full cycle. Such an
-    orphaned compact dir still counts as one chain member (it sits in
-    the listing), which only errs toward compacting sooner. An upper
-    bound on the true manifest-owner chain (a merge that happens to
-    rewrite every partition shortens the real chain but not this
-    count) — the right direction for a cadence bound."""
-    from data_lake_with_spark_spark.sources import cow
-
+    "Applied" means AT-OR-BEFORE the current pointer: a compact epoch
+    written by a crashed run that never reached ``set_current`` sorts
+    AFTER the pointer and must not reset the counter (anchoring on any
+    ``*_compact`` name would under-report the live chain and defer the
+    next compaction a full cycle). Such an orphaned compact dir still
+    counts as one chain member (it sits in the listing), which only
+    errs toward compacting sooner. An upper bound on the true
+    manifest-owner chain (a merge that happens to rewrite every
+    partition shortens the real chain but not this count) — the right
+    direction for a cadence bound."""
     names = cow.list_epochs(spark, root)
     try:
         cur_name = cow.get_current(spark, root).rstrip("/").split("/")[-1]
@@ -495,16 +550,14 @@ def _epochs_since_compact(spark, root: str) -> int:
 def _emit_batch_stats(root: str, stats_dir: str, batch_id: int, report) -> None:
     """Append one health row per COMMITTED micro-batch to
     ``stats_dir`` (parquet, schema = the family's health report plus
-    ``batch_id``/``epoch``) — the r13 verdict #5 stats sink: drift is
-    observed DURING maintenance instead of by a separate probe. Runs
-    AFTER set_current, so every row describes a published epoch; the
-    report legs are the same bounded column-pruned scans the
-    standalone reports pay (the quantized families emit their
-    occupancy/utilization legs — the ingest holds no corpus handle,
-    so the sampled-error leg stays NULL; run the full report
-    out-of-band when the error axis is needed)."""
-    from data_lake_with_spark_spark.sources import cow
-
+    ``batch_id``/``epoch``), so drift is observed during maintenance
+    instead of by a separate probe. Runs AFTER set_current, so every
+    row describes a published epoch; the report legs are the same
+    bounded column-pruned scans the standalone reports pay (the
+    quantized families emit their occupancy/utilization legs — the
+    ingest holds no corpus handle, so the sampled-error leg stays
+    NULL; run the full report out-of-band when the error axis is
+    needed)."""
     spark = report.sparkSession
     (
         report.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
@@ -513,6 +566,204 @@ def _emit_batch_stats(root: str, stats_dir: str, batch_id: int, report) -> None:
         .write.mode("append")
         .parquet(stats_dir)
     )
+
+
+def _maintain(
+    stream, root, prefix, checkpoint_dir, compact_every, vacuum_on_compact,
+    stats_dir, *, project, bootstrap, merge, compact, components, report,
+    admit=None,
+):
+    """The one streaming maintenance cycle behind the five ingests (its
+    contracts are in the module docstring). The family pieces:
+    ``project(batch_df)`` selects the batch columns;
+    ``bootstrap(batch, epoch)`` builds a root's first epoch;
+    ``admit(spark, cur, batch)`` returns the rows to merge, or None to
+    skip a replayed batch (no ``admit`` takes every row);
+    ``merge(spark, cur, rows, epoch, layout=...)`` writes a manifest
+    epoch; ``compact(spark, base, out)`` flattens the chain into a
+    plain epoch; ``components`` are what the compaction's vacuum
+    resolves; ``report(spark, root)`` is the ``stats_dir`` health row.
+    ``prefix`` names the temporary checkpoint directory."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        batch = project(batch_df).localCheckpoint()
+        try:
+            cur = cow.get_current(spark, root)
+        except FileNotFoundError:
+            cur, write = None, partial(bootstrap, batch)
+        else:
+            rows = batch if admit is None else admit(spark, cur, batch)
+            if rows is None:
+                return  # a verified replay: nothing to merge
+            write = partial(merge, spark, cur, rows, layout="manifest")
+        cow.publish(spark, root, f"b{batch_id}", cur, write)
+        if compact_every is not None and (
+            _epochs_since_compact(spark, root) >= compact_every
+        ):
+            base = cow.get_current(spark, root)
+            cow.publish(
+                spark, root, "compact", base, partial(compact, spark, base),
+                components if vacuum_on_compact else (),
+            )
+        if stats_dir is not None:
+            _emit_batch_stats(root, stats_dir, batch_id, report(spark, root))
+
+    cp = checkpoint_dir or os.path.join(tempfile.mkdtemp(prefix=prefix), "cp")
+    writer = stream.writeStream.foreachBatch(apply_batch)
+    return writer.trigger(availableNow=True).option("checkpointLocation", cp).start()
+
+
+#: Per vector family: its ingest's name, the fresh stripes (the
+#: ``vec_id % centroid_mod`` values a build trains its frozen
+#: quantizers on), what a rebuild would train a fresh-stripe id into,
+#: and what the stripe is called — the pieces of the error wording.
+_VEC_INGEST = {
+    "ivf": ("vector_index_maintenance_ingest", (0,), "as a centroid", "centroid"),
+    "pq": ("pq_index_maintenance_ingest", (0,), "into the codebooks", "seed"),
+    "ivfpq": ("ivfpq_index_maintenance_ingest", (0, 1), "into the coarse "
+              "centroids (≡0) or residual codebooks (≡1)", "frozen"),
+}
+
+
+def _same_bytes(a: str, b: str):
+    return F.col(a).cast("array<double>").eqNullSafe(F.col(b).cast("array<double>"))
+
+
+def _require_stripe(family, batch, centroid_mod, consequence) -> None:
+    """Bootstrap contract: raise, before anything is written, unless
+    ``batch`` carries the ``vec_id % centroid_mod == 0`` stripe."""
+    op, _stripes, _into, kind = _VEC_INGEST[family]
+    if batch.where((F.col("vec_id") % centroid_mod) == 0).limit(1).count() == 0:
+        raise ValueError(
+            f"{op}: bootstrap batch carries no vec_id % centroid_mod == 0 "
+            f"stripe — {consequence}; route the initial load (with its "
+            f"{kind} stripe) to the first micro-batch"
+        )
+
+
+def _admit_vectors(family, centroid_mod, vec_dim, spark, cur, batch):
+    """Admit a vector batch against the frozen quantizers carried at
+    ``cur``: returns the rows to merge, or None for a pure bootstrap
+    replay.
+
+    - Centroid-source ids (IVF, IVFPQ): a vector bit-identical to its
+      carried centroid is a replay and is dropped; different bytes
+      raise.
+    - Codebook-source ids (PQ, IVFPQ): their sub-vectors, sliced from
+      the raw vector (PQ) or from the residual against the carried
+      centroids (IVFPQ, the builder's own assign kernel), must equal
+      the carried codebook entries bit for bit; then they are dropped
+      as replays, else the batch raises.
+    - Fresh stripes: a NEW id on a stripe a build trains on raises. The
+      rule is keyed to the mod stamped in the meta sidecar, so a
+      retrain that changes the budget re-keys it (``centroid_mod``
+      only stands in for IVF layouts that predate the sidecar)."""
+    op, stripes, into, kind = _VEC_INGEST[family]
+    frozen = _sim._VEC_LAYOUT[family][2]
+    retrain = f"quiesce the stream and retrain_{family}_index the root"
+    meta = _sim._vec_meta(spark, family, cur) or {}
+    replays = []
+    if "centroids" in frozen:
+        cents = cow.read_component(spark, cur, "centroids")
+        stripe = batch.join(F.broadcast(cents), batch["vec_id"] == cents["cent_id"])
+        if stripe.where(~_same_bytes("embedding", "cent_v")).limit(1).count() > 0:
+            coarse = "coarse " if family == "ivfpq" else ""
+            raise ValueError(
+                f"{op}: batch carries a centroid-source id with a "
+                f"DIFFERENT vector — the frozen {coarse}quantizer would go "
+                f"stale; {retrain}"
+            )
+        replays.append(stripe.select("vec_id"))
+    if "codebooks" in frozen:
+        cb = cow.read_component(spark, cur, "codebooks")
+        cb_ids = cb.select(F.col("code").alias("vec_id")).distinct()
+        cb_rows = batch.join(F.broadcast(cb_ids), "vec_id", "left_semi")
+        if cb_rows.limit(1).count() > 0:
+            resid = family == "ivfpq"
+            src = (
+                _sim._ivfpq_assign_resid(cb_rows, cents, "vec_id", "embedding", vec_dim)
+                if resid
+                else cb_rows.withColumn("rv", F.col("embedding").cast("array<double>"))
+            )
+            w = meta["dim"] // meta["m"]
+            slices = [F.slice("rv", s * w + 1, w) for s in range(meta["m"])]
+            got = src.select(
+                F.col("vec_id").cast("bigint").alias("code"),
+                F.posexplode(F.array(*slices)).alias("pos", "sub_v"),
+            ).withColumn("subspace", F.col("pos").cast("bigint"))
+            mismatch = got.join(F.broadcast(cb), ["subspace", "code"], "left").where(
+                F.col("cent_sub").isNull() | ~_same_bytes("sub_v", "cent_sub")
+            )
+            if mismatch.limit(1).count() > 0:
+                why, what = (
+                    ("whose residual differs from the carried codebook entry",
+                     "residual codebooks") if resid
+                    else ("with DIFFERENT bytes", "codebooks")
+                )
+                raise ValueError(
+                    f"{op}: batch carries a codebook-source id {why} — the "
+                    f"frozen {what} would go stale; {retrain}"
+                )
+            replays.append(cb_rows.select("vec_id"))
+    fresh = batch
+    if replays:
+        replay_ids = reduce(DataFrame.unionByName, replays)
+        fresh = batch.join(replay_ids, "vec_id", "left_anti")
+    if fresh.limit(1).count() == 0:
+        return None
+    eff_mod = meta.get("centroid_mod", centroid_mod)
+    if fresh.where((F.col("vec_id") % eff_mod).isin(*stripes)).limit(1).count() > 0:
+        ids = " or ".join(f"≡ {s}" for s in stripes)
+        raise ValueError(
+            f"{op}: batch carries a NEW id {ids} (mod centroid_mod) after "
+            "bootstrap — a from-scratch build over the same corpus would "
+            f"train this id {into}, so merging it as an ordinary vector "
+            "silently diverges the streamed index from the rebuild; route "
+            f"{kind}-stripe ids to the bootstrap batch, or {retrain}"
+        )
+    return fresh
+
+
+def _admit_baskets(spark, cur, batch):
+    """Admit a basket batch against the ledger at ``cur``: returns the
+    batch when none of its baskets is in the ledger, or None for a
+    verified full replay; a partial overlap, or a replay whose items
+    differ from the ledger's, raises."""
+    meta = _graph._ri_meta(spark, cur)
+    ids = batch.select("basket").distinct()
+    bucket = _graph._ri_bucket(["basket"], meta["n_buckets"])
+    changed = cow.partition_values(ids, bucket)
+    seen_rows = (
+        _graph._ri_read(spark, cur, "baskets", meta)
+        .where(cow.in_partitions("basket_bucket", changed))
+        .join(ids, "basket", "left_semi")
+        .select("basket", "item")
+        .localCheckpoint()
+    )
+    n_seen = seen_rows.select("basket").distinct().count()
+    if n_seen == 0:
+        return batch
+    if n_seen < ids.count():
+        raise ValueError(
+            "related_items_maintenance_ingest: batch overlaps the ledger "
+            "PARTIALLY — a delivery-layer retry re-delivers a whole batch "
+            "(the state commits atomically at set_current), so partial "
+            "overlap means the source re-used basket ids across batches; "
+            "basket ids must be unique stream-wide"
+        )
+    if (
+        seen_rows.exceptAll(batch).limit(1).count() > 0
+        or batch.exceptAll(seen_rows).limit(1).count() > 0
+    ):
+        raise ValueError(
+            "related_items_maintenance_ingest: replayed batch carries the "
+            "SAME basket ids with DIFFERENT items than the ledger — not a "
+            "retry but a source corruption; rebuild from the source history"
+        )
+    return None
 
 
 def index_maintenance_ingest(
@@ -524,112 +775,30 @@ def index_maintenance_ingest(
     vacuum_on_compact: bool = True,
     stats_dir: str | None = None,
 ) -> "object":
-    """Continuous SERVING-INDEX maintenance — the streaming half of
-    the index lifecycle (``sources/cow.py``): each document
-    micro-batch becomes one manifest epoch of the BM25 index under a
-    stable root. The first batch builds epoch 0; every later batch
-    manifest-MERGES against ``cow.get_current`` (writing only its
-    changed ``tok_bucket=`` partitions plus a small JSON) and
-    ``cow.set_current`` re-points the pointer LAST — so a serving
-    fleet resolving ``get_current`` mid-stream always reads a
-    complete epoch, and the index trails the stream by at most one
-    trigger.
+    """Continuous BM25 serving-index maintenance from a document
+    stream: each micro-batch of ``(doc_id, text)`` becomes one epoch
+    under ``root`` (the first builds it with ``text.build_bm25_index``,
+    later ones ``merge_bm25_index``; compaction is
+    ``compact_bm25_index``). The shared cycle — CAS commit and
+    restart, the compaction gate and the ``vacuum_on_compact`` quiesce
+    caveat — is in the module docstring.
 
-    Delivery semantics: foreachBatch is at-least-once under task
-    retries, and that is SAFE here because ``merge_bm25_index`` is an
-    UPSERT — a replayed batch re-merges the same doc ids onto
-    themselves and the resolved view is unchanged; the only residue
-    is an extra epoch directory.
+    Replay rule: the merge is an UPSERT, so a replayed batch re-merges
+    the same doc ids onto themselves and the resolved view is
+    unchanged.
 
-    ``compact_every=N`` makes the stream SELF-BOUNDING: whenever the
-    maintenance-chain length (epochs since the last compaction plus
-    the compact base — :func:`_epochs_since_compact`, an upper bound
-    on the manifest-owner chain a read spans; NOT the raw directory
-    count, which deferred vacuum would leave permanently ≥ N)
-    reaches N, the trigger compacts the manifest
-    chain into a fresh plain epoch, re-points the pointer, and
-    ``cow.vacuum_index`` retires every epoch the compacted view no
-    longer references — read amplification is bounded at N owners
-    and disk at ~2× the index (the MEASUREMENTS_r10 §1c cadence
-    arithmetic, executed in-stream instead of left as an operator
-    chore). None leaves compaction out-of-band.
-
-    QUIESCE CAVEAT: the in-stream vacuum has no reader-quiesce
-    window — ``vacuum_on_compact=True`` (the default) is correct for
-    the drain-and-stop ``availableNow`` shape this function starts
-    (no concurrent readers while the stream runs) and for fleets
-    that re-resolve ``get_current`` between requests; a CONTINUOUS
-    deployment with long-running readers of older epochs should pass
-    ``vacuum_on_compact=False`` and vacuum out-of-band after
-    quiesce, per ``cow.vacuum_index``'s retire-after-quiesce
-    discipline — compaction still bounds READ amplification either
-    way, deferral only postpones the disk reclaim.
-
-    ``n_buckets`` sizes the FIRST build only (later merges inherit
-    the layout); None takes the builder default. Returns the started
-    streaming query (``availableNow`` trigger — drain-and-stop)."""
-    import os
-    import tempfile
-
-    from data_lake_with_spark_spark.operators import text as _text
-    from data_lake_with_spark_spark.sources import cow
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # the stream delivers only (doc_id, text) to the index
-        batch = batch_df.select("doc_id", "text").localCheckpoint()
-        epoch = cow.new_epoch_path(spark, root, label=f"b{batch_id}")
-        try:
-            cur = cow.get_current(spark, root)
-        except FileNotFoundError:
-            kw = {} if n_buckets is None else {"n_buckets": n_buckets}
-            _text.build_bm25_index(batch, epoch, **kw)
-            cur = None
-        else:
-            _text.merge_bm25_index(spark, cur, batch, epoch, layout="manifest")
-        # CAS commit: the epoch was derived FROM `cur`, so the commit
-        # asserts the pointer hasn't moved since (an out-of-band
-        # maintainer racing the stream). On StalePointerError the
-        # batch fails fast; on restart foreachBatch re-delivers it and
-        # this function re-resolves get_current — i.e. the replayed
-        # batch merges against whatever the other maintainer published.
-        cow.set_current(spark, root, epoch, expected=cur)
-        # gate on the CHAIN LENGTH since the last compaction (epoch
-        # names after the last `_compact` dir, plus that compact base)
-        # — NOT the raw directory count: with vacuum_on_compact=False
-        # the retired dirs linger, and a directory-count gate would
-        # re-compact EVERY later batch (r11 ADVICE). The name-derived
-        # count is restart-safe and resets to 1 per compaction
-        # whether or not the reclaim is deferred.
-        if (
-            compact_every is not None
-            and _epochs_since_compact(spark, root) >= compact_every
-        ):
-            flat = cow.new_epoch_path(spark, root, label="compact")
-            base = cow.get_current(spark, root)
-            _text.compact_bm25_index(spark, base, flat)
-            cow.set_current(spark, root, flat, expected=base)
-            if vacuum_on_compact:
-                cow.vacuum_index(
-                    spark, root, ["postings"], min_age_seconds=0.0
-                )
-        if stats_dir is not None:
-            _emit_batch_stats(
-                root, stats_dir, batch_id,
-                _text.bm25_staleness_report(spark, root),
-            )
-
-    return (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir
-            or os.path.join(tempfile.mkdtemp(prefix="idx_ingest_"), "cp"),
-        )
-        .start()
+    ``n_buckets`` sizes the FIRST build only (later merges inherit the
+    layout); None takes the builder default."""
+    kw = {} if n_buckets is None else {"n_buckets": n_buckets}
+    return _maintain(
+        stream_docs, root, "idx_ingest_", checkpoint_dir, compact_every,
+        vacuum_on_compact, stats_dir,
+        project=lambda b: b.select("doc_id", "text"),
+        bootstrap=partial(_text.build_bm25_index, **kw),
+        merge=_text.merge_bm25_index,
+        compact=_text.compact_bm25_index,
+        components=["postings"],
+        report=_text.bm25_staleness_report,
     )
 
 
@@ -643,182 +812,50 @@ def vector_index_maintenance_ingest(
     vacuum_on_compact: bool = True,
     stats_dir: str | None = None,
 ) -> "object":
-    """The dense-side twin of :func:`index_maintenance_ingest`:
-    continuous IVF serving-index maintenance from an EMBEDDING
-    stream. Batch 0 bootstraps — it builds epoch 0 and, through the
-    ``id % centroid_mod == 0`` stripe it contains, trains the coarse
-    quantizer that every later epoch carries FROZEN (the
-    merge_ivf_index contract: batches assign against the carried
-    centroids; a batch that would REPLACE a centroid-source vector
-    raises rather than letting the frozen quantizer silently go
-    stale). This is the production bootstrap shape: the quantizer
-    trains on the initial corpus load, and the stream that follows
-    adds vectors, never re-trains — re-training is a rebuild, by
-    design out-of-band (FAISS retrain ≙ build_ivf_index).
+    """Continuous IVF serving-index maintenance from an embedding
+    stream of ``(vec_id, embedding)`` (the shared cycle is in the
+    module docstring; compaction is ``compact_ivf_index``).
 
-    ``centroid_mod`` applies to the BOOTSTRAP build; later batches
-    enforce the stripe rule against the mod STAMPED in the index's
-    own meta sidecar (``ivf_meta.json``), so a retrain that changes
-    the budget re-keys the rule automatically (r13 — gated in
-    test_ingest_stripe_rule_tracks_retrained_mod).
+    Bootstrap stripe: batch 0 builds epoch 0 and trains the coarse
+    quantizer on its ``vec_id % centroid_mod == 0`` stripe; every
+    later epoch carries it FROZEN (``merge_ivf_index`` assigns against
+    the carried centroids; re-training is a rebuild, out-of-band via
+    ``similarity.retrain_ivf_index``). Batch 0 must therefore contain
+    the centroid stripe of the eventual corpus: an empty stripe raises
+    before anything is written (it would train zero centroids). After
+    bootstrap a NEW id on the stripe raises: a from-scratch build over
+    the same corpus would train it as a centroid, and
+    ``merge_ivf_index`` only checks batch ids against EXISTING
+    centroids. That rule follows the mod stamped in ``ivf_meta.json``,
+    so a retrain that changes the budget re-keys it (layouts without
+    the sidecar fall back to ``centroid_mod``).
 
-    IMPORTANT bootstrap contract: batch 0 must CONTAIN the centroid
-    stripe of the eventual corpus (route the initial/bootstrap load
-    to the first file; the stream after it must not carry NEW ids
-    ``≡ 0 (mod centroid_mod)``). An empty-stripe bootstrap RAISES
-    (it would train zero centroids and every later batch would
-    silently assign into nothing); a PARTIAL stripe surfaces on the
-    first later batch that carries the missing stripe id — the merge
-    path RAISES on any new id ≡ 0 (mod centroid_mod), enforced HERE
-    in the ingest (``merge_ivf_index`` cannot see it: its
-    frozen-quantizer validation only checks batch ids against
-    EXISTING cent_ids, so without this gate a fresh stripe id would
-    merge silently and the streamed index would diverge from a
-    from-scratch rebuild over the same corpus).
+    Replay rule: ordinary ids upsert onto themselves. A replayed
+    bootstrap re-delivers the stripe ids: one whose vector is
+    BIT-IDENTICAL to its carried centroid is dropped as a no-op, one
+    with a different vector is a retrain attempt and raises.
 
-    Replay safety (at-least-once foreachBatch): ordinary ids
-    re-merge onto themselves (upsert — the resolved view is
-    unchanged). A REPLAYED BOOTSTRAP batch (crash between
-    ``set_current`` and the checkpoint commit) re-delivers the
-    centroid-stripe ids, which the frozen-quantizer validation would
-    reject as replacements — so the merge path first splits out
-    stripe ids whose vectors are BIT-IDENTICAL to the carried
-    centroids (a replay) and drops them as no-ops; a stripe id with
-    a DIFFERENT vector is a genuine retrain attempt and raises.
+    ``centroid_mod`` applies to the bootstrap build only; ``vec_dim``
+    to every build and merge."""
 
-    Each later micro-batch becomes one MANIFEST merge epoch (only
-    its changed ``cent_id=`` partitions + a small JSON are written);
-    ``cow.set_current`` re-points LAST, so readers mid-stream always
-    resolve a complete epoch. ``compact_every=N`` bounds the chain
-    in-stream exactly as in :func:`index_maintenance_ingest`,
-    including ``vacuum_on_compact``'s quiesce caveat. Returns the
-    started ``availableNow`` query."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_lake_with_spark_spark.operators import similarity as _sim
-    from data_lake_with_spark_spark.sources import cow
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        epoch = cow.new_epoch_path(spark, root, label=f"b{batch_id}")
-        try:
-            cur = cow.get_current(spark, root)
-        except FileNotFoundError:
-            stripe_empty = (
-                batch.where(
-                    (F.col("vec_id") % centroid_mod) == 0
-                ).limit(1).count() == 0
-            )
-            if stripe_empty:
-                raise ValueError(
-                    "vector_index_maintenance_ingest: bootstrap batch "
-                    "carries no vec_id % centroid_mod == 0 stripe — it "
-                    "would train ZERO centroids and every later batch "
-                    "would silently assign into nothing; route the "
-                    "initial load (with its centroid stripe) to the "
-                    "first micro-batch"
-                )
-            _sim.build_ivf_index(
-                batch, epoch, centroid_mod=centroid_mod, vec_dim=vec_dim
-            )
-            cur = None
-        else:
-            # bootstrap-replay split: stripe ids bit-identical to the
-            # carried centroids are replays (no-ops); different
-            # vectors are genuine retrain attempts and must raise
-            cents = cow.read_component(spark, cur, "centroids")
-            stripe = batch.join(
-                F.broadcast(cents),
-                batch["vec_id"] == cents["cent_id"],
-            )
-            same = F.col("embedding").cast("array<double>").eqNullSafe(
-                F.col("cent_v").cast("array<double>")
-            )
-            if stripe.where(~same).limit(1).count() > 0:
-                raise ValueError(
-                    "vector_index_maintenance_ingest: batch carries a "
-                    "centroid-source id with a DIFFERENT vector — the "
-                    "frozen quantizer would go stale; quiesce the "
-                    "stream and retrain_ivf_index the root"
-                )
-            replay_ids = stripe.select("vec_id")
-            fresh = batch.join(replay_ids, "vec_id", "left_anti")
-            if fresh.limit(1).count() == 0:
-                return  # pure bootstrap replay — nothing to merge
-            # fresh-stripe enforcement (r11 ADVICE): merge_ivf_index
-            # validates batch ids against EXISTING cent_ids only — a
-            # NEW id ≡ 0 (mod centroid_mod) would merge silently as an
-            # ordinary vector and the streamed index would diverge
-            # from a from-scratch rebuild over the same corpus (whose
-            # build WOULD train on that id). Only the ingest knows
-            # centroid_mod, so the contract is enforced here.
-            # the stripe rule must track the mod the INDEX was built
-            # or RETRAINED with (stamped in ivf_meta.json), not this
-            # ingest's constructor parameter — a retrain that changes
-            # the budget would otherwise make this check guard the
-            # wrong stripe (pre-meta layouts fall back to the param)
-            meta = cow.read_json(spark, _sim._ivf_meta_uri(cur)) or {}
-            eff_mod = meta.get("centroid_mod", centroid_mod)
-            if (
-                fresh.where((F.col("vec_id") % eff_mod) == 0)
-                .limit(1)
-                .count()
-                > 0
-            ):
-                raise ValueError(
-                    "vector_index_maintenance_ingest: batch carries a "
-                    "NEW id ≡ 0 (mod centroid_mod) after bootstrap — "
-                    "a from-scratch build over the same corpus would "
-                    "train this id as a centroid, so merging it as an "
-                    "ordinary vector silently diverges the streamed "
-                    "index from the rebuild; route centroid-stripe "
-                    "ids to the bootstrap batch, or quiesce the "
-                    "stream and retrain_ivf_index the root"
-                )
-            _sim.merge_ivf_index(
-                spark, cur, fresh, epoch, vec_dim=vec_dim,
-                layout="manifest",
-            )
-        # CAS commit against the pointer this epoch derived from —
-        # see index_maintenance_ingest for the race/restart semantics
-        cow.set_current(spark, root, epoch, expected=cur)
-        # chain-since-last-compact gate, not directory count — see
-        # index_maintenance_ingest (r11 ADVICE: deferred vacuum must
-        # not turn every later batch into a full compaction)
-        if (
-            compact_every is not None
-            and _epochs_since_compact(spark, root) >= compact_every
-        ):
-            flat = cow.new_epoch_path(spark, root, label="compact")
-            base = cow.get_current(spark, root)
-            _sim.compact_ivf_index(spark, base, flat)
-            cow.set_current(spark, root, flat, expected=base)
-            if vacuum_on_compact:
-                cow.vacuum_index(
-                    spark, root, ["lists", "centroids"],
-                    min_age_seconds=0.0,
-                )
-        if stats_dir is not None:
-            _emit_batch_stats(
-                root, stats_dir, batch_id,
-                _sim.ivf_staleness_report(spark, root),
-            )
-
-    return (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir
-            or os.path.join(tempfile.mkdtemp(prefix="vidx_ingest_"), "cp"),
+    def bootstrap(batch, epoch):
+        _require_stripe(
+            "ivf", batch, centroid_mod,
+            "it would train ZERO centroids and every later batch would "
+            "silently assign into nothing",
         )
-        .start()
+        _sim.build_ivf_index(batch, epoch, centroid_mod=centroid_mod, vec_dim=vec_dim)
+
+    return _maintain(
+        stream_vecs, root, "vidx_ingest_", checkpoint_dir, compact_every,
+        vacuum_on_compact, stats_dir,
+        project=lambda b: b.select("vec_id", "embedding"),
+        bootstrap=bootstrap,
+        admit=partial(_admit_vectors, "ivf", centroid_mod, vec_dim),
+        merge=partial(_sim.merge_ivf_index, vec_dim=vec_dim),
+        compact=_sim.compact_ivf_index,
+        components=_sim._vec_components("ivf"),
+        report=_sim.ivf_staleness_report,
     )
 
 
@@ -834,151 +871,41 @@ def related_items_maintenance_ingest(
     stats_dir: str | None = None,
 ) -> "object":
     """Continuous maintenance of the related-items SERVING state from
-    a (basket, item) stream — the co-occurrence twin of
-    :func:`index_maintenance_ingest` (r11 verdict #7: the last
-    serving table without a streaming maintenance shape). Batch 0
-    builds the state (``graph.build_related_items_state``); every
-    later micro-batch of NEW baskets manifest-merges
-    (``merge_related_items_state``: pair/item supports sum into
-    exactly the batch's hash buckets, top-k recomputes for affected
-    items only) as one epoch under the lifecycle root;
-    ``cow.set_current`` re-points LAST so serving fleets always
-    resolve a complete state.
+    a ``(basket, item)`` stream (the shared cycle is in the module
+    docstring). Batch 0 builds the state
+    (``graph.build_related_items_state``); every later micro-batch of
+    NEW baskets merges (``merge_related_items_state``: pair/item
+    supports sum into exactly the batch's hash buckets, top-k
+    recomputes for affected items only); compaction is
+    ``compact_related_items_state``, which rewrites the history-sized
+    ledger whole — size ``compact_every`` accordingly.
 
-    Replay semantics (at-least-once foreachBatch) — DECIDED AS SKIP,
-    not raise, and here is why the two ingests differ: the merge
-    itself must RAISE on a re-delivered basket id (double-counting
-    silently inflates supports, and the merge cannot tell a
-    delivery-layer retry from a source bug). The INGEST however can:
-    ``set_current`` is the state's commit point and runs before the
-    checkpoint commit, so a crash between them re-delivers a batch
-    whose baskets are either ALL in the ledger (applied — the retry
-    shape) or NONE (never applied). An all-in batch is verified
-    INCIDENCE-IDENTICAL against the ledger (same basket ids with
-    different items is a source corruption → raise) and then skipped
-    as a no-op; a PARTIAL overlap cannot be a retry, so it raises —
+    Replay rule — skip, not raise: the merge itself RAISES on a
+    re-delivered basket id (double counting silently inflates
+    supports, and the merge cannot tell a delivery-layer retry from a
+    source bug). The ingest can: a batch re-delivered after a crash
+    between ``set_current`` and the checkpoint commit has either ALL
+    its baskets in the ledger (applied) or NONE. An all-in batch is
+    verified INCIDENCE-IDENTICAL against the ledger (same basket ids
+    with different items is a source corruption and raises) and
+    skipped; a PARTIAL overlap cannot be a retry, so it raises —
     basket ids must be unique across the stream's batches.
 
-    ``compact_every`` bounds the manifest chain exactly as in
-    :func:`index_maintenance_ingest` (the chain-since-last-compact
-    gate, with ``vacuum_on_compact``'s quiesce caveat) via
-    ``graph.compact_related_items_state``. Note the compaction
-    rewrites the history-sized ledger whole — size the cadence
-    accordingly. ``k``/``min_count``/``n_buckets`` apply to the FIRST
-    build only (merges read them back from the meta sidecar).
-    Returns the started ``availableNow`` query."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_lake_with_spark_spark.operators import graph as _graph
-    from data_lake_with_spark_spark.sources import cow
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch = (
-            batch_df.select("basket", "item").distinct().localCheckpoint()
-        )
-        epoch = cow.new_epoch_path(spark, root, label=f"b{batch_id}")
-        try:
-            cur = cow.get_current(spark, root)
-        except FileNotFoundError:
-            kw = {} if n_buckets is None else {"n_buckets": n_buckets}
-            _graph.build_related_items_state(
-                batch, epoch, k=k, min_count=min_count, **kw
-            )
-            cur = None
-        else:
-            meta = cow.read_json(spark, _graph._ri_meta_uri(cur))
-            if meta is None:
-                # surface the batch ops' clear error instead of an
-                # AttributeError on None inside the format check
-                raise FileNotFoundError(f"no ri_meta.json under {cur!r}")
-            _graph._ri_check_format(meta, cur)
-            nbk = meta["n_buckets"]
-            ids = batch.select("basket").distinct()
-            ch = sorted(
-                r["b"]
-                for r in ids.select(
-                    _graph._ri_bucket(["basket"], nbk).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            bfilter = (
-                F.col("basket_bucket").isin(ch) if ch else F.lit(False)
-            )
-            seen_rows = (
-                _graph._ri_read(spark, cur, "baskets", meta)
-                .where(bfilter)
-                .join(ids, "basket", "left_semi")
-                .select("basket", "item")
-                .localCheckpoint()
-            )
-            n_seen = seen_rows.select("basket").distinct().count()
-            if n_seen > 0:
-                if n_seen < ids.count():
-                    raise ValueError(
-                        "related_items_maintenance_ingest: batch "
-                        "overlaps the ledger PARTIALLY — a "
-                        "delivery-layer retry re-delivers a whole "
-                        "batch (the state commits atomically at "
-                        "set_current), so partial overlap means the "
-                        "source re-used basket ids across batches; "
-                        "basket ids must be unique stream-wide"
-                    )
-                # full overlap = the crash-between-set_current-and-
-                # checkpoint retry — verify the incidence is
-                # IDENTICAL, then skip as a no-op
-                if (
-                    seen_rows.exceptAll(batch).limit(1).count() > 0
-                    or batch.exceptAll(seen_rows).limit(1).count() > 0
-                ):
-                    raise ValueError(
-                        "related_items_maintenance_ingest: replayed "
-                        "batch carries the SAME basket ids with "
-                        "DIFFERENT items than the ledger — not a "
-                        "retry but a source corruption; rebuild from "
-                        "the source history"
-                    )
-                return
-            _graph.merge_related_items_state(
-                spark, cur, batch, epoch, layout="manifest"
-            )
-        # CAS commit against the pointer this epoch derived from —
-        # see index_maintenance_ingest for the race/restart semantics
-        cow.set_current(spark, root, epoch, expected=cur)
-        if (
-            compact_every is not None
-            and _epochs_since_compact(spark, root) >= compact_every
-        ):
-            flat = cow.new_epoch_path(spark, root, label="compact")
-            base = cow.get_current(spark, root)
-            _graph.compact_related_items_state(spark, base, flat)
-            cow.set_current(spark, root, flat, expected=base)
-            if vacuum_on_compact:
-                cow.vacuum_index(
-                    spark, root, ["pairs", "items", "baskets", "topk"],
-                    min_age_seconds=0.0,
-                )
-        if stats_dir is not None:
-            _emit_batch_stats(
-                root, stats_dir, batch_id,
-                _graph.related_items_health(spark, root),
-            )
-
-    return (
-        stream_baskets.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir
-            or os.path.join(tempfile.mkdtemp(prefix="ri_ingest_"), "cp"),
-        )
-        .start()
+    ``k``/``min_count``/``n_buckets`` apply to the FIRST build only
+    (merges read them back from the meta sidecar)."""
+    kw = {} if n_buckets is None else {"n_buckets": n_buckets}
+    return _maintain(
+        stream_baskets, root, "ri_ingest_", checkpoint_dir, compact_every,
+        vacuum_on_compact, stats_dir,
+        project=lambda b: b.select("basket", "item").distinct(),
+        bootstrap=partial(
+            _graph.build_related_items_state, k=k, min_count=min_count, **kw
+        ),
+        admit=_admit_baskets,
+        merge=_graph.merge_related_items_state,
+        compact=_graph.compact_related_items_state,
+        components=["pairs", "items", "baskets", "topk"],
+        report=_graph.related_items_health,
     )
 
 
@@ -995,218 +922,45 @@ def ivfpq_index_maintenance_ingest(
     vacuum_on_compact: bool = True,
     stats_dir: str | None = None,
 ) -> "object":
-    """Continuous maintenance of the PRODUCTION serving family — the
-    IVFPQ composite index (r12 verdict #3: BM25, IVF, and the
-    related-items state had streaming twins; IVFPQ, the
-    pruning×compression layout actually deployed at 100 TB, could
-    only be maintained by batch ``merge_ivfpq_index`` calls). Batch 0
-    bootstraps: it builds epoch 0 and, through the TWO seed stripes
-    it must contain, trains BOTH frozen quantizers — the coarse
-    centroids (``vec_id % centroid_mod == 0``) and the residual
-    codebooks (the OFFSET stripe ``== 1``) — the q205 bootstrap
-    contract extended to the doubly-frozen composite (frozen
-    codebooks are exactly what make later merges cheap: each batch
-    only assigns + encodes itself). An empty EITHER stripe raises
-    inside ``build_ivfpq_index``'s pre-write validation, so a bad
-    bootstrap leaves no partial index. Every later micro-batch
-    becomes one manifest epoch (only its changed ``id_bucket=``
-    partitions plus a small JSON) and the pointer re-points LAST.
+    """Continuous maintenance of the IVFPQ composite serving index
+    from an embedding stream of ``(vec_id, embedding)`` (the shared
+    cycle is in the module docstring; compaction is
+    ``compact_ivfpq_index``).
 
-    Replay safety (at-least-once foreachBatch): ordinary ids re-merge
-    onto themselves (upsert — resolved view unchanged). A REPLAYED
-    BOOTSTRAP batch (crash between ``set_current`` and the checkpoint
-    commit) re-delivers BOTH frozen-source stripes, which
-    ``merge_ivfpq_index`` would reject as replacements — so the merge
-    path first verifies and drops them as no-ops: a centroid-source
-    id whose vector is BIT-IDENTICAL to the carried centroid is a
-    replay; a codebook-source id whose residual sub-vectors —
-    recomputed through the builder's own assign+slice kernel against
-    the CARRIED centroids — are bit-identical to the carried codebook
-    entries is a replay. Either frozen-source id arriving with
-    DIFFERENT bytes is a genuine retrain attempt and raises (quiesce
-    the stream and ``retrain_ivfpq_index`` — the lifecycle-safe
-    recovery).
+    Bootstrap stripes: batch 0 builds epoch 0 and trains BOTH frozen
+    quantizers through the two seed stripes it must contain — the
+    coarse centroids (``vec_id % centroid_mod == 0``) and the residual
+    codebooks (the offset stripe ``== 1``). An empty stripe of either
+    raises inside ``build_ivfpq_index``'s pre-write validation, so a
+    bad bootstrap leaves no partial index. After bootstrap a NEW id
+    ≡ 0 or ≡ 1 (mod the mod stamped in the index meta, so a retrain
+    re-keys the rule) raises: a from-scratch rebuild would train it
+    into a quantizer.
 
-    Fresh-stripe enforcement, BOTH stripes (the r11 IVF rule,
-    doubled), keyed to the mod STAMPED in the index meta — so a
-    retrain that changes the budget re-keys the rule automatically;
-    ``centroid_mod`` itself applies to the bootstrap build only:
-    after bootstrap a NEW id ≡ 0 OR ≡ 1 (mod the stamped mod)
-    raises — a from-scratch rebuild over the same corpus would train
-    that id into a quantizer, so merging it as an ordinary vector
-    silently diverges the streamed index from the rebuild. Only the
-    ingest knows ``centroid_mod``, so the contract lives here.
+    Replay rule: ordinary ids upsert onto themselves. A replayed
+    bootstrap re-delivers both frozen-source stripes; they are dropped
+    as no-ops when BIT-IDENTICAL — a centroid-source id against its
+    carried centroid, a codebook-source id by its residual sub-vectors
+    recomputed against the carried centroids through the builder's own
+    assign kernel. Different bytes are a retrain attempt and raise
+    (quiesce the stream and ``retrain_ivfpq_index``).
 
-    Pointer commits are CAS (``cow.set_current(..., expected=...)``):
-    a retrain or any out-of-band maintainer re-pointing the root
-    mid-batch makes the commit raise ``cow.StalePointerError`` — the
-    batch fails fast instead of orphaning the other maintainer's
-    applied epoch; on restart foreachBatch re-delivers the batch and
-    this function re-resolves ``get_current``, merging against the
-    retrained quantizers (the decided retrain-under-ingest semantics,
-    gated in tests/test_streaming.py).
-
-    ``compact_every`` bounds the manifest chain exactly as in
-    :func:`index_maintenance_ingest` (chain-since-last-APPLIED-compact
-    gate, ``vacuum_on_compact`` quiesce caveat) via
-    ``compact_ivfpq_index``. ``n_buckets`` sizes the FIRST build only.
-    Returns the started ``availableNow`` query."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_lake_with_spark_spark.operators import similarity as _sim
-    from data_lake_with_spark_spark.sources import cow
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        epoch = cow.new_epoch_path(spark, root, label=f"b{batch_id}")
-        try:
-            cur = cow.get_current(spark, root)
-        except FileNotFoundError:
-            kw = {} if n_buckets is None else {"n_buckets": n_buckets}
-            _sim.build_ivfpq_index(
-                batch, epoch, dim=dim, m=m, centroid_mod=centroid_mod,
-                vec_dim=vec_dim, **kw,
-            )
-            cur = None
-        else:
-            meta = cow.read_json(spark, _sim._ivfpq_meta_uri(cur))
-            if meta is None:
-                raise FileNotFoundError(f"no ivfpq_meta.json under {cur!r}")
-            cents = cow.read_component(spark, cur, "centroids")
-            cb = cow.read_component(spark, cur, "codebooks")
-            # (1) centroid-source ids: bit-identical = bootstrap
-            # replay (no-op); different bytes = retrain attempt
-            stripe = batch.join(
-                F.broadcast(cents), batch["vec_id"] == cents["cent_id"]
-            )
-            same_c = F.col("embedding").cast("array<double>").eqNullSafe(
-                F.col("cent_v").cast("array<double>")
-            )
-            if stripe.where(~same_c).limit(1).count() > 0:
-                raise ValueError(
-                    "ivfpq_index_maintenance_ingest: batch carries a "
-                    "centroid-source id with a DIFFERENT vector — the "
-                    "frozen coarse quantizer would go stale; quiesce "
-                    "the stream and retrain_ivfpq_index the root"
-                )
-            replay_ids = stripe.select("vec_id")
-            # (2) codebook-source ids: recompute their residual
-            # sub-vectors through the builder's own kernel against the
-            # CARRIED centroids and require bit-identity with the
-            # carried codebook entries — the codebook stores residual
-            # SLICES, not raw vectors, so replay detection must
-            # re-derive them (bounded: the codebook stripe is
-            # broadcast-small by construction)
-            cb_ids = cb.select(F.col("code").alias("vec_id")).distinct()
-            cb_rows = batch.join(F.broadcast(cb_ids), "vec_id", "left_semi")
-            if cb_rows.limit(1).count() > 0:
-                w = meta["dim"] // meta["m"]
-                asg = _sim._ivfpq_assign_resid(
-                    cb_rows, cents, "vec_id", "embedding", vec_dim
-                )
-                slices = F.array(
-                    *[
-                        F.slice(F.col("rv"), s * w + 1, w)
-                        for s in range(meta["m"])
-                    ]
-                )
-                got = asg.select(
-                    F.col("vec_id").cast("bigint").alias("code"),
-                    F.posexplode(slices),
-                ).select(
-                    "code",
-                    F.col("pos").cast("bigint").alias("subspace"),
-                    F.col("col").alias("sub_v"),
-                )
-                mismatch = got.join(
-                    F.broadcast(cb), ["subspace", "code"], "left"
-                ).where(
-                    F.col("cent_sub").isNull()
-                    | ~F.col("sub_v").cast("array<double>").eqNullSafe(
-                        F.col("cent_sub").cast("array<double>")
-                    )
-                )
-                if mismatch.limit(1).count() > 0:
-                    raise ValueError(
-                        "ivfpq_index_maintenance_ingest: batch carries "
-                        "a codebook-source id whose residual differs "
-                        "from the carried codebook entry — the frozen "
-                        "residual codebooks would go stale; quiesce "
-                        "the stream and retrain_ivfpq_index the root"
-                    )
-                replay_ids = replay_ids.unionByName(
-                    cb_rows.select("vec_id")
-                )
-            fresh = batch.join(
-                replay_ids.distinct(), "vec_id", "left_anti"
-            )
-            if fresh.limit(1).count() == 0:
-                return  # pure bootstrap replay — nothing to merge
-            # stripe rule keyed to the INDEX's stamped mod (a retrain
-            # may have changed the budget) — see the IVF twin
-            eff_mod = meta.get("centroid_mod", centroid_mod)
-            if (
-                fresh.where(
-                    (F.col("vec_id") % eff_mod == 0)
-                    | (F.col("vec_id") % eff_mod == 1)
-                )
-                .limit(1)
-                .count()
-                > 0
-            ):
-                raise ValueError(
-                    "ivfpq_index_maintenance_ingest: batch carries a "
-                    "NEW id ≡ 0 or ≡ 1 (mod centroid_mod) after "
-                    "bootstrap — a from-scratch build over the same "
-                    "corpus would train this id into the coarse "
-                    "centroids (≡0) or residual codebooks (≡1), so "
-                    "merging it as an ordinary vector silently "
-                    "diverges the streamed index from the rebuild; "
-                    "route frozen-stripe ids to the bootstrap batch, "
-                    "or quiesce the stream and retrain_ivfpq_index "
-                    "the root"
-                )
-            _sim.merge_ivfpq_index(
-                spark, cur, fresh, epoch, vec_dim=vec_dim,
-                layout="manifest",
-            )
-        # CAS commit against the pointer this epoch derived from —
-        # see index_maintenance_ingest for the race/restart semantics
-        cow.set_current(spark, root, epoch, expected=cur)
-        if (
-            compact_every is not None
-            and _epochs_since_compact(spark, root) >= compact_every
-        ):
-            flat = cow.new_epoch_path(spark, root, label="compact")
-            base = cow.get_current(spark, root)
-            _sim.compact_ivfpq_index(spark, base, flat)
-            cow.set_current(spark, root, flat, expected=base)
-            if vacuum_on_compact:
-                cow.vacuum_index(
-                    spark, root, ["codes", "codebooks", "centroids"],
-                    min_age_seconds=0.0,
-                )
-        if stats_dir is not None:
-            _emit_batch_stats(
-                root, stats_dir, batch_id,
-                _sim.index_staleness_report(spark, root),
-            )
-
-    return (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir
-            or os.path.join(tempfile.mkdtemp(prefix="pqidx_ingest_"), "cp"),
-        )
-        .start()
+    ``dim``, ``m``, ``centroid_mod`` and ``n_buckets`` apply to the
+    bootstrap build only; ``vec_dim`` to every build and merge."""
+    kw = {} if n_buckets is None else {"n_buckets": n_buckets}
+    return _maintain(
+        stream_vecs, root, "pqidx_ingest_", checkpoint_dir, compact_every,
+        vacuum_on_compact, stats_dir,
+        project=lambda b: b.select("vec_id", "embedding"),
+        bootstrap=partial(
+            _sim.build_ivfpq_index, dim=dim, m=m,
+            centroid_mod=centroid_mod, vec_dim=vec_dim, **kw,
+        ),
+        admit=partial(_admit_vectors, "ivfpq", centroid_mod, vec_dim),
+        merge=partial(_sim.merge_ivfpq_index, vec_dim=vec_dim),
+        compact=_sim.compact_ivfpq_index,
+        components=_sim._vec_components("ivfpq"),
+        report=_sim.index_staleness_report,
     )
 
 
@@ -1222,165 +976,46 @@ def pq_index_maintenance_ingest(
     vacuum_on_compact: bool = True,
     stats_dir: str | None = None,
 ) -> "object":
-    """The plain-PQ member of the streaming index-maintenance family
-    (r12 verdict #3 named BOTH composite and plain PQ): batch 0
-    bootstraps — builds epoch 0 and, through the ``vec_id %
-    centroid_mod == 0`` seed stripe it must contain, trains the
-    frozen codebooks (PQ's ONE frozen quantizer; an empty stripe
-    raises HERE, before any write — ``build_pq_index`` cannot see the
-    contract); later batches encode against the carried codebooks and
-    manifest-merge (changed ``id_bucket=`` partitions + a small
-    JSON). Replay safety mirrors :func:`ivfpq_index_maintenance_ingest`
-    minus the centering: a replayed bootstrap's codebook-source ids
-    verify bit-identical by SLICING the raw vector (PQ codebooks store
-    raw sub-vectors) against the carried entries and drop as no-ops;
-    different bytes raise (retrain attempt →
-    ``similarity.retrain_pq_index``). A NEW id ≡ 0 (mod the mod
-    STAMPED in the index meta — retrains re-key the rule;
-    ``centroid_mod`` applies to the bootstrap build only) after
-    bootstrap raises (fresh-stripe rule — a rebuild would train on
-    it). Pointer commits are CAS; ``compact_every`` chain-gated via
-    ``compact_pq_index``. Returns the started ``availableNow``
-    query."""
-    import os
-    import tempfile
+    """Continuous maintenance of the plain-PQ serving index from an
+    embedding stream of ``(vec_id, embedding)`` (the shared cycle is
+    in the module docstring; compaction is ``compact_pq_index``).
 
-    from pyspark.sql import functions as F
+    Bootstrap stripe: batch 0 builds epoch 0 and trains the frozen
+    codebooks (PQ's one frozen quantizer) on its ``vec_id %
+    centroid_mod == 0`` seed stripe. An empty stripe raises here,
+    before anything is written (``build_pq_index`` cannot see the
+    contract). Later batches encode against the carried codebooks; a
+    NEW id ≡ 0 (mod the mod stamped in the index meta, so a retrain
+    re-keys the rule) raises, since a rebuild would train on it.
 
-    from data_lake_with_spark_spark.operators import similarity as _sim
-    from data_lake_with_spark_spark.sources import cow
+    Replay rule: ordinary ids upsert onto themselves. A replayed
+    bootstrap's codebook-source ids are verified BIT-IDENTICAL by
+    slicing the raw vector (PQ codebooks store raw sub-vectors)
+    against the carried entries and dropped as no-ops; different bytes
+    are a retrain attempt and raise (``similarity.retrain_pq_index``).
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        epoch = cow.new_epoch_path(spark, root, label=f"b{batch_id}")
-        try:
-            cur = cow.get_current(spark, root)
-        except FileNotFoundError:
-            if (
-                batch.where((F.col("vec_id") % centroid_mod) == 0)
-                .limit(1)
-                .count()
-                == 0
-            ):
-                raise ValueError(
-                    "pq_index_maintenance_ingest: bootstrap batch "
-                    "carries no vec_id % centroid_mod == 0 stripe — "
-                    "the codebooks would train EMPTY and the index "
-                    "would silently serve zero results; route the "
-                    "initial load (with its seed stripe) to the first "
-                    "micro-batch"
-                )
-            kw = {} if n_buckets is None else {"n_buckets": n_buckets}
-            _sim.build_pq_index(
-                batch, epoch, dim=dim, m=m, centroid_mod=centroid_mod,
-                **kw,
-            )
-            cur = None
-        else:
-            cb = cow.read_component(spark, cur, "codebooks")
-            meta = cow.read_json(spark, _sim._pq_meta_uri(cur))
-            if meta is None:
-                raise FileNotFoundError(f"no pq_meta.json under {cur!r}")
-            cb_ids = cb.select(F.col("code").alias("vec_id")).distinct()
-            cb_rows = batch.join(F.broadcast(cb_ids), "vec_id", "left_semi")
-            replay_ids = cb_rows.select("vec_id").limit(0)
-            if cb_rows.limit(1).count() > 0:
-                # codebook-source ids: slice the raw vector through
-                # the builder's kernel and require bit-identity with
-                # the carried entries (replay) — different bytes are
-                # a retrain attempt
-                w = meta["dim"] // meta["m"]
-                slices = F.array(
-                    *[
-                        F.slice(
-                            F.col("embedding").cast("array<double>"),
-                            s * w + 1,
-                            w,
-                        )
-                        for s in range(meta["m"])
-                    ]
-                )
-                got = cb_rows.select(
-                    F.col("vec_id").cast("bigint").alias("code"),
-                    F.posexplode(slices),
-                ).select(
-                    "code",
-                    F.col("pos").cast("bigint").alias("subspace"),
-                    F.col("col").alias("sub_v"),
-                )
-                mismatch = got.join(
-                    F.broadcast(cb), ["subspace", "code"], "left"
-                ).where(
-                    F.col("cent_sub").isNull()
-                    | ~F.col("sub_v").eqNullSafe(
-                        F.col("cent_sub").cast("array<double>")
-                    )
-                )
-                if mismatch.limit(1).count() > 0:
-                    raise ValueError(
-                        "pq_index_maintenance_ingest: batch carries a "
-                        "codebook-source id with DIFFERENT bytes — "
-                        "the frozen codebooks would go stale; quiesce "
-                        "the stream and retrain_pq_index the root"
-                    )
-                replay_ids = cb_rows.select("vec_id")
-            fresh = batch.join(replay_ids, "vec_id", "left_anti")
-            if fresh.limit(1).count() == 0:
-                return  # pure bootstrap replay — nothing to merge
-            # stripe rule keyed to the INDEX's stamped mod — see the
-            # IVF twin (a retrain may have changed the budget)
-            eff_mod = meta.get("centroid_mod", centroid_mod)
-            if (
-                fresh.where((F.col("vec_id") % eff_mod) == 0)
-                .limit(1)
-                .count()
-                > 0
-            ):
-                raise ValueError(
-                    "pq_index_maintenance_ingest: batch carries a NEW "
-                    "id ≡ 0 (mod centroid_mod) after bootstrap — a "
-                    "from-scratch build over the same corpus would "
-                    "train this id into the codebooks, so merging it "
-                    "as an ordinary vector silently diverges the "
-                    "streamed index from the rebuild; route seed-"
-                    "stripe ids to the bootstrap batch, or quiesce "
-                    "the stream and retrain_pq_index the root"
-                )
-            _sim.merge_pq_index(spark, cur, fresh, epoch, layout="manifest")
-        # CAS commit against the pointer this epoch derived from —
-        # see index_maintenance_ingest for the race/restart semantics
-        cow.set_current(spark, root, epoch, expected=cur)
-        if (
-            compact_every is not None
-            and _epochs_since_compact(spark, root) >= compact_every
-        ):
-            flat = cow.new_epoch_path(spark, root, label="compact")
-            base = cow.get_current(spark, root)
-            _sim.compact_pq_index(spark, base, flat)
-            cow.set_current(spark, root, flat, expected=base)
-            if vacuum_on_compact:
-                cow.vacuum_index(
-                    spark, root, ["codes", "codebooks"],
-                    min_age_seconds=0.0,
-                )
-        if stats_dir is not None:
-            _emit_batch_stats(
-                root, stats_dir, batch_id,
-                _sim.pq_staleness_report(spark, root),
-            )
+    ``dim``, ``m``, ``centroid_mod`` and ``n_buckets`` apply to the
+    bootstrap build only."""
+    kw = {} if n_buckets is None else {"n_buckets": n_buckets}
 
-    return (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir
-            or os.path.join(tempfile.mkdtemp(prefix="pq_ingest_"), "cp"),
+    def bootstrap(batch, epoch):
+        _require_stripe(
+            "pq", batch, centroid_mod,
+            "the codebooks would train EMPTY and the index would "
+            "silently serve zero results",
         )
-        .start()
+        _sim.build_pq_index(batch, epoch, dim=dim, m=m, centroid_mod=centroid_mod, **kw)
+
+    return _maintain(
+        stream_vecs, root, "pq_ingest_", checkpoint_dir, compact_every,
+        vacuum_on_compact, stats_dir,
+        project=lambda b: b.select("vec_id", "embedding"),
+        bootstrap=bootstrap,
+        admit=partial(_admit_vectors, "pq", centroid_mod, None),
+        merge=_sim.merge_pq_index,
+        compact=_sim.compact_pq_index,
+        components=_sim._vec_components("pq"),
+        report=_sim.pq_staleness_report,
     )
 
 

@@ -1991,3 +1991,127 @@ def test_stats_sink_composes_with_compaction_and_locked_store(
     got = sorted(map(tuple, T.bm25_topk_indexed(spark, cur, qs, k=5).collect()))
     exp = sorted(map(tuple, T.bm25_topk_indexed(spark, scratch, qs, k=5).collect()))
     assert got == exp and len(got) > 0
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq", "ivfpq"])
+def test_vector_ingest_admission_and_compaction(spark, tmp_path, family):
+    """The vector ingests' admission contract and in-stream compaction
+    on a tiny corpus (dim 8, m 2, n_buckets 4): with compact_every=2
+    every batch leaves read amplification ≤ 2 and nothing retired; a
+    replayed bootstrap batch leaves the resolved index rows unchanged,
+    and a replay of only frozen-source ids does not move current.json;
+    a frozen-source id with different bytes, a NEW id on a fresh
+    stripe and (IVF, PQ) a bootstrap without the stripe all raise and
+    commit nothing."""
+    import os
+    import random
+    from functools import partial
+
+    from data_lake_with_spark_spark.sources import cow
+
+    md = 20
+    pq_kw = {"dim": 8, "m": 2, "centroid_mod": md, "n_buckets": 4}
+    ingest, stripes, frozen_errors, components = {
+        "ivf": (
+            partial(SE.vector_index_maintenance_ingest, centroid_mod=md),
+            (0,),
+            {0: "centroid-source"},
+            ["lists", "centroids"],
+        ),
+        "pq": (
+            partial(SE.pq_index_maintenance_ingest, **pq_kw),
+            (0,),
+            {0: "codebook-source"},
+            ["codes", "codebooks"],
+        ),
+        "ivfpq": (
+            partial(SE.ivfpq_index_maintenance_ingest, **pq_kw),
+            (0, 1),
+            {0: "centroid-source", 1: "codebook-source"},
+            ["codes", "centroids", "codebooks"],
+        ),
+    }[family]
+    rnd = random.Random(23)
+
+    def vec():
+        return [rnd.uniform(-1, 1) for _ in range(8)]
+
+    vecs = spark.createDataFrame(
+        [(i, vec()) for i in range(240)], ["vec_id", "embedding"]
+    )
+    frozen = (F.col("vec_id") % md).isin(*stripes)
+    root = str(tmp_path / "root")
+
+    def stage_file(stage, frame, i):
+        # one parquet file per batch, mtimes ascending in delivery order
+        old = set(os.listdir(stage)) if os.path.isdir(stage) else set()
+        frame.coalesce(1).write.mode("append").parquet(stage)
+        for name in set(os.listdir(stage)) - old:
+            if name.endswith(".parquet"):
+                t = 1_000_000_000 + i
+                os.utime(os.path.join(stage, name), (t, t))
+
+    def run(stage, cp, on_root=root):
+        stream = (
+            spark.readStream.schema(vecs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+        )
+        ingest(
+            stream, on_root, checkpoint_dir=str(tmp_path / cp),
+            compact_every=2,
+        ).awaitTermination(300)
+
+    def run_once(frame, name, on_root=root):
+        stage_file(str(tmp_path / name), frame, 0)
+        run(str(tmp_path / name), f"cp_{name}", on_root)
+
+    def resolved():
+        cur = cow.get_current(spark, root)
+        out = {}
+        for c in components:
+            df = cow.read_component(spark, cur, c)
+            out[c] = sorted(map(str, df.select(*sorted(df.columns)).collect()))
+        return out
+
+    def pointer():
+        with open(os.path.join(root, "current.json")) as f:
+            return f.read()
+
+    stage = str(tmp_path / "stage")
+    batches = [
+        vecs.where(frozen | (F.col("vec_id") % 3 == 0)),
+        vecs.where(~frozen & (F.col("vec_id") % 3 == 1)),
+        vecs.where(~frozen & (F.col("vec_id") % 3 == 2)),
+    ]
+    for i, b in enumerate(batches):
+        stage_file(stage, b, i)
+        run(stage, "cp")
+        rep = cow.lifecycle_report(spark, root, components)
+        assert rep["read_amplification"] <= 2 and rep["retired"] == [], rep
+    assert cow.list_epochs(spark, root)[-1].endswith("_compact")
+
+    before = resolved()
+    run_once(batches[0], "replay_bootstrap")
+    assert resolved() == before
+    cur = pointer()
+    run_once(vecs.where(frozen), "replay_frozen")
+    assert pointer() == cur
+
+    for stripe, pattern in frozen_errors.items():
+        bad = spark.createDataFrame([(2 * md + stripe, vec())], vecs.schema)
+        with pytest.raises(Exception, match=pattern):
+            run_once(bad, f"bad{stripe}")
+    new = spark.createDataFrame(
+        [(1000 + stripes[-1], vec()), (1003, vec())], vecs.schema
+    )
+    with pytest.raises(Exception, match="NEW id"):
+        run_once(new, "new_stripe")
+    assert pointer() == cur and resolved() == before
+
+    if family != "ivfpq":
+        root2 = str(tmp_path / "root2")
+        with pytest.raises(Exception, match="no vec_id"):
+            run_once(vecs.where(~frozen), "empty_stripe", on_root=root2)
+        with pytest.raises(FileNotFoundError):
+            cow.get_current(spark, root2)

@@ -13,8 +13,8 @@ every dedup probe into an output-bound measurement. Dimension tables
 against the same dims is the realistic growth shape, so per-dim-key
 fan-out grows 10×.
 
-This feeds tools/scaling_probe.py (r4 verdict stretch item 8: turn
-the "designed for 100 TB" prose into measured scaling exponents).
+The replicated directory is the input for measuring how an operator's
+wall time scales with the data (SCALING_r05.md).
 Output lands OUTSIDE the repo (/tmp) — generated data is not
 committed.
 """
