@@ -1102,30 +1102,6 @@ def _ri_meta(spark, path: str) -> dict:
     return meta
 
 
-def _ri_read(spark, path: str, component: str, meta: dict) -> DataFrame:
-    """Read a state component via ``cow.read_component``, falling back
-    to a typed EMPTY frame from the meta sidecar's schema when the
-    component directory holds no parquet footer — a plain-layout
-    component can be legitimately empty (a min_count floor nobody
-    crosses leaves ``topk`` with zero rows, and Spark's empty
-    partitioned write emits only _SUCCESS)."""
-    import json
-
-    from pyspark.errors import AnalysisException
-
-    from data_lake_with_spark_spark.sources import cow
-
-    try:
-        return cow.read_component(spark, path, component)
-    except AnalysisException:
-        schema = (meta.get("schemas") or {}).get(component)
-        if schema is None:
-            raise
-        from pyspark.sql.types import StructType
-
-        return local_frame(spark, [], StructType.fromJson(json.loads(schema)))
-
-
 def build_related_items_state(
     baskets: DataFrame,
     path: str,
@@ -1234,19 +1210,17 @@ def build_related_items_state(
         )
     }
 
-    def _write(comp):
-        bucket_col = _RI_LAYOUT[comp][0]
-        (
-            framed[comp].repartition(n_buckets, bucket_col)
-            .write.mode("overwrite")
-            .partitionBy(bucket_col)
-            .parquet(f"{path}/{comp}")
-        )
-
     # the four component writes are independent (pairs/n are already
     # checkpointed, each write targets its own directory) — overlap
     # them so each job's task tail back-fills the others (guide §2.6)
-    run_concurrent([lambda c=c: _write(c) for c in framed])
+    run_concurrent(
+        [
+            lambda c=c: cow.write_partitioned(
+                framed[c], f"{path}/{c}", _RI_LAYOUT[c][0], n_tasks=n_buckets
+            )
+            for c in framed
+        ]
+    )
     cow.write_json(
         spark,
         _ri_meta_uri(path),
@@ -1255,9 +1229,8 @@ def build_related_items_state(
             "k": int(k),
             "min_count": int(min_count),
             "n_buckets": int(n_buckets),
-            # per-component schemas: a plain-layout component can be
-            # legitimately EMPTY (floor nobody crosses), and an empty
-            # partitioned write leaves no footer to infer from
+            # per-component schemas: _ri_check_format tells an
+            # unstamped v2 ledger by its baskets schema
             "schemas": {comp: f.schema.json() for comp, f in framed.items()},
         },
     )
@@ -1270,8 +1243,7 @@ def related_items_topk(spark, path: str) -> DataFrame:
     epochs serve identically."""
     from data_lake_with_spark_spark.sources import cow
 
-    meta = cow.read_json(spark, _ri_meta_uri(path)) or {}
-    return _ri_read(spark, path, "topk", meta).select(
+    return cow.read_component(spark, path, "topk").select(
         "item", "other", "n_ab", "score", "rank"
     )
 
@@ -1317,6 +1289,7 @@ def related_items_health(spark, path: str) -> DataFrame:
     from data_lake_with_spark_spark.operators.similarity import (
         _resolve_index_path,
     )
+    from data_lake_with_spark_spark.sources import cow
 
     path = _resolve_index_path(spark, path)
     meta = _ri_meta(spark, path)
@@ -1328,22 +1301,22 @@ def related_items_health(spark, path: str) -> DataFrame:
         [(int(meta["k"]), min_count, n_buckets)],
         "k_stamped int, min_count_stamped int, n_buckets_stamped int",
     )
-    pair_agg = _ri_read(spark, path, "pairs", meta).agg(
+    pair_agg = cow.read_component(spark, path, "pairs").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.sum(F.when(F.col("n_ab") < min_count, 1).otherwise(0))
         .cast("bigint")
         .alias("pairs_below_floor"),
         F.max("n_ab").cast("bigint").alias("max_support"),
     )
-    ledger = _ri_read(spark, path, "baskets", meta)
+    ledger = cow.read_component(spark, path, "baskets")
     ledger_agg = ledger.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_incidence"),
         F.count_distinct(F.col("basket")).cast("bigint").alias("n_baskets"),
     )
-    item_agg = _ri_read(spark, path, "items", meta).agg(
+    item_agg = cow.read_component(spark, path, "items").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_items")
     )
-    topk_agg = _ri_read(spark, path, "topk", meta).agg(
+    topk_agg = cow.read_component(spark, path, "topk").agg(
         F.count(F.lit(1)).cast("bigint").alias("topk_rows"),
         F.count_distinct(F.col("item")).cast("bigint").alias("served_items"),
     )
@@ -1449,7 +1422,7 @@ def merge_related_items_state(
 
     def _replay_check():
         replayed = (
-            _ri_read(spark, base_path, "baskets", meta)
+            cow.read_component(spark, base_path, "baskets")
             .where(cow.in_partitions("basket_bucket", ch_baskets))
             .join(nb.select("basket").distinct(), "basket", "left_semi")
         )
@@ -1548,7 +1521,7 @@ def delete_from_related_items_state(
     ).collect()[0]
     ch, requested = sorted(idrow["bk"]), int(idrow["n"])
     victims = (
-        _ri_read(spark, base_path, "baskets", meta)
+        cow.read_component(spark, base_path, "baskets")
         .where(cow.in_partitions("basket_bucket", ch))
         .join(ids, "basket", "left_semi")
         .select("basket", "item")
@@ -1677,7 +1650,7 @@ def _apply_ri_state_delta(
         delta = delta.localCheckpoint()
         ch = cow.partition_values(delta, _ri_bucket(keys, n_buckets))
         summed = (
-            _ri_read(spark, base_path, comp, meta)
+            cow.read_component(spark, base_path, comp)
             .where(cow.in_partitions(bucket_col, ch))
             .select(*keys, count_col)
             .join(delta, keys, "full")
@@ -1709,7 +1682,7 @@ def _apply_ri_state_delta(
         # very pairs whose disappearance forces a partner's re-rank; for
         # a merge the base scan is equally sufficient — a brand-new
         # pair's endpoints are both batch items already
-        pairs_all = _ri_read(spark, base_path, "pairs", meta).select(
+        pairs_all = cow.read_component(spark, base_path, "pairs").select(
             "a", "b"
         )
         partners = (
@@ -1777,7 +1750,7 @@ def _apply_ri_state_delta(
         """Post-batch view of a support component: base rows outside
         the changed buckets ∪ the rewritten rows."""
         return (
-            _ri_read(spark, base_path, comp, meta)
+            cow.read_component(spark, base_path, comp)
             .where(~cow.in_partitions(_RI_LAYOUT[comp][0], ch))
             .select(*rows.columns)
             .unionByName(rows)
@@ -1785,7 +1758,7 @@ def _apply_ri_state_delta(
 
     def _baskets_leg():
         base_led = (
-            _ri_read(spark, base_path, "baskets", meta)
+            cow.read_component(spark, base_path, "baskets")
             .where(cow.in_partitions("basket_bucket", ch_baskets))
             .select("basket", "item")
         )
@@ -1837,7 +1810,7 @@ def _apply_ri_state_delta(
             pairs_near, items_near, k, min_count, restrict=affected
         )
         carried_topk = (
-            _ri_read(spark, base_path, "topk", meta)
+            cow.read_component(spark, base_path, "topk")
             .where(cow.in_partitions("item_bucket", ch_topk))
             .select("item", "other", "n_ab", "score", "rank")
             .join(affected, "item", "left_anti")

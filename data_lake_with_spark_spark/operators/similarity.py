@@ -788,6 +788,7 @@ def build_ivf_index(
     )
     assigned = _ivf_assign(corpus, cents, id_col, vec_col, vec_dim)
     from data_lake_with_spark_spark.session import run_concurrent
+    from data_lake_with_spark_spark.sources import cow
 
     # keyed by the partition column with pool-scaled task count: ONE
     # file per cell and parallel leaf-dir creation (see
@@ -796,31 +797,19 @@ def build_ivf_index(
     # re-evaluates the (lazy) cents subtree for its broadcast anyway,
     # so serializing the small centroids write before it bought
     # nothing (guide §2.6).
-    def _write_lists():
-        (
-            assigned.repartition(
-                corpus.sparkSession.sparkContext.defaultParallelism,
-                "cent_id",
-            )
-            .write.mode("overwrite")
-            .partitionBy("cent_id")
-            .parquet(f"{path}/lists")
-        )
-
     run_concurrent(
         [
-            lambda: cents.write.mode("overwrite").parquet(
-                f"{path}/centroids"
+            lambda: cow.write_whole(cents, f"{path}/centroids"),
+            lambda: cow.write_partitioned(
+                assigned, f"{path}/lists", "cent_id",
+                n_tasks=corpus.sparkSession.sparkContext.defaultParallelism,
             ),
-            _write_lists,
         ]
     )
     # stamp the EFFECTIVE quantizer budget rule: the streaming
     # ingest's fresh-stripe enforcement must track the mod the INDEX
     # was actually built with (a retrain may change it), not the mod
     # the ingest was constructed with (r13 — retrain-under-ingest)
-    from data_lake_with_spark_spark.sources import cow
-
     cow.write_json(
         corpus.sparkSession,
         _ivf_meta_uri(path),
@@ -1837,17 +1826,16 @@ def build_pq_index(
         corpus, dim=dim, m=m, centroid_mod=centroid_mod,
         id_col=id_col, vec_col=vec_col,
     ).localCheckpoint()
-    cb.write.mode("overwrite").parquet(f"{path}/codebooks")
-    codes = pq_encode(corpus, cb, dim=dim, m=m, id_col=id_col, vec_col=vec_col)
-    (
-        codes.withColumn("id_bucket", _pq_bucket(id_col, n_buckets))
-        .repartition(n_buckets, "id_bucket")
-        .write.mode("overwrite")
-        .partitionBy("id_bucket")
-        .parquet(f"{path}/codes")
-    )
     from data_lake_with_spark_spark.sources import cow
 
+    cow.write_whole(cb, f"{path}/codebooks")
+    codes = pq_encode(corpus, cb, dim=dim, m=m, id_col=id_col, vec_col=vec_col)
+    cow.write_partitioned(
+        codes.withColumn("id_bucket", _pq_bucket(id_col, n_buckets)),
+        f"{path}/codes",
+        "id_bucket",
+        n_tasks=n_buckets,
+    )
     cow.write_json(
         spark,
         _pq_meta_uri(path),
@@ -2296,6 +2284,7 @@ def build_ivfpq_index(
 
         warnings.warn(msg, stacklevel=2)
     from data_lake_with_spark_spark.session import run_concurrent
+    from data_lake_with_spark_spark.sources import cow
 
     # the frozen-centroid write and the assignment materialization are
     # independent (cents is already checkpointed) — overlap them, then
@@ -2303,9 +2292,7 @@ def build_ivfpq_index(
     # the cb checkpoint; disjoint target dirs — guide §2.6)
     _, assigned = run_concurrent(
         [
-            lambda: cents.write.mode("overwrite").parquet(
-                f"{path}/centroids"
-            ),
+            lambda: cow.write_whole(cents, f"{path}/centroids"),
             lambda: _ivfpq_assign_resid(
                 corpus, cents, id_col, vec_col, vec_dim
             ).localCheckpoint(),
@@ -2335,26 +2322,16 @@ def build_ivfpq_index(
     # FS-metadata-bound, and 8 bucket-keyed tasks serially creating
     # 40 nested cell dirs each measured 2.1s vs 1.3s with the pool
     # doing it 32-wide (same 1-file-per-leaf layout either way)
-    def _write_codes():
-        (
-            codes.repartition(
-                max(1, min(spark.sparkContext.defaultParallelism,
-                           n_buckets * n_cells)),
-                "id_bucket", "cent_id",
-            )
-            .write.mode("overwrite")
-            .partitionBy("id_bucket", "cent_id")
-            .parquet(f"{path}/codes")
-        )
-
     run_concurrent(
         [
-            lambda: cb.write.mode("overwrite").parquet(f"{path}/codebooks"),
-            _write_codes,
+            lambda: cow.write_whole(cb, f"{path}/codebooks"),
+            lambda: cow.write_partitioned(
+                codes, f"{path}/codes", ["id_bucket", "cent_id"],
+                n_tasks=max(1, min(spark.sparkContext.defaultParallelism,
+                                   n_buckets * n_cells)),
+            ),
         ]
     )
-    from data_lake_with_spark_spark.sources import cow
-
     cow.write_json(
         spark,
         _ivfpq_meta_uri(path),
@@ -2699,7 +2676,7 @@ def retrain_ivf_index(
     out = {
         "epoch": epoch,
         "n_vectors": corpus.count(),
-        "n_centroids": spark.read.parquet(f"{epoch}/centroids").count(),
+        "n_centroids": cow.read_component(spark, epoch, "centroids").count(),
     }
     return {**out, "vacuum": swept} if vacuum else out
 

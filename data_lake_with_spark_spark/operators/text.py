@@ -16,7 +16,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from data_lake_with_spark_spark.session import collect_bounded, local_frame
 
@@ -1181,8 +1181,8 @@ def build_bm25_index(
         n_tasks=n_buckets,
         sort_col="tok",
     )
-    dl.write.mode("overwrite").parquet(f"{path}/doclens")
-    stats.write.mode("overwrite").parquet(f"{path}/stats")
+    cow.write_whole(dl, f"{path}/doclens")
+    cow.write_whole(stats, f"{path}/stats")
 
 
 def compact_bm25_index(spark, index_path: str, out_path: str) -> dict:
@@ -1258,13 +1258,7 @@ def bm25_topk_indexed(
         ),
     )
     postings = cow.read_component(spark, path, "postings")
-    # doclens share the postings' id column: a known schema, no
-    # footer-inference job
-    dl = spark.read.schema(
-        StructType(
-            [postings.schema[id_col], StructField("dl", LongType())]
-        )
-    ).parquet(f"{path}/doclens")
+    dl = cow.read_component(spark, path, "doclens")
     return _bm25_rank(
         postings.where(cow.in_partitions("tok_bucket", buckets))
         .where(cow.in_partitions("tok", vocab))
@@ -1325,10 +1319,10 @@ def bm25_staleness_report(spark, path: str) -> DataFrame:
     from data_lake_with_spark_spark.sources import cow
 
     path = _resolve_index_path(spark, path)
-    stats = spark.read.parquet(f"{path}/stats")
-    dl = spark.read.parquet(f"{path}/doclens")
+    stats = _bm25_stats(spark, path)
+    dl = cow.read_component(spark, path, "doclens")
     postings = cow.read_component(spark, path, "postings")
-    n_buckets = stats.select("n_buckets").first()["n_buckets"]
+    n_buckets = stats["n_buckets"]
 
     doc_agg = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1338,10 +1332,10 @@ def bm25_staleness_report(spark, path: str) -> DataFrame:
         # fresh build, and to the oracle's SUM/COUNT)
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl_live"),
     )
-    stamped = stats.select(
-        F.col("n_corpus").cast("bigint").alias("n_corpus_stamped"),
-        F.col("avgdl").alias("avgdl_stamped"),
-        F.col("n_buckets").cast("int").alias("n_buckets_stamped"),
+    stamped = local_frame(
+        spark,
+        [(stats["n_corpus"], stats["avgdl"], n_buckets)],
+        "n_corpus_stamped bigint, avgdl_stamped double, n_buckets_stamped int",
     )
     dfs = postings.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
@@ -1720,18 +1714,19 @@ def _bm25_commit(
         spark, post, base_path, out_path, layout, "postings", "tok_bucket",
         changed, sort_col="tok",
     )
-    dl = spark.read.parquet(f"{base_path}/doclens").join(
+    dl = cow.read_component(spark, base_path, "doclens").join(
         ids, id_col, "left_anti"
     )
     if new_dl is not None:
         dl = dl.unionByName(new_dl)
-    dl.write.mode("overwrite").parquet(f"{out_path}/doclens")
-    dl.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    ).withColumn("n_buckets", F.lit(int(n_buckets)).cast("int")).write.mode(
-        "overwrite"
-    ).parquet(f"{out_path}/stats")
+    cow.write_whole(dl, f"{out_path}/doclens")
+    cow.write_whole(
+        dl.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
+            (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
+        ).withColumn("n_buckets", F.lit(int(n_buckets)).cast("int")),
+        f"{out_path}/stats",
+    )
     return stats
 
 

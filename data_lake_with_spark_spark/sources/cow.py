@@ -52,6 +52,25 @@ Promotion comes in two layouts:
   :func:`compact` collapses them and :func:`vacuum_index` retires the
   unreferenced ones.
 
+Every component records its schema in ``{component}/_schema.json``:
+the column types made nullable (Spark reads Parquet as nullable), data
+columns first, with the partition columns named. Writers: the component
+writers :func:`write_partitioned` and :func:`write_whole`, which every
+family's build (hence the retrains and the streaming bootstraps) and
+:func:`compact` use, write it after the Spark write; :func:`commit`
+records the base's resolved view widened by the columns the epoch
+wrote — in the record under the links layout, in the manifest's
+``schema`` field under the manifest layout. Reader:
+:func:`read_component` hands the record's data columns to the Parquet
+reader, so no read pays a footer-inference job; partition columns keep
+the types Spark infers from the directory names (a ``bigint``
+``cent_id`` reads back as ``int``), a component with no partition
+directory left serves an empty frame with every recorded column, and a
+whole-component manifest reads the record of the directory it points
+at. Fallback: a component without a record (written before records
+existed) reads through footer inference. Spark's file listing skips
+names starting with ``_``, so the record never reaches a scan.
+
 :func:`commit` returns the promotion stats dict (``partition_col``,
 ``changed_partitions``, ``promoted_dirs``, ``linked_files``,
 ``copied_files``, ``linked_bytes``, ``remote_copied_dirs``, plus
@@ -290,10 +309,86 @@ def read_manifest(spark, index_path: str, component: str) -> dict | None:
     return None if text is None else json.loads(text)
 
 
+_SCHEMA_RECORD = "_schema.json"
+
+
+def _nullable(dt):
+    """``dt`` with every field, element and value nullable — the form
+    Spark gives a Parquet relation's columns."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _record_schema(spark, comp_dir: str, schema, partition_cols=()) -> None:
+    """Write ``comp_dir``'s schema record: ``schema``'s data columns
+    then its ``partition_cols``, made nullable."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    cols = list(partition_cols)
+    fields = [f for f in schema.fields if f.name not in cols]
+    fields += [schema[c] for c in cols]
+    _fs_write_text(
+        spark,
+        f"{comp_dir}/{_SCHEMA_RECORD}",
+        json.dumps(
+            {
+                "schema": _nullable(StructType(fields)).json(),
+                "partition_cols": cols,
+            },
+            sort_keys=True,
+            indent=1,
+        ),
+    )
+
+
+def _read_dir(spark, comp_dir: str):
+    """Read one component directory with its schema record: the data
+    columns go to the reader (no footer-inference job) and partition
+    columns come from the directory names. A partitioned component
+    with no partition directory left serves an empty frame with every
+    recorded column; a directory without a record is read through
+    footer inference."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    text = _fs_read_text(spark, f"{comp_dir}/{_SCHEMA_RECORD}")
+    if text is None:
+        return spark.read.parquet(comp_dir)
+    rec = json.loads(text)
+    schema = StructType.fromJson(json.loads(rec["schema"]))
+    pcols = rec["partition_cols"]
+    df = spark.read.schema(
+        StructType([f for f in schema.fields if f.name not in pcols])
+    ).parquet(comp_dir)
+    if any(c not in df.columns for c in pcols):
+        from data_lake_with_spark_spark.session import local_frame
+
+        return local_frame(spark, [], schema)
+    return df
+
+
 def read_component(spark, index_path: str, component: str):
     """Read an index component resolving a manifest if one exists —
     THE entry point every index reader and maintenance op uses, so
     plain, link-promoted, and manifest layouts serve identically.
+    Plain and link-promoted components read with their schema record,
+    a whole-component manifest with the record of the directory it
+    points at.
 
     Manifest resolution groups partition names by owning epoch URI
     and reads each owner with ``basePath`` = the owner (partition
@@ -310,9 +405,9 @@ def read_component(spark, index_path: str, component: str):
 
     m = read_manifest(spark, index_path, component)
     if m is None:
-        return spark.read.parquet(f"{index_path}/{component}")
+        return _read_dir(spark, f"{index_path}/{component}")
     if m.get("whole"):
-        return spark.read.parquet(m["whole"])
+        return _read_dir(spark, m["whole"])
     schema = (
         StructType.fromJson(json.loads(m["schema"])) if m.get("schema") else None
     )
@@ -375,45 +470,50 @@ def base_partition_owners(
     return {n: owner for n in names}
 
 
+def _widened_schema(
+    spark, base_path: str, component: str, written_schema, partition_cols
+):
+    """The base's resolved view of ``component`` widened by the data
+    columns an epoch wrote: a batch with a ``long`` id merged into an
+    ``int`` base writes INT64 files, which Spark reads as ``long`` but
+    not as ``int``. Partition columns keep the base's types, since
+    their values live in directory names. The widening is Spark's own
+    set-operation rule, applied to two empty local relations (no
+    job)."""
+    from pyspark.sql.types import StructType
+
+    from data_lake_with_spark_spark.session import local_frame
+
+    written = StructType(
+        [f for f in written_schema.fields if f.name not in partition_cols]
+    )
+    return (
+        local_frame(spark, [], read_component(spark, base_path, component).schema)
+        .unionByName(local_frame(spark, [], written), allowMissingColumns=True)
+        .schema
+    )
+
+
 def _promote_manifest(
     spark,
     base_path: str,
     out_path: str,
     component: str,
-    partition_cols: list,
+    partition_col: str,
     changed_values,
-    written_schema,
+    schema,
 ) -> dict:
     """Manifest layout: after the changed partitions landed in
     ``{out_path}/{component}``, write a manifest that points those
     names at the new epoch and carries every unchanged name's owner
     forward from the base (flat chain — owners are final URIs). The
-    manifest also carries the component SCHEMA, the one every owner
-    read uses: the base's resolved view widened by the columns this
-    epoch wrote (``written_schema``; a batch with a ``long`` id merged
-    into an ``int`` base writes INT64 files, which Spark reads as
-    ``long`` but not as ``int``). Partition columns keep the base's
-    types, since their values live in directory names. A later epoch
-    that empties the component entirely still serves an empty frame
-    with the right columns."""
+    manifest also carries the component ``schema`` (see
+    :func:`_widened_schema`), the one every owner read uses, so a
+    later epoch that empties the component entirely still serves an
+    empty frame with the right columns."""
     import json
 
-    from pyspark.sql.types import StructType
-
-    from data_lake_with_spark_spark.session import local_frame
-
-    partition_col = partition_cols[0]
     changed = {str(v) for v in changed_values}
-    written = StructType(
-        [f for f in written_schema.fields if f.name not in partition_cols]
-    )
-    # union of two empty local relations: Spark's own set-operation
-    # type widening, no job
-    schema_json = (
-        local_frame(spark, [], read_component(spark, base_path, component).schema)
-        .unionByName(local_frame(spark, [], written), allowMissingColumns=True)
-        .schema.json()
-    )
     carried = {
         name: owner
         for name, owner in base_partition_owners(
@@ -430,7 +530,7 @@ def _promote_manifest(
         "partition_col": partition_col,
         "entries": entries,
         "whole": None,
-        "schema": schema_json,
+        "schema": schema.json(),
     }
     _fs_write_text(
         spark,
@@ -456,7 +556,8 @@ def _promote_whole(
     """Promote an UNPARTITIONED frozen component (centroids,
     codebooks) whole: linked (links layout) or referenced by a
     whole-component manifest pointing at the URI that owns the base's
-    bytes, following an existing reference so chains stay flat."""
+    bytes, following an existing reference so chains stay flat (a
+    reader takes the schema from that directory's record)."""
     import json
 
     base_dir = f"{base_path}/{component}"
@@ -530,7 +631,7 @@ def _compact_component(
 
     df = read_component(spark, index_path, component)
     if partition_cols is None:
-        df.write.mode("overwrite").parquet(f"{out_path}/{component}")
+        write_whole(df, f"{out_path}/{component}")
         return {"partitions": 0}
     # a nested layout (IVFPQ's (id_bucket, cent_id)) passes the column
     # list; the FIRST column is the promotion/manifest unit
@@ -546,6 +647,15 @@ def _cols(partition_cols: "str | list[str]") -> list:
     )
 
 
+def _spark_write_partitioned(frame, path, cols, n_tasks, sort_col) -> None:
+    out = (
+        frame.repartition(n_tasks, *cols) if n_tasks else frame.repartition(*cols)
+    )
+    if sort_col is not None:
+        out = out.sortWithinPartitions(*cols, sort_col)
+    out.write.mode("overwrite").partitionBy(*cols).parquet(path)
+
+
 def write_partitioned(
     frame,
     path: str,
@@ -553,21 +663,26 @@ def write_partitioned(
     n_tasks: "int | None" = None,
     sort_col: "str | None" = None,
 ) -> None:
-    """THE partitioned index-file writer (build, commit, compaction):
+    """THE partitioned index-component writer (builds, compaction):
     a repartition keyed by every partition column — ``n_tasks`` tasks,
     else the session's shuffle partition count — so each leaf
-    directory gets one file, then an overwrite ``partitionBy`` write.
-    With ``sort_col`` each file's rows are sorted by it; the per-task
-    sort leads with the partition columns, the order the partitioned
-    writer requires, so the writer keeps ``sort_col``'s order instead
-    of re-sorting by the partition columns alone."""
+    directory gets one file, then an overwrite ``partitionBy`` write,
+    then the component's schema record. With ``sort_col`` each file's
+    rows are sorted by it; the per-task sort leads with the partition
+    columns, the order the partitioned writer requires, so the writer
+    keeps ``sort_col``'s order instead of re-sorting by the partition
+    columns alone."""
     cols = _cols(partition_cols)
-    out = (
-        frame.repartition(n_tasks, *cols) if n_tasks else frame.repartition(*cols)
-    )
-    if sort_col is not None:
-        out = out.sortWithinPartitions(*cols, sort_col)
-    out.write.mode("overwrite").partitionBy(*cols).parquet(path)
+    _spark_write_partitioned(frame, path, cols, n_tasks, sort_col)
+    _record_schema(frame.sparkSession, path, frame.schema, cols)
+
+
+def write_whole(frame, path: str) -> None:
+    """THE unpartitioned index-component writer (centroids, codebooks,
+    BM25 doclens and stats): an overwrite write, then the component's
+    schema record."""
+    frame.write.mode("overwrite").parquet(path)
+    _record_schema(frame.sparkSession, path, frame.schema)
 
 
 def check_target(
@@ -634,31 +749,30 @@ def commit(
     """Commit step 3: write ``frame`` — the full new content of the
     ``changed`` partitions — to ``{out_path}/{component}``, then
     promote the base's unchanged partitions by ``layout``, promote the
-    ``frozen`` whole components and carry the ``sidecars``. The write
-    (:func:`write_partitioned`) runs a task count scaled to the
+    ``frozen`` whole components and carry the ``sidecars``. The write is
+    :func:`write_partitioned`'s with a task count scaled to the
     executor pool, so leaf creation runs pool-wide; ``sort_col`` sorts
-    each file's rows, as the family's build does. Returns the
-    promotion stats."""
+    each file's rows, as the family's build does. The component's
+    schema — the base's view widened by ``frame``'s columns — goes to
+    the manifest, or to the schema record under the links layout.
+    Returns the promotion stats."""
     cols = _cols(partition_cols)
     par = (
         max(len(changed), spark.sparkContext.defaultParallelism)
         if changed
         else 1
     )
-    write_partitioned(
-        frame, f"{out_path}/{component}", cols, n_tasks=par, sort_col=sort_col
-    )
+    comp_dir = f"{out_path}/{component}"
+    _spark_write_partitioned(frame, comp_dir, cols, par, sort_col)
+    schema = _widened_schema(spark, base_path, component, frame.schema, cols)
     if layout == "manifest":
         stats = _promote_manifest(
-            spark, base_path, out_path, component, cols, changed, frame.schema
+            spark, base_path, out_path, component, cols[0], changed, schema
         )
     else:
+        _record_schema(spark, comp_dir, schema, cols)
         stats = _promote_partitions(
-            spark,
-            f"{base_path}/{component}",
-            f"{out_path}/{component}",
-            cols[0],
-            changed,
+            spark, f"{base_path}/{component}", comp_dir, cols[0], changed
         )
     for name in frozen:
         _promote_whole(spark, base_path, out_path, name, layout)

@@ -737,7 +737,7 @@ def _admit_baskets(spark, cur, batch):
     bucket = _graph._ri_bucket(["basket"], meta["n_buckets"])
     changed = cow.partition_values(ids, bucket)
     seen_rows = (
-        _graph._ri_read(spark, cur, "baskets", meta)
+        cow.read_component(spark, cur, "baskets")
         .where(cow.in_partitions("basket_bucket", changed))
         .join(ids, "basket", "left_semi")
         .select("basket", "item")

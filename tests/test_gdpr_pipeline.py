@@ -154,10 +154,9 @@ def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
     expected = set(range(n)) - set(doomed)
     assert snap_ids == dl_ids == ivf_ids == expected
     assert pq_ids == ivfpq_ids == expected
-    ri_meta = cow.read_json(spark, graph._ri_meta_uri(ri_del))
     ri_basket_ids = {
         r["basket"]
-        for r in graph._ri_read(spark, ri_del, "baskets", ri_meta)
+        for r in cow.read_component(spark, ri_del, "baskets")
         .select("basket")
         .collect()
     }

@@ -1,7 +1,7 @@
-"""Serve path of the persisted BM25, IVF and IVFPQ indexes: job budgets,
-driver-side frames planned as local relations, the bounded driver
-collect, common-term pruning on maintained layouts, and tok-sorted
-BM25 postings files."""
+"""Serve path of the persisted BM25, IVF, IVFPQ and related-items
+indexes: job budgets, driver-side frames planned as local relations,
+the bounded driver collect, common-term pruning on maintained layouts,
+and tok-sorted BM25 postings files."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from data_lake_with_spark_spark.operators import similarity, text
+from data_lake_with_spark_spark.operators import graph, similarity, text
 from tools.job_audit import _next_job_id
 
 WORDS = [f"w{i}" for i in range(30)]
@@ -75,6 +75,27 @@ def ivfpq_layouts(spark, tmp_path_factory):
     return {"plain": plain, "manifest": merged, "vecs": vecs}
 
 
+@pytest.fixture(scope="module")
+def ri_layouts(spark, tmp_path_factory):
+    """A plain related-items build over baskets 10..59 and its manifest
+    merge epoch adding baskets 0..9."""
+    root = tmp_path_factory.mktemp("ri")
+    plain, merged = str(root / "plain"), str(root / "merged")
+    rnd = random.Random(9)
+    baskets = spark.createDataFrame(
+        [(b, it) for b in range(60) for it in rnd.sample(range(10), 3)],
+        "basket long, item long",
+    )
+    graph.build_related_items_state(
+        baskets.where(F.col("basket") >= 10), plain, k=3, n_buckets=2
+    )
+    graph.merge_related_items_state(
+        spark, plain, baskets.where(F.col("basket") < 10), merged,
+        layout="manifest",
+    )
+    return {"plain": plain, "manifest": merged}
+
+
 def _jobs(spark, thunk):
     j0 = _next_job_id(spark)
     out = thunk()
@@ -83,7 +104,7 @@ def _jobs(spark, thunk):
 
 @pytest.mark.parametrize("layout", ["plain", "manifest"])
 def test_bm25_serve_job_budget_and_local_relation(spark, bm25_layouts, layout):
-    """One query's serve, collect included, runs at most 12 Spark jobs;
+    """One query's serve, collect included, runs at most 10 Spark jobs;
     its query-term frame plans as a LocalRelation (a PythonRDD-backed
     frame would show as LogicalRDD and start Python workers)."""
     path = bm25_layouts[layout]
@@ -96,7 +117,7 @@ def test_bm25_serve_job_budget_and_local_relation(spark, bm25_layouts, layout):
             spark, path, _queries(spark, ["w1 w2 w5"]), k=5
         ).collect(),
     )
-    assert rows and n <= 12, n
+    assert rows and n <= 10, n
 
 
 @pytest.mark.parametrize("layout", ["plain", "manifest"])
@@ -111,7 +132,21 @@ def test_ivfpq_serve_job_budget_and_local_relation(spark, ivfpq_layouts, layout)
         spark,
         lambda: similarity.ivfpq_topk_indexed(spark, path, q, k=5, nprobe=2).collect(),
     )
-    assert rows and n <= 11, n
+    assert rows and n <= 8, n
+
+
+@pytest.mark.parametrize("layout", ["plain", "manifest"])
+def test_related_items_serve_job_budget(spark, ri_layouts, layout):
+    """One item's related-items serve, collect included, is one Spark
+    job: the serving table's read plans from its recorded schema."""
+    path = ri_layouts[layout]
+    n, rows = _jobs(
+        spark,
+        lambda: graph.related_items_topk(spark, path)
+        .where(F.col("item") == 1)
+        .collect(),
+    )
+    assert rows and n <= 1, n
 
 
 def test_bm25_indexed_equals_inline_with_max_df_pruning(spark, bm25_layouts):

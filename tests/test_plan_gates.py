@@ -536,7 +536,7 @@ def test_r11_ivfpq_serve_plan_budget(spark, sf_dir):
 
 def test_r12_related_items_state_bucket_pruning(spark, tmp_path):
     """The related-items maintenance ops read their state components
-    through _ri_read + a bucket isin-filter; this gates that the
+    through cow.read_component + a bucket isin-filter; this gates that the
     filter actually reaches the parquet scan as PARTITION pruning
     (PartitionFilters naming the bucket column — strict anchor, the
     q200 lesson) on both the plain layout and a manifest epoch, and
@@ -557,8 +557,7 @@ def test_r12_related_items_state_bucket_pruning(spark, tmp_path):
         spark.createDataFrame(rows, ["basket", "item"]),
         base_p, k=4, min_count=2, n_buckets=32,
     )
-    meta = cow.read_json(spark, graph._ri_meta_uri(base_p))
-    pruned = graph._ri_read(spark, base_p, "pairs", meta).where(
+    pruned = cow.read_component(spark, base_p, "pairs").where(
         F2.col("pair_bucket").isin([0, 3, 7])
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
@@ -581,8 +580,7 @@ def test_r12_related_items_state_bucket_pruning(spark, tmp_path):
     )
     changed = sorted(int(b) for b in stats["changed_partitions"])
     assert e_dirs == changed
-    meta2 = cow.read_json(spark, graph._ri_meta_uri(out_p))
-    pruned2 = graph._ri_read(spark, out_p, "pairs", meta2).where(
+    pruned2 = cow.read_component(spark, out_p, "pairs").where(
         F2.col("pair_bucket").isin(changed[:2])
     )
     plan2 = pruned2._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001

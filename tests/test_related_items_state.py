@@ -222,8 +222,7 @@ def test_delete_equals_rebuild_over_survivors(spark, tmp_path, layout):
     # the ledger no longer holds the victims' rows (erasure at the
     # resolved-view level; physical bytes go at compact+vacuum, gated
     # in test_gdpr_pipeline.py)
-    meta = cow.read_json(spark, graph._ri_meta_uri(out_p))
-    led = graph._ri_read(spark, out_p, "baskets", meta)
+    led = cow.read_component(spark, out_p, "baskets")
     assert led.where(F.col("basket").isin(victims)).count() == 0
     # idempotent replay: same ids again → identical serving table
     out2 = str(tmp_path / "o2")
