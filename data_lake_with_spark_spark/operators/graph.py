@@ -1160,6 +1160,7 @@ def build_related_items_state(
     the four components fans out into per-file-open-dominated tiny
     directories and every pruned maintenance read LOSES to a flat
     scan."""
+    from data_lake_with_spark_spark.operators.similarity import _check_grain
     from data_lake_with_spark_spark.sources import cow
 
     if k < 1 or min_count < 1 or n_buckets < 1:
@@ -1173,21 +1174,11 @@ def build_related_items_state(
         .localCheckpoint()
     )
     n_inc = b.count()
-    if n_buckets * RI_MIN_ROWS_PER_BUCKET > n_inc:
-        msg = (
-            f"build_related_items_state: layout grain too fine — "
-            f"n_buckets({n_buckets}) over n_incidence={n_inc} rows "
-            f"averages {n_inc / max(1, n_buckets):.1f} rows/bucket "
-            f"(< {RI_MIN_ROWS_PER_BUCKET}); at this grain per-file "
-            "open cost makes every bucket-pruned maintenance read "
-            "slower than a flat scan — lower n_buckets so "
-            f"n_buckets*{RI_MIN_ROWS_PER_BUCKET} <= n_incidence"
-        )
-        if strict_layout:
-            raise ValueError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
+    _check_grain(
+        "build_related_items_state", strict_layout, RI_MIN_ROWS_PER_BUCKET,
+        ("n_incidence", n_inc), {"n_buckets": n_buckets},
+        "makes every bucket-pruned maintenance read slower than a flat scan",
+    )
     from data_lake_with_spark_spark.session import run_concurrent
 
     # the two irreducible aggregates are independent passes over the
@@ -1287,6 +1278,7 @@ def related_items_health(spark, path: str) -> DataFrame:
     debt. All legs are partial-aggregable single passes. Accepts a
     direct state/epoch path or a lifecycle ROOT."""
     from data_lake_with_spark_spark.operators.similarity import (
+        _occupancy,
         _resolve_index_path,
     )
     from data_lake_with_spark_spark.sources import cow
@@ -1320,19 +1312,9 @@ def related_items_health(spark, path: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("topk_rows"),
         F.count_distinct(F.col("item")).cast("bigint").alias("served_items"),
     )
-    # ledger-bucket occupancy: partition-column-only scan
-    occ = ledger.groupBy("basket_bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_occ")
-    )
-    buckets = spark.range(n_buckets).select(
-        F.col("id").cast("int").alias("basket_bucket")
-    )
-    bucket_agg = buckets.join(occ, "basket_bucket", "left").agg(
-        F.sum(F.when(F.col("_occ").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("dead_buckets"),
-        F.min("_occ").cast("bigint").alias("bucket_min"),
-        F.max("_occ").cast("bigint").alias("bucket_max"),
+    bucket_agg = _occupancy(
+        n_buckets, ledger, ["basket_bucket"],
+        ("_n", "dead_buckets", "bucket_min", "bucket_max", "_rows"),
     )
     return (
         stamped.crossJoin(pair_agg)

@@ -19,6 +19,9 @@ pipeline) reproduces values to rounding (results rounded to 6 dp).
 
 from __future__ import annotations
 
+from functools import reduce
+from math import prod
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -728,10 +731,6 @@ def quantized_topk(
     )
 
 
-def _ivf_meta_uri(path: str) -> str:
-    return f"{path}/ivf_meta.json"
-
-
 def _ivf_assign(
     df: DataFrame,
     cents: DataFrame,
@@ -812,7 +811,7 @@ def build_ivf_index(
     # the ingest was constructed with (r13 — retrain-under-ingest)
     cow.write_json(
         corpus.sparkSession,
-        _ivf_meta_uri(path),
+        f"{path}/ivf_meta.json",
         {"centroid_mod": int(centroid_mod)},
     )
 
@@ -853,68 +852,20 @@ def merge_ivf_index(
     ``sources.cow``: ``out_path`` must be fresh, ``layout`` is
     ``"links"`` or ``"manifest"``. Returns the promotion stats dict.
     """
-    from data_lake_with_spark_spark.session import run_concurrent
-    from data_lake_with_spark_spark.sources import cow
-
-    _vec_target(spark, "ivf", "merge_ivf_index", base_path, out_path, layout)
-    cents = cow.read_component(spark, base_path, "centroids")
-    new_ids = new_vecs.select(F.col(id_col)).distinct()
-
-    def _validate():
-        if not validate_centroids:
-            return
-        stale = new_ids.join(
-            F.broadcast(cents.select(F.col("cent_id").alias(id_col))),
-            id_col,
-        )
-        if stale.limit(1).count() > 0:
-            raise ValueError(
-                "merge_ivf_index: batch replaces a centroid-source "
-                "vector; the frozen centroid would go stale relative "
-                "to a retrain — retrain_ivf_index is the lifecycle-safe "
-                "recovery (or pass validate_centroids=False to accept frozen-"
-                "centroid semantics explicitly)"
-            )
-
-    def _assign():
-        # pinned: consumed twice (changed-set collect + the write); the
-        # collect rides the same thread so the barrier returns
-        # finished sets
-        a = _ivf_assign(new_vecs, cents, id_col, vec_col, vec_dim)
-        a = a.localCheckpoint()
-        return a, cow.partition_values(a, "cent_id")
-
-    # the CHEAP stale-centroid check runs FIRST: a failed validation
-    # must not pay for (or leave persisted) the assignment checkpoint.
-    # The two remaining prep legs are independent reads — overlap
-    # them (guide §2.6)
-    _validate()
-    (assigned, changed_new), changed_old = run_concurrent(
-        [
-            _assign,
-            lambda: cow.partitions_holding(
-                spark, base_path, "lists", "cent_id", new_ids, id_col
-            ),
-        ]
-    )
-    changed = sorted(set(changed_new) | set(changed_old))
-    base_keep = (
-        cow.read_component(spark, base_path, "lists")
-        .where(cow.in_partitions("cent_id", changed))
-        .select("cent_id", id_col, vec_col)
-        .join(new_ids, id_col, "left_anti")
-    )
-    return _vec_commit(
-        spark, "ivf", base_keep.unionByName(assigned), base_path, out_path,
-        layout, changed,
+    return _merge_vectors(
+        spark, "ivf", base_path, new_vecs, out_path, id_col, vec_col,
+        validate_centroids and "validate_centroids", layout,
+        lambda batch, meta, centroids: _ivf_assign(
+            batch, centroids, id_col, vec_col, vec_dim
+        ),
     )
 
 
-#: Commit layout of the three vector families: the partitioned
-#: component, its partition columns (the first is the copy-on-write
-#: unit), the frozen whole components, the meta sidecar, and whether
-#: maintenance requires that sidecar (pre-sidecar IVF layouts have
-#: none).
+#: Layout of the three vector families, which drives their merge,
+#: delete, compaction and health report: the partitioned component, its
+#: partition columns (the first is the copy-on-write unit), the frozen
+#: whole components, the meta sidecar, and whether maintenance requires
+#: that sidecar (pre-sidecar IVF layouts have none).
 _VEC_LAYOUT = {
     "ivf": ("lists", ["cent_id"], ("centroids",), "ivf_meta.json", False),
     "pq": ("codes", ["id_bucket"], ("codebooks",), "pq_meta.json", True),
@@ -963,6 +914,99 @@ def _vec_commit(spark, family, rows, base_path, out_path, layout, changed):
     return cow.commit(
         spark, rows, base_path, out_path, layout, comp, cols, changed,
         frozen=frozen, sidecars=(meta_name,),
+    )
+
+
+#: Each frozen component's source-id column and the noun its
+#: frozen-source error names.
+_FROZEN_SOURCE = {
+    "centroids": ("cent_id", "centroid"),
+    "codebooks": ("code", "codebook"),
+}
+
+
+def _merge_vectors(
+    spark, family, base_path, new_vecs, out_path, id_col, vec_col,
+    validate, layout, batch_rows,
+) -> dict:
+    """The upsert body of ``merge_{family}_index`` for IVF, PQ and
+    IVFPQ: batch ids replace their old rows, fresh ids append, and the
+    frozen components carry verbatim. ``batch_rows(batch, meta,
+    **frozen)`` is the family's build kernel: it turns the ``(id,
+    vec)`` batch into rows of the partitioned component against the
+    frozen frames. ``validate`` is the caller's ``validate_*`` flag
+    name when that flag is set, else false; the flag turns on the
+    check that no batch id is the source of a frozen component entry.
+
+    When the copy-on-write column is the id hash (``id_bucket``), the
+    changed set is the batch ids' buckets, found without a base scan,
+    and the check overlaps that collect. Otherwise (IVF's ``cent_id``)
+    the changed set is the cells the batch lands in plus the cells that
+    hold a replaced id; the check runs first, so a failure never pays
+    for or leaves behind the batch checkpoint."""
+    from data_lake_with_spark_spark.session import run_concurrent
+    from data_lake_with_spark_spark.sources import cow
+
+    op = f"merge_{family}_index"
+    meta = _vec_target(spark, family, op, base_path, out_path, layout)
+    comp, cols, frozen = _VEC_LAYOUT[family][:3]
+    parts = {f: cow.read_component(spark, base_path, f) for f in frozen}
+    new_ids = new_vecs.select(F.col(id_col)).distinct()
+    batch = new_vecs.select(id_col, vec_col)
+
+    def _validate():
+        if not validate:
+            return
+        src = reduce(
+            DataFrame.unionByName,
+            [
+                parts[f].select(F.col(_FROZEN_SOURCE[f][0]).alias(id_col))
+                for f in frozen
+            ],
+        )
+        if new_ids.join(F.broadcast(src), id_col, "left_semi").limit(1).count():
+            nouns = [_FROZEN_SOURCE[f][1] for f in frozen]
+            raise ValueError(
+                f"{op}: batch replaces a "
+                f"{' or '.join(n + '-source' for n in nouns)} vector; the "
+                f"frozen {' and '.join(n + 's' for n in nouns)} would go "
+                f"stale relative to a retrain — retrain_{family}_index is "
+                f"the lifecycle-safe recovery (or pass {validate}=False to "
+                "accept frozen-quantizer semantics explicitly)"
+            )
+
+    if cols[0] == "id_bucket":
+        bucket = _pq_bucket(id_col, meta["n_buckets"]).alias("id_bucket")
+        _, changed = run_concurrent(
+            [_validate, lambda: cow.partition_values(new_ids, bucket)]
+        )
+        rows = batch_rows(batch, meta, **parts).withColumn("id_bucket", bucket)
+    else:
+        _validate()
+
+        def _pin():
+            # consumed twice (changed-set collect + the write)
+            pinned = batch_rows(batch, meta, **parts).localCheckpoint()
+            return pinned, cow.partition_values(pinned, cols[0])
+
+        (rows, landed), held = run_concurrent(
+            [
+                _pin,
+                lambda: cow.partitions_holding(
+                    spark, base_path, comp, cols[0], new_ids, id_col
+                ),
+            ]
+        )
+        changed = sorted(set(landed) | set(held))
+    base_keep = (
+        cow.read_component(spark, base_path, comp)
+        .where(cow.in_partitions(cols[0], changed))
+        .select(*rows.columns)
+        .join(new_ids, id_col, "left_anti")
+    )
+    return _vec_commit(
+        spark, family, base_keep.unionByName(rows), base_path, out_path,
+        layout, changed,
     )
 
 
@@ -1724,10 +1768,6 @@ def pq_topk_rerank(
         F.col("rank") <= k
     )
 
-def _pq_meta_uri(path: str) -> str:
-    return f"{path}/pq_meta.json"
-
-
 def _pq_bucket(id_col: str, n_buckets: int):
     # xxhash64 spreads any id stripe uniformly across buckets (an
     # ``id % n`` bucket would correlate with the modulo-structured
@@ -1741,6 +1781,33 @@ def _pq_bucket(id_col: str, n_buckets: int):
 #: per bucket, per-file open cost dominates both the ADC scan and
 #: every bucket-pruned maintenance read (r12 verdict #5).
 PQ_MIN_ROWS_PER_BUCKET = 64
+
+
+def _check_grain(op, strict, floor, rows, dirs, cost, knobs="n_buckets"):
+    """The build-time layout-grain contract of the partitioned index
+    families, checked before the first component write: the ``rows``
+    (``(name, count)``) must average at least ``floor`` per leaf
+    directory, the product of the ``dirs`` counts (``{knob: count}``).
+    Below it the build warns at the builder's caller, or raises under
+    ``strict``."""
+    n_dirs = prod(dirs.values())
+    name, n = rows
+    if n_dirs * floor <= n:
+        return
+    msg = (
+        f"{op}: layout grain too fine — "
+        f"{' × '.join(f'{k}({v})' for k, v in dirs.items())} = {n_dirs} "
+        f"leaf dirs over {name}={n} rows averages "
+        f"{n / max(1, n_dirs):.1f} rows/leaf (< {floor}); at this grain "
+        f"per-file open cost {cost} — lower {knobs} so "
+        f"{'*'.join(dirs)}*{floor} <= {name}"
+    )
+    if strict:
+        raise ValueError(msg)
+    import warnings
+
+    warnings.warn(msg, stacklevel=3)
+
 
 #: Serve-path bound on the ``n_queries × nprobe`` probe rows (each
 #: carrying its query or residual vector) that :func:`ivf_topk_indexed`
@@ -1807,21 +1874,11 @@ def build_pq_index(
     n = corpus.count()
     if target_codes is not None:
         centroid_mod = max(1, n // max(1, target_codes))
-    if n_buckets * PQ_MIN_ROWS_PER_BUCKET > n:
-        msg = (
-            f"build_pq_index: layout grain too fine — "
-            f"n_buckets({n_buckets}) over n={n} vectors averages "
-            f"{n / max(1, n_buckets):.1f} vectors/bucket (< "
-            f"{PQ_MIN_ROWS_PER_BUCKET}); at this grain per-file open "
-            "cost dominates the ADC scan and every bucket-pruned "
-            "maintenance read — lower n_buckets so "
-            f"n_buckets*{PQ_MIN_ROWS_PER_BUCKET} <= n"
-        )
-        if strict_layout:
-            raise ValueError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
+    _check_grain(
+        "build_pq_index", strict_layout, PQ_MIN_ROWS_PER_BUCKET, ("n", n),
+        {"n_buckets": n_buckets},
+        "dominates the ADC scan and every bucket-pruned maintenance read",
+    )
     cb = pq_codebooks(
         corpus, dim=dim, m=m, centroid_mod=centroid_mod,
         id_col=id_col, vec_col=vec_col,
@@ -1838,7 +1895,7 @@ def build_pq_index(
     )
     cow.write_json(
         spark,
-        _pq_meta_uri(path),
+        f"{path}/pq_meta.json",
         {
             "dim": int(dim),
             "m": int(m),
@@ -1849,20 +1906,6 @@ def build_pq_index(
             "centroid_mod": int(centroid_mod),
         },
     )
-
-
-def _pq_index_parts(spark, path: str):
-    """(meta, codebooks, codes) of a :func:`build_pq_index` layout —
-    components resolve through ``cow.read_component`` so plain,
-    link-promoted, and manifest epochs serve identically."""
-    from data_lake_with_spark_spark.sources import cow
-
-    meta = cow.read_json(spark, _pq_meta_uri(path))
-    if meta is None:
-        raise FileNotFoundError(f"no pq_meta.json under {path!r}")
-    cb = cow.read_component(spark, path, "codebooks")
-    codes = cow.read_component(spark, path, "codes")
-    return meta, cb, codes
 
 
 def pq_topk_indexed(
@@ -1879,10 +1922,14 @@ def pq_topk_indexed(
     never re-encoded — the scan reads 8 small ints per vector from the
     codes partitions. Dim/m come from the index meta, so the caller
     cannot drift from the layout."""
-    meta, cb, codes = _pq_index_parts(spark, path)
+    from data_lake_with_spark_spark.sources import cow
+
+    meta = _vec_meta(spark, "pq", path)
     return pq_topk(
-        codes.select(id_col, "subspace", "code"),
-        cb,
+        cow.read_component(spark, path, "codes").select(
+            id_col, "subspace", "code"
+        ),
+        cow.read_component(spark, path, "codebooks"),
         queries,
         k=k,
         dim=meta["dim"],
@@ -1909,11 +1956,15 @@ def pq_topk_rerank_indexed(
     — at 100 TB a ``n_queries × shortlist`` point-lookup semi-join,
     never a vector scan; the codes layout deliberately does NOT
     duplicate the float vectors the lakehouse already stores)."""
-    meta, cb, codes = _pq_index_parts(spark, path)
+    from data_lake_with_spark_spark.sources import cow
+
+    meta = _vec_meta(spark, "pq", path)
     return pq_topk_rerank(
         corpus,
-        codes.select(id_col, "subspace", "code"),
-        cb,
+        cow.read_component(spark, path, "codes").select(
+            id_col, "subspace", "code"
+        ),
+        cow.read_component(spark, path, "codebooks"),
         queries,
         k=k,
         shortlist=shortlist,
@@ -1954,43 +2005,13 @@ def merge_pq_index(
     goes through ``sources.cow`` (fresh ``out_path``, ``layout``
     ``"links"`` or ``"manifest"``). Returns the promotion stats
     dict."""
-    from data_lake_with_spark_spark.sources import cow
-
-    meta = _vec_target(spark, "pq", "merge_pq_index", base_path, out_path, layout)
-    dim, m, n_buckets = meta["dim"], meta["m"], meta["n_buckets"]
-    cb = cow.read_component(spark, base_path, "codebooks")
-    new_ids = new_vecs.select(F.col(id_col)).distinct()
-    if validate_codebooks:
-        stale = new_ids.join(
-            F.broadcast(
-                cb.select(F.col("code").alias(id_col)).distinct()
-            ),
-            id_col,
-        )
-        if stale.limit(1).count() > 0:
-            raise ValueError(
-                "merge_pq_index: batch replaces a codebook-source "
-                "vector; the frozen codebook would go stale relative "
-                "to a retrain — retrain_pq_index is the lifecycle-safe "
-                "recovery (or pass validate_codebooks=False to accept frozen-"
-                "codebook semantics explicitly)"
-            )
-    batch_codes = pq_encode(
-        new_vecs.select(id_col, vec_col), cb, dim=dim, m=m,
-        id_col=id_col, vec_col=vec_col,
-    ).withColumn("id_bucket", _pq_bucket(id_col, n_buckets))
-    changed = cow.partition_values(
-        new_ids, _pq_bucket(id_col, n_buckets).alias("id_bucket")
-    )
-    base_keep = (
-        cow.read_component(spark, base_path, "codes")
-        .where(cow.in_partitions("id_bucket", changed))
-        .select(id_col, "subspace", "code", "id_bucket")
-        .join(new_ids, id_col, "left_anti")
-    )
-    return _vec_commit(
-        spark, "pq", base_keep.unionByName(batch_codes), base_path,
-        out_path, layout, changed,
+    return _merge_vectors(
+        spark, "pq", base_path, new_vecs, out_path, id_col, vec_col,
+        validate_codebooks and "validate_codebooks", layout,
+        lambda batch, meta, codebooks: pq_encode(
+            batch, codebooks, dim=meta["dim"], m=meta["m"],
+            id_col=id_col, vec_col=vec_col,
+        ),
     )
 
 
@@ -2040,10 +2061,6 @@ def compact_pq_index(spark, index_path: str, out_path: str) -> dict:
 # an average of at least this many rows per leaf dir; below it the
 # build warns (or raises with strict_layout=True).
 IVFPQ_MIN_ROWS_PER_LEAF = 64
-
-
-def _ivfpq_meta_uri(path: str) -> str:
-    return f"{path}/ivfpq_meta.json"
 
 
 def _resid_col(vec_col: str, cent_col: str) -> Column:
@@ -2265,24 +2282,13 @@ def build_ivfpq_index(
             "silently serve zero results; supply a corpus covering "
             "the stripe or lower centroid_mod/target_centroids"
         )
-    leaf_dirs = n_buckets * n_cells
-    if leaf_dirs * IVFPQ_MIN_ROWS_PER_LEAF > n:
-        msg = (
-            f"build_ivfpq_index: layout grain too fine — "
-            f"n_buckets({n_buckets}) × n_cells({n_cells}) = "
-            f"{leaf_dirs} leaf dirs over n={n} rows averages "
-            f"{n / max(1, leaf_dirs):.1f} rows/leaf (< "
-            f"{IVFPQ_MIN_ROWS_PER_LEAF}); at this grain per-file "
-            "open cost makes the pruned serve SLOWER than a flat "
-            "scan (MEASUREMENTS_r11 §1b) — lower n_buckets and/or "
-            "target_centroids so n_buckets*n_cells*"
-            f"{IVFPQ_MIN_ROWS_PER_LEAF} <= n"
-        )
-        if strict_layout:
-            raise ValueError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
+    _check_grain(
+        "build_ivfpq_index", strict_layout, IVFPQ_MIN_ROWS_PER_LEAF, ("n", n),
+        {"n_buckets": n_buckets, "n_cells": n_cells},
+        "makes the pruned serve SLOWER than a flat scan "
+        "(MEASUREMENTS_r11 §1b)",
+        "n_buckets and/or target_centroids",
+    )
     from data_lake_with_spark_spark.session import run_concurrent
     from data_lake_with_spark_spark.sources import cow
 
@@ -2334,7 +2340,7 @@ def build_ivfpq_index(
     )
     cow.write_json(
         spark,
-        _ivfpq_meta_uri(path),
+        f"{path}/ivfpq_meta.json",
         {
             "dim": int(dim),
             "m": int(m),
@@ -2343,18 +2349,6 @@ def build_ivfpq_index(
             "centroid_mod": int(centroid_mod),
         },
     )
-
-
-def _ivfpq_index_parts(spark, path: str):
-    from data_lake_with_spark_spark.sources import cow
-
-    meta = cow.read_json(spark, _ivfpq_meta_uri(path))
-    if meta is None:
-        raise FileNotFoundError(f"no ivfpq_meta.json under {path!r}")
-    cents = cow.read_component(spark, path, "centroids")
-    cb = cow.read_component(spark, path, "codebooks")
-    codes = cow.read_component(spark, path, "codes")
-    return meta, cents, cb, codes
 
 
 def ivfpq_topk_indexed(
@@ -2381,7 +2375,13 @@ def ivfpq_topk_indexed(
     is only meaningful between a query and a vector re-centered on
     the SAME centroid (Jégou et al. 2011 eq. 13). Returns (query_id,
     neighbor_id, adc_dist, rank), self-matches excluded."""
-    meta, cents, cb, codes = _ivfpq_index_parts(spark, path)
+    from data_lake_with_spark_spark.sources import cow
+
+    meta = _vec_meta(spark, "ivfpq", path)
+    cents, cb, codes = (
+        cow.read_component(spark, path, c)
+        for c in ("centroids", "codebooks", "codes")
+    )
     dim, m = meta["dim"], meta["m"]
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("cos_c").desc(), F.col("cent_id").asc()
@@ -2513,61 +2513,13 @@ def merge_ivfpq_index(
     unit is the bucket, not the cell), committed through
     ``sources.cow`` (fresh ``out_path``, ``layout`` ``"links"`` or
     ``"manifest"``). Returns the promotion stats dict."""
-    from data_lake_with_spark_spark.session import run_concurrent
-    from data_lake_with_spark_spark.sources import cow
-
-    meta = _vec_target(
-        spark, "ivfpq", "merge_ivfpq_index", base_path, out_path, layout
-    )
-    dim, m, n_buckets = meta["dim"], meta["m"], meta["n_buckets"]
-    cents = cow.read_component(spark, base_path, "centroids")
-    cb = cow.read_component(spark, base_path, "codebooks")
-    new_ids = new_vecs.select(F.col(id_col)).distinct()
-
-    def _validate():
-        if not validate_frozen:
-            return
-        frozen_src = (
-            cents.select(F.col("cent_id").alias(id_col))
-            .unionByName(cb.select(F.col("code").alias(id_col)))
-            .distinct()
-        )
-        stale = new_ids.join(F.broadcast(frozen_src), id_col)
-        if stale.limit(1).count() > 0:
-            raise ValueError(
-                "merge_ivfpq_index: batch replaces a centroid-source or "
-                "codebook-source vector; the frozen quantizers would go "
-                "stale relative to a retrain — retrain_ivfpq_index is the "
-                "lifecycle-safe recovery (or pass validate_frozen="
-                "False to accept doubly-frozen semantics explicitly)"
-            )
-
-    # both prep legs are read-only; overlap them (guide §2.6) — a
-    # validation failure still raises at the barrier, before the write
-    _, changed = run_concurrent(
-        [
-            _validate,
-            lambda: cow.partition_values(
-                new_ids, _pq_bucket(id_col, n_buckets).alias("id_bucket")
-            ),
-        ]
-    )
-    assigned = _ivfpq_assign_resid(
-        new_vecs.select(id_col, vec_col), cents, id_col, vec_col, vec_dim
-    )
-    batch_codes = _ivfpq_encode(assigned, cb, dim, m, id_col).withColumn(
-        "id_bucket", _pq_bucket(id_col, n_buckets)
-    )
-    cols = ["id_bucket", "cent_id", id_col, "subspace", "code"]
-    base_keep = (
-        cow.read_component(spark, base_path, "codes")
-        .where(cow.in_partitions("id_bucket", changed))
-        .select(*cols)
-        .join(new_ids, id_col, "left_anti")
-    )
-    return _vec_commit(
-        spark, "ivfpq", base_keep.unionByName(batch_codes.select(*cols)),
-        base_path, out_path, layout, changed,
+    return _merge_vectors(
+        spark, "ivfpq", base_path, new_vecs, out_path, id_col, vec_col,
+        validate_frozen and "validate_frozen", layout,
+        lambda batch, meta, centroids, codebooks: _ivfpq_encode(
+            _ivfpq_assign_resid(batch, centroids, id_col, vec_col, vec_dim),
+            codebooks, meta["dim"], meta["m"], id_col,
+        ),
     )
 
 
@@ -2795,6 +2747,97 @@ def _resolve_index_path(spark, path: str) -> str:
         return path
 
 
+def _occupancy(domain, rows: DataFrame, keys: list, names) -> DataFrame:
+    """The occupancy leg of every health report, one row: the keys of
+    ``domain`` (a frame, or a hash-bucket count ``n`` for the int keys
+    ``0..n-1``) left-joined to the row count of ``rows`` per key. The
+    columns, named by ``names`` in this order, are the number of keys,
+    the keys with no row (dead), the least and the most rows of a live
+    key, and the rows of all keys. ``rows`` is read for its keys only."""
+    if isinstance(domain, int):
+        domain = rows.sparkSession.range(domain).select(
+            F.col("id").cast("int").alias(keys[0])
+        )
+    occ = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_occ"))
+    n, dead, lo, hi, total = names
+    return (
+        domain.select(*keys)
+        .join(occ, keys, "left")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias(n),
+            F.sum(F.when(F.col("_occ").isNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias(dead),
+            F.min("_occ").cast("bigint").alias(lo),
+            F.max("_occ").cast("bigint").alias(hi),
+            F.sum(F.coalesce(F.col("_occ"), F.lit(0)))
+            .cast("bigint")
+            .alias(total),
+        )
+    )
+
+
+def _sampled_error(spark, rows, sample_mod, id_col, sq_err, names) -> DataFrame:
+    """The sampled-error leg of the vector health reports, one row
+    ``(n_sampled, sum, mean)`` named by ``names`` after ``n_sampled``:
+    ``sq_err`` maps the ``id % sample_mod == 0`` stripe of ``rows`` to
+    ``(id, _d)`` squared errors, each rounded to 6 dp and summed as
+    DECIMAL(18,6), and the mean is that sum over the sampled ids.
+    ``rows`` None (no corpus to sample) skips the leg: 0 sampled and a
+    NULL sum and mean, distinct from an empty stripe's 0.0 sum."""
+    if sample_mod < 1:
+        raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
+    err_sum, err_mean = names
+    if rows is None:
+        return spark.range(1).select(
+            F.lit(0).cast("bigint").alias("n_sampled"),
+            F.lit(None).cast("double").alias(err_sum),
+            F.lit(None).cast("double").alias(err_mean),
+        )
+    err = sq_err(rows.where(F.col(id_col) % sample_mod == 0)).select(
+        F.col(id_col), F.round("_d", 6).cast("decimal(18,6)").alias("_e")
+    )
+    total = F.coalesce(F.col("_sum_e").cast("double"), F.lit(0.0))
+    return err.agg(
+        F.count_distinct(F.col(id_col)).cast("bigint").alias("n_sampled"),
+        F.sum("_e").alias("_sum_e"),
+    ).select(
+        "n_sampled",
+        total.alias(err_sum),
+        # an EMPTY sample stripe (every sampled id deleted by churn)
+        # must report NULL, not crash ANSI division
+        F.when(F.col("n_sampled") > 0, total / F.col("n_sampled")).alias(
+            err_mean
+        ),
+    )
+
+
+def _adc_sq_err(rv: DataFrame, codes, cb, meta, id_col: str) -> DataFrame:
+    """Per sampled id and subspace, the squared L2 between the ``rv``
+    sub-vector and the codebook entry its STORED code points at."""
+    w = meta["dim"] // meta["m"]
+    slices = F.array(
+        *[F.slice(F.col("rv"), s * w + 1, w) for s in range(meta["m"])]
+    )
+    return (
+        rv.select(id_col, F.posexplode(slices))
+        .select(
+            id_col,
+            F.col("pos").cast("bigint").alias("subspace"),
+            F.col("col").alias("_sub_v"),
+        )
+        .join(codes.select(id_col, "subspace", "code"), [id_col, "subspace"])
+        .join(F.broadcast(cb), ["subspace", "code"])
+        .select(id_col, l2sq_expr("_sub_v", "cent_sub").alias("_d"))
+    )
+
+
+#: Occupancy columns of the cell-partitioned families' reports.
+_CELL_COLS = ("n_cells", "dead_cells", "occ_min", "occ_max", "n_vecs")
+#: Sampled-error columns of the PQ and IVFPQ reports.
+_RECON_COLS = ("recon_err_sum", "mean_recon_err")
+
+
 def index_staleness_report(
     spark,
     path: str,
@@ -2838,95 +2881,29 @@ def index_staleness_report(
     sample stripe's rows are ever joined. One partial-aggregable
     pass per leg; the codes scan is column-pruned to
     (cent_id, id, subspace, code). Returns ONE row."""
-    if sample_mod < 1:
-        raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
+    from data_lake_with_spark_spark.sources import cow
+
     path = _resolve_index_path(spark, path)
-    meta, cents, cb, codes = _ivfpq_index_parts(spark, path)
-    dim, m = meta["dim"], meta["m"]
-    # --- occupancy: one row per vector is its subspace-0 code row ---
-    occ = (
-        codes.where(F.col("subspace") == 0)
-        .groupBy("cent_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("_occ"))
+    meta = _vec_meta(spark, "ivfpq", path)
+    cents, cb, codes = (
+        cow.read_component(spark, path, c)
+        for c in ("centroids", "codebooks", "codes")
     )
-    cell_stats = (
-        cents.select("cent_id")
-        .join(occ, "cent_id", "left")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-            F.sum(F.when(F.col("_occ").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("dead_cells"),
-            F.min("_occ").cast("bigint").alias("occ_min"),
-            F.max("_occ").cast("bigint").alias("occ_max"),
-            F.sum(F.coalesce(F.col("_occ"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_vecs"),
+    # one row per vector: its subspace-0 code row
+    heads = codes.where(F.col("subspace") == 0).select(id_col, "cent_id")
+
+    def sq_err(sample):
+        # the TRUE residual against the cell the stored codes sit in
+        rv = (
+            sample.select(id_col, vec_col)
+            .join(heads, id_col)
+            .join(F.broadcast(cents), "cent_id")
+            .select(id_col, _resid_col(vec_col, "cent_v").alias("rv"))
         )
-    )
-    # --- ADC reconstruction error on the sample stripe --------------
-    # corpus=None (occupancy-only mode — the streaming stats sink's
-    # per-batch probe, where the ingest holds no corpus handle): the
-    # error leg is SKIPPED and its columns are NULL (distinct from a
-    # sampled-zero-rows 0.0), keeping one schema across both modes.
-    if corpus is None:
-        err_stats = spark.range(1).select(
-            F.lit(0).cast("bigint").alias("n_sampled"),
-            F.lit(None).cast("double").alias("recon_err_sum"),
-            F.lit(None).cast("double").alias("mean_recon_err"),
-        )
-        return cell_stats.crossJoin(err_stats).select(
-            "n_cells", "dead_cells", "occ_min", "occ_max", "n_vecs",
-            "n_sampled", "recon_err_sum", "mean_recon_err",
-        )
-    sv = corpus.where(F.col(id_col) % sample_mod == 0).select(
-        F.col(id_col), F.col(vec_col)
-    )
-    cell_of = codes.where(F.col("subspace") == 0).select(id_col, "cent_id")
-    rv = (
-        sv.join(cell_of, id_col)
-        .join(F.broadcast(cents), "cent_id")
-        .select(id_col, _resid_col(vec_col, "cent_v").alias("rv"))
-    )
-    w = dim // m
-    slices = F.array(*[F.slice(F.col("rv"), s * w + 1, w) for s in range(m)])
-    subs = rv.select(id_col, F.posexplode(slices)).select(
-        id_col,
-        F.col("pos").cast("bigint").alias("subspace"),
-        F.col("col").alias("_sub_v"),
-    )
-    err = (
-        subs.join(codes.select(id_col, "subspace", "code"), [id_col, "subspace"])
-        .join(F.broadcast(cb), ["subspace", "code"])
-        .select(
-            F.col(id_col),
-            F.round(l2sq_expr("_sub_v", "cent_sub"), 6)
-            .cast("decimal(18,6)")
-            .alias("_e"),
-        )
-    )
-    err_stats = err.agg(
-        F.count_distinct(F.col(id_col)).cast("bigint").alias("n_sampled"),
-        F.sum("_e").alias("_sum_e"),
-    )
-    return cell_stats.crossJoin(err_stats).select(
-        "n_cells",
-        "dead_cells",
-        "occ_min",
-        "occ_max",
-        "n_vecs",
-        "n_sampled",
-        F.coalesce(F.col("_sum_e").cast("double"), F.lit(0.0)).alias(
-            "recon_err_sum"
-        ),
-        # an EMPTY sample stripe (every sampled id deleted by churn)
-        # must report NULL, not crash ANSI division (caught by the
-        # r14 family-agnostic plan test deleting the even stripe)
-        F.when(
-            F.col("n_sampled") > 0,
-            F.coalesce(F.col("_sum_e").cast("double"), F.lit(0.0))
-            / F.col("n_sampled"),
-        ).alias("mean_recon_err"),
+        return _adc_sq_err(rv, codes, cb, meta, id_col)
+
+    return _occupancy(cents, heads, ["cent_id"], _CELL_COLS).crossJoin(
+        _sampled_error(spark, corpus, sample_mod, id_col, sq_err, _RECON_COLS)
     )
 
 
@@ -2950,83 +2927,30 @@ def pq_staleness_report(
     vs the codebook entry the STORED code points at — PQ encodes raw
     slices, no re-centering). Returns ONE row: (n_codes, dead_codes,
     n_vecs, n_sampled, recon_err_sum, mean_recon_err)."""
-    if sample_mod < 1:
-        raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
+    from data_lake_with_spark_spark.sources import cow
+
     path = _resolve_index_path(spark, path)
-    meta, cb, codes = _pq_index_parts(spark, path)
-    dim, m = meta["dim"], meta["m"]
-    used = codes.select("subspace", "code").distinct().withColumn(
-        "_u", F.lit(1)
+    meta = _vec_meta(spark, "pq", path)
+    cb = cow.read_component(spark, path, "codebooks")
+    codes = cow.read_component(spark, path, "codes")
+    # every vector holds one code row per subspace: n_vecs = rows / m
+    used = _occupancy(
+        cb, codes, ["subspace", "code"],
+        ("n_codes", "dead_codes", "_lo", "_hi", "_rows"),
+    ).select(
+        "n_codes", "dead_codes", F.expr(f"_rows div {meta['m']}").alias("n_vecs")
     )
-    cb_stats = (
-        cb.select("subspace", "code")
-        .join(used, ["subspace", "code"], "left")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_codes"),
-            F.sum(F.when(F.col("_u").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("dead_codes"),
+    return used.crossJoin(
+        _sampled_error(
+            spark, corpus, sample_mod, id_col,
+            lambda sample: _adc_sq_err(
+                sample.select(
+                    id_col, F.col(vec_col).cast("array<double>").alias("rv")
+                ),
+                codes, cb, meta, id_col,
+            ),
+            _RECON_COLS,
         )
-    )
-    n_vecs = codes.where(F.col("subspace") == 0).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vecs")
-    )
-    # corpus=None: utilization-only mode (see index_staleness_report)
-    if corpus is None:
-        err_stats = spark.range(1).select(
-            F.lit(0).cast("bigint").alias("n_sampled"),
-            F.lit(None).cast("double").alias("recon_err_sum"),
-            F.lit(None).cast("double").alias("mean_recon_err"),
-        )
-        return cb_stats.crossJoin(n_vecs).crossJoin(err_stats).select(
-            "n_codes", "dead_codes", "n_vecs", "n_sampled",
-            "recon_err_sum", "mean_recon_err",
-        )
-    sv = corpus.where(F.col(id_col) % sample_mod == 0).select(
-        F.col(id_col), F.col(vec_col)
-    )
-    w = dim // m
-    slices = F.array(
-        *[
-            F.slice(F.col(vec_col).cast("array<double>"), s * w + 1, w)
-            for s in range(m)
-        ]
-    )
-    subs = sv.select(id_col, F.posexplode(slices)).select(
-        id_col,
-        F.col("pos").cast("bigint").alias("subspace"),
-        F.col("col").alias("_sub_v"),
-    )
-    err = (
-        subs.join(codes.select(id_col, "subspace", "code"), [id_col, "subspace"])
-        .join(F.broadcast(cb), ["subspace", "code"])
-        .select(
-            F.col(id_col),
-            F.round(l2sq_expr("_sub_v", "cent_sub"), 6)
-            .cast("decimal(18,6)")
-            .alias("_e"),
-        )
-    )
-    err_stats = err.agg(
-        F.count_distinct(F.col(id_col)).cast("bigint").alias("n_sampled"),
-        F.sum("_e").alias("_sum_e"),
-    )
-    return cb_stats.crossJoin(n_vecs).crossJoin(err_stats).select(
-        "n_codes",
-        "dead_codes",
-        "n_vecs",
-        "n_sampled",
-        F.coalesce(F.col("_sum_e").cast("double"), F.lit(0.0)).alias(
-            "recon_err_sum"
-        ),
-        # an EMPTY sample stripe (every sampled id deleted by churn)
-        # must report NULL, not crash ANSI division (caught by the
-        # r14 family-agnostic plan test deleting the even stripe)
-        F.when(
-            F.col("n_sampled") > 0,
-            F.coalesce(F.col("_sum_e").cast("double"), F.lit(0.0))
-            / F.col("n_sampled"),
-        ).alias("mean_recon_err"),
     )
 
 
@@ -3050,59 +2974,17 @@ def ivf_staleness_report(
     occ_max, n_vecs, n_sampled, resid_sum, mean_resid)."""
     from data_lake_with_spark_spark.sources import cow
 
-    if sample_mod < 1:
-        raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
     path = _resolve_index_path(spark, path)
     cents = cow.read_component(spark, path, "centroids")
     lists = cow.read_component(spark, path, "lists")
-    occ = lists.groupBy("cent_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_occ")
-    )
-    cell_stats = (
-        cents.select("cent_id")
-        .join(occ, "cent_id", "left")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-            F.sum(F.when(F.col("_occ").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("dead_cells"),
-            F.min("_occ").cast("bigint").alias("occ_min"),
-            F.max("_occ").cast("bigint").alias("occ_max"),
-            F.sum(F.coalesce(F.col("_occ"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_vecs"),
+    return _occupancy(cents, lists, ["cent_id"], _CELL_COLS).crossJoin(
+        _sampled_error(
+            spark, lists, sample_mod, id_col,
+            lambda sample: sample.join(F.broadcast(cents), "cent_id").select(
+                id_col, l2sq_expr(vec_col, "cent_v").alias("_d")
+            ),
+            ("resid_sum", "mean_resid"),
         )
-    )
-    err = (
-        lists.where(F.col(id_col) % sample_mod == 0)
-        .join(F.broadcast(cents), "cent_id")
-        .select(
-            F.col(id_col),
-            F.round(l2sq_expr(vec_col, "cent_v"), 6)
-            .cast("decimal(18,6)")
-            .alias("_e"),
-        )
-    )
-    err_stats = err.agg(
-        F.count_distinct(F.col(id_col)).cast("bigint").alias("n_sampled"),
-        F.sum("_e").alias("_sum_e"),
-    )
-    return cell_stats.crossJoin(err_stats).select(
-        "n_cells",
-        "dead_cells",
-        "occ_min",
-        "occ_max",
-        "n_vecs",
-        "n_sampled",
-        F.coalesce(F.col("_sum_e").cast("double"), F.lit(0.0)).alias(
-            "resid_sum"
-        ),
-        # empty sample stripe -> NULL, not an ANSI divide-by-zero
-        F.when(
-            F.col("n_sampled") > 0,
-            F.coalesce(F.col("_sum_e").cast("double"), F.lit(0.0))
-            / F.col("n_sampled"),
-        ).alias("mean_resid"),
     )
 
 

@@ -1138,6 +1138,7 @@ def build_bm25_index(
     per-file open cost makes every vocabulary-pruned probe slower
     than a flat scan.
     """
+    from data_lake_with_spark_spark.operators.similarity import _check_grain
     from data_lake_with_spark_spark.sources import cow
 
     if n_buckets < 1:
@@ -1152,21 +1153,11 @@ def build_bm25_index(
         .localCheckpoint()
     )
     n_post = ctf.count()
-    if n_buckets * BM25_MIN_ROWS_PER_BUCKET > n_post:
-        msg = (
-            f"build_bm25_index: layout grain too fine — "
-            f"n_buckets({n_buckets}) over n_postings={n_post} rows "
-            f"averages {n_post / max(1, n_buckets):.1f} rows/bucket "
-            f"(< {BM25_MIN_ROWS_PER_BUCKET}); at this grain per-file "
-            "open cost makes every vocabulary-pruned probe slower "
-            "than a flat scan — lower n_buckets so "
-            f"n_buckets*{BM25_MIN_ROWS_PER_BUCKET} <= n_postings"
-        )
-        if strict_layout:
-            raise ValueError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
+    _check_grain(
+        "build_bm25_index", strict_layout, BM25_MIN_ROWS_PER_BUCKET,
+        ("n_postings", n_post), {"n_buckets": n_buckets},
+        "makes every vocabulary-pruned probe slower than a flat scan",
+    )
     dl = ctf.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
@@ -1314,6 +1305,7 @@ def bm25_staleness_report(spark, path: str) -> DataFrame:
     sized is collected. Accepts a direct index/epoch path or a
     lifecycle ROOT (resolved via ``current.json``)."""
     from data_lake_with_spark_spark.operators.similarity import (
+        _occupancy,
         _resolve_index_path,
     )
     from data_lake_with_spark_spark.sources import cow
@@ -1361,22 +1353,9 @@ def bm25_staleness_report(spark, path: str) -> DataFrame:
             .alias("head_postings"),
         )
     )
-    # occupancy: partition-column-only scan (no data columns read)
-    occ = postings.groupBy("tok_bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_occ")
-    )
-    buckets = spark.range(n_buckets).select(
-        F.col("id").cast("int").alias("tok_bucket")
-    )
-    bucket_agg = (
-        buckets.join(occ, "tok_bucket", "left")
-        .agg(
-            F.sum(F.when(F.col("_occ").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("dead_buckets"),
-            F.min("_occ").cast("bigint").alias("bucket_min"),
-            F.max("_occ").cast("bigint").alias("bucket_max"),
-        )
+    bucket_agg = _occupancy(
+        n_buckets, postings, ["tok_bucket"],
+        ("_n", "dead_buckets", "bucket_min", "bucket_max", "_rows"),
     )
     return (
         doc_agg.crossJoin(stamped)

@@ -68,8 +68,10 @@ the types Spark infers from the directory names (a ``bigint``
 directory left serves an empty frame with every recorded column, and a
 whole-component manifest reads the record of the directory it points
 at. Fallback: a component without a record (written before records
-existed) reads through footer inference. Spark's file listing skips
-names starting with ``_``, so the record never reaches a scan.
+existed) reads through footer inference, and an empty one of a
+related-items state takes its columns from ``ri_meta.json``. Spark's
+file listing skips names starting with ``_``, so the record never
+reaches a scan.
 
 :func:`commit` returns the promotion stats dict (``partition_col``,
 ``changed_partitions``, ``promoted_dirs``, ``linked_files``,
@@ -355,20 +357,41 @@ def _record_schema(spark, comp_dir: str, schema, partition_cols=()) -> None:
     )
 
 
+#: The sidecar whose ``schemas`` map types a record-less component
+#: directory with no Parquet file in it: related-items states written
+#: before schema records, whose plain components can be legitimately
+#: empty (a ``min_count`` floor no pair crosses leaves ``topk`` empty).
+_LEGACY_SCHEMAS = "ri_meta.json"
+
+
 def _read_dir(spark, comp_dir: str):
     """Read one component directory with its schema record: the data
     columns go to the reader (no footer-inference job) and partition
     columns come from the directory names. A partitioned component
     with no partition directory left serves an empty frame with every
     recorded column; a directory without a record is read through
-    footer inference."""
+    footer inference, and when it holds no Parquet file, serves an
+    empty frame typed by the :data:`_LEGACY_SCHEMAS` sidecar beside
+    it."""
     import json
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql.types import StructType
+
+    from data_lake_with_spark_spark.session import local_frame
 
     text = _fs_read_text(spark, f"{comp_dir}/{_SCHEMA_RECORD}")
     if text is None:
-        return spark.read.parquet(comp_dir)
+        try:
+            return spark.read.parquet(comp_dir)
+        except AnalysisException as e:
+            parent, name = comp_dir.rstrip("/").rsplit("/", 1)
+            meta = read_json(spark, f"{parent}/{_LEGACY_SCHEMAS}") or {}
+            legacy = (meta.get("schemas") or {}).get(name)
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA" or legacy is None:
+                raise
+            schema = StructType.fromJson(json.loads(legacy))
+            return local_frame(spark, [], _nullable(schema))
     rec = json.loads(text)
     schema = StructType.fromJson(json.loads(rec["schema"]))
     pcols = rec["partition_cols"]
@@ -376,8 +399,6 @@ def _read_dir(spark, comp_dir: str):
         StructType([f for f in schema.fields if f.name not in pcols])
     ).parquet(comp_dir)
     if any(c not in df.columns for c in pcols):
-        from data_lake_with_spark_spark.session import local_frame
-
         return local_frame(spark, [], schema)
     return df
 

@@ -9,10 +9,12 @@ still reads through footer inference."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 import random
 
 import pytest
+from pyspark.sql.types import StructType
 
 from data_lake_with_spark_spark.operators import graph, similarity, text
 from data_lake_with_spark_spark.sources import cow
@@ -198,3 +200,32 @@ def test_component_schema_record(spark, tmp_path, bases, family, layout):
     if family == "bm25":
         qs = spark.createDataFrame([(1, "w1 w5")], "query_id long, text string")
         assert text.bm25_topk_indexed(spark, compacted, qs, k=3).count()
+
+
+def test_recordless_empty_related_items_component(spark, tmp_path):
+    """A related-items state without schema records whose plain
+    ``topk`` is legitimately empty (no pair reaches ``min_count``, so
+    the directory holds only ``_SUCCESS``) serves the columns its
+    ``ri_meta.json`` recorded."""
+    path = str(tmp_path / "state")
+    graph.build_related_items_state(
+        _baskets(spark, range(30)), path, k=3, min_count=50, n_buckets=1
+    )
+    assert not glob.glob(f"{path}/topk/*.parquet")
+    records = glob.glob(f"{path}/*/_schema.json")
+    assert len(records) == 4
+    for rec in records:
+        os.remove(rec)
+    recorded = cow.read_json(spark, f"{path}/ri_meta.json")["schemas"]["topk"]
+    columns = [
+        (f.name, f.dataType.simpleString())
+        for f in StructType.fromJson(json.loads(recorded)).fields
+    ]
+    topk = cow.read_component(spark, path, "topk")
+    assert [(f.name, f.dataType.simpleString()) for f in topk.schema] == columns
+    assert topk.count() == 0
+    served = graph.related_items_topk(spark, path)
+    assert served.columns == ["item", "other", "n_ab", "score", "rank"]
+    assert served.count() == 0
+    # the non-empty components still read through footer inference
+    assert cow.read_component(spark, path, "pairs").count() > 0

@@ -146,7 +146,7 @@ def test_retrain_pq_and_ivfpq_guard_and_equality(spark, tmp_path):
     )
     assert got == exp and len(got) > 0
     # n_buckets carried from the base meta
-    meta = cow.read_json(spark, similarity._pq_meta_uri(cur))
+    meta = cow.read_json(spark, f"{cur}/pq_meta.json")
     assert meta["n_buckets"] == 8
 
     # ---- IVFPQ ----
