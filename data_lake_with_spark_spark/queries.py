@@ -14,8 +14,8 @@ Portability rules that make the value-hash oracle hold:
   Spark and DuckDB; numeric variants via hex-prefix parsing.
 - **Temporal**: Spark ``dayofweek`` is 1=Sunday, DuckDB's is
   0=Sunday (oracle adds 1); ``weekofyear`` is ISO in both; the
-  events table's TIMESTAMP(NANOS) column is truncated to µs
-  identically on both sides (sources/catalog.py).
+  events table's ``ts`` is a naive µs timestamp, TIMESTAMP_NTZ in
+  Spark and TIMESTAMP in DuckDB.
 - **Ties**: every top-k/rank orders by the rounded value plus an id
   tiebreaker in BOTH engines, so rounding-created ties resolve
   identically.

@@ -32,9 +32,9 @@ _BUILD_CONFS: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "snappy",
     # Parity with reference etl.py:37 (fast task commit on rename-based FS).
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
-    # The driver-generated events table stores TIMESTAMP(NANOS) which
-    # Spark's vectorized parquet reader rejects; read as long + convert
-    # (see sources/catalog.py). Harmless for all other tables.
+    # Reads a Parquet TIMESTAMP(NANOS) column as a raw nanosecond long
+    # instead of failing the scan. The registry tables store µs
+    # timestamps (sources/catalog.py), so no catalog read relies on it.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
@@ -197,10 +197,16 @@ def local_frame(spark: SparkSession, rows, schema):
 
 def collect_bounded(frame, bound: int, what: str) -> list:
     """``frame.collect()`` for a frame whose size a caller's contract
-    bounds: at most ``bound`` rows, read through ``limit(bound + 1)``
-    in the same job, so an oversize batch raises ``ValueError`` (with
-    ``what`` naming the bound and the alternative) instead of filling
-    the driver."""
+    bounds: at most ``bound`` rows, read through ``limit(bound + 1)``,
+    so an oversize batch raises ``ValueError`` (with ``what`` naming
+    the bound and the alternative) instead of filling the driver.
+
+    The limit is not free: Spark's incremental ``limit`` scan runs one
+    job on the first input partition, then widens by a factor of 4
+    until it has ``bound + 1`` rows or has read every partition, so a
+    frame over p partitions costs up to 1 + ceil(log4 p) jobs. The
+    BM25 serve's 4-partition query frame takes 2: one partition, then
+    the other three."""
     rows = frame.limit(bound + 1).collect()
     if len(rows) > bound:
         raise ValueError(f"{what}: more than {bound} rows")

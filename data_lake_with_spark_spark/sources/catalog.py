@@ -1,14 +1,10 @@
-"""Testdata catalog: canonical access to /root/testdata/sf*/ tables.
+"""Testdata catalog: canonical access to the ``sf*/`` registry tables.
 
-Centralizes one real-world wart: the driver-generated ``events`` table
-stores its ``ts`` column as parquet TIMESTAMP(NANOS,false), which
-Spark's parquet reader rejects outright (PARQUET_TYPE_ILLEGAL). With
-``spark.sql.legacy.parquet.nanosAsLong=true`` the column arrives as a
-raw nanosecond LongType, which we convert to TIMESTAMP_NTZ by integer
-division to microseconds — bit-identical to DuckDB's
-``CAST(ts AS TIMESTAMP)`` truncation, so oracle comparisons hold.
-
-All other tables read natively (ms timestamps → TIMESTAMP_NTZ).
+Every table reads with its declared ``TESTDATA_SCHEMAS`` StructType,
+which equals Spark's footer-inferred schema for every generated table
+(``tests/test_sources.py`` holds that contract). A declared schema
+plans the scan without the one-task footer-inference job a bare
+``spark.read.parquet`` starts, so a table read costs no Spark job.
 """
 
 from __future__ import annotations
@@ -16,34 +12,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from data_lake_with_spark_spark.schemas import TESTDATA_TABLES
-
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-def _table_path(sf_dir: str, name: str) -> str:
-    return os.path.join(sf_dir, f"{name}.parquet")
+from data_lake_with_spark_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame with canonical types."""
-    path = _table_path(sf_dir, name)
-    if name != "events":
-        return spark.read.parquet(path)
-    try:
-        spark.conf.set(_NANOS_CONF, "true")
-    except Exception:
-        pass
-    df = spark.read.parquet(path)
-    if dict(df.dtypes).get("ts") == "bigint":
-        # ns→µs truncation, rendered as naive UTC (TIMESTAMP_NTZ) to
-        # match DuckDB's CAST(ts AS TIMESTAMP) on the same file.
-        df = df.withColumn(
-            "ts", F.expr("convert_timezone('UTC', timestamp_micros(ts div 1000))")
-        )
-    return df
+    """Load one testdata table with its declared schema (no Spark job)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
 
 
 def load_tables(

@@ -92,7 +92,7 @@ from data_lake_with_spark_spark.operators import text as _text
 from data_lake_with_spark_spark.sources import cow
 
 #: Event schema for streaming reads (events.parquet re-written to a
-#: stream dir by tests; ts as TIMESTAMP, not the nanos wart).
+#: stream dir by tests; ts as an ISO string).
 EVENT_STREAM_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -483,7 +483,9 @@ def fuzzy_dedup_ingest(
                 s.getPath().getName().endswith(".parquet")
                 for s in fs.listStatus(hpath)
             ):
-                idx = spark.read.parquet(index_dir)
+                # the index holds bnd's own rows: read with its schema
+                # (no footer-inference job per micro-batch)
+                idx = spark.read.schema(bnd.schema).parquet(index_dir)
                 dup_ids = (
                     bnd.join(idx, on=["band", "band_key"], how="left_semi")
                     .select(id_col)

@@ -1,14 +1,42 @@
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from data_lake_with_spark_spark.schemas import SONG_SCHEMA, TESTDATA_SCHEMAS
-from data_lake_with_spark_spark.sources.catalog import load_table, register_views
+from data_lake_with_spark_spark.sources.catalog import (
+    load_table,
+    load_tables,
+    register_views,
+)
 from data_lake_with_spark_spark.sources.readers import read_json_explicit, read_parquet
+from perfbench.fixtures import write_tables
+from tools.job_audit import _next_job_id
 
 
-def test_all_testdata_tables_load(spark, sf_dir):
+def test_all_testdata_tables_load(spark, sf_dir, tmp_path):
+    """Every table of the three generated datasets and of a benchmark
+    fixture stores exactly its declared schema (a drifted dataset fails
+    here, not in a misread query), and the catalog reads it with that
+    schema at 0 Spark jobs: no footer inference."""
+    fixture = str(tmp_path / "fixture")
+    write_tables(fixture, 7, 0.01, 50, 50)
+    root = os.path.dirname(sf_dir)
+    dirs = [os.path.join(root, sf) for sf in ("sf0.001", "sf0.01", "sf0.1")]
+    for d in dirs + [fixture]:
+        for name, schema in TESTDATA_SCHEMAS.items():
+            inferred = spark.read.parquet(os.path.join(d, f"{name}.parquet")).schema
+            assert inferred == schema, (d, name)
+        j0 = _next_job_id(spark)
+        frames = {n: load_table(spark, d, n) for n in TESTDATA_SCHEMAS}
+        assert load_tables(spark, d).keys() == frames.keys()
+        register_views(spark, d)
+        assert _next_job_id(spark) - j0 == 0, d
+        assert {n: f.schema for n, f in frames.items()} == TESTDATA_SCHEMAS, d
+    # leave the views on the dataset the other tests read
+    register_views(spark, sf_dir)
     for name in TESTDATA_SCHEMAS:
         df = load_table(spark, sf_dir, name)
         assert df.count() > 0, name
