@@ -490,6 +490,271 @@ def _paired_cos(dim: int | None, a: str, b: str, a_nrm: str, b_nrm: str) -> Colu
     )
 
 
+# --- The steps of the IVF, PQ and IVFPQ builds and serves, one kernel
+# each. The PQ steps take the IVF cell as an optional extra key:
+# ``keys=()`` for PQ, ``("cent_id",)`` for IVFPQ.
+
+
+def _topk(
+    scored: DataFrame, score: str, k: int, desc: bool = False,
+    tie: str = "neighbor_id",
+) -> DataFrame:
+    """Each query's top ``k`` rows of ``scored``: ``rank`` numbers them
+    by ``score`` (descending when ``desc``, ascending otherwise), ties
+    broken by ascending ``tie``, and rows past ``k`` drop."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(tie).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
+def _cos_scores(pairs: DataFrame, a: str, b: str, vec_dim: int | None):
+    """``(query_id, neighbor_id, cos)``: the 6-dp cosine between the
+    vector columns ``a`` and ``b`` of each pair — the JVM fold, or with
+    ``vec_dim`` the Arrow kernel :func:`cosine_pairs_arrow`
+    (bit-identical)."""
+    if vec_dim is None:
+        cos = F.round(cosine_expr(a, b), 6)
+    else:
+        pairs = cosine_pairs_arrow(
+            pairs.select("query_id", "neighbor_id", a, b), a, b, vec_dim
+        )
+        cos = F.round("cos_raw", 6)
+    return pairs.select("query_id", "neighbor_id", cos.alias("cos"))
+
+
+def _rerank(
+    corpus: DataFrame, queries: DataFrame, short: DataFrame, k: int,
+    id_col: str, vec_col: str, score: str, dist, desc: bool = False,
+) -> DataFrame:
+    """Exact re-rank of a ``(query_id, neighbor_id)`` shortlist: fetch
+    only the shortlisted corpus vectors, score each pair as ``score`` =
+    the 6-dp ``dist(corpus vector, query vector)`` column, and keep each
+    query's top ``k`` (ascending, or descending with ``desc``).
+
+    The shortlist side is broadcast explicitly: it is bounded by
+    construction (n_queries × shortlist rows), while the planner —
+    blind to the window's output size — would broadcast the CORPUS
+    projection instead (fine at fixture scale, impossible at 100 TB
+    where the fetch must stay a corpus scan probed by the bounded
+    candidate set; guide §3.1 — pick the build side deliberately)."""
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+    )
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+    )
+    rescored = (
+        cv.join(F.broadcast(short), on="neighbor_id")
+        .join(F.broadcast(qv), on="query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(dist("_cv", "_qv"), 6).alias(score),
+        )
+    )
+    return _topk(rescored, score, k, desc)
+
+
+def _resid_col(vec_col: str, cent_col: str) -> Column:
+    """Residual vector ``vec - cent`` as array<double> — element-wise
+    double subtraction is exactly rounded in IEEE-754, so both engines
+    produce bit-identical residuals from identical inputs (the oracle
+    mirrors with ``CAST(a[i] AS DOUBLE) - CAST(b[i] AS DOUBLE)``)."""
+    return F.zip_with(
+        F.col(vec_col).cast("array<double>"),
+        F.col(cent_col).cast("array<double>"),
+        lambda a, b: a - b,
+    )
+
+
+def _assign(
+    df: DataFrame,
+    cents: DataFrame,
+    id_col: str,
+    vec_col: str,
+    vec_dim: int | None,
+    resid: bool = False,
+) -> DataFrame:
+    """Each vector's nearest centroid of ``cents`` (``cent_id``,
+    ``cent_v``): ``(cent_id, id, vec)``, or with ``resid`` ``(cent_id,
+    id, rv)`` where ``rv = vec - cent_v``. The nearest centroid has the
+    greatest 6-dp-rounded cosine, and a tie goes to the lowest
+    ``cent_id``. A zero-norm or NULL vector has a NULL cosine to every
+    centroid and goes to the lowest ``cent_id``. These are the
+    semantics of ``row_number() OVER (PARTITION BY id ORDER BY cos DESC
+    NULLS LAST, cent_id)`` = 1, the oracle twins' window.
+
+    Centroids broadcast and the corpus never shuffles by value. Without
+    ``vec_dim`` the argmax is a ``min_by`` over the key ``(−cos,
+    cent_id)``, a NULL cosine keyed +∞; it partial-aggregates MAP-SIDE
+    (every candidate row of an id sits in the id's scan partition after
+    the broadcast cross join), so the shuffle carries one row per
+    vector where the window would sort-shuffle the corpus × n_cells
+    frame. With ``vec_dim`` it is the Arrow argmax
+    :func:`_assign_argmax_arrow`, which has no shuffle at all."""
+    df = df.select(id_col, vec_col)
+    if vec_dim is not None:
+        assigned = _assign_argmax_arrow(df, cents, vec_col, vec_dim)
+        if resid:
+            assigned = assigned.join(F.broadcast(cents), on="cent_id")
+    else:
+        key = F.struct(
+            (-F.coalesce(F.col("cos_c"), F.lit(float("-inf")))).alias("neg_cos"),
+            F.col("cent_id"),
+        )
+        carry = ["cent_v"] if resid else []
+        assigned = (
+            df.crossJoin(F.broadcast(cents))
+            .withColumn("cos_c", F.round(cosine_expr(vec_col, "cent_v"), 6))
+            .groupBy(id_col)
+            .agg(F.min_by(F.struct("cent_id", vec_col, *carry), key).alias("_b"))
+            .select(id_col, "_b.*")
+        )
+    if resid:
+        return assigned.select(
+            "cent_id", id_col, _resid_col(vec_col, "cent_v").alias("rv")
+        )
+    return assigned.select("cent_id", id_col, vec_col)
+
+
+def _probe_rows(
+    queries: DataFrame, cents: DataFrame, nprobe: int, id_col: str,
+    vec_col: str, resid: bool = False,
+) -> DataFrame:
+    """``(cent_id, query_id, qv)``: each query's ``nprobe`` nearest
+    centroids by 6-dp cosine, cent_id-asc tiebreak; with ``resid``,
+    ``qv`` is the query's residual ``q - cent_v`` against the probed
+    centroid. The query batch × centroid set is tiny, so the probe stays
+    a JVM-fold window on every path (bit-identical to the Arrow
+    kernel)."""
+    scored = (
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        )
+        .crossJoin(F.broadcast(cents))
+        .withColumn("cos_c", F.round(cosine_expr("qv", "cent_v"), 6))
+    )
+    qv = _resid_col("qv", "cent_v") if resid else F.col("qv")
+    return _topk(scored, "cos_c", nprobe, desc=True, tie="cent_id").select(
+        "cent_id", "query_id", qv.alias("qv")
+    )
+
+
+def _collect_probes(spark, probes_lazy: DataFrame, op: str):
+    """Collect an indexed serve's probe rows — at most
+    :data:`IVF_MAX_PROBE_ROWS`, else ``ValueError`` — and return them
+    as a local relation (the scoring join's broadcast side, which then
+    runs no job and never re-reads the caller's query frame) with the
+    partition filter on their ``cent_id`` set."""
+    from data_lake_with_spark_spark.sources import cow
+
+    rows = collect_bounded(
+        probes_lazy,
+        IVF_MAX_PROBE_ROWS,
+        f"{op}: query batch has probe rows (n_queries × nprobe) beyond "
+        "IVF_MAX_PROBE_ROWS; serve it with ivf_topk",
+    )
+    probe_ids = sorted({r["cent_id"] for r in rows})
+    return (
+        local_frame(spark, rows, probes_lazy.schema),
+        cow.in_partitions("cent_id", probe_ids),
+    )
+
+
+def _subspaces(
+    df: DataFrame, vec_col: str, dim: int, m: int, keys=()
+) -> DataFrame:
+    """``(*keys, subspace, _sub)``: each row's ``vec_col`` split into
+    ``m`` sub-vectors of ``dim // m`` elements, one row per sub-vector,
+    ``subspace`` its 0-based bigint position."""
+    w = dim // m
+    slices = F.array(*[F.slice(F.col(vec_col), s * w + 1, w) for s in range(m)])
+    return df.select(*keys, F.posexplode(slices).alias("_pos", "_sub")).select(
+        *keys, F.col("_pos").cast("bigint").alias("subspace"), "_sub"
+    )
+
+
+def _codebook_rows(
+    seeds: DataFrame, dim: int, m: int, id_col: str, vec_col: str,
+    cents: DataFrame | None = None, vec_dim: int | None = None,
+) -> DataFrame:
+    """``(subspace, code, cent_sub)``: the codebooks the ``seeds`` rows
+    train — each seed id is a ``code`` whose entries are the seed's
+    sub-vectors. With ``cents`` the seeds are first re-centered on
+    their nearest centroid (:func:`_assign`), so the entries are
+    residual sub-vectors (IVFPQ)."""
+    if cents is not None:
+        seeds, vec_col = _assign(seeds, cents, id_col, vec_col, vec_dim, True), "rv"
+    return _subspaces(
+        seeds.select(F.col(id_col).cast("bigint").alias("code"), vec_col),
+        vec_col, dim, m, ("code",),
+    ).select("subspace", "code", F.col("_sub").alias("cent_sub"))
+
+
+def _encode(
+    rows: DataFrame, codebooks: DataFrame, dim: int, m: int, id_col: str,
+    vec_col: str, keys=(),
+) -> DataFrame:
+    """``(*keys, id, subspace, code)``: per subspace, the nearest
+    codebook entry to the row's sub-vector (6-dp-rounded squared L2,
+    code-asc tiebreak). The argmin is ``min(struct(_d, code))`` (struct
+    ordering is field-wise, so the code field IS the tiebreak — the
+    semantics of a row_number window), which partial-aggregates
+    MAP-SIDE after the broadcast codebook join: the shuffle carries m
+    rows per vector, never the corpus × |codes| candidate frame a
+    window would sort-shuffle (guide §2.3)."""
+    return (
+        _subspaces(rows, vec_col, dim, m, (*keys, id_col))
+        .join(F.broadcast(codebooks), on="subspace")
+        .withColumn("_d", F.round(l2sq_expr("_sub", "cent_sub"), 6))
+        .groupBy(*keys, id_col, "subspace")
+        .agg(F.min(F.struct(F.col("_d"), F.col("code"))).alias("_b"))
+        .select(*keys, id_col, "subspace", F.col("_b.code").alias("code"))
+    )
+
+
+def _adc_scores(
+    codes: DataFrame, codebooks: DataFrame, q_rows: DataFrame, dim: int,
+    m: int, id_col: str, keys=(),
+) -> DataFrame:
+    """``(query_id, neighbor_id, adc_dist)``: the asymmetric distance
+    (ADC) from each ``(query_id, *keys, qv)`` query row to each code
+    row's vector, self-matches excluded. The distance table holds, per
+    query row, subspace and codebook entry, the 6-dp squared L2 of the
+    ``qv`` sub-vector to the entry — ``n_query_rows × m × |codes|``
+    rows, broadcast-sized for serving batches. A vector's distance is
+    the sum of its m table entries matched on ``(*keys, subspace,
+    code)``: the corpus contributes only its code ids, never its
+    vectors.
+
+    Exactness: the entries sum as DECIMAL(18,6) — float addition is not
+    associative and the m-way sum order differs between engines;
+    decimal summation makes ``adc_dist`` bit-identical cross-engine
+    (the q108 contract applied to ADC)."""
+    table = (
+        _subspaces(q_rows, "qv", dim, m, ("query_id", *keys))
+        .join(F.broadcast(codebooks), on="subspace")
+        .select(
+            "query_id",
+            *keys,
+            "subspace",
+            "code",
+            F.round(l2sq_expr("_sub", "cent_sub"), 6)
+            .cast("decimal(18,6)")
+            .alias("_dsub"),
+        )
+    )
+    return (
+        codes.withColumnRenamed(id_col, "neighbor_id")
+        .join(F.broadcast(table), on=[*keys, "subspace", "code"])
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("_dsub").cast("double").alias("adc_dist"))
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -525,13 +790,7 @@ def brute_force_topk(
             _paired_cos(vec_dim, "cv", "qv", "_cn", "_qn").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(scored, "cos", k, desc=True)
 
 
 def ivf_topk(
@@ -581,56 +840,13 @@ def ivf_topk(
     corp = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    qsel = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("cos_c").desc(), F.col("cent_id").asc()
+    probes = _probe_rows(queries, cents, nprobe, id_col, vec_col)
+    pairs = (
+        _assign(corp, cents, "neighbor_id", "cv", vec_dim)
+        .join(F.broadcast(probes), on="cent_id")
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    # Query-side probing stays JVM-fold in BOTH paths: the query
-    # batch × centroid set is tiny, and the fold is bit-identical to
-    # the Arrow kernel (same sequential accumulation).
-    probes = (
-        qsel.crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", F.round(cosine_expr("qv", "cent_v"), 6))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .where(F.col("_rn") <= nprobe)
-        .select("cent_id", "query_id", "qv")
-    )
-    if vec_dim is None:
-        w_assign = Window.partitionBy("neighbor_id").orderBy(
-            F.col("cos_c").desc(), F.col("cent_id").asc()
-        )
-        assigned = (
-            corp.crossJoin(F.broadcast(cents))
-            .withColumn("cos_c", F.round(cosine_expr("cv", "cent_v"), 6))
-            .withColumn("_rn", F.row_number().over(w_assign))
-            .where(F.col("_rn") == 1)
-            .select("cent_id", "neighbor_id", "cv")
-        )
-        scored = (
-            assigned.join(F.broadcast(probes), on="cent_id")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine_expr("cv", "qv"), 6).alias("cos"),
-            )
-        )
-    else:
-        assigned = _assign_argmax_arrow(corp, cents, "cv", vec_dim)
-        scored = cosine_pairs_arrow(
-            assigned.join(F.broadcast(probes), on="cent_id")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", "cv", "qv"),
-            "cv",
-            "qv",
-            vec_dim,
-        ).select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos"))
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w_rank)).where(
-        F.col("rank") <= k
-    )
+    return _topk(_cos_scores(pairs, "cv", "qv", vec_dim), "cos", k, desc=True)
 
 
 def _assign_argmax_arrow(
@@ -641,8 +857,7 @@ def _assign_argmax_arrow(
     max_centroids: int = 8192,
 ) -> DataFrame:
     """Nearest-centroid assignment via the Arrow scoring kernel —
-    the vec_dim production path of :func:`ivf_topk` /
-    :func:`build_ivf_index`.
+    the ``vec_dim`` path of :func:`_assign`.
 
     ``cents`` (``cent_id``, ``cent_v``) is collected to the driver
     (bounded — raises past ``max_centroids``, naming the JVM-fold
@@ -651,12 +866,11 @@ def _assign_argmax_arrow(
     (:func:`cosine_to_set_arrow`), then the argmax runs JVM-side on
     the 6-dp-ROUNDED array: ``array_position(rounded,
     array_max(rounded))`` picks the FIRST maximal slot and the slots
-    are ordered by ascending ``cent_id`` — exactly the fold path's
-    ``row_number() OVER (ORDER BY cos DESC, cent_id ASC)`` tie
-    semantics, with NO corpus-wide window shuffle: assignment is now
-    scan → mapInPandas → project, one pipelined stage. All-NULL
-    cosine rows (zero-norm or NULL vectors) coalesce to slot 1 =
-    lowest cent_id, again matching the fold's NULLS-LAST pick.
+    are ordered by ascending ``cent_id`` — exactly :func:`_assign`'s
+    tie semantics, with no shuffle: assignment is scan → mapInPandas
+    → project, one pipelined stage. All-NULL cosine rows (zero-norm or
+    NULL vectors) coalesce to slot 1 = lowest cent_id, again matching
+    :func:`_assign`'s NULLS-LAST pick.
 
     Returns ``(cent_id, neighbor_id_or_id, cv...)`` — every column of
     ``corp`` plus ``cent_id``.
@@ -714,50 +928,10 @@ def quantized_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_expr("cv", "qv"), 6).alias("cos"),
-        )
+    pairs = c.crossJoin(F.broadcast(q)).where(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def _ivf_assign(
-    df: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    vec_dim: int | None,
-) -> DataFrame:
-    """``(cent_id, id, vec)``: each vector's nearest centroid by 6-dp
-    cosine, cent_id-asc tiebreak — the one assignment kernel of the
-    IVF build and merge. With ``vec_dim`` it runs the Arrow argmax
-    (no corpus-wide window shuffle; bit-identical, see
-    :func:`_assign_argmax_arrow`)."""
-    df = df.select(id_col, vec_col)
-    if vec_dim is not None:
-        return _assign_argmax_arrow(df, cents, vec_col, vec_dim).select(
-            "cent_id", id_col, vec_col
-        )
-    w_assign = Window.partitionBy(id_col).orderBy(
-        F.col("cos_c").desc(), F.col("cent_id").asc()
-    )
-    return (
-        df.crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", F.round(cosine_expr(vec_col, "cent_v"), 6))
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .where(F.col("_rn") == 1)
-        .select("cent_id", id_col, vec_col)
-    )
+    return _topk(_cos_scores(pairs, "cv", "qv", None), "cos", k, desc=True)
 
 
 def build_ivf_index(
@@ -785,7 +959,7 @@ def build_ivf_index(
     cents = corpus.where((F.col(id_col) % centroid_mod) == 0).select(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_v")
     )
-    assigned = _ivf_assign(corpus, cents, id_col, vec_col, vec_dim)
+    assigned = _assign(corpus, cents, id_col, vec_col, vec_dim)
     from data_lake_with_spark_spark.session import run_concurrent
     from data_lake_with_spark_spark.sources import cow
 
@@ -855,7 +1029,7 @@ def merge_ivf_index(
     return _merge_vectors(
         spark, "ivf", base_path, new_vecs, out_path, id_col, vec_col,
         validate_centroids and "validate_centroids", layout,
-        lambda batch, meta, centroids: _ivf_assign(
+        lambda batch, meta, centroids: _assign(
             batch, centroids, id_col, vec_col, vec_dim
         ),
     )
@@ -951,7 +1125,7 @@ def _merge_vectors(
     meta = _vec_target(spark, family, op, base_path, out_path, layout)
     comp, cols, frozen = _VEC_LAYOUT[family][:3]
     parts = {f: cow.read_component(spark, base_path, f) for f in frozen}
-    new_ids = new_vecs.select(F.col(id_col)).distinct()
+    new_ids = new_vecs.select(F.col(id_col))
     batch = new_vecs.select(id_col, vec_col)
 
     def _validate():
@@ -1022,7 +1196,7 @@ def _delete_vectors(
 
     _vec_target(spark, family, op, base_path, out_path, layout)
     comp, cols = _VEC_LAYOUT[family][:2]
-    ids = delete_ids.select(F.col(id_col)).distinct()
+    ids = delete_ids.select(F.col(id_col))
     changed = cow.partitions_holding(
         spark, base_path, comp, cols[0], ids, id_col
     )
@@ -1096,22 +1270,6 @@ def compact_ivf_index(spark, index_path: str, out_path: str) -> dict:
     return _compact_vectors(spark, "ivf", index_path, out_path)
 
 
-def _collect_probes(spark, probes_lazy: DataFrame, op: str):
-    """Collect an indexed serve's probe rows — at most
-    :data:`IVF_MAX_PROBE_ROWS`, else ``ValueError`` — and return their
-    sorted ``cent_id`` set (the partition filter) and the same rows as
-    a local relation (the scoring join's broadcast side, which then
-    runs no job and never re-reads the caller's query frame)."""
-    rows = collect_bounded(
-        probes_lazy,
-        IVF_MAX_PROBE_ROWS,
-        f"{op}: query batch has probe rows (n_queries × nprobe) beyond "
-        "IVF_MAX_PROBE_ROWS; serve it with ivf_topk",
-    )
-    probe_ids = sorted({r["cent_id"] for r in rows})
-    return probe_ids, local_frame(spark, rows, probes_lazy.schema)
-
-
 def ivf_topk_indexed(
     spark,
     path: str,
@@ -1143,44 +1301,18 @@ def ivf_topk_indexed(
     from data_lake_with_spark_spark.sources import cow
 
     cents = cow.read_component(spark, path, "centroids")
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("cos_c").desc(), F.col("cent_id").asc()
+    probes, where = _collect_probes(
+        spark, _probe_rows(queries, cents, nprobe, id_col, vec_col),
+        "ivf_topk_indexed",
     )
-    probes_lazy = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-        .crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", F.round(cosine_expr("qv", "cent_v"), 6))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .where(F.col("_rn") <= nprobe)
-        .select("cent_id", "query_id", "qv")
-    )
-    probe_ids, probes = _collect_probes(spark, probes_lazy, "ivf_topk_indexed")
-    # Empty query batch → no probes; F.lit(False) keeps the result
-    # schema while pruning every partition (isin([]) would too, but
-    # this makes the short-circuit explicit in the plan).
-    probe_filter = F.col("cent_id").isin(probe_ids) if probe_ids else F.lit(False)
-    lists = cow.read_component(spark, path, "lists").where(probe_filter)
     pairs = (
-        lists.join(F.broadcast(probes), on="cent_id")
+        cow.read_component(spark, path, "lists")
+        .where(where)
+        .join(F.broadcast(probes), on="cent_id")
         .where(F.col("query_id") != F.col(id_col))
         .select("query_id", F.col(id_col).alias("neighbor_id"), vec_col, "qv")
     )
-    if vec_dim is None:
-        scored = pairs.select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_expr(vec_col, "qv"), 6).alias("cos"),
-        )
-    else:
-        scored = cosine_pairs_arrow(pairs, vec_col, "qv", vec_dim).select(
-            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos")
-        )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w_rank)).where(
-        F.col("rank") <= k
-    )
+    return _topk(_cos_scores(pairs, vec_col, "qv", vec_dim), "cos", k, desc=True)
 
 
 def all_pairs_blas(
@@ -1404,10 +1536,7 @@ def bucketed_topk(
             _paired_cos(vec_dim, "cv", "qv", "_cn", "_qn").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(scored, "cos", k, desc=True)
 
 
 def bucketed_topk_multiprobe(
@@ -1491,10 +1620,7 @@ def bucketed_topk_multiprobe(
             _paired_cos(vec_dim, "cv", "qv", "_cn", "_qn").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(scored, "cos", k, desc=True)
 
 
 def semantic_dedup(
@@ -1602,16 +1728,8 @@ def pq_codebooks(
     if target_codes is not None:
         n = corpus.count()
         centroid_mod = max(1, n // max(1, target_codes))
-    w = dim // m
-    slices = F.array(*[F.slice(F.col(vec_col), s * w + 1, w) for s in range(m)])
-    return (
-        corpus.where((F.col(id_col) % centroid_mod) == 0)
-        .select(F.col(id_col).alias("code"), F.posexplode(slices))
-        .select(
-            F.col("pos").cast("bigint").alias("subspace"),
-            F.col("code").cast("bigint").alias("code"),
-            F.col("col").alias("cent_sub"),
-        )
+    return _codebook_rows(
+        corpus.where((F.col(id_col) % centroid_mod) == 0), dim, m, id_col, vec_col
     )
 
 
@@ -1627,30 +1745,9 @@ def pq_encode(
     entry (squared L2, 6-dp rounded, code-asc tiebreak) per subspace.
     Output ``(id, subspace, code)`` in long form: m small ints per
     vector instead of dim floats — the 32×-compressed representation
-    ANN serving stores at 100 TB. One broadcast join + per-(id,
-    subspace) argmin as ``min(struct(_d, code))`` (struct ordering is
-    field-wise, so the code field IS the asc tiebreak — identical
-    semantics to the row_number window this replaced), which
-    partial-aggregates MAP-SIDE after the broadcast codebook join:
-    the shuffle carries m rows per vector, never the corpus × |codes|
-    candidate frame the window sort-shuffled (guide §2.3 — the
-    :func:`_ivfpq_encode` kernel, backported to the flat-PQ family)."""
-    w = dim // m
-    slices = F.array(*[F.slice(F.col(vec_col), s * w + 1, w) for s in range(m)])
-    sub_rows = corpus.select(
-        F.col(id_col), F.posexplode(slices)
-    ).select(
-        F.col(id_col),
-        F.col("pos").cast("bigint").alias("subspace"),
-        F.col("col").alias("_sub_v"),
-    )
-    return (
-        sub_rows.join(F.broadcast(codebooks), on="subspace")
-        .withColumn("_d", F.round(l2sq_expr("_sub_v", "cent_sub"), 6))
-        .groupBy(id_col, "subspace")
-        .agg(F.min(F.struct(F.col("_d"), F.col("code"))).alias("_b"))
-        .select(id_col, "subspace", F.col("_b.code").alias("code"))
-    )
+    ANN serving stores at 100 TB; the argmin is :func:`_encode`'s
+    map-side partial aggregate."""
+    return _encode(corpus, codebooks, dim, m, id_col, vec_col)
 
 
 def pq_topk(
@@ -1676,39 +1773,8 @@ def pq_topk(
     sum order differs between engines; decimal summation makes
     adc_dist bit-identical cross-engine (the q108 contract applied
     to ADC)."""
-    w = dim // m
-    slices = F.array(*[F.slice(F.col(vec_col), s * w + 1, w) for s in range(m)])
-    q_subs = queries.select(
-        F.col(id_col).alias("query_id"), F.posexplode(slices)
-    ).select(
-        "query_id",
-        F.col("pos").cast("bigint").alias("subspace"),
-        F.col("col").alias("_q_sub"),
-    )
-    table = (
-        q_subs.join(F.broadcast(codebooks), on="subspace")
-        .select(
-            "query_id",
-            "subspace",
-            "code",
-            F.round(l2sq_expr("_q_sub", "cent_sub"), 6)
-            .cast("decimal(18,6)")
-            .alias("_dsub"),
-        )
-    )
-    scored = (
-        codes.withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(table), on=["subspace", "code"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("_dsub").cast("double").alias("adc_dist"))
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w_rank)).where(
-        F.col("rank") <= k
-    )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    return _topk(_adc_scores(codes, codebooks, q, dim, m, id_col), "adc_dist", k)
 
 
 def pq_topk_rerank(
@@ -1740,33 +1806,10 @@ def pq_topk_rerank(
     short = pq_topk(
         codes, codebooks, queries, k=shortlist, dim=dim, m=m, id_col=id_col
     ).select("query_id", "neighbor_id")
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+    return _rerank(
+        corpus, queries, short, k, id_col, vec_col, "l2_dist", l2sq_expr
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    # broadcast the SHORTLIST side explicitly: it is bounded by
-    # construction (n_queries × shortlist rows), while the planner —
-    # blind to the window's output size — was broadcasting the CORPUS
-    # projection instead (fine at fixture scale, impossible at 100 TB
-    # where the fetch must stay a corpus-scan probed by the bounded
-    # candidate set; guide §3.1 — pick the build side deliberately)
-    rescored = (
-        cv.join(F.broadcast(short), on="neighbor_id")
-        .join(F.broadcast(qv), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(l2sq_expr("_cv", "_qv"), 6).alias("l2_dist"),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("l2_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return rescored.withColumn("rank", F.row_number().over(w_rank)).where(
-        F.col("rank") <= k
-    )
+
 
 def _pq_bucket(id_col: str, n_buckets: int):
     # xxhash64 spreads any id stripe uniformly across buckets (an
@@ -2063,114 +2106,6 @@ def compact_pq_index(spark, index_path: str, out_path: str) -> dict:
 IVFPQ_MIN_ROWS_PER_LEAF = 64
 
 
-def _resid_col(vec_col: str, cent_col: str) -> Column:
-    """Residual vector ``vec - cent`` as array<double> — element-wise
-    double subtraction is exactly rounded in IEEE-754, so both engines
-    produce bit-identical residuals from identical inputs (the oracle
-    mirrors with ``CAST(a[i] AS DOUBLE) - CAST(b[i] AS DOUBLE)``)."""
-    return F.zip_with(
-        F.col(vec_col).cast("array<double>"),
-        F.col(cent_col).cast("array<double>"),
-        lambda a, b: a - b,
-    )
-
-
-def _ivfpq_assign_resid(
-    df: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    vec_dim: int | None,
-) -> DataFrame:
-    """Owning cell + residual per vector: nearest centroid by 6-dp
-    cosine (cent_id-asc tiebreak — the IVF assignment kernel), then
-    ``rv = vec - cent_v``. Returns ``(cent_id, id, rv)``. Centroids
-    broadcast; the corpus never shuffles by value: the argmax is a
-    ``min_by`` over a deterministic (−cos, cent_id) order key, which
-    partial-aggregates MAP-SIDE (every candidate row for an id sits
-    in the id's scan partition after the broadcast cross join), so
-    the shuffle carries one row per vector — a window row_number
-    would sort-shuffle the full corpus × n_cells frame instead. NULL
-    cosines (zero-norm vectors) order WORST (−∞ key), matching the
-    window's DESC-nulls-last semantics and the oracle's."""
-    if vec_dim is None:
-        scored = (
-            df.select(id_col, vec_col)
-            .crossJoin(F.broadcast(cents))
-            .withColumn("cos_c", F.round(cosine_expr(vec_col, "cent_v"), 6))
-        )
-        assigned = (
-            scored.groupBy(id_col)
-            .agg(
-                F.min_by(
-                    F.struct(
-                        F.col("cent_id"),
-                        F.col("cent_v"),
-                        F.col(vec_col).alias("_v"),
-                    ),
-                    F.struct(
-                        (
-                            -F.coalesce(
-                                F.col("cos_c"), F.lit(float("-inf"))
-                            )
-                        ).alias("neg_cos"),
-                        F.col("cent_id"),
-                    ),
-                ).alias("_b")
-            )
-            .select(
-                F.col("_b.cent_id").alias("cent_id"),
-                id_col,
-                F.col("_b._v").alias(vec_col),
-                F.col("_b.cent_v").alias("cent_v"),
-            )
-        )
-    else:
-        assigned = _assign_argmax_arrow(
-            df.select(id_col, vec_col), cents, vec_col, vec_dim
-        ).select("cent_id", id_col, vec_col).join(
-            F.broadcast(cents), on="cent_id"
-        )
-    return assigned.select(
-        "cent_id", id_col, _resid_col(vec_col, "cent_v").alias("rv")
-    )
-
-
-def _ivfpq_encode(
-    assigned_rv: DataFrame,
-    codebooks: DataFrame,
-    dim: int,
-    m: int,
-    id_col: str,
-) -> DataFrame:
-    """PQ-encode residuals against frozen codebooks, carrying the
-    owning ``cent_id`` through (the :func:`pq_encode` argmin
-    semantics — 6-dp-rounded squared L2, code-asc tiebreak — over
-    residual sub-vectors). Returns ``(cent_id, id, subspace, code)``.
-    The argmin is ``min(struct(_d, code))`` (struct ordering is
-    field-wise, so the code field IS the tiebreak), which
-    partial-aggregates map-side after the broadcast codebook join —
-    the shuffle carries m rows per vector, never the
-    corpus × |codes| candidate frame a window would sort."""
-    w = dim // m
-    slices = F.array(*[F.slice(F.col("rv"), s * w + 1, w) for s in range(m)])
-    sub_rows = assigned_rv.select(
-        "cent_id", id_col, F.posexplode(slices)
-    ).select(
-        "cent_id",
-        F.col(id_col),
-        F.col("pos").cast("bigint").alias("subspace"),
-        F.col("col").alias("_sub_v"),
-    )
-    return (
-        sub_rows.join(F.broadcast(codebooks), on="subspace")
-        .withColumn("_d", F.round(l2sq_expr("_sub_v", "cent_sub"), 6))
-        .groupBy("cent_id", id_col, "subspace")
-        .agg(F.min(F.struct(F.col("_d"), F.col("code"))).alias("_b"))
-        .select("cent_id", id_col, "subspace", F.col("_b.code").alias("code"))
-    )
-
-
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -2299,24 +2234,15 @@ def build_ivfpq_index(
     _, assigned = run_concurrent(
         [
             lambda: cow.write_whole(cents, f"{path}/centroids"),
-            lambda: _ivfpq_assign_resid(
-                corpus, cents, id_col, vec_col, vec_dim
+            lambda: _assign(
+                corpus, cents, id_col, vec_col, vec_dim, resid=True
             ).localCheckpoint(),
         ]
     )
-    w = dim // m
-    slices = F.array(*[F.slice(F.col("rv"), s * w + 1, w) for s in range(m)])
-    cb = (
-        assigned.where((F.col(id_col) % centroid_mod) == 1)
-        .select(F.col(id_col).alias("code"), F.posexplode(slices))
-        .select(
-            F.col("pos").cast("bigint").alias("subspace"),
-            F.col("code").cast("bigint").alias("code"),
-            F.col("col").alias("cent_sub"),
-        )
-        .localCheckpoint()
-    )
-    codes = _ivfpq_encode(assigned, cb, dim, m, id_col).withColumn(
+    cb = _codebook_rows(
+        assigned.where((F.col(id_col) % centroid_mod) == 1), dim, m, id_col, "rv"
+    ).localCheckpoint()
+    codes = _encode(assigned, cb, dim, m, id_col, "rv", ("cent_id",)).withColumn(
         "id_bucket", _pq_bucket(id_col, n_buckets)
     )
 
@@ -2382,57 +2308,16 @@ def ivfpq_topk_indexed(
         cow.read_component(spark, path, c)
         for c in ("centroids", "codebooks", "codes")
     )
-    dim, m = meta["dim"], meta["m"]
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("cos_c").desc(), F.col("cent_id").asc()
+    probes, where = _collect_probes(
+        spark,
+        _probe_rows(queries, cents, nprobe, id_col, vec_col, resid=True),
+        "ivfpq_topk_indexed",
     )
-    probes_lazy = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", F.round(cosine_expr("qv", "cent_v"), 6))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .where(F.col("_rn") <= nprobe)
-        .select(
-            "cent_id", "query_id", _resid_col("qv", "cent_v").alias("qrv")
-        )
+    scored = _adc_scores(
+        codes.where(where), cb, probes, meta["dim"], meta["m"], id_col,
+        ("cent_id",),
     )
-    probe_ids, probes = _collect_probes(spark, probes_lazy, "ivfpq_topk_indexed")
-    probe_filter = (
-        F.col("cent_id").isin(probe_ids) if probe_ids else F.lit(False)
-    )
-    w = dim // m
-    slices = F.array(*[F.slice(F.col("qrv"), s * w + 1, w) for s in range(m)])
-    q_subs = probes.select("query_id", "cent_id", F.posexplode(slices)).select(
-        "query_id",
-        "cent_id",
-        F.col("pos").cast("bigint").alias("subspace"),
-        F.col("col").alias("_q_sub"),
-    )
-    table = q_subs.join(F.broadcast(cb), on="subspace").select(
-        "query_id",
-        "cent_id",
-        "subspace",
-        "code",
-        F.round(l2sq_expr("_q_sub", "cent_sub"), 6)
-        .cast("decimal(18,6)")
-        .alias("_dsub"),
-    )
-    scored = (
-        codes.where(probe_filter)
-        .withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(table), on=["cent_id", "subspace", "code"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("_dsub").cast("double").alias("adc_dist"))
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w_rank)).where(
-        F.col("rank") <= k
-    )
+    return _topk(scored, "adc_dist", k)
 
 
 def ivfpq_topk_rerank_indexed(
@@ -2457,28 +2342,8 @@ def ivfpq_topk_rerank_indexed(
         spark, path, queries, k=shortlist, nprobe=nprobe,
         id_col=id_col, vec_col=vec_col,
     ).select("query_id", "neighbor_id")
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    # broadcast the bounded shortlist, never the corpus projection —
-    # see pq_topk_rerank (guide §3.1)
-    rescored = (
-        cv.join(F.broadcast(short), on="neighbor_id")
-        .join(F.broadcast(qv), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(l2sq_expr("_cv", "_qv"), 6).alias("l2_dist"),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("l2_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return rescored.withColumn("rank", F.row_number().over(w_rank)).where(
-        F.col("rank") <= k
+    return _rerank(
+        corpus, queries, short, k, id_col, vec_col, "l2_dist", l2sq_expr
     )
 
 
@@ -2516,9 +2381,9 @@ def merge_ivfpq_index(
     return _merge_vectors(
         spark, "ivfpq", base_path, new_vecs, out_path, id_col, vec_col,
         validate_frozen and "validate_frozen", layout,
-        lambda batch, meta, centroids, codebooks: _ivfpq_encode(
-            _ivfpq_assign_resid(batch, centroids, id_col, vec_col, vec_dim),
-            codebooks, meta["dim"], meta["m"], id_col,
+        lambda batch, meta, centroids, codebooks: _encode(
+            _assign(batch, centroids, id_col, vec_col, vec_dim, resid=True),
+            codebooks, meta["dim"], meta["m"], id_col, "rv", ("cent_id",),
         ),
     )
 
@@ -2815,20 +2680,11 @@ def _sampled_error(spark, rows, sample_mod, id_col, sq_err, names) -> DataFrame:
 def _adc_sq_err(rv: DataFrame, codes, cb, meta, id_col: str) -> DataFrame:
     """Per sampled id and subspace, the squared L2 between the ``rv``
     sub-vector and the codebook entry its STORED code points at."""
-    w = meta["dim"] // meta["m"]
-    slices = F.array(
-        *[F.slice(F.col("rv"), s * w + 1, w) for s in range(meta["m"])]
-    )
     return (
-        rv.select(id_col, F.posexplode(slices))
-        .select(
-            id_col,
-            F.col("pos").cast("bigint").alias("subspace"),
-            F.col("col").alias("_sub_v"),
-        )
+        _subspaces(rv, "rv", meta["dim"], meta["m"], (id_col,))
         .join(codes.select(id_col, "subspace", "code"), [id_col, "subspace"])
         .join(F.broadcast(cb), ["subspace", "code"])
-        .select(id_col, l2sq_expr("_sub_v", "cent_sub").alias("_d"))
+        .select(id_col, l2sq_expr("_sub", "cent_sub").alias("_d"))
     )
 
 
@@ -3071,46 +2927,16 @@ def truncated_topk_rerank(
         F.col(id_col).alias("neighbor_id"),
         F.slice(F.col(vec_col), 1, coarse_dim).alias("_cc"),
     )
-    coarse = (
-        cc.crossJoin(F.broadcast(qc))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_expr("_cc", "_qc"), 6).alias("_ccos"),
-        )
+    coarse = cc.crossJoin(F.broadcast(qc)).where(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("_ccos").desc(), F.col("neighbor_id").asc()
+    short = _topk(
+        _cos_scores(coarse, "_cc", "_qc", None), "cos", shortlist, desc=True
+    ).select("query_id", "neighbor_id")
+    return _rerank(
+        corpus, queries, short, k, id_col, vec_col, "cos", cosine_expr, desc=True
     )
-    short = (
-        coarse.withColumn("_crank", F.row_number().over(w_short))
-        .where(F.col("_crank") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    # broadcast the bounded shortlist, never the corpus projection —
-    # see pq_topk_rerank (guide §3.1)
-    rescored = (
-        cv.join(F.broadcast(short), on="neighbor_id")
-        .join(F.broadcast(qv), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_expr("_cv", "_qv"), 6).alias("cos"),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return rescored.withColumn("rank", F.row_number().over(w_rank)).where(
-        F.col("rank") <= k
-    )
+
 
 def percentile_clip_calibrate(
     emb: DataFrame,

@@ -654,10 +654,10 @@ def _admit_vectors(family, centroid_mod, vec_dim, spark, cur, batch):
     - Centroid-source ids (IVF, IVFPQ): a vector bit-identical to its
       carried centroid is a replay and is dropped; different bytes
       raise.
-    - Codebook-source ids (PQ, IVFPQ): their sub-vectors, sliced from
-      the raw vector (PQ) or from the residual against the carried
-      centroids (IVFPQ, the builder's own assign kernel), must equal
-      the carried codebook entries bit for bit; then they are dropped
+    - Codebook-source ids (PQ, IVFPQ): the codebook entries they train,
+      computed by the builds' own helper (sub-vectors of the raw vector
+      for PQ, of the residual against the carried centroids for IVFPQ),
+      must equal the carried entries bit for bit; then they are dropped
       as replays, else the batch raises.
     - Fresh stripes: a NEW id on a stripe a build trains on raises. The
       rule is keyed to the mod stamped in the meta sidecar, so a
@@ -681,21 +681,14 @@ def _admit_vectors(family, centroid_mod, vec_dim, spark, cur, batch):
         replays.append(stripe.select("vec_id"))
     if "codebooks" in frozen:
         cb = cow.read_component(spark, cur, "codebooks")
-        cb_ids = cb.select(F.col("code").alias("vec_id")).distinct()
+        cb_ids = cb.select(F.col("code").alias("vec_id"))
         cb_rows = batch.join(F.broadcast(cb_ids), "vec_id", "left_semi")
         if cb_rows.limit(1).count() > 0:
             resid = family == "ivfpq"
-            src = (
-                _sim._ivfpq_assign_resid(cb_rows, cents, "vec_id", "embedding", vec_dim)
-                if resid
-                else cb_rows.withColumn("rv", F.col("embedding").cast("array<double>"))
-            )
-            w = meta["dim"] // meta["m"]
-            slices = [F.slice("rv", s * w + 1, w) for s in range(meta["m"])]
-            got = src.select(
-                F.col("vec_id").cast("bigint").alias("code"),
-                F.posexplode(F.array(*slices)).alias("pos", "sub_v"),
-            ).withColumn("subspace", F.col("pos").cast("bigint"))
+            got = _sim._codebook_rows(
+                cb_rows, meta["dim"], meta["m"], "vec_id", "embedding",
+                cents if resid else None, vec_dim,
+            ).withColumnRenamed("cent_sub", "sub_v")
             mismatch = got.join(F.broadcast(cb), ["subspace", "code"], "left").where(
                 F.col("cent_sub").isNull() | ~_same_bytes("sub_v", "cent_sub")
             )

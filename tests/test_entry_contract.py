@@ -37,9 +37,12 @@ def test_every_query_has_callable_and_most_have_oracles(spark):
     [
         "q01_pricing_summary",
         "q12_flagship_enrichment",
+        "q13_ann_ivf",
         "q19_time_dimension",
         "q24_jaccard_verify",
         "q26_embedding_topk",
+        "q119_pq_topk_rerank",
+        "q203_ivfpq_rerank",
     ],
 )
 def test_spotcheck_oracle_match(spark, sf_dir, name):

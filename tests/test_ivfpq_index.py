@@ -106,43 +106,48 @@ def test_ivfpq_serving_prunes_and_reranks(spark, tmp_path):
         assert abs(r["l2_dist"] - exp) < 1e-9
 
 
-def test_ivfpq_arrow_assignment_parity(spark, tmp_path):
-    """The production Arrow argmax assignment path (vec_dim set) and
-    the pure-SQL min_by path build bit-identical indexes — same cells,
-    same codes, same served distances (the _assign_argmax_arrow
-    contract the IVF family carries, extended to the composite)."""
+@pytest.mark.parametrize("family", ["ivf", "ivfpq"])
+def test_ivfpq_arrow_assignment_parity(spark, tmp_path, family):
+    """The Arrow argmax assignment path (vec_dim set) and the pure-SQL
+    min_by path build bit-identical IVF and IVFPQ indexes — same cells,
+    same codes, same served results — with the window's tie semantics:
+    vector 33 sits at an exact cosine tie between the duplicate
+    centroids 10 and 20, the zero vector 37 has a NULL cosine to every
+    centroid, and each goes to the lowest cent_id of its candidates."""
     rnd = random.Random(43)
-    corpus = spark.createDataFrame(
-        _mk_corpus(rnd, range(130)), ["vec_id", "embedding"]
-    )
-    sql_idx, arrow_idx = str(tmp_path / "sq"), str(tmp_path / "ar")
-    similarity.build_ivfpq_index(
-        corpus, sql_idx, dim=DIM, m=M, centroid_mod=10, n_buckets=8
-    )
-    similarity.build_ivfpq_index(
-        corpus, arrow_idx, dim=DIM, m=M, centroid_mod=10, n_buckets=8,
-        vec_dim=DIM,
-    )
-    for comp in ("codes",):
-        a = sorted(
-            map(
-                tuple,
-                cow.read_component(spark, sql_idx, comp)
-                .select("id_bucket", "cent_id", "vec_id", "subspace", "code")
-                .collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                cow.read_component(spark, arrow_idx, comp)
-                .select("id_bucket", "cent_id", "vec_id", "subspace", "code")
-                .collect(),
-            )
-        )
-        assert a == b
+    vecs = dict(_mk_corpus(rnd, range(130)))
+    vecs[20] = vecs[10]
+    vecs[33] = [2 * x for x in vecs[10]]
+    vecs[37] = [0.0] * DIM
+    corpus = spark.createDataFrame(sorted(vecs.items()), ["vec_id", "embedding"])
     qs = corpus.where(F.col("vec_id") < 4)
-    assert _serve(spark, sql_idx, qs) == _serve(spark, arrow_idx, qs)
+    if family == "ivf":
+        comp, cols = "lists", ["cent_id", "vec_id", "embedding"]
+    else:
+        comp, cols = "codes", ["id_bucket", "cent_id", "vec_id", "subspace", "code"]
+    got, served = {}, {}
+    for name, vec_dim in (("sql", None), ("arrow", DIM)):
+        path = str(tmp_path / name)
+        if family == "ivf":
+            similarity.build_ivf_index(
+                corpus, path, centroid_mod=10, vec_dim=vec_dim
+            )
+            served[name] = sorted(
+                map(tuple, similarity.ivf_topk_indexed(spark, path, qs).collect())
+            )
+        else:
+            similarity.build_ivfpq_index(
+                corpus, path, dim=DIM, m=M, centroid_mod=10, n_buckets=8,
+                vec_dim=vec_dim,
+            )
+            served[name] = _serve(spark, path, qs)
+        got[name] = sorted(
+            map(tuple, cow.read_component(spark, path, comp).select(*cols).collect())
+        )
+    assert got["sql"] == got["arrow"]
+    assert served["sql"] == served["arrow"]
+    cell = {r[cols.index("vec_id")]: r[cols.index("cent_id")] for r in got["sql"]}
+    assert (cell[33], cell[37]) == (10, 0), (cell[33], cell[37])
 
 
 @pytest.mark.slow

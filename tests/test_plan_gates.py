@@ -714,11 +714,11 @@ def test_r14_health_report_plan_budget(spark, tmp_path):
 def test_r15_pq_encode_is_aggregate_not_window(spark, sf_dir):
     """r15: pq_encode's per-(id, subspace) argmin is a map-side
     partial aggregate (min over (distance, code) structs — the
-    _ivfpq_encode kernel), NOT a row_number window: the window form
-    sort-shuffled the corpus × |codes| candidate frame, the aggregate
-    shuffles one row per (vector, subspace). A Window node here means
-    the backport regressed (guide §2.3 — aggregate before you
-    shuffle)."""
+    encode kernel PQ and IVFPQ share), NOT a row_number window: the
+    window form sort-shuffled the corpus × |codes| candidate frame, the
+    aggregate shuffles one row per (vector, subspace). A Window node
+    here means the backport regressed (guide §2.3 — aggregate before
+    you shuffle)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cb = similarity.pq_codebooks(emb, dim=64, m=8, target_codes=10)
     codes = similarity.pq_encode(emb, cb, dim=64, m=8)
