@@ -25,6 +25,10 @@ Portability rules that make the value-hash oracle hold:
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -81,8 +85,6 @@ def _drain_stream_to_memory(
     after stop(), so the returned ``spark.table(name)`` frame stays
     readable; staging files are only inputs to the already-finished
     micro-batch, never read again."""
-    import shutil
-
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -112,6 +114,24 @@ def _drain_stream_to_memory(
     for d in stage_dirs:
         shutil.rmtree(d, ignore_errors=True)
     return spark.table(name)
+
+
+# Process-cached fixture directories (the shared indexes and states
+# several entries serve from), keyed by (prefix, sf_dir): built once,
+# rebuilt when ``marker`` is gone from the directory, removed at exit.
+_FIXTURE_DIRS: dict[tuple[str, str], tempfile.TemporaryDirectory] = {}
+
+
+def _cached_dir(
+    prefix: str, sf_dir: str, marker: str, build: Callable[[str], object]
+) -> str:
+    tmp = _FIXTURE_DIRS.get((prefix, sf_dir))
+    if tmp is None or not os.path.exists(os.path.join(tmp.name, marker)):
+        tmp = tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
+        atexit.register(tmp.cleanup)
+        build(tmp.name)
+        _FIXTURE_DIRS[(prefix, sf_dir)] = tmp
+    return tmp.name
 
 
 # --- A. reference-surface relational queries ------------------------------
@@ -1026,8 +1046,6 @@ def q107_streaming_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both sides see all staged files in the first micro-batch; also
     set-checked against a Spark batch twin in
     test_streaming.test_stream_stream_conversions_match_batch...)."""
-    import tempfile
-
     from data_lake_with_spark_spark.streaming.events import (
         read_event_stream,
         stream_stream_conversions,
@@ -1401,8 +1419,6 @@ def q76_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     never drops an event), and the decimal-routed value sum makes
     total_value engine-exact; window bounds ship as strings for
     tz-independent canonicalization."""
-    import tempfile
-
     from data_lake_with_spark_spark.streaming.events import (
         read_event_stream,
         windowed_counts,
@@ -1455,8 +1471,6 @@ def q120_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     to its ⌈w/s⌉ = 2 containing windows via a generate_series unnest
     against the same epoch-aligned 30-minute buckets Spark's window()
     produces."""
-    import tempfile
-
     from data_lake_with_spark_spark.streaming.events import (
         read_event_stream,
         windowed_counts,
@@ -2381,8 +2395,6 @@ def q57_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev + gap starts a NEW session; also tuple-checked against a
     Spark batch twin in
     test_streaming.test_session_counts_match_batch_sessions)."""
-    import tempfile
-
     from data_lake_with_spark_spark.streaming.events import (
         read_event_stream,
         session_counts,
@@ -2818,8 +2830,6 @@ def q70_streaming_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode state equals the batch join + hourly rollup (also
     tuple-checked against a Spark batch twin in
     test_streaming.test_enriched_windowed_counts_match_batch)."""
-    import tempfile
-
     from data_lake_with_spark_spark.streaming.events import (
         enriched_windowed_counts,
         read_event_stream,
@@ -3170,17 +3180,15 @@ def q102_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline IVF over the same centroid set, which is the point: the
     index changes the I/O profile (nprobe/n_centroids of the corpus
     read), not the answer."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="dlws_ivf_idx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_idx_", ignore_cleanup_errors=True
+    ) as idx:
         build_ivf_index(emb, idx, centroid_mod=50)
         out = ivf_topk_indexed(
             spark, idx, emb.where(F.col("vec_id") < 10), k=5, nprobe=4
@@ -3188,8 +3196,6 @@ def q102_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before the index dir vanishes (localCheckpoint
         # pins the served result; the driver may collect lazily)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
 
 
 def q113_ann_ivf_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3238,17 +3244,15 @@ def q114_ann_ivf_indexed_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame
     to the inline budgeted IVF over the same centroid set; the index
     changes the I/O profile, not the answer (q102's pattern, now for
     the deployable config)."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="dlws_ivf_idxb_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_idxb_", ignore_cleanup_errors=True
+    ) as idx:
         build_ivf_index(emb, idx, target_centroids=40, vec_dim=64)
         out = ivf_topk_indexed(
             spark,
@@ -3259,8 +3263,6 @@ def q114_ann_ivf_indexed_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame
             vec_dim=64,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
 
 
 def q101_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3464,8 +3466,6 @@ def q84_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself — the oracle is a plain projection of events (survivor-set
     semantics also pinned in
     test_streaming.test_dedup_stream_collapses_redelivery)."""
-    import tempfile
-
     from data_lake_with_spark_spark.streaming.events import (
         dedup_stream,
         read_event_stream,
@@ -3637,9 +3637,6 @@ def q90_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of micro-batch splits — and equals the SQL argmax per
     user. Delete/update interleavings are value-checked against a
     batch twin in tests/test_streaming.py."""
-    import os
-    import tempfile
-
     from data_lake_with_spark_spark.sources.lakehouse import resolve_format
     from data_lake_with_spark_spark.streaming.events import (
         cdc_apply_stream,
@@ -3653,10 +3650,11 @@ def q90_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    root = tempfile.mkdtemp(prefix="dlws_cdc_")
-    stage = os.path.join(root, "in")
-    snap = os.path.join(root, "snap")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_cdc_", ignore_cleanup_errors=True
+    ) as root:
+        stage = os.path.join(root, "in")
+        snap = os.path.join(root, "snap")
         e.coalesce(2).write.mode("overwrite").json(stage)
         q = cdc_apply_stream(
             read_event_stream(spark, stage),
@@ -3683,10 +3681,6 @@ def q90_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "value",
         ).localCheckpoint(eager=True)
-    finally:
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
 
 
 O_Q90 = """
@@ -4789,39 +4783,27 @@ SELECT query_id, doc_id, score, rank FROM r WHERE rank <= 5
 """
 
 
-# Build-once-per-process BM25 index cache: (sf_dir, corpus variant) →
-# index dir. The retrieval family (q145/q151/q157 share the "hybrid"
-# corpus; q161 serves the q140 corpus) builds postings ONCE and every
-# subsequent probe reads |query vocab| buckets of it — the serving
-# shape a deployment actually runs (r7 verdict #1), vs each entry
-# re-exploding the corpus. Dirs live for the process; cleaned at exit.
-_BM25_IDX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _bm25_index(spark: SparkSession, sf_dir: str, variant: str) -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    key = (sf_dir, variant)
-    cached = _BM25_IDX_CACHE.get(key)
-    if cached is not None and os.path.isdir(f"{cached}/postings"):
-        return cached
-    d = _t(spark, sf_dir, "documents")
-    if variant == "q140":
-        corpus = d.where(F.col("doc_id") % 200 != 0)
-    elif variant == "hybrid":
-        corpus = d.where(
-            ~((F.col("doc_id") % 200 == 0) & (F.col("doc_id") < 5000))
-        )
-    else:
+    """Process-cached BM25 index per (sf_dir, corpus variant). The
+    retrieval family (q145/q151/q157 share the "hybrid" corpus; q161
+    serves the q140 corpus) builds postings ONCE and every subsequent
+    probe reads |query vocab| buckets of it — the serving shape a
+    deployment actually runs (r7 verdict #1), vs each entry
+    re-exploding the corpus."""
+    if variant not in ("q140", "hybrid"):
         raise ValueError(f"unknown BM25 index variant: {variant}")
-    path = tempfile.mkdtemp(prefix=f"dlws_bm25_{variant}_")
-    text.build_bm25_index(corpus, path)
-    _BM25_IDX_CACHE[key] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    def build(path: str) -> None:
+        d = _t(spark, sf_dir, "documents")
+        if variant == "q140":
+            corpus = d.where(F.col("doc_id") % 200 != 0)
+        else:
+            corpus = d.where(
+                ~((F.col("doc_id") % 200 == 0) & (F.col("doc_id") < 5000))
+            )
+        text.build_bm25_index(corpus, path)
+
+    return _cached_dir(f"dlws_bm25_{variant}_", sf_dir, "postings", build)
 
 
 def q161_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5244,9 +5226,6 @@ def q171_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the only viable index lifecycle (pair the
     bucket rewrite with dynamic partition overwrite for append-only
     batches; the upsert path must touch every bucket — docstring)."""
-    import shutil
-    import tempfile
-
     d = _t(spark, sf_dir, "documents")
     qs = d.where(F.col("doc_id") % 200 == 0).select(
         F.col("doc_id").alias("query_id"), "text"
@@ -5254,17 +5233,16 @@ def q171_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.where(F.col("doc_id") % 200 != 0)
     base = corpus.where(F.col("doc_id") % 5 != 0)
     delta = corpus.where(F.col("doc_id") % 5 == 0)
-    base_idx = tempfile.mkdtemp(prefix="dlws_bm25_base_")
-    out_idx = tempfile.mkdtemp(prefix="dlws_bm25_merged_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_bm25_base_", ignore_cleanup_errors=True
+    ) as base_idx, tempfile.TemporaryDirectory(
+        prefix="dlws_bm25_merged_", ignore_cleanup_errors=True
+    ) as out_idx:
         text.build_bm25_index(base, base_idx)
         text.merge_bm25_index(spark, base_idx, delta, out_idx)
         out = text.bm25_topk_indexed(spark, out_idx, qs, k=5)
         # pin before the index dirs vanish (the q102 pattern)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base_idx, ignore_errors=True)
-        shutil.rmtree(out_idx, ignore_errors=True)
 
 
 def q172_embedding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5471,9 +5449,6 @@ def q176_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merge_ivf_index raises on replacing one — the frozen-coarse-
     quantizer contract); the base keeps them, so the carried centroid
     set equals the full-corpus set the oracle derives."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
@@ -5484,9 +5459,11 @@ def q176_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same fixed-budget arithmetic as O_Q113: md = max(1, n // 40)
     md = max(1, emb.count() // 40)
     is_delta = (F.col("vec_id") % md != 0) & (F.col("vec_id") % 5 == 0)
-    base_idx = tempfile.mkdtemp(prefix="dlws_ivf_base_")
-    out_idx = tempfile.mkdtemp(prefix="dlws_ivf_merged_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_base_", ignore_cleanup_errors=True
+    ) as base_idx, tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_merged_", ignore_cleanup_errors=True
+    ) as out_idx:
         build_ivf_index(
             emb.where(~is_delta), base_idx, centroid_mod=md, vec_dim=64
         )
@@ -5503,9 +5480,6 @@ def q176_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # pin before the index dirs vanish (the q102 pattern)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base_idx, ignore_errors=True)
-        shutil.rmtree(out_idx, ignore_errors=True)
 
 
 def q177_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5520,9 +5494,6 @@ def q177_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered to surviving vectors while the centroid CTE stays
     unfiltered. Serve-after-delete is therefore hash-gated identical
     to rebuild-without-the-ids over the same centroid set."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         delete_from_ivf_index,
@@ -5530,9 +5501,11 @@ def q177_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    full_idx = tempfile.mkdtemp(prefix="dlws_ivf_full_")
-    del_idx = tempfile.mkdtemp(prefix="dlws_ivf_deleted_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_full_", ignore_cleanup_errors=True
+    ) as full_idx, tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_deleted_", ignore_cleanup_errors=True
+    ) as del_idx:
         build_ivf_index(emb, full_idx, target_centroids=40, vec_dim=64)
         delete_from_ivf_index(
             spark,
@@ -5549,9 +5522,6 @@ def q177_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_dim=64,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(full_idx, ignore_errors=True)
-        shutil.rmtree(del_idx, ignore_errors=True)
 
 
 def q178_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5565,9 +5535,6 @@ def q178_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus CTE minus the stripe, i.e. a from-scratch rebuild without
     the ids — hash-gates that deletes fully propagate to served
     scores (no ghost documents, no stale idf)."""
-    import shutil
-    import tempfile
-
     d = _t(spark, sf_dir, "documents")
     qs = d.where(F.col("doc_id") % 200 == 0).select(
         F.col("doc_id").alias("query_id"), "text"
@@ -5575,15 +5542,14 @@ def q178_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead = d.where(
         (F.col("doc_id") % 200 != 0) & (F.col("doc_id") % 7 == 3)
     ).select("doc_id")
-    del_idx = tempfile.mkdtemp(prefix="dlws_bm25_deleted_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_bm25_deleted_", ignore_cleanup_errors=True
+    ) as del_idx:
         text.delete_from_bm25_index(
             spark, _bm25_index(spark, sf_dir, "q140"), dead, del_idx
         )
         out = text.bm25_topk_indexed(spark, del_idx, qs, k=5)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(del_idx, ignore_errors=True)
 
 
 def q179_key_uniqueness_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6450,9 +6416,6 @@ def q192_ivf_manifest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-promoted maintenance serves indistinguishably from a
     from-scratch build over the merged corpus with the same frozen
     centroid set."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
@@ -6462,9 +6425,11 @@ def q192_ivf_manifest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     md = max(1, emb.count() // 40)
     is_delta = (F.col("vec_id") % md != 0) & (F.col("vec_id") % 5 == 0)
-    base_idx = tempfile.mkdtemp(prefix="dlws_ivfm_base_")
-    out_idx = tempfile.mkdtemp(prefix="dlws_ivfm_epoch1_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivfm_base_", ignore_cleanup_errors=True
+    ) as base_idx, tempfile.TemporaryDirectory(
+        prefix="dlws_ivfm_epoch1_", ignore_cleanup_errors=True
+    ) as out_idx:
         build_ivf_index(
             emb.where(~is_delta), base_idx, centroid_mod=md, vec_dim=64
         )
@@ -6488,9 +6453,6 @@ def q192_ivf_manifest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # manifest resolves into base_idx, so BOTH dirs must outlive
         # the lazy read
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_idx, ignore_errors=True)
-        shutil.rmtree(base_idx, ignore_errors=True)
 
 
 def q193_bm25_manifest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6502,9 +6464,6 @@ def q193_bm25_manifest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     cow.read_component and the oracle — O_Q178, the from-scratch
     rebuild without the ids — hash-gates that the metadata promotion
     loses nothing (no ghost documents, no stale idf)."""
-    import shutil
-    import tempfile
-
     d = _t(spark, sf_dir, "documents")
     qs = d.where(F.col("doc_id") % 200 == 0).select(
         F.col("doc_id").alias("query_id"), "text"
@@ -6512,8 +6471,9 @@ def q193_bm25_manifest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead = d.where(
         (F.col("doc_id") % 200 != 0) & (F.col("doc_id") % 7 == 3)
     ).select("doc_id")
-    del_idx = tempfile.mkdtemp(prefix="dlws_bm25m_epoch1_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_bm25m_epoch1_", ignore_cleanup_errors=True
+    ) as del_idx:
         text.delete_from_bm25_index(
             spark,
             _bm25_index(spark, sf_dir, "q140"),
@@ -6523,8 +6483,6 @@ def q193_bm25_manifest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = text.bm25_topk_indexed(spark, del_idx, qs, k=5)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(del_idx, ignore_errors=True)
 
 
 def q194_hits_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6584,32 +6542,20 @@ SELECT node, authority, hub, pos FROM (
 """
 
 
-_PQ_IDX_CACHE: dict[str, str] = {}
-
-
 def _pq_index(spark: SparkSession, sf_dir: str) -> str:
     """Process-cached full-corpus persisted PQ index (q118's exact
     config: target_codes=40 over the 64-d embeddings) — the
     build-once-serve-many shape q195/q197 exercise, mirroring the
     shared q140 BM25 index."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    cached = _PQ_IDX_CACHE.get(sf_dir)
-    if cached is not None and os.path.isdir(f"{cached}/codes"):
-        return cached
     from data_lake_with_spark_spark.operators.similarity import build_pq_index
 
-    emb = _t(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="dlws_pq_full_")
-    build_pq_index(
-        emb, path, dim=_PQ_DIM, m=_PQ_M, target_codes=40, n_buckets=32
-    )
-    _PQ_IDX_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    def build(path: str) -> None:
+        build_pq_index(
+            _t(spark, sf_dir, "embeddings"), path,
+            dim=_PQ_DIM, m=_PQ_M, target_codes=40, n_buckets=32,
+        )
+
+    return _cached_dir("dlws_pq_full_", sf_dir, "codes", build)
 
 
 def q195_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6641,9 +6587,6 @@ def q196_pq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     The delta excludes codebook-source ids (merge_pq_index raises on
     replacing one — the frozen-quantizer contract), so the carried
     codebooks equal the full-corpus seed set the oracle derives."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_pq_index,
         merge_pq_index,
@@ -6653,9 +6596,11 @@ def q196_pq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     md = max(1, emb.count() // 40)
     is_delta = (F.col("vec_id") % md != 0) & (F.col("vec_id") % 5 == 0)
-    base_idx = tempfile.mkdtemp(prefix="dlws_pq_base_")
-    out_idx = tempfile.mkdtemp(prefix="dlws_pq_merged_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_pq_base_", ignore_cleanup_errors=True
+    ) as base_idx, tempfile.TemporaryDirectory(
+        prefix="dlws_pq_merged_", ignore_cleanup_errors=True
+    ) as out_idx:
         build_pq_index(
             emb.where(~is_delta), base_idx,
             dim=_PQ_DIM, m=_PQ_M, centroid_mod=md, n_buckets=32,
@@ -6666,9 +6611,6 @@ def q196_pq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # pin before the index dirs vanish (the q102 pattern)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base_idx, ignore_errors=True)
-        shutil.rmtree(out_idx, ignore_errors=True)
 
 
 def q197_pq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6681,17 +6623,15 @@ def q197_pq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode CTE filtered to surviving vectors while the codebook CTE
     stays unfiltered — serve-after-delete is hash-gated identical to
     rebuild-without-the-ids over the same codebook set."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         delete_from_pq_index,
         pq_topk_indexed,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    del_idx = tempfile.mkdtemp(prefix="dlws_pq_deleted_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_pq_deleted_", ignore_cleanup_errors=True
+    ) as del_idx:
         delete_from_pq_index(
             spark,
             _pq_index(spark, sf_dir),
@@ -6702,8 +6642,6 @@ def q197_pq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, del_idx, emb.where(F.col("vec_id") < 10), k=5
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(del_idx, ignore_errors=True)
 
 
 # O_Q197: O_Q118 with the ENCODE restricted to surviving vectors while
@@ -6732,10 +6670,6 @@ def q198_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is O_Q113 VERBATIM: after merge→merge→compact→vacuum,
     top-k must remain bit-identical to a from-scratch build over the
     full corpus with the same frozen centroid set."""
-    import os
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         compact_ivf_index,
@@ -6747,8 +6681,9 @@ def q198_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     md = max(1, emb.count() // 40)
     is_delta = (F.col("vec_id") % md != 0) & (F.col("vec_id") % 5 == 0)
-    root = tempfile.mkdtemp(prefix="dlws_ivf_root_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_root_", ignore_cleanup_errors=True
+    ) as root:
         e0 = cow.new_epoch_path(spark, root)
         build_ivf_index(
             emb.where(~is_delta), e0, centroid_mod=md, vec_dim=64
@@ -6794,8 +6729,6 @@ def q198_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_dim=64,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q199_related_items_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6812,9 +6745,6 @@ def q199_related_items_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     from-scratch q188 rebuild over the full history — floor crossings
     included (the state stores UNFLOORED pair supports; min_count
     applies at derivation)."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.graph import (
         build_related_items_state,
         merge_related_items_state,
@@ -6823,9 +6753,11 @@ def q199_related_items_incremental(spark: SparkSession, sf_dir: str) -> DataFram
 
     li = _t(spark, sf_dir, "lineitem")
     is_batch = F.col("l_orderkey") % 8 == 0
-    base_p = tempfile.mkdtemp(prefix="dlws_ri_base_")
-    out_p = tempfile.mkdtemp(prefix="dlws_ri_merged_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ri_base_", ignore_cleanup_errors=True
+    ) as base_p, tempfile.TemporaryDirectory(
+        prefix="dlws_ri_merged_", ignore_cleanup_errors=True
+    ) as out_p:
         build_related_items_state(
             li.where(~is_batch),
             base_p,
@@ -6846,9 +6778,6 @@ def q199_related_items_incremental(spark: SparkSession, sf_dir: str) -> DataFram
         out = related_items_topk(spark, out_p)
         # pin before the state dirs vanish (the q102 pattern)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base_p, ignore_errors=True)
-        shutil.rmtree(out_p, ignore_errors=True)
 
 
 def q206_related_items_gdpr_delete(
@@ -6868,9 +6797,6 @@ def q206_related_items_gdpr_delete(
     without the tombstoned baskets: pairs whose support drops below
     min_count disappear, items erased entirely vanish as both `item`
     and `other`, partners re-rank."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.graph import (
         build_related_items_state,
         delete_from_related_items_state,
@@ -6883,9 +6809,11 @@ def q206_related_items_gdpr_delete(
         .select(F.col("l_orderkey").alias("basket"))
         .distinct()
     )
-    base_p = tempfile.mkdtemp(prefix="dlws_ri_full_")
-    out_p = tempfile.mkdtemp(prefix="dlws_ri_erased_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ri_full_", ignore_cleanup_errors=True
+    ) as base_p, tempfile.TemporaryDirectory(
+        prefix="dlws_ri_erased_", ignore_cleanup_errors=True
+    ) as out_p:
         build_related_items_state(
             li,
             base_p,
@@ -6898,9 +6826,6 @@ def q206_related_items_gdpr_delete(
         delete_from_related_items_state(spark, base_p, doomed, out_p)
         out = related_items_topk(spark, out_p)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base_p, ignore_errors=True)
-        shutil.rmtree(out_p, ignore_errors=True)
 
 
 # O_Q188 over the surviving baskets — the q206 pin: the erased
@@ -6931,9 +6856,6 @@ def q207_streaming_related_items(
     which the ingest verifies incidence-identical against the ledger
     and SKIPS (the merge itself raises on re-delivery — only the
     ingest can tell a retry from a source bug)."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.graph import (
         related_items_topk,
     )
@@ -6946,10 +6868,13 @@ def q207_streaming_related_items(
         F.col("l_orderkey").alias("basket"),
         F.col("l_partkey").alias("item"),
     )
-    stage = tempfile.mkdtemp(prefix="dlws_stream_ri_stage_")
-    root = tempfile.mkdtemp(prefix="dlws_stream_ri_root_")
-    cp = tempfile.mkdtemp(prefix="dlws_stream_ri_cp_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_stream_ri_stage_", ignore_cleanup_errors=True
+    ) as stage, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_ri_root_", ignore_cleanup_errors=True
+    ) as root, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_ri_cp_", ignore_cleanup_errors=True
+    ) as cp:
         # three deterministic batch files: whole orders per stripe
         # (disjoint basket ids — the stream-wide uniqueness contract)
         for part in range(3):
@@ -6969,10 +6894,6 @@ def q207_streaming_related_items(
         out = related_items_topk(spark, cow.get_current(spark, root))
         # pin before the lifecycle root vanishes (the q102 pattern)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(cp, ignore_errors=True)
 
 
 # --- IVFPQ: the composite index family (round 11b) -----------------
@@ -7056,28 +6977,15 @@ WHERE rank <= 5
 """
 
 
-_IVFPQ_IDX_CACHE: dict[str, str] = {}
-
-
 def _ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Process-cached full-corpus persisted IVFPQ index (budget-40
     coarse centroids, m=8 residual codebooks from the offset-1
     stripe) — the build-once-serve-many shape q200/q202 exercise,
     mirroring the shared q140/q195 indexes."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    cached = _IVFPQ_IDX_CACHE.get(sf_dir)
-    if cached is not None and os.path.isdir(f"{cached}/codes"):
-        return cached
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivfpq_index,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="dlws_ivfpq_full_")
     # n_buckets=8 is oracle-fixture sizing: leaf-dir count is
     # n_buckets × n_cells (~8×40 here); production sizes buckets with
     # the corpus (build_ivfpq_index docstring) — the bucket count
@@ -7085,13 +6993,13 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     # vec_dim routes assignment through the Arrow argmax kernel —
     # bit-identical to the min_by kernel (test_ivfpq_arrow_assignment_parity)
     # and measured 33% faster on this build (MEASUREMENTS_r13 §11)
-    build_ivfpq_index(
-        emb, path, dim=_PQ_DIM, m=_PQ_M, target_centroids=40,
-        n_buckets=8, vec_dim=64,
-    )
-    _IVFPQ_IDX_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    def build(path: str) -> None:
+        build_ivfpq_index(
+            _t(spark, sf_dir, "embeddings"), path, dim=_PQ_DIM, m=_PQ_M,
+            target_centroids=40, n_buckets=8, vec_dim=64,
+        )
+
+    return _cached_dir("dlws_ivfpq_full_", sf_dir, "codes", build)
 
 
 def q200_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7131,9 +7039,6 @@ def q201_ivfpq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stripes (merge_ivfpq_index raises on replacing either), so the
     carried quantizers equal the full-corpus seed sets the oracle
     derives."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivfpq_index,
         ivfpq_topk_indexed,
@@ -7147,9 +7052,11 @@ def q201_ivfpq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("vec_id") % md != 1)
         & (F.col("vec_id") % 5 == 0)
     )
-    base_idx = tempfile.mkdtemp(prefix="dlws_ivfpq_base_")
-    out_idx = tempfile.mkdtemp(prefix="dlws_ivfpq_merged_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivfpq_base_", ignore_cleanup_errors=True
+    ) as base_idx, tempfile.TemporaryDirectory(
+        prefix="dlws_ivfpq_merged_", ignore_cleanup_errors=True
+    ) as out_idx:
         build_ivfpq_index(
             emb.where(~is_delta), base_idx,
             dim=_PQ_DIM, m=_PQ_M, centroid_mod=md, n_buckets=8,
@@ -7163,9 +7070,6 @@ def q201_ivfpq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # pin before the index dirs vanish (the q102 pattern)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base_idx, ignore_errors=True)
-        shutil.rmtree(out_idx, ignore_errors=True)
 
 
 def q202_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7178,17 +7082,15 @@ def q202_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving vectors while the centroid and codebook CTEs stay
     unfiltered — serve-after-delete is hash-gated identical to a
     rebuild without the ids over the same seed sets."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         delete_from_ivfpq_index,
         ivfpq_topk_indexed,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    del_idx = tempfile.mkdtemp(prefix="dlws_ivfpq_deleted_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivfpq_deleted_", ignore_cleanup_errors=True
+    ) as del_idx:
         delete_from_ivfpq_index(
             spark,
             _ivfpq_index(spark, sf_dir),
@@ -7199,8 +7101,6 @@ def q202_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, del_idx, emb.where(F.col("vec_id") < 10), k=5, nprobe=4
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(del_idx, ignore_errors=True)
 
 
 def q203_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7278,9 +7178,6 @@ def q204_streaming_index_maintenance(
     the streaming trigger and the epoch lifecycle). Replay safety:
     foreachBatch is at-least-once, and upsert-merge makes a replayed
     batch a no-op on the resolved view."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.sources import cow
     from data_lake_with_spark_spark.streaming.events import (
         DOCUMENT_STREAM_SCHEMA,
@@ -7291,10 +7188,13 @@ def q204_streaming_index_maintenance(
     corpus = d.where(F.col("doc_id") % 200 != 0).select(
         "doc_id", "text", "lang", "source"
     )
-    stage = tempfile.mkdtemp(prefix="dlws_stream_idx_stage_")
-    root = tempfile.mkdtemp(prefix="dlws_stream_idx_root_")
-    cp = tempfile.mkdtemp(prefix="dlws_stream_idx_cp_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_stream_idx_stage_", ignore_cleanup_errors=True
+    ) as stage, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_idx_root_", ignore_cleanup_errors=True
+    ) as root, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_idx_cp_", ignore_cleanup_errors=True
+    ) as cp:
         # three deterministic batch files: one file per doc_id stripe
         # (disjoint stripes — final index is order-invariant)
         for part in range(3):
@@ -7316,10 +7216,6 @@ def q204_streaming_index_maintenance(
         )
         # pin before the index root vanishes (the q102 pattern)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(cp, ignore_errors=True)
 
 
 def q205_streaming_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7339,9 +7235,6 @@ def q205_streaming_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense side). Staged as PARQUET, not JSON — float values must
     round-trip bit-exactly or the oracle's cast-to-double cosines
     diverge in ulps."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         ivf_topk_indexed,
     )
@@ -7353,10 +7246,13 @@ def q205_streaming_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     md = max(1, emb.count() // 40)
     corpus = emb.select("vec_id", "embedding")
-    stage = tempfile.mkdtemp(prefix="dlws_stream_vidx_stage_")
-    root = tempfile.mkdtemp(prefix="dlws_stream_vidx_root_")
-    cp = tempfile.mkdtemp(prefix="dlws_stream_vidx_cp_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_stream_vidx_stage_", ignore_cleanup_errors=True
+    ) as stage, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_vidx_root_", ignore_cleanup_errors=True
+    ) as root, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_vidx_cp_", ignore_cleanup_errors=True
+    ) as cp:
         is_stripe = F.col("vec_id") % md == 0
         batches = [
             corpus.where(is_stripe | (F.col("vec_id") % 3 == 0)),
@@ -7367,8 +7263,6 @@ def q205_streaming_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # be the bootstrap (it carries the centroid stripe) — stamp
         # explicit ascending mtimes so a same-millisecond write can
         # never deliver a non-stripe batch first (review finding)
-        import os
-
         stamped: set[str] = set()
         for i, b in enumerate(batches):
             b.coalesce(1).write.mode("append").parquet(stage)
@@ -7395,10 +7289,6 @@ def q205_streaming_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_dim=64,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(cp, ignore_errors=True)
 
 
 # O_Q202: O_Q200 with the ENCODE restricted to surviving vectors while
@@ -7434,9 +7324,6 @@ def q208_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrain) and merge-after-retrain are gated in
     tests/test_retrain_index.py; recall@5 before/after is MEASURED on
     the drifted probe (tools/pq_ri_probe.py, MEASUREMENTS_r12)."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivfpq_index,
         delete_from_ivfpq_index,
@@ -7447,8 +7334,9 @@ def q208_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     survivors = emb.where(F.col("vec_id") % 9 != 4)
-    root = tempfile.mkdtemp(prefix="dlws_ivfpq_retrain_root_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivfpq_retrain_root_", ignore_cleanup_errors=True
+    ) as root:
         e0 = cow.new_epoch_path(spark, root)
         build_ivfpq_index(
             emb, e0, dim=_PQ_DIM, m=_PQ_M, target_centroids=40,
@@ -7477,8 +7365,6 @@ def q208_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             nprobe=4,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # O_Q208: O_Q200 with EVERY embeddings scan restricted to the
@@ -7569,10 +7455,6 @@ def q210_streaming_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariance, composite side). Replay no-ops, fresh-stripe raises
     (both stripes), and retrain-under-ingest semantics are gated in
     tests/test_streaming.py."""
-    import os
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         ivfpq_topk_indexed,
     )
@@ -7584,10 +7466,13 @@ def q210_streaming_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     md = max(1, emb.count() // 40)
     corpus = emb.select("vec_id", "embedding")
-    stage = tempfile.mkdtemp(prefix="dlws_stream_pqidx_stage_")
-    root = tempfile.mkdtemp(prefix="dlws_stream_pqidx_root_")
-    cp = tempfile.mkdtemp(prefix="dlws_stream_pqidx_cp_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_stream_pqidx_stage_", ignore_cleanup_errors=True
+    ) as stage, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_pqidx_root_", ignore_cleanup_errors=True
+    ) as root, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_pqidx_cp_", ignore_cleanup_errors=True
+    ) as cp:
         is_frozen = (F.col("vec_id") % md == 0) | (F.col("vec_id") % md == 1)
         batches = [
             corpus.where(is_frozen | (F.col("vec_id") % 3 == 0)),
@@ -7622,10 +7507,6 @@ def q210_streaming_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             nprobe=4,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(cp, ignore_errors=True)
 
 
 def q211_pq_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7689,22 +7570,18 @@ def q212_ivf_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the retrain trigger. Built over the budget-40 IVF layout (q113's
     config); the oracle re-derives occupancy and residuals from
     O_Q113's assignment CTE."""
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         ivf_staleness_report,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="dlws_ivf_stale_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_ivf_stale_", ignore_cleanup_errors=True
+    ) as idx:
         build_ivf_index(emb, idx, target_centroids=40, vec_dim=64)
         out = ivf_staleness_report(spark, idx, sample_mod=10)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
 
 
 # O_Q212: O_Q113's assignment pipeline, then occupancy + sampled
@@ -7751,10 +7628,6 @@ def q213_streaming_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest chain is oracled by O_Q118 VERBATIM (batch-split
     invariance, compressed-flat-scan side). Replay no-ops and
     fresh-stripe raises are gated in tests/test_streaming.py."""
-    import os
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         pq_topk_indexed,
     )
@@ -7766,10 +7639,13 @@ def q213_streaming_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     md = max(1, emb.count() // 40)
     corpus = emb.select("vec_id", "embedding")
-    stage = tempfile.mkdtemp(prefix="dlws_stream_pq_stage_")
-    root = tempfile.mkdtemp(prefix="dlws_stream_pq_root_")
-    cp = tempfile.mkdtemp(prefix="dlws_stream_pq_cp_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dlws_stream_pq_stage_", ignore_cleanup_errors=True
+    ) as stage, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_pq_root_", ignore_cleanup_errors=True
+    ) as root, tempfile.TemporaryDirectory(
+        prefix="dlws_stream_pq_cp_", ignore_cleanup_errors=True
+    ) as cp:
         is_seed = F.col("vec_id") % md == 0
         batches = [
             corpus.where(is_seed | (F.col("vec_id") % 3 == 0)),
@@ -7801,10 +7677,6 @@ def q213_streaming_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=5,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(cp, ignore_errors=True)
 
 
 def q141_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8857,9 +8729,6 @@ FROM doc d, ts
 """
 
 
-_RI_STATE_CACHE: dict[str, str] = {}
-
-
 def _ri_state(spark: SparkSession, sf_dir: str) -> str:
     """Process-cached full-history related-items state (k=5,
     min_count=2, n_buckets=32) — the build-once-serve-many fixture
@@ -8867,27 +8736,17 @@ def _ri_state(spark: SparkSession, sf_dir: str) -> str:
     prices the REPORT's scans, not a per-invocation state rebuild
     (the build op itself is priced by q199/q206, which maintain
     fresh states by design)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    cached = _RI_STATE_CACHE.get(sf_dir)
-    if cached is not None and os.path.isdir(f"{cached}/pairs"):
-        return cached
     from data_lake_with_spark_spark.operators.graph import (
         build_related_items_state,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
-    path = tempfile.mkdtemp(prefix="dlws_ri_health_")
-    build_related_items_state(
-        li, path, basket_col="l_orderkey", item_col="l_partkey",
-        k=5, min_count=2, n_buckets=32,
-    )
-    _RI_STATE_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    def build(path: str) -> None:
+        build_related_items_state(
+            _t(spark, sf_dir, "lineitem"), path, basket_col="l_orderkey",
+            item_col="l_partkey", k=5, min_count=2, n_buckets=32,
+        )
+
+    return _cached_dir("dlws_ri_health_", sf_dir, "pairs", build)
 
 
 def q215_related_items_health(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8957,9 +8816,6 @@ FROM pa, la, ia, ta
 """
 
 
-_MAINT_ROOT_CACHE: dict[str, str] = {}
-
-
 def _maint_root(spark: SparkSession, sf_dir: str) -> str:
     """Process-cached BM25 lifecycle root in the q216 decision state:
     build the doc_id%12=1 stripe as epoch 0 with its health row
@@ -8971,50 +8827,41 @@ def _maint_root(spark: SparkSession, sf_dir: str) -> str:
     the OPERATOR q216 prices is cow.maintenance_plan's read of it
     (lifecycle_report + pinned-baseline drift — the nightly call),
     the q140/q200 cached-fixture shape."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from data_lake_with_spark_spark.operators.similarity import (
         write_staleness_baseline,
     )
     from data_lake_with_spark_spark.sources import cow
 
-    cached = _MAINT_ROOT_CACHE.get(sf_dir)
-    if cached is not None and os.path.isfile(f"{cached}/current.json"):
-        return cached
-    d = _t(spark, sf_dir, "documents")
-    a = d.where(F.col("doc_id") % 12 == 1).select("doc_id", "text")
-    b = d.where(F.col("doc_id") % 12 == 5).select(
-        "doc_id", F.concat_ws(" ", "text", "text", "text").alias("text")
-    )
-    c = d.where(F.col("doc_id") % 12 == 9).select(
-        "doc_id", F.lit("zq zq zq").alias("text")
-    )
-    root = tempfile.mkdtemp(prefix="dlws_maint_plan_")
-    e0 = cow.new_epoch_path(spark, root)
-    text.build_bm25_index(a, e0, n_buckets=8)
-    cow.set_current(spark, root, e0, expected=None)
-    write_staleness_baseline(
-        spark, root, text.bm25_staleness_report(spark, root)
-    )
-    e1 = cow.new_epoch_path(spark, root, label="merge")
-    text.merge_bm25_index(
-        spark, cow.get_current(spark, root), b, e1, layout="manifest"
-    )
-    cow.set_current(spark, root, e1, expected=e0)
-    e2 = cow.new_epoch_path(spark, root, label="compact")
-    text.compact_bm25_index(spark, cow.get_current(spark, root), e2)
-    cow.set_current(spark, root, e2, expected=e1)  # NO vacuum: debt
-    e3 = cow.new_epoch_path(spark, root, label="merge2")
-    text.merge_bm25_index(
-        spark, cow.get_current(spark, root), c, e3, layout="manifest"
-    )
-    cow.set_current(spark, root, e3, expected=e2)
-    _MAINT_ROOT_CACHE[sf_dir] = root
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
+    def build(root: str) -> None:
+        d = _t(spark, sf_dir, "documents")
+        a = d.where(F.col("doc_id") % 12 == 1).select("doc_id", "text")
+        b = d.where(F.col("doc_id") % 12 == 5).select(
+            "doc_id", F.concat_ws(" ", "text", "text", "text").alias("text")
+        )
+        c = d.where(F.col("doc_id") % 12 == 9).select(
+            "doc_id", F.lit("zq zq zq").alias("text")
+        )
+        e0 = cow.new_epoch_path(spark, root)
+        text.build_bm25_index(a, e0, n_buckets=8)
+        cow.set_current(spark, root, e0, expected=None)
+        write_staleness_baseline(
+            spark, root, text.bm25_staleness_report(spark, root)
+        )
+        e1 = cow.new_epoch_path(spark, root, label="merge")
+        text.merge_bm25_index(
+            spark, cow.get_current(spark, root), b, e1, layout="manifest"
+        )
+        cow.set_current(spark, root, e1, expected=e0)
+        e2 = cow.new_epoch_path(spark, root, label="compact")
+        text.compact_bm25_index(spark, cow.get_current(spark, root), e2)
+        cow.set_current(spark, root, e2, expected=e1)  # NO vacuum: debt
+        e3 = cow.new_epoch_path(spark, root, label="merge2")
+        text.merge_bm25_index(
+            spark, cow.get_current(spark, root), c, e3, layout="manifest"
+        )
+        cow.set_current(spark, root, e3, expected=e2)
+
+    return _cached_dir("dlws_maint_plan_", sf_dir, "current.json", build)
 
 
 def q216_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9096,60 +8943,118 @@ FROM cur, base
 """
 
 
-_REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+# Driver order. The driver value-checks the first 50 entries against
+# their DuckDB oracles (the verification window); every operator
+# family keeps at least one entry inside it. Entries past the window
+# stay oracled and are value-checked by tools/check_oracle.py.
+_REGISTRY: dict[str, tuple[QueryFn, str]] = {
     "q01_pricing_summary": (q01_pricing_summary, O_Q01),
-    "q02_not_in_subquery": (q02_not_in_subquery, O_Q02),
-    "q03_distinct_flags": (q03_distinct_flags, O_Q03),
-    "q04_join_composite": (q04_join_composite, O_Q04),
-    "q05_deterministic_sample": (q05_deterministic_sample, O_Q05),
-    "q06_topk_orders": (q06_topk_orders, O_Q06),
-    "q07_latest_order_per_customer": (q07_latest_order_per_customer, O_Q07),
-    "q08_semi_join": (q08_semi_join, O_Q08),
-    "q09_anti_join": (q09_anti_join, O_Q09),
-    "q10_orders_except": (q10_orders_except, O_Q10),
-    "q11_repetition_stats": (q11_repetition_stats, O_Q11),
+    "q188_related_items": (q188_related_items, O_Q188),
+    # Streaming related-items maintenance: epochs streamed in must
+    # serve the from-scratch q188 build bit-for-bit.
+    "q207_streaming_related_items": (q207_streaming_related_items, O_Q188),
+    # Same oracle as q118: the persisted/merged PQ code layout must
+    # serve bit-identical ADC distances to the inline from-scratch
+    # encode (the q176/q171 contract, third index family).
+    "q195_pq_indexed": (q195_pq_indexed, O_Q118),
+    # GDPR erasure on the related-items state: the inverse of q199's
+    # merge; pinned to O_Q188 over the surviving baskets.
+    "q206_related_items_gdpr_delete": (
+        q206_related_items_gdpr_delete,
+        O_Q206,
+    ),
+    "q138_dedup_report": (q138_dedup_report, O_Q138),
+    "q187_label_propagation": (q187_label_propagation, O_Q187),
+    "q170_mixture_plan": (q170_mixture_plan, O_Q170),
+    "q203_ivfpq_rerank": (q203_ivfpq_rerank, O_Q203),
+    "q197_pq_delete": (q197_pq_delete, O_Q197),
+    # Same oracle as q140/q161/q171: an index maintained as streaming
+    # manifest epochs must serve the batch build's exact scores.
+    "q204_streaming_index_maintenance": (
+        q204_streaming_index_maintenance,
+        O_Q140,
+    ),
     "q12_flagship_enrichment": (q12_flagship_enrichment, O_Q12),
-    "q13_ann_ivf": (q13_ann_ivf, O_Q13),
-    "q14_salted_aggregation": (q14_salted_aggregation, O_Q14),
-    "q15_profile_columns": (q15_profile_columns, O_Q15),
-    "q16_union_users": (q16_union_users, O_Q16),
-    "q17_sessionize": (q17_sessionize, O_Q17),
-    "q18_minhash_dedup": (q18_minhash_dedup, O_Q18),
-    "q19_time_dimension": (q19_time_dimension, O_Q19),
+    # Same oracle as q113: after merge->merge->compact->vacuum under
+    # the current-pointer lifecycle, serving must remain a from-scratch
+    # rebuild bit-for-bit.
+    "q198_index_lifecycle": (q198_index_lifecycle, O_Q113),
+    "q144_skew_report": (q144_skew_report, O_Q144),
+    "q143_slice_drift": (q143_slice_drift, O_Q143),
+    "q139_decontaminate": (q139_decontaminate, O_Q139),
+    "q157_context_assembly": (q157_context_assembly, O_Q157),
+    # Staleness report (the when-to-retrain signal): occupancy +
+    # sampled ADC reconstruction error read off the persisted index
+    # must equal the O_Q200-pipeline ground-truth derivation.
+    "q209_ivfpq_staleness": (q209_ivfpq_staleness, O_Q209),
+    "q190_pagerank_weighted": (q190_pagerank_weighted, O_Q190),
     "q20_string_time_join": (q20_string_time_join, O_Q20),
-    "q21_exact_dedup": (q21_exact_dedup, O_Q21),
-    "q22_minhash_signatures": (q22_minhash_signatures, O_Q22),
-    "q23_minhash_pairs": (q23_minhash_pairs, O_Q23),
-    "q24_jaccard_verify": (q24_jaccard_verify, O_Q24),
-    "q25_simhash": (q25_simhash, O_Q25),
-    "q26_embedding_topk": (q26_embedding_topk, O_Q26),
-    "q27_ann_lsh": (q27_ann_lsh, O_Q27),
-    "q28_lang_id": (q28_lang_id, O_Q28),
-    "q29_quality_score": (q29_quality_score, O_Q29),
-    "q30_token_stats": (q30_token_stats, O_Q30),
-    "q31_fingerprint": (q31_fingerprint, O_Q31),
-    "q32_sql_entrypoint": (q32_sql_entrypoint, O_Q32),
-    "q33_dedup_clusters": (q33_dedup_clusters, O_Q33),
-    "q34_stratified_sample": (q34_stratified_sample, O_Q34),
-    "q35_left_join_coverage": (q35_left_join_coverage, O_Q35),
-    "q36_pii_scrub": (q36_pii_scrub, O_Q36),
-    "q37_rollup_revenue": (q37_rollup_revenue, O_Q37),
-    "q38_cube_orders": (q38_cube_orders, O_Q38),
-    "q39_pivot_returnflag": (q39_pivot_returnflag, O_Q39),
-    "q40_grouping_sets": (q40_grouping_sets, O_Q40),
-    "q41_kmeans_step": (q41_kmeans_step, O_Q41),
-    "q42_span_dedup": (q42_span_dedup, O_Q42),
-    "q43_percentiles": (q43_percentiles, O_Q43),
-    "q44_asof_join": (q44_asof_join, O_Q44),
-    "q45_range_join": (q45_range_join, O_Q45),
-    "q46_embedding_near_dup": (q46_embedding_near_dup, O_Q46),
-    "q47_embedding_near_dup_lsh": (q47_embedding_near_dup_lsh, O_Q47),
-    "q48_token_jaccard": (q48_token_jaccard, O_Q48),
-    "q49_string_functions": (q49_string_functions, O_Q49),
-    "q50_ngram_contamination": (q50_ngram_contamination, O_Q50),
+    "q191_label_propagation_weighted": (
+        q191_label_propagation_weighted,
+        O_Q191,
+    ),
+    # Same oracle as q140: the persisted-index serving path returns
+    # identical scores over the same corpus (q102-vs-q13 pattern).
+    "q161_bm25_indexed": (q161_bm25_indexed, O_Q140),
+    # PQ staleness: codebook utilization + sampled recon error off
+    # the persisted index must equal the O_Q118-pipeline derivation.
+    "q211_pq_staleness": (q211_pq_staleness, O_Q211),
+    # Streaming plain-PQ maintenance: epochs streamed in (bootstrap
+    # trains the frozen codebooks) must serve the from-scratch ADC
+    # build bit-for-bit — O_Q118 verbatim (the q196 pin, streamed).
+    "q213_streaming_pq": (q213_streaming_pq, O_Q118),
+    "q155_multitouch_attribution": (q155_multitouch_attribution, O_Q155),
+    "q201_ivfpq_merge": (q201_ivfpq_merge, O_Q200),
+    "q140_bm25_retrieval": (q140_bm25_retrieval, O_Q140),
+    # Streaming IVFPQ maintenance: epochs streamed in (bootstrap
+    # trains BOTH frozen quantizers) must serve the from-scratch
+    # build bit-for-bit — O_Q200 verbatim.
+    "q210_streaming_ivfpq": (q210_streaming_ivfpq, O_Q200),
+    "q175_pagerank": (q175_pagerank, O_Q175),
+    "q177_ivf_delete": (q177_ivf_delete, O_Q177),
+    "q156_filter_funnel": (q156_filter_funnel, O_Q156),
+    # Same oracle as q113/q176/q192: the streamed-in IVF epochs must
+    # serve the from-scratch budget-40 build bit-for-bit.
+    "q205_streaming_vector_index": (q205_streaming_vector_index, O_Q113),
+    # Maintenance decision row: drift ratio re-derived from source,
+    # lifecycle counts pinned by the fixture's op sequence.
+    "q216_maintenance_plan": (q216_maintenance_plan, O_Q216),
+    "q130_length_batches": (q130_length_batches, O_Q130),
+    "q193_bm25_manifest_delete": (q193_bm25_manifest_delete, O_Q178),
+    "q182_fd_audit": (q182_fd_audit, O_Q182),
+    "q142_content_manifest": (q142_content_manifest, O_Q142),
+    "q141_vocab_coverage": (q141_vocab_coverage, O_Q141),
+    "q128_canonical_per_cluster": (q128_canonical_per_cluster, O_Q128),
+    # IVF staleness: occupancy + sampled residual norms off the
+    # persisted layout must equal the O_Q113 assignment derivation.
+    "q212_ivf_staleness": (q212_ivf_staleness, O_Q212),
+    # IVFPQ — the composite (pruning × compression) index family: the
+    # persisted/merged layouts pin to the full-pipeline SQL rebuild;
+    # the deleted layout to its survivor-filtered derivation.
+    "q200_ivfpq_indexed": (q200_ivfpq_indexed, O_Q200),
+    "q186_triangle_census": (q186_triangle_census, O_Q186),
+    # Same oracle as q188: the delta-maintained serving table must
+    # equal the from-scratch rebuild over the full basket history.
+    "q199_related_items_incremental": (
+        q199_related_items_incremental,
+        O_Q188,
+    ),
+    "q152_asof_nearest": (q152_asof_nearest, O_Q152),
+    "q158_key_uniqueness": (q158_key_uniqueness, O_Q158),
+    # Related-items state health: report off the persisted state must
+    # equal the O_Q188-pipeline derivation (unfloored supports +
+    # floored serving coverage).
+    "q215_related_items_health": (q215_related_items_health, O_Q215),
+    # BM25 index health: every column of the report read off the
+    # persisted index must equal the from-corpus derivation.
+    "q214_bm25_staleness": (q214_bm25_staleness, O_Q214),
+    "q202_ivfpq_delete": (q202_ivfpq_delete, O_Q202),
+    "q129_incremental_dedup": (q129_incremental_dedup, O_Q129),
+    # Quantizer retrain: the drifted lifecycle root re-trained on the
+    # surviving corpus must serve the survivors-only rebuild.
+    "q208_ivfpq_retrain": (q208_ivfpq_retrain, O_Q208),
     "q51_running_total": (q51_running_total, O_Q51),
     "q52_revenue_filter": (q52_revenue_filter, O_Q52),
-    "q53_approx_distinct": (q53_approx_distinct, O_Q53),
     "q54_region_rollup": (q54_region_rollup, O_Q54),
     "q55_count_lineitem": (q55_count_lineitem, O_Q55),
     "q56_cascade_rollup": (q56_cascade_rollup, O_Q56),
@@ -9173,7 +9078,6 @@ _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "q74_dense_rank": (q74_dense_rank, O_Q74),
     "q75_ntile": (q75_ntile, O_Q75),
     "q76_streaming_hourly": (q76_streaming_hourly, O_Q76),
-    "q77_multimodal_features": (q77_multimodal_features, O_Q77),
     "q78_above_nation_avg": (q78_above_nation_avg, O_Q78),
     "q79_distinct_users": (q79_distinct_users, O_Q79),
     "q80_orders_intersect": (q80_orders_intersect, O_Q80),
@@ -9186,909 +9090,149 @@ _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "q87_chunk_documents": (q87_chunk_documents, O_Q87),
     "q88_pack_sequences": (q88_pack_sequences, O_Q88),
     "q89_tfidf_terms": (q89_tfidf_terms, O_Q89),
-    "q90_streaming_cdc": (q90_streaming_cdc, O_Q90),
     "q91_dedup_clusters_distributed": (q91_dedup_clusters_distributed, O_Q33),
     "q92_token_jaccard_ppjoin": (q92_token_jaccard_ppjoin, O_Q48),
     "q93_balance_languages": (q93_balance_languages, O_Q93),
     "q94_zorder_values": (q94_zorder_values, O_Q94),
-    "q95_funnel_conversion": (q95_funnel_conversion, O_Q95),
-    "q96_scd2_user_state": (q96_scd2_user_state, O_Q96),
-    "q97_quantize_embeddings": (q97_quantize_embeddings, O_Q97),
-    "q98_column_correlations": (q98_column_correlations, O_Q98),
-    "q99_event_transitions": (q99_event_transitions, O_Q99),
-    "q100_dedup_clusters_two_phase": (q100_dedup_clusters_two_phase, O_Q33),
-    "q101_data_quality": (q101_data_quality, O_Q101),
-    "q102_ann_ivf_indexed": (q102_ann_ivf_indexed, O_Q13),
     "q103_local_supplier_volume": (q103_local_supplier_volume, O_Q103),
-    "q104_temperature_rebalance": (q104_temperature_rebalance, O_Q104),
-    "q105_quantized_topk": (q105_quantized_topk, O_Q105),
     "q106_ann_lsh_multiprobe": (q106_ann_lsh_multiprobe, O_Q106),
-    "q107_streaming_conversions": (q107_streaming_conversions, O_Q107),
-    "q108_incremental_aggregate": (q108_incremental_aggregate, O_Q108),
-    "q109_train_val_test_split": (q109_train_val_test_split, O_Q109),
+    "q10_orders_except": (q10_orders_except, O_Q10),
+    "q35_left_join_coverage": (q35_left_join_coverage, O_Q35),
+    "q38_cube_orders": (q38_cube_orders, O_Q38),
+    "q39_pivot_returnflag": (q39_pivot_returnflag, O_Q39),
+    "q49_string_functions": (q49_string_functions, O_Q49),
+    "q02_not_in_subquery": (q02_not_in_subquery, O_Q02),
+    "q06_topk_orders": (q06_topk_orders, O_Q06),
+    "q16_union_users": (q16_union_users, O_Q16),
+    "q34_stratified_sample": (q34_stratified_sample, O_Q34),
+    "q43_percentiles": (q43_percentiles, O_Q43),
+    "q05_deterministic_sample": (q05_deterministic_sample, O_Q05),
+    "q23_minhash_pairs": (q23_minhash_pairs, O_Q23),
+    "q30_token_stats": (q30_token_stats, O_Q30),
+    "q03_distinct_flags": (q03_distinct_flags, O_Q03),
+    "q09_anti_join": (q09_anti_join, O_Q09),
+    "q14_salted_aggregation": (q14_salted_aggregation, O_Q14),
+    "q25_simhash": (q25_simhash, O_Q25),
+    "q31_fingerprint": (q31_fingerprint, O_Q31),
+    "q32_sql_entrypoint": (q32_sql_entrypoint, O_Q32),
+    "q53_approx_distinct": (q53_approx_distinct, O_Q53),
+    "q15_profile_columns": (q15_profile_columns, O_Q15),
+    "q17_sessionize": (q17_sessionize, O_Q17),
     "q110_sample_per_group": (q110_sample_per_group, O_Q110),
     "q111_stopword_stats": (q111_stopword_stats, O_Q111),
-    "q113_ann_ivf_budgeted": (q113_ann_ivf_budgeted, O_Q113),
-    "q114_ann_ivf_indexed_budgeted": (q114_ann_ivf_indexed_budgeted, O_Q113),
+    "q29_quality_score": (q29_quality_score, O_Q29),
+    "q37_rollup_revenue": (q37_rollup_revenue, O_Q37),
+    "q41_kmeans_step": (q41_kmeans_step, O_Q41),
+    "q42_span_dedup": (q42_span_dedup, O_Q42),
+    "q45_range_join": (q45_range_join, O_Q45),
+    "q46_embedding_near_dup": (q46_embedding_near_dup, O_Q46),
+    "q26_embedding_topk": (q26_embedding_topk, O_Q26),
+    "q47_embedding_near_dup_lsh": (q47_embedding_near_dup_lsh, O_Q47),
+    "q48_token_jaccard": (q48_token_jaccard, O_Q48),
+    "q98_column_correlations": (q98_column_correlations, O_Q98),
+    "q99_event_transitions": (q99_event_transitions, O_Q99),
+    "q104_temperature_rebalance": (q104_temperature_rebalance, O_Q104),
+    "q40_grouping_sets": (q40_grouping_sets, O_Q40),
+    "q105_quantized_topk": (q105_quantized_topk, O_Q105),
+    "q07_latest_order_per_customer": (q07_latest_order_per_customer, O_Q07),
+    "q08_semi_join": (q08_semi_join, O_Q08),
+    "q95_funnel_conversion": (q95_funnel_conversion, O_Q95),
+    "q36_pii_scrub": (q36_pii_scrub, O_Q36),
+    "q33_dedup_clusters": (q33_dedup_clusters, O_Q33),
+    "q101_data_quality": (q101_data_quality, O_Q101),
+    "q102_ann_ivf_indexed": (q102_ann_ivf_indexed, O_Q13),
+    "q27_ann_lsh": (q27_ann_lsh, O_Q27),
+    "q97_quantize_embeddings": (q97_quantize_embeddings, O_Q97),
+    "q120_streaming_sliding": (q120_streaming_sliding, O_Q120),
     "q115_ngram_rarity": (q115_ngram_rarity, O_Q115),
-    "q116_semantic_dedup": (q116_semantic_dedup, O_Q116),
+    "q109_train_val_test_split": (q109_train_val_test_split, O_Q109),
+    "q04_join_composite": (q04_join_composite, O_Q04),
+    "q11_repetition_stats": (q11_repetition_stats, O_Q11),
+    "q13_ann_ivf": (q13_ann_ivf, O_Q13),
+    "q19_time_dimension": (q19_time_dimension, O_Q19),
+    "q96_scd2_user_state": (q96_scd2_user_state, O_Q96),
+    "q100_dedup_clusters_two_phase": (q100_dedup_clusters_two_phase, O_Q33),
+    "q108_incremental_aggregate": (q108_incremental_aggregate, O_Q108),
+    "q44_asof_join": (q44_asof_join, O_Q44),
+    "q21_exact_dedup": (q21_exact_dedup, O_Q21),
+    "q50_ngram_contamination": (q50_ngram_contamination, O_Q50),
     "q117_pq_encode": (q117_pq_encode, O_Q117),
     "q118_pq_topk": (q118_pq_topk, O_Q118),
-    "q119_pq_topk_rerank": (q119_pq_topk_rerank, O_Q119),
-    "q120_streaming_sliding": (q120_streaming_sliding, O_Q120),
-    "q121_salted_join": (q121_salted_join, O_Q121),
-    "q122_resample_ffill": (q122_resample_ffill, O_Q122),
+    "q116_semantic_dedup": (q116_semantic_dedup, O_Q116),
     "q123_cohort_retention": (q123_cohort_retention, O_Q123),
     "q124_quality_classifier": (q124_quality_classifier, O_Q124),
+    "q18_minhash_dedup": (q18_minhash_dedup, O_Q18),
+    "q22_minhash_signatures": (q22_minhash_signatures, O_Q22),
+    "q28_lang_id": (q28_lang_id, O_Q28),
+    "q24_jaccard_verify": (q24_jaccard_verify, O_Q24),
+    "q90_streaming_cdc": (q90_streaming_cdc, O_Q90),
+    "q121_salted_join": (q121_salted_join, O_Q121),
     "q125_relative_quality_buckets": (q125_relative_quality_buckets, O_Q125),
-    "q126_remove_duplicated_spans": (q126_remove_duplicated_spans, O_Q126),
-    "q127_shard_assignment": (q127_shard_assignment, O_Q127),
-    "q128_canonical_per_cluster": (q128_canonical_per_cluster, O_Q128),
-    "q129_incremental_dedup": (q129_incremental_dedup, O_Q129),
-    "q130_length_batches": (q130_length_batches, O_Q130),
-    "q131_bloom_decontaminate": (q131_bloom_decontaminate, O_Q131),
-    "q132_mixture_repeats": (q132_mixture_repeats, O_Q132),
+    "q136_snapshot_diff": (q136_snapshot_diff, O_Q136),
+    "q122_resample_ffill": (q122_resample_ffill, O_Q122),
     "q133_contamination_spans": (q133_contamination_spans, O_Q133),
     "q134_truncated_topk_rerank": (q134_truncated_topk_rerank, O_Q134),
-    "q135_percentile_clip": (q135_percentile_clip, O_Q135),
-    "q136_snapshot_diff": (q136_snapshot_diff, O_Q136),
-    "q137_blocklist_filter": (q137_blocklist_filter, O_Q137),
-    "q138_dedup_report": (q138_dedup_report, O_Q138),
-    "q139_decontaminate": (q139_decontaminate, O_Q139),
-    "q140_bm25_retrieval": (q140_bm25_retrieval, O_Q140),
-    "q141_vocab_coverage": (q141_vocab_coverage, O_Q141),
-    "q142_content_manifest": (q142_content_manifest, O_Q142),
-    "q143_slice_drift": (q143_slice_drift, O_Q143),
-    "q144_skew_report": (q144_skew_report, O_Q144),
-    "q145_hybrid_retrieval_rrf": (q145_hybrid_retrieval_rrf, O_Q145),
     "q146_entity_resolution": (q146_entity_resolution, O_Q146),
-    "q147_classifier_eval": (q147_classifier_eval, O_Q147),
-    "q148_attribution": (q148_attribution, O_Q148),
     "q149_negative_sampling": (q149_negative_sampling, O_Q149),
     "q150_token_budget_fill": (q150_token_budget_fill, O_Q150),
-    "q151_rank_overlap": (q151_rank_overlap, O_Q151),
-    "q152_asof_nearest": (q152_asof_nearest, O_Q152),
-    "q153_weighted_median": (q153_weighted_median, O_Q153),
-    "q154_revenue_trend": (q154_revenue_trend, O_Q154),
-    "q155_multitouch_attribution": (q155_multitouch_attribution, O_Q155),
-    "q156_filter_funnel": (q156_filter_funnel, O_Q156),
-    "q157_context_assembly": (q157_context_assembly, O_Q157),
-    "q158_key_uniqueness": (q158_key_uniqueness, O_Q158),
-    "q159_event_lift": (q159_event_lift, O_Q159),
-    "q160_column_concentration": (q160_column_concentration, O_Q160),
-    # Same oracle as q140: the persisted-index serving path returns
-    # identical scores over the same corpus (q102-vs-q13 pattern).
-    "q161_bm25_indexed": (q161_bm25_indexed, O_Q140),
-    "q162_key_uniqueness_approx": (q162_key_uniqueness_approx, O_Q162),
+    "q77_multimodal_features": (q77_multimodal_features, O_Q77),
+    "q119_pq_topk_rerank": (q119_pq_topk_rerank, O_Q119),
+    "q113_ann_ivf_budgeted": (q113_ann_ivf_budgeted, O_Q113),
+    "q114_ann_ivf_indexed_budgeted": (q114_ann_ivf_indexed_budgeted, O_Q113),
     "q163_bm25_pruned": (q163_bm25_pruned, O_Q163),
+    "q162_key_uniqueness_approx": (q162_key_uniqueness_approx, O_Q162),
     "q164_referential_integrity": (q164_referential_integrity, O_Q164),
     "q165_weighted_sample": (q165_weighted_sample, O_Q165),
-    "q166_compaction_plan": (q166_compaction_plan, O_Q166),
     "q167_retrieval_metrics": (q167_retrieval_metrics, O_Q167),
+    "q148_attribution": (q148_attribution, O_Q148),
+    "q153_weighted_median": (q153_weighted_median, O_Q153),
+    "q160_column_concentration": (q160_column_concentration, O_Q160),
     "q168_vocab_budget_rewrite": (q168_vocab_budget_rewrite, O_Q168),
     "q169_boilerplate_prefixes": (q169_boilerplate_prefixes, O_Q169),
-    "q170_mixture_plan": (q170_mixture_plan, O_Q170),
+    "q173_soft_dedup": (q173_soft_dedup, O_Q173),
+    "q174_outlier_report": (q174_outlier_report, O_Q174),
+    "q183_rate_spikes": (q183_rate_spikes, O_Q183),
+    "q184_percentile_envelope": (q184_percentile_envelope, O_Q184),
+    "q185_collocations": (q185_collocations, O_Q185),
+    "q172_embedding_quality": (q172_embedding_quality, O_Q172),
+    # Same oracle as q162: the deployable approx-mode call emits the
+    # exact count + envelope verdict, so the verify-mode oracle
+    # applies verbatim.
+    "q179_key_uniqueness_sketch": (q179_key_uniqueness_sketch, O_Q162),
+    "q145_hybrid_retrieval_rrf": (q145_hybrid_retrieval_rrf, O_Q145),
+    "q151_rank_overlap": (q151_rank_overlap, O_Q151),
+    "q135_percentile_clip": (q135_percentile_clip, O_Q135),
+    "q147_classifier_eval": (q147_classifier_eval, O_Q147),
+    "q132_mixture_repeats": (q132_mixture_repeats, O_Q132),
+    "q181_hits_copurchase": (q181_hits_copurchase, O_Q181),
+    "q166_compaction_plan": (q166_compaction_plan, O_Q166),
+    "q127_shard_assignment": (q127_shard_assignment, O_Q127),
+    "q196_pq_merge": (q196_pq_merge, O_Q118),
     # Same oracle as q140: the incrementally-maintained index must be
     # indistinguishable from a from-scratch build (upsert contract).
     "q171_bm25_incremental": (q171_bm25_incremental, O_Q140),
-    "q172_embedding_quality": (q172_embedding_quality, O_Q172),
-    "q173_soft_dedup": (q173_soft_dedup, O_Q173),
-    "q174_outlier_report": (q174_outlier_report, O_Q174),
-    "q175_pagerank": (q175_pagerank, O_Q175),
     # Same oracle as q113: the incrementally-merged dense index must
     # be indistinguishable from a from-scratch build over the merged
     # corpus with the same frozen centroid set (the q171 contract,
     # dense side).
     "q176_ivf_incremental": (q176_ivf_incremental, O_Q113),
-    "q177_ivf_delete": (q177_ivf_delete, O_Q177),
-    "q178_bm25_delete": (q178_bm25_delete, O_Q178),
-    # Same oracle as q162: the deployable approx-mode call emits the
-    # exact count + envelope verdict, so the verify-mode oracle
-    # applies verbatim.
-    "q179_key_uniqueness_sketch": (q179_key_uniqueness_sketch, O_Q162),
-    "q180_pagerank_seeded": (q180_pagerank_seeded, O_Q180),
-    "q181_hits_copurchase": (q181_hits_copurchase, O_Q181),
-    "q182_fd_audit": (q182_fd_audit, O_Q182),
-    "q183_rate_spikes": (q183_rate_spikes, O_Q183),
-    "q184_percentile_envelope": (q184_percentile_envelope, O_Q184),
-    "q185_collocations": (q185_collocations, O_Q185),
-    "q186_triangle_census": (q186_triangle_census, O_Q186),
-    "q187_label_propagation": (q187_label_propagation, O_Q187),
-    "q188_related_items": (q188_related_items, O_Q188),
     "q189_hub_clustering": (q189_hub_clustering, O_Q189),
-    "q190_pagerank_weighted": (q190_pagerank_weighted, O_Q190),
-    "q191_label_propagation_weighted": (
-        q191_label_propagation_weighted,
-        O_Q191,
-    ),
+    "q107_streaming_conversions": (q107_streaming_conversions, O_Q107),
+    "q154_revenue_trend": (q154_revenue_trend, O_Q154),
     "q192_ivf_manifest_merge": (q192_ivf_manifest_merge, O_Q113),
-    "q193_bm25_manifest_delete": (q193_bm25_manifest_delete, O_Q178),
     "q194_hits_weighted": (q194_hits_weighted, O_Q194),
-    # Same oracle as q118: the persisted/merged PQ code layout must
-    # serve bit-identical ADC distances to the inline from-scratch
-    # encode (the q176/q171 contract, third index family).
-    "q195_pq_indexed": (q195_pq_indexed, O_Q118),
-    "q196_pq_merge": (q196_pq_merge, O_Q118),
-    "q197_pq_delete": (q197_pq_delete, O_Q197),
-    # Same oracle as q113: after merge->merge->compact->vacuum under
-    # the current-pointer lifecycle, serving must remain a from-scratch
-    # rebuild bit-for-bit.
-    "q198_index_lifecycle": (q198_index_lifecycle, O_Q113),
-    # Same oracle as q188: the delta-maintained serving table must
-    # equal the from-scratch rebuild over the full basket history.
-    "q199_related_items_incremental": (
-        q199_related_items_incremental,
-        O_Q188,
-    ),
-    # IVFPQ — the composite (pruning × compression) index family: the
-    # persisted/merged layouts pin to the full-pipeline SQL rebuild;
-    # the deleted layout to its survivor-filtered derivation.
-    "q200_ivfpq_indexed": (q200_ivfpq_indexed, O_Q200),
-    "q201_ivfpq_merge": (q201_ivfpq_merge, O_Q200),
-    "q202_ivfpq_delete": (q202_ivfpq_delete, O_Q202),
-    "q203_ivfpq_rerank": (q203_ivfpq_rerank, O_Q203),
-    # Same oracle as q140/q161/q171: an index maintained as streaming
-    # manifest epochs must serve the batch build's exact scores.
-    "q204_streaming_index_maintenance": (
-        q204_streaming_index_maintenance,
-        O_Q140,
-    ),
-    # Same oracle as q113/q176/q192: the streamed-in IVF epochs must
-    # serve the from-scratch budget-40 build bit-for-bit.
-    "q205_streaming_vector_index": (q205_streaming_vector_index, O_Q113),
-    # GDPR erasure on the related-items state: the inverse of q199's
-    # merge; pinned to O_Q188 over the surviving baskets.
-    "q206_related_items_gdpr_delete": (
-        q206_related_items_gdpr_delete,
-        O_Q206,
-    ),
-    # Streaming related-items maintenance: epochs streamed in must
-    # serve the from-scratch q188 build bit-for-bit.
-    "q207_streaming_related_items": (q207_streaming_related_items, O_Q188),
-    # Quantizer retrain: the drifted lifecycle root re-trained on the
-    # surviving corpus must serve the survivors-only rebuild.
-    "q208_ivfpq_retrain": (q208_ivfpq_retrain, O_Q208),
-    # Staleness report (the when-to-retrain signal): occupancy +
-    # sampled ADC reconstruction error read off the persisted index
-    # must equal the O_Q200-pipeline ground-truth derivation.
-    "q209_ivfpq_staleness": (q209_ivfpq_staleness, O_Q209),
-    # Streaming IVFPQ maintenance: epochs streamed in (bootstrap
-    # trains BOTH frozen quantizers) must serve the from-scratch
-    # build bit-for-bit — O_Q200 verbatim.
-    "q210_streaming_ivfpq": (q210_streaming_ivfpq, O_Q200),
-    # PQ staleness: codebook utilization + sampled recon error off
-    # the persisted index must equal the O_Q118-pipeline derivation.
-    "q211_pq_staleness": (q211_pq_staleness, O_Q211),
-    # IVF staleness: occupancy + sampled residual norms off the
-    # persisted layout must equal the O_Q113 assignment derivation.
-    "q212_ivf_staleness": (q212_ivf_staleness, O_Q212),
-    # Streaming plain-PQ maintenance: epochs streamed in (bootstrap
-    # trains the frozen codebooks) must serve the from-scratch ADC
-    # build bit-for-bit — O_Q118 verbatim (the q196 pin, streamed).
-    "q213_streaming_pq": (q213_streaming_pq, O_Q118),
-    # BM25 index health: every column of the report read off the
-    # persisted index must equal the from-corpus derivation.
-    "q214_bm25_staleness": (q214_bm25_staleness, O_Q214),
-    # Related-items state health: report off the persisted state must
-    # equal the O_Q188-pipeline derivation (unfloored supports +
-    # floored serving coverage).
-    "q215_related_items_health": (q215_related_items_health, O_Q215),
-    # Maintenance decision row: drift ratio re-derived from source,
-    # lifecycle counts pinned by the fixture's op sequence.
-    "q216_maintenance_plan": (q216_maintenance_plan, O_Q216),
+    "q180_pagerank_seeded": (q180_pagerank_seeded, O_Q180),
+    "q131_bloom_decontaminate": (q131_bloom_decontaminate, O_Q131),
+    "q178_bm25_delete": (q178_bm25_delete, O_Q178),
+    "q126_remove_duplicated_spans": (q126_remove_duplicated_spans, O_Q126),
+    "q159_event_lift": (q159_event_lift, O_Q159),
+    "q137_blocklist_filter": (q137_blocklist_filter, O_Q137),
 }
 
 
-# Driver-window rotation (cumulative; round 4 + round 5). The driver's
-# value-checks the FIRST 50 ``queries()`` entries; with 90+ oracled
-# queries, rotating newer families into that window is the only way
-# they earn driver-hard verification. Demoted slots stay fully
-# oracled: they move to the tail of the dict and are value-verified
-# every round by tools/check_oracle.py (committed as
-# CORRECTNESS_local_r{N}.json). Each demoted query's operator family
-# keeps an in-window representative, except I6 scalar functions
-# (q49) whose five sibling queries are all in the local set — the
-# round-3 verdict explicitly named it as a rotation candidate.
-_ROTATED_IN = (
-    # round 4
-    "q95_funnel_conversion",
-    "q96_scd2_user_state",
-    "q97_quantize_embeddings",
-    "q98_column_correlations",
-    "q99_event_transitions",
-    # round 5 (the r4 verdict's explicit promotion list)
-    "q100_dedup_clusters_two_phase",
-    "q101_data_quality",
-    "q102_ann_ivf_indexed",
-    "q104_temperature_rebalance",
-    "q105_quantized_topk",
-    # round 5b: three of the newly-oracled classes earn driver-hard
-    # verification — multimodal feature extraction, ordering-safe
-    # streaming CDC, and the HLL 3σ-bound check
-    "q77_multimodal_features",
-    "q90_streaming_cdc",
-    "q53_approx_distinct",
-    # round 6: the five operator classes added in round 5 (stream-
-    # stream interval join, incremental view maintenance, leakage-
-    # safe split, k-per-group sampling, stopword quality) — the only
-    # oracled families never yet driver-hard-verified — plus the
-    # PRODUCTION-config IVF pair (fixed centroid budget, the r5
-    # verdict's #1 item: the deployable config becomes the
-    # continuously driver-verified one; q13/q102 stay as parity pins)
-    "q107_streaming_conversions",
-    "q108_incremental_aggregate",
-    "q109_train_val_test_split",
-    "q110_sample_per_group",
-    "q111_stopword_stats",
-    "q113_ann_ivf_budgeted",
-    "q114_ann_ivf_indexed_budgeted",
-    # round 6b: the ten operator classes built THIS round go straight
-    # into the window rather than waiting a round — trigram-rarity
-    # quality, SemDeDup, the PQ serving trio, sliding windows, salted
-    # join, gapfill resample, cohort retention, and the vendored
-    # linear classifier; validated against the driver's exact gate by
-    # tools/driver_sim.py before promotion
-    "q115_ngram_rarity",
-    "q116_semantic_dedup",
-    "q117_pq_encode",
-    "q118_pq_topk",
-    "q119_pq_topk_rerank",
-    "q120_streaming_sliding",
-    "q121_salted_join",
-    "q122_resample_ffill",
-    "q123_cohort_retention",
-    "q124_quality_classifier",
-    # round 7b: the eight operator classes built this round — span
-    # excision, relative buckets, shard layout, canonical selection,
-    # incremental dedup, distributed global rank, Bloom
-    # decontamination, mixture materialization — promoted same-round
-    # after the 30× probe (SCALING_r07.md) and a full driver_sim gate
-    # replay, per the r6 pattern
-    "q125_relative_quality_buckets",
-    "q126_remove_duplicated_spans",
-    "q127_shard_assignment",
-    "q128_canonical_per_cluster",
-    "q129_incremental_dedup",
-    "q130_length_batches",
-    "q131_bloom_decontaminate",
-    "q132_mixture_repeats",
-    # round 7c: the closing round-7 batch — contamination span
-    # location, Matryoshka truncated-rerank ANN, percentile clip
-    # calibration, snapshot diff, C4 blocklist filter, dedup QA
-    # report, decontamination rewrite — promoted after the 30× probe
-    # (SCALING_r07.md batch-3 table, α 0.05–0.49, no trap shapes)
-    # and a driver_sim gate replay, per the established pattern
-    "q133_contamination_spans",
-    "q134_truncated_topk_rerank",
-    "q135_percentile_clip",
-    "q136_snapshot_diff",
-    "q137_blocklist_filter",
-    "q138_dedup_report",
-    "q139_decontaminate",
-    # round 7d: the closing five — BM25 retrieval, vocab coverage,
-    # content manifest, slice-drift TVD, skew report — promoted after
-    # 30× probes (all ≤0.26) and a full driver_sim replay, so every
-    # round-7 operator class is driver-hard verified the round it was
-    # built
-    "q140_bm25_retrieval",
-    "q141_vocab_coverage",
-    "q142_content_manifest",
-    "q143_slice_drift",
-    "q144_skew_report",
-    # round 7e: the late round-7 batch — hybrid RRF retrieval, SNM
-    # entity resolution, classifier eval (AUC+calibration),
-    # last-touch attribution, contrastive negative sampling,
-    # token-budget fill, rank-overlap QA — promoted after 30× probes
-    # (SCALING_r07.md batches 5–6, all α ≤ 0.73 with output-bound
-    # readings) and a full driver_sim gate replay
-    "q145_hybrid_retrieval_rrf",
-    "q146_entity_resolution",
-    "q147_classifier_eval",
-    "q148_attribution",
-    "q149_negative_sampling",
-    "q150_token_budget_fill",
-    "q151_rank_overlap",
-    # round 7f: merge_asof-parity nearest/tolerance as-of (q152 —
-    # supersedes q44's backward-only config as the family's in-window
-    # rep), token-weighted median, grouped OLS trend — probed at 30×
-    # (α −0.08..0.07) and driver_sim-replayed before promotion
-    "q152_asof_nearest",
-    "q153_weighted_median",
-    "q154_revenue_trend",
-    # round 7g: RANGE-frame multi-touch attribution (q155) — 30×/plan
-    # gated like the rest of the late batch
-    "q155_multitouch_attribution",
-    # round 7h: curation filter-funnel survival report (q156)
-    "q156_filter_funnel",
-    # round 7i: end-to-end RAG context assembly (q157)
-    "q157_context_assembly",
-    # round 7j: candidate-key discovery + event co-occurrence lift
-    "q158_key_uniqueness",
-    "q159_event_lift",
-    # round 7k: exact HHI/Gini concentration report
-    "q160_column_concentration",
-    # round 8a: the two round-8 serving twins go straight into the
-    # window (the r7 same-round discipline) — persisted-index BM25
-    # (identical-scores gate vs q140, which STAYS in-window as the
-    # retrieval family's inline pin alongside the rebased
-    # q145/q151/q157) and sketch-mode key uniqueness (q53-style
-    # bound gate; q158's exact pass stays in-window)
-    "q161_bm25_indexed",
-    "q162_key_uniqueness_approx",
-    # round 8b: the pruned-config BM25 (max_df ceiling engaged — the
-    # measured 100 TB candidate-count lever, SCALING_r08.md) joins
-    # the exact pin q140 + indexed q161 in-window
-    "q163_bm25_pruned",
-    # round 8c: the four lake-operations classes built this round —
-    # FK integrity audit, deterministic weighted sampling, compaction
-    # planning, retrieval-quality metrics — promoted same-round after
-    # 30× probes + a full driver_sim replay (the standing discipline)
-    "q164_referential_integrity",
-    "q165_weighted_sample",
-    "q166_compaction_plan",
-    "q167_retrieval_metrics",
-    # round 8d: tokenizer-prep + curation planning classes —
-    # vocab-budget UNK rewrite, anchored boilerplate detection,
-    # data-mixture planning — promoted same-round after 30× probes
-    # and a full driver_sim replay
-    "q168_vocab_budget_rewrite",
-    "q169_boilerplate_prefixes",
-    "q170_mixture_plan",
-    # round 8e: index lifecycle + ingest-QA classes — incremental
-    # BM25 merge (upsert contract, oracle = from-scratch q140),
-    # embedding QA audit, soft-dedup weights — promoted same-round
-    # after 30× probes and a full driver_sim replay
-    "q171_bm25_incremental",
-    "q172_embedding_quality",
-    "q173_soft_dedup",
-    # round 8f: Tukey-fence outlier audit + fixed-iteration PageRank
-    # (the graph-centrality class; decimal-routed contribution sums —
-    # the scale-18 variant diverged by the q154 1-ulp class and was
-    # caught by the oracle BEFORE registration) — promoted same-round
-    # after 30× probes and a full driver_sim replay
-    "q174_outlier_report",
-    "q175_pagerank",
-    # round 9a: the index-lifecycle completion classes — incremental
-    # IVF merge (oracle = from-scratch q113, the dense-side upsert
-    # contract), IVF + BM25 deletes (serve-after-delete hash-gated
-    # equal to rebuild-without-the-ids), and the deployable
-    # sketch-mode key-uniqueness call (q53-envelope gated; q162's
-    # verify mode rotates to the local pin) — promoted same-round
-    # after 30× probes and a full driver_sim replay
-    "q176_ivf_incremental",
-    "q177_ivf_delete",
-    "q178_bm25_delete",
-    "q179_key_uniqueness_sketch",
-    # round 9b: the graph-authority pair — seeded (TrustRank-style)
-    # PageRank and rational-integer HITS. q180's seed config exposed
-    # the double→decimal cast tie LIVE at sf0.01 (two nodes off by
-    # exactly 0.85·10⁻¹⁵), so BOTH PageRank variants moved to the
-    # tie-free floor-grid fold and q175 re-verifies in-window with
-    # them. Promoted after 30× probes + a full driver_sim replay.
-    "q180_pagerank_seeded",
-    "q181_hits_copurchase",
-    # round 9c: audit/monitoring classes — FD audit (the derivability
-    # twin of key discovery), integer-arithmetic rate-spike
-    # detection, the GK percentile rank-envelope gate (the hard-bound
-    # twin of q179's HLL envelope), and PMI-lift collocations —
-    # promoted same-round after 30× probes + a driver_sim replay
-    "q182_fd_audit",
-    "q183_rate_spikes",
-    "q184_percentile_envelope",
-    "q185_collocations",
-    # round 9d: the graph-structure pair — exact triangle census via
-    # degree-ordered orientation (wedge candidates bounded by
-    # ΣC(outdeg,2) = O(E^1.5), never hub-quadratic) and clamped-seed
-    # majority-vote label propagation (integer votes, total-order
-    # tie-break). Promoted same-round after 30× probes + a full
-    # driver_sim replay.
-    "q186_triangle_census",
-    "q187_label_propagation",
-    # round 9e: the co-occurrence serving pair — per-item top-k
-    # related items (squared-cosine rational scoring, per-item rank
-    # window) and the hub local-clustering audit (member-pushdown
-    # triangle attribution, k-bounded hub collect). Promoted
-    # same-round after 30× probes + the synthetic-graph-side probe
-    # + a full driver_sim replay.
-    "q188_related_items",
-    "q189_hub_clustering",
-    # round 10: the weighted-edge authority pair — seeded PageRank
-    # with edge multiplicity (rank·w/Σw through the same tie-free
-    # floor-grid fold; w=1 property-tested identical to unweighted)
-    # and weighted-vote label propagation (exact bigint weight sums).
-    # Promoted same-round after 30× probes + a full driver_sim
-    # replay; the operators they extend (q175/q180/q187) stay
-    # in-window for re-verification of the refactored shared paths.
-    "q190_pagerank_weighted",
-    "q191_label_propagation_weighted",
-    # round 10b: the manifest-layout maintenance pair — the
-    # object-store copy-on-write (metadata promotion, zero
-    # links/copies) serving through cow.read_component; oracles are
-    # the SAME rebuild pins as the links-layout entries (O_Q113 /
-    # O_Q178), so both layouts stay continuously
-    # rebuild-identical-by-gate. Promoted same-round after a full
-    # driver_sim replay.
-    "q192_ivf_manifest_merge",
-    "q193_bm25_manifest_delete",
-    # round 10c: weighted HITS — completes the weighted authority
-    # family with the integer-exactness contract intact (products of
-    # bigint weights stay exact DECIMAL(38,0) integers; w=1
-    # property-tested identical to q181). Promoted same-round after a
-    # 3-SF oracle sweep + driver_sim replay.
-    "q194_hits_weighted",
-    # round 11: the five new lifecycle/maintenance classes, promoted
-    # same-round after 3-SF oracle sweeps + a full driver_sim replay —
-    # the persisted PQ index trio (serving/merge/GDPR-delete, all
-    # pinned to O_Q118-derived rebuild oracles), the end-to-end epoch
-    # lifecycle composition (merge→merge→compact→vacuum under the
-    # current-pointer, O_Q113 pin), and the incrementally-maintained
-    # related-items serving table (O_Q188 pin; its from-scratch twin
-    # q188 stays in-window to re-verify the shared _related_topk
-    # scoring tail).
-    "q195_pq_indexed",
-    "q196_pq_merge",
-    "q197_pq_delete",
-    "q198_index_lifecycle",
-    "q199_related_items_incremental",
-    # round 11b: the IVFPQ trio — the composite pruning×compression
-    # index family (persisted serve / doubly-frozen merge / GDPR
-    # delete), pinned to the full-pipeline SQL rebuild O_Q200 and its
-    # survivor-filtered derivation. Promoted same-round after 3-SF
-    # oracle sweeps + a full driver_sim replay.
-    "q200_ivfpq_indexed",
-    "q201_ivfpq_merge",
-    "q202_ivfpq_delete",
-    # round 12: the r11 verdict's #1 (the only entries never
-    # driver-hard-verified: IVFPQ rerank serving + both streaming
-    # index-maintenance shapes) plus the two new round-12 classes —
-    # GDPR erasure on the related-items state (q206, O_Q188 over the
-    # survivors) and streaming related-items maintenance (q207,
-    # O_Q188 verbatim). Promoted after 3-SF oracle sweeps + a full
-    # driver_sim replay, per the standing discipline.
-    "q203_ivfpq_rerank",
-    "q204_streaming_index_maintenance",
-    "q205_streaming_vector_index",
-    "q206_related_items_gdpr_delete",
-    "q207_streaming_related_items",
-    # round 12b: the quantizer-retrain epoch op (q208, O_Q200 over
-    # the survivors — the retrained-quantizer rebuild pin).
-    "q208_ivfpq_retrain",
-    # round 13: the retrain story's other half — the staleness report
-    # (q209, when-to-retrain; O_Q200-pipeline ground truth) and the
-    # streaming IVFPQ maintenance twin (q210, O_Q200 verbatim — the
-    # last index family without a streaming shape). Promoted
-    # same-round after 3-SF oracle sweeps + a full driver_sim replay,
-    # per the standing discipline.
-    "q209_ivfpq_staleness",
-    "q210_streaming_ivfpq",
-    # round 13b: the staleness siblings — the when-to-retrain signal
-    # across all three quantized families, matching the retrain ops'
-    # coverage (q211 PQ codebook utilization, O_Q118 derivation;
-    # q212 IVF residual norms, O_Q113 derivation). Same promotion
-    # discipline: 3-SF sweeps + driver_sim replay.
-    "q211_pq_staleness",
-    "q212_ivf_staleness",
-    # round 13c: the plain-PQ streaming maintenance twin (q213,
-    # O_Q118 verbatim) — with q210 this closes the r12 verdict's #3
-    # for both named families. Same promotion discipline.
-    "q213_streaming_pq",
-    # round 14: the two new health reports — the when-to-maintain
-    # signal for the LAST two serving families without one (BM25
-    # posting/corpus drift, related-items support/ledger/coverage).
-    # Promoted same-round after 3-SF oracle sweeps + a full
-    # driver_sim replay, per the standing discipline.
-    "q214_bm25_staleness",
-    "q215_related_items_health",
-    # round 14b: the maintenance decision row — the runbook op
-    # composing lifecycle_report + pinned-baseline drift into
-    # retrain/compact/vacuum calls, all three branches tripped by the
-    # fixture. Same promotion discipline (3-SF sweep + driver_sim).
-    "q216_maintenance_plan",
-)
-_ROTATED_OUT = (
-    # round 4
-    "q10_orders_except",  # I3 set-ops: q16 union stays in-window
-    "q35_left_join_coverage",  # joins: q04, q20 stay in-window
-    "q38_cube_orders",  # grouping: q37 rollup, q40 grouping-sets stay
-    "q39_pivot_returnflag",  # grouping: same family
-    "q49_string_functions",  # I6: judge-named; q65-q72 in local set
-    # round 5 (the r4 verdict's named demotion candidates; every
-    # demoted family keeps coverage: anti-join via q09, top-k via
-    # q07 + TakeOrderedAndProject plan gate, sampling via q05 + the
-    # promoted q104, set-ops and percentiles stay value-verified in
-    # the local replica (q10/q80, q43) and pytest)
-    "q02_not_in_subquery",
-    "q06_topk_orders",
-    "q16_union_users",
-    "q34_stratified_sample",
-    "q43_percentiles",
-    # round 5b demotions (each family keeps in-window coverage:
-    # sampling via the promoted q104, MinHash via q18/q22/q24,
-    # text stats via q28/q29/q31/q36)
-    "q05_deterministic_sample",
-    "q23_minhash_pairs",
-    "q30_token_stats",
-    # round 6 demotions (each driver-hard-verified in an earlier
-    # round; every family keeps an in-window representative:
-    # distinct via q19/q21, anti-join via the staying q08 semi-join,
-    # aggregation via q01/q37/q40, SimHash's dedup family via
-    # q18/q22/q24/q42/q46-q48, fingerprint's text family via
-    # q11/q28/q29/q36/q50, SQL entry via q40. q53 is demoted on the
-    # r5 advisor's explicit call: a TRUE-asserting sketch-bound
-    # oracle is flaky-by-design across regenerated fixtures — the
-    # widened 6·rsd gate stays value-verified in the local replica,
-    # the strict 3σ check lives in pytest on the pinned dataset.
-    "q03_distinct_flags",
-    "q09_anti_join",
-    "q14_salted_aggregation",
-    "q25_simhash",
-    "q31_fingerprint",
-    "q32_sql_entrypoint",
-    "q53_approx_distinct",
-    # round 6b demotions — all driver-hard verified in rounds 1-5;
-    # every family keeps an in-window representative: windows via
-    # q07 (q17 out), profiling via q101 expectations (q15 out),
-    # grouping via q01/q40
-    # (q37 out), k-means via incoming q116's kmeans_assign (q41 out),
-    # dedup via q18/q21/q24/q46-q48... q42 span dedup out with the
-    # family otherwise intact, interval joins via q44 as-of (q45 out),
-    # embedding near-dup via q47's LSH path (q46 exact-path out).
-    # Round 7 amendment (r6 verdict #3): the 6b plan demoted q22
-    # (MinHash signatures) and q28 (lang-ID) — but both families'
-    # CODE changed since their last driver-hard verification (the r5
-    # MinHash ⌈n/4⌉-digest generalization; the r6 PEP-563 pandas-UDF
-    # fix), so they return to the window and their pairing slots pass
-    # to q110/q111 instead — both driver-verified green in r6
-    # (CORRECTNESS_r06.json), with sampling keeping q104/q109 and
-    # text stats keeping q11/q36/q50/q115/q124 in-window.
-    "q15_profile_columns",
-    "q17_sessionize",
-    "q110_sample_per_group",
-    "q111_stopword_stats",
-    "q29_quality_score",
-    "q37_rollup_revenue",
-    "q41_kmeans_step",
-    "q42_span_dedup",
-    "q45_range_join",
-    "q46_embedding_near_dup",
-    # round 7b demotions — all driver-hard verified green in r6's
-    # 50/50 window (CORRECTNESS_r06.json); every family keeps
-    # in-window representatives: brute-force ANN q26 and embedding
-    # near-dup LSH q47 out with serving covered by q27 LSH +
-    # q113/q114 IVF + q117-q119 PQ + q97 int8; token-jaccard q48 out
-    # with q24 verify + incoming q126/q129 in the dedup family;
-    # correlations q98 out with profiling's q101 staying; event
-    # transitions q99 out with q95/q96/q123 staying; temperature
-    # rebalance q104 out with sampling covered by q109 + incoming
-    # q125/q127/q130/q132; grouping-sets q40 out with q01 in-window
-    # and the rollup/cube/pivot shapes (q37-q39) long driver-verified
-    # in the tail; quantized top-k q105 out with q97 + the PQ trio
-    # staying
-    "q26_embedding_topk",
-    "q47_embedding_near_dup_lsh",
-    "q48_token_jaccard",
-    "q98_column_correlations",
-    "q99_event_transitions",
-    "q104_temperature_rebalance",
-    "q40_grouping_sets",
-    "q105_quantized_topk",
-    # round 7c demotions — all driver-hard verified green in r6's
-    # 50/50 window (CORRECTNESS_r06.json); family coverage after:
-    # windows via q96/q120/q123/q130 (q07 out), semi/anti joins via
-    # q04/q20/q44/q121 + the left-anti shapes inside q18/q129/q139
-    # (q08 out), event funnels via q96/q123 (q95 out; q90 CDC stays
-    # as streaming-CDC's only rep), text scrubbing via
-    # q11/q115/q124/q50 + incoming q137/q139 (q36 out), CC driver
-    # regime via q100 two-phase + incoming q138's CC composition
-    # (q33 out), profiling via incoming q136 snapshot-diff (q101
-    # out), indexed IVF via q13 parity pin + q113/q114 budgeted
-    # (q102 out). q22/q24/q28 STAY: their code changed this round
-    # (MinHash generalization / verify early-exit / PEP-563 fix
-    # verification) and changed code re-earns driver verification
-    # before demotion (the r6-verdict #3 principle).
-    "q07_latest_order_per_customer",
-    "q08_semi_join",
-    "q95_funnel_conversion",
-    "q36_pii_scrub",
-    "q33_dedup_clusters",
-    "q101_data_quality",
-    "q102_ann_ivf_indexed",
-    # round 7d demotions — all driver-hard verified green in r6
-    # (CORRECTNESS_r06.json); NO round-7 addition is demoted (each
-    # must earn its first driver verification in r7's gate). Family
-    # coverage after: sign-LSH ANN q27 out with serving covered by
-    # q13/q113/q114 + PQ q117–q119 + Matryoshka q134 (the q26/q47
-    # precedent); int8 quantization q97 out with the PQ trio staying;
-    # sliding windows q120 out with streaming's q107/q90 staying;
-    # trigram rarity q115 out with text quality covered by
-    # q11/q124/q137/q50 + incoming q141/q143; split assignment q109
-    # out with sampling covered by q125/q127/q132 in-window.
-    "q27_ann_lsh",
-    "q97_quantize_embeddings",
-    "q120_streaming_sliding",
-    "q115_ngram_rarity",
-    "q109_train_val_test_split",
-    # round 7e demotions — all driver-hard verified green in r6 (and
-    # most in many earlier rounds); NO round-7 addition is demoted.
-    # Family coverage after: inner joins via q12/q20/q121 + incoming
-    # q146's rank join (q04 out), repetition/text stats via
-    # q124/q137/q50 + incoming q147 (q11 out), IVF parity via the
-    # budgeted q113/q114 + PQ trio staying (q13 the parity pin moves
-    # to the local set), temporal derivation via q12/q20 date_format
-    # paths (q19 out), SCD2/events via q123 + incoming q148 (q96
-    # out), CC via q138's composed lineage + q129 (q100 out), IVM
-    # via streaming q107/q90 staying (q108 out).
-    "q04_join_composite",
-    "q11_repetition_stats",
-    "q13_ann_ivf",
-    "q19_time_dimension",
-    "q96_scd2_user_state",
-    "q100_dedup_clusters_two_phase",
-    "q108_incremental_aggregate",
-    # round 7f demotions — q44 backward as-of is superseded in-window
-    # by q152 (same union-sort operator, nearest+tolerance config);
-    # q21 exact dedup (r1–r6 verified; dedup family keeps
-    # q18/q24/q126/q129/q138/q146); q50 n-gram contamination (family
-    # keeps q131/q133/q139 in-window)
-    "q44_asof_join",
-    "q21_exact_dedup",
-    "q50_ngram_contamination",
-    # round 7g demotion — q117 PQ encode (r6 driver-verified,
-    # unchanged since; the PQ family keeps q118 ADC + q119 re-rank
-    # in-window, both of which compose the encode path)
-    "q117_pq_encode",
-    # round 7h demotion — q118 ADC top-k (r6 driver-verified,
-    # unchanged; q119 stays in-window and composes the full
-    # encode→ADC→re-rank serving path)
-    "q118_pq_topk",
-    # round 7i demotion — q116 SemDeDup (r6 driver-verified,
-    # unchanged since; its mechanisms stay covered in-window:
-    # broadcast-argmin centroid assignment via q113/q114,
-    # cluster-keyed selection via q128)
-    "q116_semantic_dedup",
-    # round 7j demotions — q123 cohort retention (events family keeps
-    # incoming q148/q155 + q99-local), q124 quality classifier (its
-    # feature path runs in-window inside q147's eval and q156's
-    # funnel); both r6 driver-verified green, unchanged since
-    "q123_cohort_retention",
-    "q124_quality_classifier",
-    # round 7k demotion — q18 MinHash end-to-end (driver-verified
-    # r1–r6 incl. after the r5 generalization; the family keeps
-    # q22 signatures + q24 verify — both code-changed THIS round and
-    # staying for re-verification — plus q129's incremental MinHash
-    # composition in-window)
-    "q18_minhash_dedup",
-    # round 8a demotions — q22 MinHash signatures and q28 lang-ID
-    # stayed through r7 ONLY to re-earn driver verification after
-    # their r7 code changes (MinHash generalization / PEP-563 fix);
-    # both green in CORRECTNESS_r07.json and untouched in r8. The
-    # MinHash family keeps q24 verify + q126/q129/q138/q146
-    # in-window; text quality keeps q141/q143/q156 + the fuzz suite.
-    "q22_minhash_signatures",
-    "q28_lang_id",
-    # round 8b demotion — q24 jaccard verify stayed through r7 to
-    # re-earn verification after the size-ratio early exit; green in
-    # CORRECTNESS_r07.json, untouched in r8. Dedup keeps
-    # q126/q129/q138/q146 in-window.
-    "q24_jaccard_verify",
-    # round 8c demotions — all four green in CORRECTNESS_r07.json's
-    # 50/50 window and untouched in r8. Streaming keeps q107
-    # in-window (q90 out); skew keeps the code-changed q144 (q121
-    # out); sampling keeps q127/q130/q132/q150 + incoming q165 (q125
-    # out); profiling keeps q142/q153/q154/q158/q160/q162 + incoming
-    # q164 (q136 out).
-    "q90_streaming_cdc",
-    "q121_salted_join",
-    "q125_relative_quality_buckets",
-    "q136_snapshot_diff",
-    # round 8d demotions — all three green in CORRECTNESS_r07.json's
-    # window, untouched in r8. Gap-fill resample q122 out (its
-    # shuffle-budget gate + the batch-split property tests keep it
-    # pinned; the window-family shapes stay via q130/q150/q153/q155);
-    # contamination spans q133 out (decontamination keeps
-    # q131/q137/q139 + incoming q168's rewrite shape in-window);
-    # Matryoshka rerank q134 out (ANN serving keeps q113/q114/q119).
-    "q122_resample_ffill",
-    "q133_contamination_spans",
-    "q134_truncated_topk_rerank",
-    # round 8e demotions — all three green in CORRECTNESS_r07.json,
-    # untouched in r8. SNM entity resolution q146 out (dedup keeps
-    # q126/q129/q138 + incoming q173 in-window); negative sampling
-    # q149 out (similarity keeps q113/q114/q119 + incoming q172);
-    # token-budget fill q150 out (sampling keeps q127/q130/q132 +
-    # incoming q165/q170).
-    "q146_entity_resolution",
-    "q149_negative_sampling",
-    "q150_token_budget_fill",
-    # round 8f demotions — both repeatedly driver-verified (r5b–r7)
-    # and untouched in r8: q77 multimodal features (the r7 JPEG RSTn
-    # fix was driver-verified in r7's window; the decoder family
-    # stays pinned by the fuzz suite + local sweep) and q119 PQ
-    # re-rank (the PQ trio r6/r7-verified; stays in the local sweep
-    # AND the no-codegen-fallback compile gates, which execute it
-    # every pytest run).
-    "q77_multimodal_features",
-    "q119_pq_topk_rerank",
-    # round 9a demotions — all four green in CORRECTNESS_r08.json's
-    # 50/50 window, untouched in r9. The budgeted IVF pair q113/q114
-    # out: their exact semantics stay CONTINUOUSLY driver-verified
-    # because incoming q176/q177 share (a derivation of) O_Q113 and
-    # compose the same build + indexed-serving path; the inline
-    # ivf_topk pin stays in the local sweep. q163 pruned BM25 out
-    # (the sparse family keeps q140 inline pin + q161 indexed + q171
-    # merge + incoming q178 delete in-window; the max_df A/B stays
-    # measured in SCALING_r08.md). q162 verify-mode out per the r8
-    # verdict (#5): the DEPLOYABLE approx call (incoming q179) takes
-    # the window slot, verify stays as the local-pin accuracy gate.
-    "q113_ann_ivf_budgeted",
-    "q114_ann_ivf_indexed_budgeted",
-    "q163_bm25_pruned",
-    "q162_key_uniqueness_approx",
-    # round 9b demotions — both green in CORRECTNESS_r08.json's
-    # window, untouched in r9. FK-integrity q164 out (profiling keeps
-    # q153/q154/q158/q160/q174 + incoming q179 in-window); weighted
-    # sampling q165 out (sampling keeps q127/q130/q132/q170).
-    "q164_referential_integrity",
-    "q165_weighted_sample",
-    # round 9c demotions — all four green in CORRECTNESS_r08.json's
-    # window, untouched in r9. Retrieval metrics q167 out (the family
-    # keeps q140/q145/q151/q157/q161/q171 + incoming q178 in-window);
-    # last-touch attribution q148 out (events keep q155 multitouch +
-    # q159 lift + incoming q183); weighted median q153 and HHI/Gini
-    # q160 out (profiling keeps q154/q158/q174 + incoming
-    # q179/q182/q184).
-    "q167_retrieval_metrics",
-    "q148_attribution",
-    "q153_weighted_median",
-    "q160_column_concentration",
-    # round 9d demotions — both driver-hard verified in r8's rotated
-    # window (CORRECTNESS_r08 50/50), untouched in r9; the
-    # text-quality family keeps q126/q130/q131/q135/q137/q139/
-    # q141/q142/q143/q156 in-window.
-    "q168_vocab_budget_rewrite",
-    "q169_boilerplate_prefixes",
-    # round 9e demotions — both driver-hard verified in r8's rotated
-    # window (CORRECTNESS_r08 50/50), untouched in r9; dedup keeps
-    # q128/q129/q138 in-window, profiling keeps
-    # q154/q158/q179/q182/q184.
-    "q173_soft_dedup",
-    "q174_outlier_report",
-    # round 10 demotions — both driver-hard verified in r9's rotated
-    # window (CORRECTNESS_r09 50/50), untouched in r10; monitoring
-    # keeps q183-adjacent coverage via the events family (q155/q159)
-    # and profiling keeps q154/q158/q179/q182 in-window (q184's GK
-    # envelope stays value-verified in the local sweep + pytest).
-    "q183_rate_spikes",
-    "q184_percentile_envelope",
-    # round 10b demotions — both driver-hard verified in r9's window
-    # (CORRECTNESS_r09 50/50), untouched in r10; text quality keeps
-    # q126/q130/q131/q135/q137/q139/q141-q143/q156 in-window (q185's
-    # PMI-lift stays value-verified in the local sweep + pytest);
-    # similarity ingest-QA q172 out with the family keeping
-    # q113-derived q176/q177/q192 + q119-era serving pins local.
-    "q185_collocations",
-    "q172_embedding_quality",
-    # round 10c demotion — q179 driver-hard verified in r9's window,
-    # untouched in r10; profiling keeps q154/q158/q182 in-window and
-    # the approx-vs-exact envelope stays pinned in pytest + the
-    # local sweep (q162-style verify mode already lives there).
-    "q179_key_uniqueness_sketch",
-    # round 11 demotions — all five driver-hard verified in r10's
-    # window (CORRECTNESS_r10 50/50), untouched in r11. Hybrid RRF
-    # q145 and rank-overlap q151 out (retrieval keeps
-    # q140/q161/q171/q178/q193 + incoming q195–q197 serving pins);
-    # percentile-clip q135 out (text quality keeps q126/q130/q131/
-    # q137/q139/q141-q143/q156); classifier-eval q147 out (profiling
-    # keeps q154/q158/q182); mixture-repeats q132 out (sampling keeps
-    # q127/q130/q170).
-    "q145_hybrid_retrieval_rrf",
-    "q151_rank_overlap",
-    "q135_percentile_clip",
-    "q147_classifier_eval",
-    "q132_mixture_repeats",
-    # round 11b demotions — all three driver-hard verified in r10's
-    # window (CORRECTNESS_r10 50/50), untouched in r11. Unweighted
-    # HITS q181 out (the authority family keeps q194 weighted HITS —
-    # whose w=1 path is property-tested identical to q181 — plus
-    # q175/q180/q190 PageRank in-window); compaction-planner q166 out
-    # (the lakehouse-maintenance family keeps q198's
-    # compact-and-vacuum lifecycle in-window; the row-accurate
-    # binning stays value-verified in the local sweep + pytest);
-    # shard-assignment q127 out (sampling keeps q130/q170 in-window).
-    "q181_hits_copurchase",
-    "q166_compaction_plan",
-    "q127_shard_assignment",
-    # round 12 demotions — all five driver-hard verified in r11's
-    # window (CORRECTNESS_r11 50/50), untouched in r12 except through
-    # shared paths their replacements re-verify harder. PQ merge q196
-    # out (the PQ family keeps q195 serve + q197 delete in-window;
-    # the doubly-frozen IVFPQ merge q201 gates the shared codebook
-    # contract); BM25 incremental q171 out (retrieval keeps
-    # q140/q161/q178/q193, and incoming q204 exercises the SAME
-    # merge_bm25_index path per micro-batch); IVF incremental q176
-    # out (dense side keeps q177/q192/q198, incoming q205 streams the
-    # same merge_ivf_index); hub-clustering q189 out (graph keeps the
-    # triangle machinery in-window via q186 plus
-    # q175/q180/q186/q187/q190/q191/q194); streaming-conversions q107
-    # out (the streaming family's window representation triples via
-    # q204/q205/q207).
-    "q196_pq_merge",
-    "q171_bm25_incremental",
-    "q176_ivf_incremental",
-    "q189_hub_clustering",
-    "q107_streaming_conversions",
-    # round 12b demotion — driver-hard verified in r11's window,
-    # untouched in r12; profiling keeps q158 (key uniqueness) + q182
-    # (FD audit) in-window, and the grouped-OLS trend stays
-    # value-verified in the local sweep + pytest.
-    "q154_revenue_trend",
-    # round 13 demotions — both driver-hard verified in rounds 10–12
-    # and code-untouched this round: IVF manifest maintenance keeps
-    # q193 (BM25 manifest delete), q198 (lifecycle composition), q201
-    # (IVFPQ manifest merge), and q205 (streaming IVF) in-window;
-    # weighted authority keeps q190/q191 in-window and the w=1 ≡
-    # unweighted property stays pytest-gated.
-    "q192_ivf_manifest_merge",
-    "q194_hits_weighted",
-    # round 13b demotions — both window-verified across rounds 9–12
-    # and code-untouched this round: link authority keeps
-    # q175/q186/q187/q190/q191 in-window (seeded-PageRank semantics
-    # stay value-verified in the local sweep + pytest);
-    # decontamination keeps q139 (span decontaminate) + q137
-    # (blocklist) in-window, Bloom saturation stays property-tested.
-    "q180_pagerank_seeded",
-    "q131_bloom_decontaminate",
-    # round 13c demotion — window-verified r9–r12, text.py untouched
-    # this round; BM25 keeps q161 (serving) + q140 (retrieval) +
-    # q193 (manifest delete) + q204 (streaming) in-window, and the
-    # links-layout delete semantics stay value-verified in the local
-    # sweep + pytest.
-    "q178_bm25_delete",
-    # round 14 demotions — both driver-hard verified in rounds 7–13
-    # and their operator code untouched this round: span dedup keeps
-    # q128 (canonical survivor) + q129 (incremental) + q130 (shard
-    # batches) + q138 (QA report) in-window; event co-occurrence
-    # keeps q155 (multi-touch attribution) in-window and the lift
-    # derivation stays value-verified in the local sweep + pytest.
-    "q126_remove_duplicated_spans",
-    "q159_event_lift",
-    # round 14b demotion — window-verified r7–r13, operator code
-    # untouched this round; decontamination keeps q139 (span
-    # decontaminate + rewrite) in-window, and the C4-style blocklist
-    # semantics stay value-verified in the local sweep + pytest.
-    "q137_blocklist_filter",
-)
-
-
-def _ordered_names() -> list[str]:
-    """Registry names with the cumulative rotation applied: promoted
-    queries take the demoted queries' window slots; demoted queries
-    move to the tail (still registered, still oracled). A name can be
-    promoted in one round and demoted in a later one (q53: in r5b,
-    out r6) — the positional swap pairs then CHAIN (q30→q53 in r5,
-    q53→q114 in r6 ⇒ q30's slot now holds q114), and the re-demoted
-    name appears only in the tail."""
-    swap = dict(zip(_ROTATED_OUT, _ROTATED_IN))
-    promoted = set(_ROTATED_IN)
-    names: list[str] = []
-    for n in _REGISTRY:
-        if n in promoted:
-            continue  # surfaces via a swap chain (window) or the tail
-        m = n
-        while m in swap:
-            m = swap[m]
-        names.append(m)
-    names.extend(_ROTATED_OUT)
-    return names
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: _REGISTRY[name][0] for name in _ordered_names()}
+    return {name: fn for name, (fn, _) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name][1]
-        for name in _ordered_names()
-        if _REGISTRY[name][1] is not None
-    }
+    return {name: sql for name, (_, sql) in _REGISTRY.items()}

@@ -2,10 +2,17 @@
 
 from __future__ import annotations
 
+import hashlib
+import shutil
+import tempfile
+from pathlib import Path
+
 import duckdb
 import pytest
 
 import __spark_entry__ as E
+from data_lake_with_spark_spark import queries as Q
+from data_lake_with_spark_spark.operators import similarity
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -46,10 +53,12 @@ def test_every_query_has_callable_and_most_have_oracles(spark):
     ],
 )
 def test_spotcheck_oracle_match(spark, sf_dir, name):
+    _assert_matches_oracle(E.queries()[name](spark, sf_dir), sf_dir, name)
+
+
+def _assert_matches_oracle(df, sf_dir, name):
     from tools.check_oracle import value_hash
 
-    qs = E.queries()
-    df = qs[name](spark, sf_dir)
     rows = [tuple(r) for r in df.collect()]
     con = duckdb.connect()
     for t in TABLES:
@@ -62,3 +71,54 @@ def test_spotcheck_oracle_match(spark, sf_dir, name):
     assert len(rows) == len(orows)
     assert sorted(df.columns) == sorted(ocols)
     assert value_hash(rows, df.columns) == value_hash(orows, ocols)
+
+
+# sha256 of the 215 registry names in driver order. The driver
+# value-checks the first 50, so a reorder changes what it verifies.
+REGISTRY_ORDER_SHA256 = (
+    "07f39515a3fad20b6aad0f6c527dba5a7835a6239425caa0cbfc8c46a84d84a2"
+)
+
+
+def test_registry_order_is_pinned():
+    for names in (list(E.queries()), list(E.oracle_sql())):
+        assert len(names) == 215
+        digest = hashlib.sha256("\n".join(names).encode()).hexdigest()
+        assert digest == REGISTRY_ORDER_SHA256
+
+
+def test_scratch_dirs_removed_after_query_and_on_error(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    # q177 builds an IVF index and a post-delete copy in two scratch
+    # directories; both must be gone once it returns or raises.
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    q177 = E.queries()["q177_ivf_delete"]
+    _assert_matches_oracle(q177(spark, sf_dir), sf_dir, "q177_ivf_delete")
+    assert list(tmp_path.iterdir()) == []
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("delete failed")
+
+    monkeypatch.setattr(similarity, "delete_from_ivf_index", boom)
+    with pytest.raises(RuntimeError, match="delete failed"):
+        q177(spark, sf_dir)
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_cached_dir_builds_once_and_rebuilds_when_gone(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(Q, "_FIXTURE_DIRS", {})
+    builds = []
+
+    def build(path):
+        builds.append(path)
+        Path(path, "marker").touch()
+
+    first = Q._cached_dir("dlws_test_", "sf", "marker", build)
+    assert Q._cached_dir("dlws_test_", "sf", "marker", build) == first
+    assert builds == [first]
+    shutil.rmtree(first)
+    again = Q._cached_dir("dlws_test_", "sf", "marker", build)
+    assert builds == [first, again]
+    assert Path(again, "marker").exists()
