@@ -645,9 +645,9 @@ def _probe_rows(
 def _collect_probes(spark, probes_lazy: DataFrame, op: str):
     """Collect an indexed serve's probe rows — at most
     :data:`IVF_MAX_PROBE_ROWS`, else ``ValueError`` — and return them
-    as a local relation (the scoring join's broadcast side, which then
-    runs no job and never re-reads the caller's query frame) with the
-    partition filter on their ``cent_id`` set."""
+    as a local relation (the scoring join's broadcast side: its
+    broadcast runs one small JVM job and never re-reads the caller's
+    query frame) with the partition filter on their ``cent_id`` set."""
     from data_lake_with_spark_spark.sources import cow
 
     rows = collect_bounded(

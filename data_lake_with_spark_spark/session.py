@@ -14,6 +14,12 @@ Mirrors the reference's session surface (``/root/reference/etl.py:27-39``:
 - ``mapreduce.fileoutputcommitter.algorithm.version=2`` kept for parity
   (``etl.py:37``); on real object stores prefer the S3A magic committer
   or a lakehouse table format.
+- Local masters only: Python workers start through
+  :mod:`data_lake_with_spark_spark.worker_daemon`, the stock PySpark
+  daemon minus the per-task re-read of every zip archive on the
+  worker's path. Sessions a caller builds (see
+  :func:`ensure_runtime_confs`) and cluster masters keep the stock
+  daemon.
 """
 
 from __future__ import annotations
@@ -21,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: This package's directory; local sessions put its parent on the workers' path.
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 #: Confs that can only be applied while building a new session.
 _BUILD_CONFS: dict[str, str] = {
@@ -58,7 +67,11 @@ def get_spark(
     ``local[*]``); on a real cluster pass ``yarn``/``k8s://...`` or let
     spark-submit set it. ``shuffle_partitions`` defaults to 32 locally;
     at 100 TB size it to ~2-3× total executor cores with AQE coalescing
-    the tail.
+    the tail. A local master also gets the engine's Python-worker
+    daemon (:mod:`data_lake_with_spark_spark.worker_daemon`) unless
+    ``extra_conf`` names its own ``spark.python.daemon.module``; a
+    caller's ``spark.executorEnv.PYTHONPATH`` is kept, with the
+    package's parent directory appended.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -66,6 +79,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
+    extra_conf = dict(extra_conf or {})
     builder = SparkSession.builder.appName(app_name).master(master)
     if master.startswith("local"):
         # single-JVM mode: the driver heap IS the executor heap;
@@ -73,10 +87,21 @@ def get_spark(
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
         )
+        # Workers run on this host, so they can import the daemon from
+        # the driver's own package directory.
+        if "spark.python.daemon.module" not in extra_conf:
+            builder = builder.config(
+                "spark.python.daemon.module", "data_lake_with_spark_spark.worker_daemon"
+            )
+            path = extra_conf.get("spark.executorEnv.PYTHONPATH")
+            root = os.path.dirname(_PKG_DIR)
+            extra_conf["spark.executorEnv.PYTHONPATH"] = (
+                f"{path}{os.pathsep}{root}" if path else root
+            )
     for k, v in _BUILD_CONFS.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ensure_runtime_confs(spark)
@@ -128,11 +153,16 @@ def _snapshot_pre_existing_persistent(spark: SparkSession) -> None:
         if app_id in _PRE_EXISTING_PERSISTENT:
             return
         jmap = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
-        _PRE_EXISTING_PERSISTENT[app_id] = {
-            int(rdd.id()) for rdd in list(jmap.values())
-        }
+        _PRE_EXISTING_PERSISTENT[app_id] = _persistent_ids(jmap)
     except Exception:
         pass
+
+
+def _persistent_ids(jmap) -> set[int]:
+    """The RDD ids keying a py4j ``getPersistentRDDs()`` map. Read as
+    one array: iterating the map's ``values()`` ends on a Java
+    exception that py4j converts, ~25 ms per call."""
+    return {int(i) for i in jmap.keySet().toArray()}
 
 
 def clear_persistent_rdds(spark: SparkSession) -> int:
@@ -159,13 +189,10 @@ def clear_persistent_rdds(spark: SparkSession) -> int:
         sc = spark.sparkContext
         keep = _PRE_EXISTING_PERSISTENT.get(sc.applicationId, set())
         jmap = sc._jsc.getPersistentRDDs()  # noqa: SLF001
-        n = 0
-        for rdd in list(jmap.values()):
-            if int(rdd.id()) in keep:
-                continue
-            rdd.unpersist(False)
-            n += 1
-        return n
+        drop = _persistent_ids(jmap) - keep
+        for rdd_id in drop:
+            jmap.get(rdd_id).unpersist(False)
+        return len(drop)
     except Exception:
         return 0
 
@@ -178,8 +205,10 @@ def local_frame(spark: SparkSession, rows, schema):
     ``spark.createDataFrame(<list>)`` plans as a ``LogicalRDD`` over a
     PythonRDD, so every action touching the frame starts Python-worker
     tasks to re-serialize the rows. Shipped once as a pyarrow Table,
-    the rows live in the plan itself: collecting the frame or
-    broadcasting it into a join runs no job of its own."""
+    the rows live in the plan itself: collecting the frame runs no job,
+    and broadcasting it into a join runs one small JVM job (Spark's
+    ``BroadcastExchangeExec`` collects its child through an RDD) that
+    never re-reads the caller's rows from Python."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
@@ -234,6 +263,9 @@ def run_concurrent(thunks):
 
 _SHIPPED_APP_IDS: set[str] = set()
 
+#: This process's package-zip directory, removed at interpreter exit.
+_ZIP_DIR = None
+
 
 def ship_package_to_workers(spark: SparkSession) -> None:
     """Make this package importable inside Python WORKER processes.
@@ -247,8 +279,11 @@ def ship_package_to_workers(spark: SparkSession) -> None:
     workers then die with ModuleNotFoundError (caught by driving the
     contract from /tmp under a vanilla session). Shipping the package
     as a zip via ``addPyFile`` fixes every such path; once per
-    SparkContext, ~100 KB.
+    SparkContext, ~100 KB. The zip lives in a ``dlws_pkg_*`` directory
+    of this process, removed at interpreter exit (not earlier: Spark
+    serves it to tasks from that path).
     """
+    global _ZIP_DIR
     try:
         app_id = spark.sparkContext.applicationId
     except Exception:
@@ -258,16 +293,16 @@ def ship_package_to_workers(spark: SparkSession) -> None:
     import shutil
     import tempfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_base = os.path.join(
-        tempfile.gettempdir(), f"dlws_pkg_{os.getpid()}"
-    )
     try:
+        if _ZIP_DIR is None:
+            _ZIP_DIR = tempfile.TemporaryDirectory(
+                prefix="dlws_pkg_", ignore_cleanup_errors=True
+            )
         zip_path = shutil.make_archive(
-            zip_base,
+            os.path.join(_ZIP_DIR.name, "dlws_pkg"),
             "zip",
-            root_dir=os.path.dirname(pkg_dir),
-            base_dir=os.path.basename(pkg_dir),
+            root_dir=os.path.dirname(_PKG_DIR),
+            base_dir=os.path.basename(_PKG_DIR),
         )
         spark.sparkContext.addPyFile(zip_path)
     except Exception:
