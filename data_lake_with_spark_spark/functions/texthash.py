@@ -6,8 +6,8 @@ oracle. Engine-native hashes (Spark ``xxhash64``/``hash`` vs DuckDB
 ``hash``) differ, so the portable primitive here is md5:
 
 - string hash:  ``md5(s)`` — identical hex in both engines.
-- keyed hash:   ``md5(k || ':' || s)`` — a family of independent hash
-  functions indexed by ``k`` (used for MinHash signatures).
+- sliced hash:  hex digits ``[8j, 8j+8)`` of one ``md5(s)`` — four
+  independent hash functions per digest (used for MinHash signatures).
 - numeric hash: first 8 hex chars of md5 parsed as a big-endian
   integer — Spark ``conv(substr(md5(s),1,8),16,10)`` ==
   DuckDB ``CAST('0x' || substr(md5(s),1,8) AS BIGINT)``.
@@ -21,11 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def keyed_md5(key: int, col: Column) -> Column:
-    """One member of an md5-indexed hash family: md5(f'{key}:' + s)."""
-    return F.md5(F.concat(F.lit(f"{key}:"), col))
 
 
 def md5_slice(j: int, col: Column) -> Column:

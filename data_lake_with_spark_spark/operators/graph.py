@@ -26,6 +26,54 @@ from pyspark.sql import functions as F
 from data_lake_with_spark_spark.session import local_frame
 
 
+def _pagerank_edges(
+    edges: DataFrame,
+    iterations: int,
+    damping: float,
+    src_col: str,
+    dst_col: str,
+    weight_col: str | None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The prologue both PageRank variants share: argument checks, the
+    pinned ``(src, dst[, w])`` edge frame ``e``, per-src ``outdeg``
+    (out-degree, or the exact bigint total out-WEIGHT), and
+    ``contribs`` = ``e ⋈ outdeg``, pinned once — every round otherwise
+    re-runs the outdeg aggregate and the edge⋈outdeg join
+    (iterations − 1 redundant shuffles)."""
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    if not (0.0 < damping < 1.0):
+        raise ValueError(f"damping must be in (0, 1), got {damping}")
+    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("bigint").alias("w"))
+    e = edges.select(*cols).localCheckpoint()
+    deg = F.count(F.lit(1)) if weight_col is None else F.sum("w")
+    outdeg = e.groupBy("src").agg(deg.cast("bigint").alias("outdeg"))
+    contribs = e.join(outdeg, "src").localCheckpoint()
+    return e, outdeg, contribs
+
+
+def _incoming_rank(joined: DataFrame, weight_col: str | None) -> DataFrame:
+    """Per-dst sum ``_s`` of the contributions of ``contribs`` joined
+    with a ``rank`` column, through the FLOOR-grid fold: each
+    contribution snaps to bigint 10^-15 units, which sum exactly."""
+    if weight_col is None:
+        # one IEEE division then the tie-free grid snap
+        share = F.col("rank") / F.col("outdeg")
+    else:
+        # rank·w then one division — two pinned-order IEEE ops,
+        # mirrored verbatim in SQL oracles
+        share = (F.col("rank") * F.col("w")) / F.col("outdeg")
+    return (
+        joined.select(
+            F.col("dst").alias("node"), F.floor(share * F.lit(1e15)).alias("_c")
+        )
+        .groupBy("node")
+        .agg((F.sum("_c") / F.lit(1e15)).alias("_s"))
+    )
+
+
 def pagerank_fixed(
     edges: DataFrame,
     iterations: int = 3,
@@ -82,32 +130,9 @@ def pagerank_fixed(
     property-tested identical to the unweighted path (``r·1/Σ1`` is
     the same IEEE arithmetic as ``r/outdeg``).
     """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if not (0.0 < damping < 1.0):
-        raise ValueError(f"damping must be in (0, 1), got {damping}")
-    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("bigint").alias("w"))
-    e = edges.select(*cols).localCheckpoint()
-    if weight_col is None:
-        outdeg = e.groupBy("src").agg(
-            F.count(F.lit(1)).cast("bigint").alias("outdeg")
-        )
-        # one IEEE division then the tie-free grid snap
-        contrib_units = F.floor(
-            (F.col("rank") / F.col("outdeg")) * F.lit(1e15)
-        )
-    else:
-        # total out-WEIGHT sums exactly (bigint); contribution is
-        # rank·w then one division — two pinned-order IEEE ops,
-        # mirrored verbatim in SQL oracles
-        outdeg = e.groupBy("src").agg(
-            F.sum("w").cast("bigint").alias("outdeg")
-        )
-        contrib_units = F.floor(
-            ((F.col("rank") * F.col("w")) / F.col("outdeg")) * F.lit(1e15)
-        )
+    e, outdeg, contribs = _pagerank_edges(
+        edges, iterations, damping, src_col, dst_col, weight_col
+    )
     nodes = e.select(F.col("src").alias("node")).union(
         e.select(F.col("dst").alias("node"))
     ).distinct()
@@ -142,9 +167,6 @@ def pagerank_fixed(
             "n"
         ]
     )
-    # pinned once: every round otherwise re-runs the outdeg aggregate
-    # and the edge⋈outdeg join (iterations − 1 redundant shuffles)
-    contribs = e.join(outdeg, "src").localCheckpoint()
     r: DataFrame | None = None
     for t in range(iterations):
         if t == 0:
@@ -159,14 +181,7 @@ def pagerank_fixed(
             )
         else:
             joined = contribs.join(r.withColumnRenamed("node", "src"), "src")
-        incoming = (
-            joined.select(
-                F.col("dst").alias("node"),
-                contrib_units.alias("_c"),
-            )
-            .groupBy("node")
-            .agg((F.sum("_c") / F.lit(1e15)).alias("_s"))
-        )
+        incoming = _incoming_rank(joined, weight_col)
         # the per-iteration frames are rank-table-sized; pin each round
         # so the next one consumes a materialized table, not 2^t plan
         # copies
@@ -222,28 +237,9 @@ def pagerank_personalized(
     Returns (node, rank) for nodes with inbound contributions or
     seed membership.
     """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if not (0.0 < damping < 1.0):
-        raise ValueError(f"damping must be in (0, 1), got {damping}")
-    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("bigint").alias("w"))
-    e = edges.select(*cols).localCheckpoint()
-    if weight_col is None:
-        outdeg = e.groupBy("src").agg(
-            F.count(F.lit(1)).cast("bigint").alias("outdeg")
-        )
-        contrib_units = F.floor(
-            (F.col("rank") / F.col("outdeg")) * F.lit(1e15)
-        )
-    else:
-        outdeg = e.groupBy("src").agg(
-            F.sum("w").cast("bigint").alias("outdeg")
-        )
-        contrib_units = F.floor(
-            ((F.col("rank") * F.col("w")) / F.col("outdeg")) * F.lit(1e15)
-        )
+    _e, _outdeg, contribs = _pagerank_edges(
+        edges, iterations, damping, src_col, dst_col, weight_col
+    )
     sd = seeds.select(F.col(seed_col).alias("node")).distinct().localCheckpoint()
     # seed count collected ONCE to a literal (the pagerank_fixed n
     # pattern): the previous crossJoin(broadcast(agg)) paid an extra
@@ -254,18 +250,9 @@ def pagerank_personalized(
         "node", (F.lit(1.0) / F.lit(ns).cast("bigint")).alias("s")
     )
     r = s.select("node", F.col("s").alias("rank"))
-    # pinned once — see pagerank_fixed: unpinned, every round re-runs
-    # the outdeg aggregate and the edge⋈outdeg join
-    contribs = e.join(outdeg, "src").localCheckpoint()
     for _ in range(iterations):
-        incoming = (
-            contribs.join(r.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                contrib_units.alias("_c"),
-            )
-            .groupBy("node")
-            .agg((F.sum("_c") / F.lit(1e15)).alias("_s"))
+        incoming = _incoming_rank(
+            contribs.join(r.withColumnRenamed("node", "src"), "src"), weight_col
         )
         r = (
             # no broadcast hint: Spark cannot broadcast a side of a

@@ -8,12 +8,12 @@ for every format stdlib+numpy can parse: binary PPM, uncompressed
 24-bit BMP, non-interlaced 8-bit PNG (zlib-DEFLATE plus five
 per-row filters), BASELINE JFIF JPEG in 4:4:4/4:2:0/grayscale
 (huffman + dequantize + vectorized 8×8 IDCT + chroma upsample +
-YCbCr→RGB — ``functions/jpeg.py``, with a matching encoder for the
-lossy round-trip tests), and PCM WAV audio. Remaining codec formats
-(progressive JPEG, MP3, video containers) fall back to deterministic
-byte-keyed stubs because media libraries are not available in this
-environment — swap the fallback branch for PIL/ffmpeg calls in
-production, inside the same mapInPandas kernels.
+YCbCr→RGB — ``functions/jpeg.py``; the tests' JPEG and PNG writers
+are in ``tests/image_encoders.py``), and PCM WAV audio. Remaining
+codec formats (progressive JPEG, MP3, video containers) fall back to
+deterministic byte-keyed stubs because media libraries are not
+available in this environment — swap the fallback branch for
+PIL/ffmpeg calls in production, inside the same mapInPandas kernels.
 
 Scale notes: payloads ride in parquet binary columns; keep row groups
 small enough that an Arrow batch of payloads fits executor memory
@@ -186,54 +186,6 @@ def _decode_png(payload: bytes):
         return px.copy()
     except (ValueError, IndexError, zlib.error):
         return None
-
-
-def encode_png(img, filter_type: int = 0) -> bytes:
-    """Minimal PNG writer for an (H, W, 3) uint8 array (color type 2,
-    one filter type for every row) — the round-trip twin of
-    :func:`_decode_png` for tests and for materializing decoded
-    assets without a codec library."""
-    import zlib
-
-    import numpy as np
-
-    img = np.ascontiguousarray(img, dtype=np.uint8)
-    h, w = img.shape[:2]
-    stride = w * 3
-    flat = img.reshape(h, stride).astype(np.int64)
-    rows = bytearray()
-    prev = np.zeros(stride, dtype=np.int64)
-    for y in range(h):
-        cur = flat[y]
-        if filter_type == 0:
-            filt = cur
-        elif filter_type == 1:  # Sub
-            filt = (cur - np.concatenate([np.zeros(3, np.int64), cur[:-3]])) % 256
-        elif filter_type == 2:  # Up
-            filt = (cur - prev) % 256
-        else:
-            raise ValueError("encoder supports filter types 0/1/2")
-        rows.append(filter_type)
-        rows.extend(filt.astype(np.uint8).tobytes())
-        prev = cur
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            len(body).to_bytes(4, "big")
-            + ctype
-            + body
-            + zlib.crc32(ctype + body).to_bytes(4, "big")
-        )
-
-    ihdr = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 2, 0, 0, 0])
-    )
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(rows)))
-        + chunk(b"IEND", b"")
-    )
 
 
 def decode_image(payload: bytes):

@@ -1,12 +1,13 @@
 """Relational operator library (SURVEY.md §2 C/D/E/F/I).
 
-Covers every relational operator the reference executes — projection
-(C1-C5), filter (D1-D2), inner equi-joins incl. the 2-condition
-natural-string join (E1) and the enrichment join (E2), full-row
-distinct (F1-F2), count (F3), limit (I1) — plus the standard surface
-the reference lacks but a complete engine needs (I2-I4): groupBy
-aggregation, sort/top-k, outer/semi/anti joins, set operations,
-windowed ranking.
+Covers the relational operators the reference executes — projection
+(C1-C5), inner equi-joins incl. the 2-condition natural-string join
+(E1) and the enrichment join (E2), full-row distinct (F1-F2), count
+(F3), limit (I1) — plus the standard surface the reference lacks but
+a complete engine needs (I2-I4): groupBy aggregation, sort/top-k,
+outer/semi/anti joins, set operations, windowed ranking. Filters
+(D1-D2), ``selectExpr`` projections and keyed ``dropDuplicates`` are
+one DataFrame call each and are written as such.
 
 Everything is a thin, declarative wrapper over the DataFrame API so
 Catalyst keeps full optimization freedom (pushdown, pruning,
@@ -32,11 +33,6 @@ def project(df: DataFrame, *cols: Column | str) -> DataFrame:
     return df.select(*cols)
 
 
-def project_expr(df: DataFrame, *exprs: str) -> DataFrame:
-    """C2: SQL-expression projection with rename (etl.py:117-119)."""
-    return df.selectExpr(*exprs)
-
-
 def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     return df.withColumnsRenamed(mapping)
 
@@ -44,17 +40,6 @@ def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
 def derive(df: DataFrame, **cols: Column) -> DataFrame:
     """C3: append derived columns (etl.py:216,220,230-235) in one pass."""
     return df.withColumns(dict(cols))
-
-
-# --- filters (D1-D2) ------------------------------------------------------
-
-def filter_eq(df: DataFrame, col: str, value: object) -> DataFrame:
-    """D1: equality predicate (etl.py:186 — page == 'NextSong')."""
-    return df.filter(F.col(col) == F.lit(value))
-
-
-def filter_where(df: DataFrame, predicate: Column | str) -> DataFrame:
-    return df.where(predicate)
 
 
 # --- joins (E1-E3) --------------------------------------------------------
@@ -104,11 +89,6 @@ def anti_join(df: DataFrame, other: DataFrame, on) -> DataFrame:
 def distinct_rows(df: DataFrame) -> DataFrame:
     """F1/F2: full-row distinct (etl.py:76,92,177,236)."""
     return df.distinct()
-
-
-def dedup_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Keyed dedup — arbitrary survivor per key (dropDuplicates)."""
-    return df.dropDuplicates(list(keys))
 
 
 def count_rows(df: DataFrame) -> DataFrame:

@@ -17,9 +17,10 @@ Mirrors the reference's session surface (``/root/reference/etl.py:27-39``:
 - Local masters only: Python workers start through
   :mod:`data_lake_with_spark_spark.worker_daemon`, the stock PySpark
   daemon minus the per-task re-read of every zip archive on the
-  worker's path. Sessions a caller builds (see
-  :func:`ensure_runtime_confs`) and cluster masters keep the stock
-  daemon.
+  worker's path, and import this package from the driver's checkout.
+  Sessions a caller builds (see :func:`ensure_runtime_confs`) and
+  cluster masters keep the stock daemon and get the package as a zip
+  instead (:func:`ship_package_to_workers`).
 """
 
 from __future__ import annotations
@@ -30,6 +31,10 @@ from pyspark.sql import SparkSession
 
 #: This package's directory; local sessions put its parent on the workers' path.
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+#: The daemon :func:`get_spark` gives local sessions; their workers
+#: import the package from the checkout on their ``PYTHONPATH``.
+_ENGINE_DAEMON = "data_lake_with_spark_spark.worker_daemon"
 
 #: Confs that can only be applied while building a new session.
 _BUILD_CONFS: dict[str, str] = {
@@ -90,9 +95,7 @@ def get_spark(
         # Workers run on this host, so they can import the daemon from
         # the driver's own package directory.
         if "spark.python.daemon.module" not in extra_conf:
-            builder = builder.config(
-                "spark.python.daemon.module", "data_lake_with_spark_spark.worker_daemon"
-            )
+            builder = builder.config("spark.python.daemon.module", _ENGINE_DAEMON)
             path = extra_conf.get("spark.executorEnv.PYTHONPATH")
             root = os.path.dirname(_PKG_DIR)
             extra_conf["spark.executorEnv.PYTHONPATH"] = (
@@ -273,38 +276,46 @@ def ship_package_to_workers(spark: SparkSession) -> None:
     mapInPandas/pandas-UDF kernels close over module-level functions,
     which cloudpickle serializes BY REFERENCE (module + qualname) —
     so the worker must be able to ``import data_lake_with_spark_spark``.
-    That holds when the driver process runs from the repo root (cwd on
-    sys.path) but NOT when an external harness imports
-    ``__spark_entry__`` from elsewhere via ``sys.path`` manipulation:
-    workers then die with ModuleNotFoundError (caught by driving the
-    contract from /tmp under a vanilla session). Shipping the package
-    as a zip via ``addPyFile`` fixes every such path; once per
-    SparkContext, ~100 KB. The zip lives in a ``dlws_pkg_*`` directory
-    of this process, removed at interpreter exit (not earlier: Spark
-    serves it to tasks from that path).
+    A local :func:`get_spark` session already guarantees that: its
+    workers start through :mod:`~data_lake_with_spark_spark.worker_daemon`
+    with the checkout on ``spark.executorEnv.PYTHONPATH``, so nothing
+    is shipped. Every other session — one a caller builds and hands to
+    ``__spark_entry__`` (whose workers would otherwise die with
+    ModuleNotFoundError when the driver imports the package from
+    elsewhere via ``sys.path``), a cluster master, or an ``extra_conf``
+    naming another daemon — gets the package's source files as a zip
+    via ``addPyFile``, once per SparkContext (~330 KB; ``__pycache__``
+    is left out, ``zipimport`` never reads it). The zip lives in a
+    ``dlws_pkg_*`` directory of this process, removed at interpreter
+    exit (not earlier: Spark serves it to tasks from that path).
     """
     global _ZIP_DIR
     try:
-        app_id = spark.sparkContext.applicationId
+        if spark.conf.get("spark.python.daemon.module", None) == _ENGINE_DAEMON:
+            return
+        sc = spark.sparkContext
+        app_id = sc.applicationId
     except Exception:
         return
     if app_id in _SHIPPED_APP_IDS:
         return
-    import shutil
     import tempfile
+    import zipfile
 
     try:
         if _ZIP_DIR is None:
             _ZIP_DIR = tempfile.TemporaryDirectory(
                 prefix="dlws_pkg_", ignore_cleanup_errors=True
             )
-        zip_path = shutil.make_archive(
-            os.path.join(_ZIP_DIR.name, "dlws_pkg"),
-            "zip",
-            root_dir=os.path.dirname(_PKG_DIR),
-            base_dir=os.path.basename(_PKG_DIR),
-        )
-        spark.sparkContext.addPyFile(zip_path)
+        zip_path = os.path.join(_ZIP_DIR.name, "dlws_pkg.zip")
+        root = os.path.dirname(_PKG_DIR)
+        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
+            for d, subdirs, files in os.walk(_PKG_DIR):
+                subdirs[:] = [n for n in subdirs if n != "__pycache__"]
+                for name in files:
+                    path = os.path.join(d, name)
+                    z.write(path, os.path.relpath(path, root))
+        sc.addPyFile(zip_path)
     except Exception:
         # Transient failure (tmpdir full, addPyFile race): do NOT cache
         # the app_id, so the next ensure_runtime_confs call retries
@@ -319,8 +330,9 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     The driver harness hands us its own SparkSession; queries must be
     deterministic under it, so set what can still be set (timezone,
     nanos handling, AQE). Build-time confs are left alone. Also ships
-    the package zip to Python workers (see ship_package_to_workers) so
-    pandas-UDF kernels import cleanly wherever the driver runs from.
+    the package zip to Python workers of sessions that need it (see
+    ship_package_to_workers) so pandas-UDF kernels import cleanly
+    wherever the driver runs from.
     """
     _snapshot_pre_existing_persistent(spark)
     for k, v in _RUNTIME_CONFS.items():

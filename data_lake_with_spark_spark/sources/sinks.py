@@ -2,8 +2,9 @@
 
 The reference writes parquet three ways (``/root/reference/etl.py``):
 overwrite+partitioned (B1: etl.py:99-102, 242-245, 305-308),
-overwrite unpartitioned (B2: etl.py:126-128, 204-206), with the v2
-output committer (B3: etl.py:37 — set session-wide in session.py).
+overwrite unpartitioned (B2: etl.py:126-128, 204-206 — a plain
+``df.write.mode("overwrite").parquet(path)``, no wrapper), with the
+v2 output committer (B3: etl.py:37 — set session-wide in session.py).
 
 Scale additions the reference lacks:
 
@@ -22,11 +23,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """B2: plain overwrite parquet write (etl.py:126-128)."""
-    df.write.mode(mode).parquet(path)
 
 
 def write_partitioned(
@@ -91,23 +87,6 @@ def write_sorted(
         else df.repartitionByRange(*cols)
     )
     out.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
-
-
-def write_csv(
-    df: DataFrame, path: str, mode: str = "overwrite", header: bool = True
-) -> None:
-    """CSV export sink (beyond-reference; interchange format — no
-    pushdown/pruning on read-back, so keep it at the pipeline edge)."""
-    df.write.mode(mode).option("header", header).csv(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC columnar sink (beyond-reference)."""
-    df.write.mode(mode).orc(path)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def compact_parquet(

@@ -3,6 +3,7 @@ from __future__ import annotations
 import hashlib
 
 from data_lake_with_spark_spark.operators import multimodal as M
+from tests.image_encoders import encode_jpeg, encode_png
 
 
 def _assets(spark):
@@ -216,7 +217,7 @@ def test_decode_png_round_trip_all_encoder_filters():
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(13, 9, 3), dtype=np.uint8)
     for ft in (0, 1, 2):
-        out = M.decode_image(M.encode_png(img, filter_type=ft))
+        out = M.decode_image(encode_png(img, filter_type=ft))
         assert out is not None and (out == img).all(), f"filter {ft}"
 
 
@@ -259,7 +260,7 @@ def test_decode_png_rejects_unsupported_gracefully():
 
     rng = np.random.default_rng(5)
     img = rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)
-    good = M.encode_png(img)
+    good = encode_png(img)
     # 16-bit depth → None (byte at IHDR offset: depth)
     bad = bytearray(good)
     bad[len(M._PNG_SIG) + 8 + 8] = 16
@@ -272,7 +273,7 @@ def test_extract_features_uses_real_pixels_for_png(spark):
     import numpy as np
 
     img = np.full((8, 8, 3), 200, dtype=np.uint8)
-    png = M.encode_png(img, filter_type=1)
+    png = encode_png(img, filter_type=1)
     rows = [(9, "image", "image/png", png, 8, 8, None)]
     feats = M.extract_features(
         spark.createDataFrame(rows, M.ASSET_SCHEMA)
@@ -288,7 +289,7 @@ def test_resize_images_real_nearest_neighbor_for_png(spark):
 
     rng = np.random.default_rng(13)
     img = rng.integers(0, 256, size=(10, 6, 3), dtype=np.uint8)
-    rows = [(10, "image", "image/png", M.encode_png(img, 2), 6, 10, None)]
+    rows = [(10, "image", "image/png", encode_png(img, 2), 6, 10, None)]
     out = M.resize_images(
         spark.createDataFrame(rows, M.ASSET_SCHEMA), width=3, height=5
     ).collect()[0]
@@ -311,10 +312,7 @@ def test_jpeg_round_trip_all_modes():
     smooth gradient (JPEG's design case), plus exactness on flat."""
     import numpy as np
 
-    from data_lake_with_spark_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
+    from data_lake_with_spark_spark.functions.jpeg import decode_jpeg
 
     yy, xx = np.mgrid[0:48, 0:64]
     img = np.stack(
@@ -349,10 +347,7 @@ def test_jpeg_restart_markers_round_trip():
     4:2:0, and grayscale modes."""
     import numpy as np
 
-    from data_lake_with_spark_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
+    from data_lake_with_spark_spark.functions.jpeg import decode_jpeg
 
     rng = np.random.default_rng(7)
     yy, xx = np.mgrid[0:41, 0:57]
@@ -396,10 +391,7 @@ def test_jpeg_bitreader_never_discards_premarker_bits():
 def test_jpeg_shape_preservation_and_rejection():
     import numpy as np
 
-    from data_lake_with_spark_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
+    from data_lake_with_spark_spark.functions.jpeg import decode_jpeg
 
     rng = np.random.default_rng(1)
     for shape in ((1, 1, 3), (7, 9, 3), (9, 7, 3), (17, 31, 3)):
@@ -420,8 +412,6 @@ def test_jpeg_shape_preservation_and_rejection():
 
 def test_extract_features_uses_real_pixels_for_jpeg(spark):
     import numpy as np
-
-    from data_lake_with_spark_spark.functions.jpeg import encode_jpeg
 
     img = np.full((16, 16, 3), 200, dtype=np.uint8)
     rows = [(11, "image", "image/jpeg", encode_jpeg(img, 95), 16, 16, None)]

@@ -1,5 +1,6 @@
 """Session plumbing: the Python-worker daemon of local sessions, the
-caller's settings it must keep, the package zip's lifetime and the
+caller's settings it must keep, the import path of each kind of
+session (checkout or package zip), the zip's lifetime and the
 persistent-RDD sweep between operations."""
 
 from __future__ import annotations
@@ -96,7 +97,7 @@ def test_worker_task_rereads_no_zip_archive(spark):
     assert rdd.mapPartitions(rereads).collect() == [0, 0]
 
 
-_CHILD = textwrap.dedent(
+_ENGINE_CHILD = textwrap.dedent(
     """
     import json, os, sys
     sys.path.insert(0, sys.argv[1])
@@ -123,29 +124,82 @@ _CHILD = textwrap.dedent(
         "pythonpath": spark.conf.get("spark.executorEnv.PYTHONPATH"),
         "zip_dirs": sorted(n for n in os.listdir(os.environ["TMPDIR"])
                            if n.startswith("dlws_pkg_")),
+        "files": list(spark.sparkContext.listFiles),
+    }))
+    spark.stop()
+    """
+)
+
+#: A session built the way an external driver builds its own, then
+#: handed to the package as ``__spark_entry__`` does.
+_CALLER_CHILD = textwrap.dedent(
+    """
+    import json, os, sys, zipfile
+    sys.path.insert(0, sys.argv[1])
+    from pyspark.sql import SparkSession
+    from data_lake_with_spark_spark.session import ensure_runtime_confs
+
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    ensure_runtime_confs(spark)
+
+    def probe(_):
+        import data_lake_with_spark_spark
+        yield data_lake_with_spark_spark.__file__
+
+    where = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()[0]
+    zip_dirs = sorted(n for n in os.listdir(os.environ["TMPDIR"])
+                      if n.startswith("dlws_pkg_"))
+    names = [n for d in zip_dirs for n in zipfile.ZipFile(
+        os.path.join(os.environ["TMPDIR"], d, "dlws_pkg.zip")).namelist()]
+    print(json.dumps({
+        "package_file": where,
+        "zip_dirs": zip_dirs,
+        "zip_names": names,
+        "files": list(spark.sparkContext.listFiles),
     }))
     spark.stop()
     """
 )
 
 
-@pytest.fixture(scope="module")
-def child_session(tmp_path_factory):
-    """One short-lived process on ``local[1]`` with its own temp
-    directory and a caller's ``spark.executorEnv.PYTHONPATH``."""
-    base = tmp_path_factory.mktemp("child_session")
-    mods, tmp = base / "mods", base / "tmp"
-    mods.mkdir()
+def _run_child(base, script: str, *args: str) -> tuple[dict, str]:
+    """Run ``script`` in a process of its own, with its own temp
+    directory, no ``PYTHONPATH`` and its cwd outside the checkout;
+    return its last stdout line as JSON and its temp directory. The
+    child writes bytecode as a default interpreter does, so the
+    package has a ``__pycache__`` for the zip to leave out."""
+    tmp = base / "tmp"
     tmp.mkdir()
-    (mods / "dlws_caller_mod.py").write_text("VALUE = 41\n")
     env = {**os.environ, "TMPDIR": str(tmp), "SPARK_LOCAL_DIRS": str(tmp),
            "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    for name in ("PYTHONPATH", "PYTHONDONTWRITEBYTECODE"):
+        env.pop(name, None)
     out = subprocess.run(
-        [sys.executable, "-c", _CHILD, ROOT, str(mods)],
+        [sys.executable, "-c", script, ROOT, *args],
         cwd=str(base), env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    return json.loads(out.stdout.strip().splitlines()[-1]), str(mods), tmp
+    return json.loads(out.stdout.strip().splitlines()[-1]), str(tmp)
+
+
+@pytest.fixture(scope="module")
+def child_session(tmp_path_factory):
+    """One short-lived :func:`get_spark` process on ``local[1]`` with a
+    caller's ``spark.executorEnv.PYTHONPATH``."""
+    base = tmp_path_factory.mktemp("child_session")
+    mods = base / "mods"
+    mods.mkdir()
+    (mods / "dlws_caller_mod.py").write_text("VALUE = 41\n")
+    report, tmp = _run_child(base, _ENGINE_CHILD, str(mods))
+    return report, str(mods), tmp
+
+
+@pytest.fixture(scope="module")
+def caller_session(tmp_path_factory):
+    """One short-lived process whose session a caller built on
+    ``local[1]``; only its driver has the checkout on ``sys.path``."""
+    return _run_child(tmp_path_factory.mktemp("caller_session"), _CALLER_CHILD)
 
 
 def test_caller_pythonpath_is_kept_beside_the_daemon(child_session):
@@ -155,8 +209,24 @@ def test_caller_pythonpath_is_kept_beside_the_daemon(child_session):
     assert report["pythonpath"] == os.pathsep.join([mods, ROOT])
 
 
-def test_package_zip_removed_at_exit(child_session):
-    report, _, tmp = child_session
+def test_engine_session_ships_no_package_zip(child_session):
+    report, _, _ = child_session
+    assert report["zip_dirs"] == []
+    assert not [f for f in report["files"] if f.endswith(".zip")]
+
+
+def test_caller_session_workers_import_the_shipped_zip(caller_session):
+    report, _ = caller_session
+    zips = [f for f in report["files"] if f.endswith("dlws_pkg.zip")]
+    assert len(zips) == 1
+    init = os.path.join("dlws_pkg.zip", "data_lake_with_spark_spark", "__init__.py")
+    assert report["package_file"].endswith(init)
+    assert "data_lake_with_spark_spark/__init__.py" in report["zip_names"]
+    assert not [n for n in report["zip_names"] if "__pycache__/" in n]
+
+
+def test_package_zip_removed_at_exit(caller_session):
+    report, tmp = caller_session
     assert len(report["zip_dirs"]) == 1  # shipped while the session ran
     assert not [n for n in os.listdir(tmp) if n.startswith("dlws_pkg_")]
 

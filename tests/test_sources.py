@@ -92,7 +92,7 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir):
     any Exchange — the 100 TB repeated-join payoff of write_bucketed."""
     from data_lake_with_spark_spark.operators.skew import explain_shuffles
     from data_lake_with_spark_spark.sources.catalog import load_table
-    from data_lake_with_spark_spark.sources.sinks import read_table, write_bucketed
+    from data_lake_with_spark_spark.sources.sinks import write_bucketed
 
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -100,7 +100,7 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir):
     write_bucketed(
         li, "b_lineitem", ["l_orderkey"], num_buckets=8, sort_cols=["l_orderkey"]
     )
-    bo, bl = read_table(spark, "b_orders"), read_table(spark, "b_lineitem")
+    bo, bl = spark.table("b_orders"), spark.table("b_lineitem")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -135,13 +135,12 @@ def test_csv_roundtrip_with_schema(spark, tmp_path):
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     from data_lake_with_spark_spark.sources.readers import read_csv
-    from data_lake_with_spark_spark.sources.sinks import write_csv
 
     df = spark.createDataFrame(
         [(1, "a,b quoted"), (2, None), (3, "plain")], ["id", "val"]
     )
     path = str(tmp_path / "csv_out")
-    write_csv(df, path)
+    df.write.option("header", True).csv(path)
     schema = StructType(
         [StructField("id", IntegerType()), StructField("val", StringType())]
     )
@@ -156,11 +155,10 @@ def test_csv_roundtrip_with_schema(spark, tmp_path):
 
 def test_orc_roundtrip(spark, tmp_path):
     from data_lake_with_spark_spark.sources.readers import read_orc
-    from data_lake_with_spark_spark.sources.sinks import write_orc
 
     df = spark.createDataFrame([(1, 2.5), (2, -1.0)], ["id", "v"])
     path = str(tmp_path / "orc_out")
-    write_orc(df, path)
+    df.write.orc(path)
     back = read_orc(spark, path)
     assert back.schema == df.schema
     assert {tuple(r) for r in back.collect()} == {(1, 2.5), (2, -1.0)}
