@@ -31,22 +31,18 @@ ZIGZAG = np.array([
 
 
 def _canonical_codes(bits: list[int], vals: list[int]):
-    """Canonical huffman codes per JPEG spec C.2: returns
-    {(length, code): symbol} for decode and {symbol: (code, length)}
-    for encode."""
+    """Canonical huffman codes per JPEG spec C.2, as the decode map
+    {(length, code): symbol}."""
     decode: dict[tuple[int, int], int] = {}
-    encode: dict[int, tuple[int, int]] = {}
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            sym = vals[k]
-            decode[(length, code)] = sym
-            encode[sym] = (code, length)
+            decode[(length, code)] = vals[k]
             code += 1
             k += 1
         code <<= 1
-    return decode, encode
+    return decode
 
 
 def _dct_matrix() -> np.ndarray:
@@ -218,8 +214,7 @@ def _decode_jpeg_inner(payload: bytes):
                 bits = list(body[i + 1 : i + 17])
                 nv = sum(bits)
                 vals = list(body[i + 17 : i + 17 + nv])
-                table, _enc = _canonical_codes(bits, vals)
-                (huff_dc if tc == 0 else huff_ac)[th] = table
+                (huff_dc if tc == 0 else huff_ac)[th] = _canonical_codes(bits, vals)
                 i += 17 + nv
         elif marker == 0xDA:  # SOS
             ns = body[0]

@@ -1022,42 +1022,22 @@ RI_MIN_ROWS_PER_BUCKET = 64
 
 
 def _ri_check_format(meta: dict, path: str) -> None:
-    """Refuse to operate on a state whose on-disk format predates (or
-    postdates) this code — the version stamp is the difference between
-    a descriptive error here and an opaque Spark column-resolution
-    failure deep inside a maintenance plan (r12 ADVICE: the v1→v2
-    ledger schema change surfaced as ``.select("basket", "item")``
-    blowing up mid-merge).
-
-    A MISSING stamp is not automatically v1 (r13 ADVICE): states
-    written before the stamp existed already carry the v2
-    (basket, item) incidence ledger — only their meta lacks the key.
-    Those are distinguished by the per-component schema sidecar (the
-    ledger schema listing an ``item`` field) and accepted as v2; the
-    hard error is reserved for ledgers that actually lack the
-    incidence."""
+    """Refuse to operate on a state whose on-disk format is not this
+    code's — the version stamp is the difference between a descriptive
+    error here and an opaque Spark column-resolution failure deep
+    inside a maintenance plan (r12 ADVICE: the v1→v2 ledger schema
+    change surfaced as ``.select("basket", "item")`` blowing up
+    mid-merge). A missing stamp raises too."""
     got = meta.get("format")
-    if got == _RI_FORMAT:
-        return
-    if got is None:
-        import json
-
-        baskets_schema = (meta.get("schemas") or {}).get("baskets")
-        if baskets_schema is not None:
-            fields = {
-                f.get("name")
-                for f in json.loads(baskets_schema).get("fields", [])
-            }
-            if "item" in fields:
-                return  # unstamped v2 — compatible, operate normally
-    raise ValueError(
-        f"related-items state at {path!r} has on-disk format "
-        f"{got!r}; this code reads format {_RI_FORMAT} (v2 stores "
-        "the full (basket, item) incidence as the ledger; v1 "
-        "stored basket ids only) — a v1 ledger cannot drive the "
-        "ledger-only maintenance ops; rebuild the state from the "
-        "source history with build_related_items_state"
-    )
+    if got != _RI_FORMAT:
+        raise ValueError(
+            f"related-items state at {path!r} has on-disk format "
+            f"{got!r}; this code reads format {_RI_FORMAT} (v2 stores "
+            "the full (basket, item) incidence as the ledger; v1 "
+            "stored basket ids only) — a v1 ledger cannot drive the "
+            "ledger-only maintenance ops; rebuild the state from the "
+            "source history with build_related_items_state"
+        )
 
 
 def _ri_bucket(cols, n_buckets: int):
@@ -1207,9 +1187,6 @@ def build_related_items_state(
             "k": int(k),
             "min_count": int(min_count),
             "n_buckets": int(n_buckets),
-            # per-component schemas: _ri_check_format tells an
-            # unstamped v2 ledger by its baskets schema
-            "schemas": {comp: f.schema.json() for comp, f in framed.items()},
         },
     )
 

@@ -1038,17 +1038,16 @@ def merge_ivf_index(
 #: Layout of the three vector families, which drives their merge,
 #: delete, compaction and health report: the partitioned component, its
 #: partition columns (the first is the copy-on-write unit), the frozen
-#: whole components, the meta sidecar, and whether maintenance requires
-#: that sidecar (pre-sidecar IVF layouts have none).
+#: whole components and the meta sidecar every build writes and every
+#: maintenance op requires.
 _VEC_LAYOUT = {
-    "ivf": ("lists", ["cent_id"], ("centroids",), "ivf_meta.json", False),
-    "pq": ("codes", ["id_bucket"], ("codebooks",), "pq_meta.json", True),
+    "ivf": ("lists", ["cent_id"], ("centroids",), "ivf_meta.json"),
+    "pq": ("codes", ["id_bucket"], ("codebooks",), "pq_meta.json"),
     "ivfpq": (
         "codes",
         ["id_bucket", "cent_id"],
         ("centroids", "codebooks"),
         "ivfpq_meta.json",
-        True,
     ),
 }
 
@@ -1061,12 +1060,12 @@ def _vec_components(family) -> list:
 
 
 def _vec_meta(spark, family, base_path):
-    """The base's meta sidecar; raises when ``family`` requires one."""
+    """The base's meta sidecar; raises when it is missing."""
     from data_lake_with_spark_spark.sources import cow
 
-    meta_name, required = _VEC_LAYOUT[family][3:]
+    meta_name = _VEC_LAYOUT[family][3]
     meta = cow.read_json(spark, f"{base_path}/{meta_name}")
-    if meta is None and required:
+    if meta is None:
         raise FileNotFoundError(f"no {meta_name} under {base_path!r}")
     return meta
 
@@ -1084,7 +1083,7 @@ def _vec_commit(spark, family, rows, base_path, out_path, layout, changed):
     """Write ``rows`` as the changed partitions and promote the rest."""
     from data_lake_with_spark_spark.sources import cow
 
-    comp, cols, frozen, meta_name, _required = _VEC_LAYOUT[family]
+    comp, cols, frozen, meta_name = _VEC_LAYOUT[family]
     return cow.commit(
         spark, rows, base_path, out_path, layout, comp, cols, changed,
         frozen=frozen, sidecars=(meta_name,),
@@ -1213,7 +1212,8 @@ def _delete_vectors(
 def _compact_vectors(spark, family, index_path: str, out_path: str) -> dict:
     from data_lake_with_spark_spark.sources import cow
 
-    comp, cols, frozen, meta_name, _required = _VEC_LAYOUT[family]
+    _vec_meta(spark, family, index_path)
+    comp, cols, frozen, meta_name = _VEC_LAYOUT[family]
     stats = cow.compact(
         spark, index_path, out_path, {comp: cols, **dict.fromkeys(frozen)},
         sidecars=(meta_name,),
@@ -2514,8 +2514,9 @@ def _retrain_codes(
         .distinct()
     )
     _retrain_guard_ids(spark, idx_ids, corpus, id_col)
-    meta = cow.read_json(spark, f"{cur}/{_VEC_LAYOUT[family][3]}") or {}
-    nb = n_buckets if n_buckets is not None else meta.get("n_buckets", 32)
+    nb = n_buckets
+    if nb is None:
+        nb = _vec_meta(spark, family, cur)["n_buckets"]
     epoch, swept = cow.publish(
         spark, root, "retrain", cur, lambda out: build(out, nb),
         _vec_components(family) if vacuum else (),

@@ -974,16 +974,8 @@ def bm25_topk(
     # build staged to disk (:func:`build_bm25_index` IS that staging;
     # :func:`bm25_topk_indexed` serves against it with identical
     # scores — the persisted-index twin, the IVF q102/q114 pattern).
-    ctf = (
-        corpus.select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
-        )
-        .where(F.col("tok") != "")
-        .groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()
-    )
-    dl = ctf.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
+    ctf = _bm25_tf(corpus, id_col, text_col)
+    dl = _bm25_doclens(ctf, id_col)
     stats = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
@@ -1094,6 +1086,34 @@ BM25_MIN_ROWS_PER_BUCKET = 64
 BM25_MAX_QUERY_TERMS = 65_536
 
 
+def _bm25_tf(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The ``(id, tok, tf)`` term frequencies of ``docs``, pinned: each
+    caller reads them more than once."""
+    return (
+        docs.select(
+            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+        )
+        .where(F.col("tok") != "")
+        .groupBy(id_col, "tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+        .localCheckpoint()
+    )
+
+
+def _bm25_doclens(ctf: DataFrame, id_col: str) -> DataFrame:
+    """``(id, dl)``: each document's length in tokens."""
+    return ctf.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
+
+
+def _bm25_corpus_stats(dl: DataFrame, n_buckets: int) -> DataFrame:
+    """The one-row ``(n_corpus, avgdl, n_buckets)`` stats of the
+    doclens ``dl``."""
+    return dl.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
+        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
+    ).withColumn("n_buckets", F.lit(int(n_buckets)).cast("int"))
+
+
 #: The one-row corpus stats component every BM25 layout carries.
 _BM25_STATS_SCHEMA = "n_corpus bigint, avgdl double, n_buckets int"
 
@@ -1143,26 +1163,14 @@ def build_bm25_index(
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    ctf = (
-        corpus.select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
-        )
-        .where(F.col("tok") != "")
-        .groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()
-    )
+    ctf = _bm25_tf(corpus, id_col, text_col)
     n_post = ctf.count()
     _check_grain(
         "build_bm25_index", strict_layout, BM25_MIN_ROWS_PER_BUCKET,
         ("n_postings", n_post), {"n_buckets": n_buckets},
         "makes every vocabulary-pruned probe slower than a flat scan",
     )
-    dl = ctf.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    ).withColumn("n_buckets", F.lit(n_buckets).cast("int"))
+    dl = _bm25_doclens(ctf, id_col)
     bucket = F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).cast("int")
     # one task per bucket → ≤ n_buckets files, each sorted by tok
     cow.write_partitioned(
@@ -1173,7 +1181,7 @@ def build_bm25_index(
         sort_col="tok",
     )
     cow.write_whole(dl, f"{path}/doclens")
-    cow.write_whole(stats, f"{path}/stats")
+    cow.write_whole(_bm25_corpus_stats(dl, n_buckets), f"{path}/stats")
 
 
 def compact_bm25_index(spark, index_path: str, out_path: str) -> dict:
@@ -1699,13 +1707,7 @@ def _bm25_commit(
     if new_dl is not None:
         dl = dl.unionByName(new_dl)
     cow.write_whole(dl, f"{out_path}/doclens")
-    cow.write_whole(
-        dl.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_corpus"),
-            (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-        ).withColumn("n_buckets", F.lit(int(n_buckets)).cast("int")),
-        f"{out_path}/stats",
-    )
+    cow.write_whole(_bm25_corpus_stats(dl, n_buckets), f"{out_path}/stats")
     return stats
 
 
@@ -1764,15 +1766,7 @@ def merge_bm25_index(
     )
     new_ids = new_docs.select(F.col(id_col)).distinct()
     bucket = F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).cast("int")
-    new_ctf = (
-        new_docs.select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
-        )
-        .where(F.col("tok") != "")
-        .groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()
-    )
+    new_ctf = _bm25_tf(new_docs, id_col, text_col)
     # changed buckets: batch-token buckets ∪ replaced-id buckets
     changed_new = cow.partition_values(new_ctf, bucket.alias("tok_bucket"))
     changed_old = cow.partitions_holding(
@@ -1788,9 +1782,7 @@ def merge_bm25_index(
     merged = base_post.unionByName(
         new_ctf.select(id_col, "tok", "tf").withColumn("tok_bucket", bucket)
     )
-    new_dl = new_ctf.groupBy(id_col).agg(
-        F.sum("tf").cast("bigint").alias("dl")
-    )
+    new_dl = _bm25_doclens(new_ctf, id_col)
     return _bm25_commit(
         spark, base_path, out_path, layout, merged, changed, n_buckets,
         new_ids, id_col, new_dl,

@@ -3628,16 +3628,15 @@ SELECT doc_id, term, tfidf, rank FROM ranked WHERE rank <= 3
 
 def q90_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC apply (streaming/events.cdc_apply_stream): the
-    event stream MERGEs into the snapshot table through the lakehouse
-    format seam (sources/lakehouse.py — Delta MERGE when jars exist,
-    versioned parquet here); returns the final snapshot (latest row
+    event stream MERGEs into a versioned-parquet snapshot table
+    (sources/lakehouse.py); returns the final snapshot (latest row
     per user). FULLY ORACLED since round 5: the apply is
     ordering-safe (a change wins only if newer by (ts, event_id)), so
     the final snapshot is a pure function of the change set —
     independent of micro-batch splits — and equals the SQL argmax per
     user. Delete/update interleavings are value-checked against a
     batch twin in tests/test_streaming.py."""
-    from data_lake_with_spark_spark.sources.lakehouse import resolve_format
+    from data_lake_with_spark_spark.sources import lakehouse
     from data_lake_with_spark_spark.streaming.events import (
         cdc_apply_stream,
         read_event_stream,
@@ -3669,7 +3668,7 @@ def q90_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not q.awaitTermination(120):
             q.stop()
             raise TimeoutError("cdc_apply_stream did not finish in 120s")
-        snap_df = resolve_format("auto", spark).read_snapshot(spark, snap)
+        snap_df = lakehouse.read_snapshot(spark, snap)
         # driver-facing ts as the canonical micro string (the stream
         # parsed it to timestamp; a string avoids tz/type skew vs
         # DuckDB). localCheckpoint(eager) pins the rows BEFORE the
@@ -3977,7 +3976,7 @@ def q96_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed to change intervals (valid_from, valid_to half-open,
     is_current) via two window passes sharing one hash partitioning
     on the key — the MERGE-free lakehouse dimension derivation that
-    pairs with the table-format seam (sources/lakehouse.py)."""
+    pairs with the snapshot tables of sources/lakehouse.py."""
     from data_lake_with_spark_spark.operators.events_analytics import (
         scd2_history,
     )

@@ -67,11 +67,9 @@ the types Spark infers from the directory names (a ``bigint``
 ``cent_id`` reads back as ``int``), a component with no partition
 directory left serves an empty frame with every recorded column, and a
 whole-component manifest reads the record of the directory it points
-at. Fallback: a component without a record (written before records
-existed) reads through footer inference, and an empty one of a
-related-items state takes its columns from ``ri_meta.json``. Spark's
-file listing skips names starting with ``_``, so the record never
-reaches a scan.
+at. A component without a record raises: rebuild it. Spark's file
+listing skips names starting with ``_``, so the record never reaches a
+scan.
 
 :func:`commit` returns the promotion stats dict (``partition_col``,
 ``changed_partitions``, ``promoted_dirs``, ``linked_files``,
@@ -357,41 +355,26 @@ def _record_schema(spark, comp_dir: str, schema, partition_cols=()) -> None:
     )
 
 
-#: The sidecar whose ``schemas`` map types a record-less component
-#: directory with no Parquet file in it: related-items states written
-#: before schema records, whose plain components can be legitimately
-#: empty (a ``min_count`` floor no pair crosses leaves ``topk`` empty).
-_LEGACY_SCHEMAS = "ri_meta.json"
-
-
 def _read_dir(spark, comp_dir: str):
     """Read one component directory with its schema record: the data
     columns go to the reader (no footer-inference job) and partition
     columns come from the directory names. A partitioned component
     with no partition directory left serves an empty frame with every
-    recorded column; a directory without a record is read through
-    footer inference, and when it holds no Parquet file, serves an
-    empty frame typed by the :data:`_LEGACY_SCHEMAS` sidecar beside
-    it."""
+    recorded column. A directory without a record raises
+    ``FileNotFoundError``."""
     import json
 
-    from pyspark.errors import AnalysisException
     from pyspark.sql.types import StructType
 
     from data_lake_with_spark_spark.session import local_frame
 
     text = _fs_read_text(spark, f"{comp_dir}/{_SCHEMA_RECORD}")
     if text is None:
-        try:
-            return spark.read.parquet(comp_dir)
-        except AnalysisException as e:
-            parent, name = comp_dir.rstrip("/").rsplit("/", 1)
-            meta = read_json(spark, f"{parent}/{_LEGACY_SCHEMAS}") or {}
-            legacy = (meta.get("schemas") or {}).get(name)
-            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA" or legacy is None:
-                raise
-            schema = StructType.fromJson(json.loads(legacy))
-            return local_frame(spark, [], _nullable(schema))
+        raise FileNotFoundError(
+            f"index component {comp_dir!r} has no {_SCHEMA_RECORD}: it "
+            "was written before schema records existed; rebuild the "
+            "index with its family's build"
+        )
     rec = json.loads(text)
     schema = StructType.fromJson(json.loads(rec["schema"]))
     pcols = rec["partition_cols"]
@@ -429,28 +412,20 @@ def read_component(spark, index_path: str, component: str):
         return _read_dir(spark, f"{index_path}/{component}")
     if m.get("whole"):
         return _read_dir(spark, m["whole"])
-    schema = (
-        StructType.fromJson(json.loads(m["schema"])) if m.get("schema") else None
-    )
+    schema = StructType.fromJson(json.loads(m["schema"]))
     by_owner: dict[str, list[str]] = {}
     for name, owner in m["entries"].items():
         by_owner.setdefault(owner, []).append(name)
     frames = []
     for owner, names in sorted(by_owner.items()):
-        reader = spark.read.option("basePath", owner)
-        if schema is not None:
-            reader = reader.schema(schema)
+        reader = spark.read.option("basePath", owner).schema(schema)
         frames.append(reader.parquet(*[f"{owner}/{n}" for n in sorted(names)]))
     if not frames:
-        # Fully-emptied component (every id deleted): the epoch's own
-        # partitioned overwrite left only _SUCCESS — no parquet footer
-        # to infer a schema from — so the manifest's schema gives the
-        # promised empty frame its columns.
-        if schema is not None:
-            from data_lake_with_spark_spark.session import local_frame
+        # Fully-emptied component (every id deleted): the manifest's
+        # schema gives the promised empty frame its columns.
+        from data_lake_with_spark_spark.session import local_frame
 
-            return local_frame(spark, [], schema)
-        return spark.read.parquet(f"{index_path}/{component}")
+        return local_frame(spark, [], schema)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
@@ -609,11 +584,8 @@ def _promote_whole(
 
 
 def _carry_sidecar(spark, base_path: str, out_path: str, name: str) -> None:
-    """Copy the JSON sidecar ``name`` from base to out, when present
-    (pre-sidecar layouts carry nothing)."""
-    meta = read_json(spark, f"{base_path}/{name}")
-    if meta is not None:
-        write_json(spark, f"{out_path}/{name}", meta)
+    """Copy the JSON sidecar ``name`` from base to out."""
+    write_json(spark, f"{out_path}/{name}", read_json(spark, f"{base_path}/{name}"))
 
 
 def _compact_component(

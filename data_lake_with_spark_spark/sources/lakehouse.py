@@ -1,30 +1,15 @@
-"""Lakehouse table-format seam for the MERGE/CDC family.
+"""Versioned-Parquet snapshot tables for the MERGE/CDC family.
 
-The north star ("native Spark on data lake formats") wants ACID MERGE,
-schema evolution, and compaction from a real table format; this
-environment ships no Delta/Iceberg jars, so the engine's upsert/CDC
-operators (relational.upsert_snapshot, streaming.cdc_apply_stream)
-write versioned parquet snapshots instead. This module makes that
-substitution an explicit seam rather than a hard-coded choice:
-
-- :class:`VersionedParquetFormat` — immutable ``v000042/`` snapshot
-  directories; each MERGE reads the latest version and writes the
-  next, so readers never observe a half-written snapshot and the swap
-  is atomic at directory granularity (object-store safe). Always
-  available; the MERGE itself is relational.upsert_snapshot's
-  full-outer-join + COALESCE plan (one key shuffle per side, zero if
-  both sides are bucketed on the key).
-- :class:`DeltaFormat` — a real ``DeltaTable.merge`` (ACID log,
-  in-place file rewrite, schema evolution) behind the same three
-  methods. Import-gated on the public ``delta-spark`` package; its
-  ``available()`` is False here, and every call path degrades to the
-  parquet format through :func:`resolve_format`.
-
-Swapping formats changes no operator code: callers ask
-``resolve_format("auto", spark)`` and get Delta when the jars are on
-the classpath, versioned parquet otherwise. An Iceberg implementation
-slots in the same way (three methods against the ``spark.table`` /
-``MERGE INTO`` SQL surface).
+A table is a directory of immutable ``v000042/`` snapshot directories.
+Each write (:func:`merge_upsert`, :func:`delete_keys`,
+:func:`apply_cdc`) reads the latest version through
+:func:`read_snapshot` and writes the next, so readers never observe a
+half-written snapshot and the swap is atomic at directory granularity
+(object-store safe). The MERGE itself is relational.upsert_snapshot's
+full-outer-join + COALESCE plan (one key shuffle per side, zero if both
+sides are bucketed on the key). Prior versions stay on disk for audit
+until a caller expires them. :func:`compaction_plan` bins a file
+listing for a small-file rewrite.
 """
 
 from __future__ import annotations
@@ -48,26 +33,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(hpath))
-
-
-def _split_ops(latest, op_col, delete_op):
-    """Split a reduced-per-key CDC batch into (upserts, deletes) by
-    its op column — shared by both table formats so delete-op
-    semantics can never silently diverge between them."""
-    from pyspark.sql import functions as SF
-
-    if op_col is None:
-        return latest, None
-    dels = latest.where(SF.col(op_col) == delete_op)
-    ups = latest.where(
-        SF.col(op_col).isNull() | (SF.col(op_col) != delete_op)
-    ).drop(op_col)
-    return ups, dels
-
-
 def list_versions(spark: SparkSession, path: str) -> list[str]:
     """Sorted ``v*`` snapshot directory URIs under ``path`` (possibly
     empty), listed through the Hadoop FileSystem API."""
@@ -82,306 +47,149 @@ def list_versions(spark: SparkSession, path: str) -> list[str]:
     return sorted(out)
 
 
-class VersionedParquetFormat:
-    """MERGE-by-rewrite over immutable snapshot version directories."""
-
-    name = "parquet"
-
-    @staticmethod
-    def available(spark: SparkSession | None = None) -> bool:
-        return True
-
-    @staticmethod
-    def read_snapshot(spark: SparkSession, path: str) -> DataFrame | None:
-        """Latest committed snapshot, or None before the first commit."""
-        versions = list_versions(spark, path)
-        if not versions:
-            return None
-        return spark.read.parquet(versions[-1])
-
-    @staticmethod
-    def merge_upsert(
-        spark: SparkSession,
-        path: str,
-        updates: DataFrame,
-        keys: Sequence[str],
-        version: int,
-    ) -> None:
-        """Upsert ``updates`` into the snapshot at ``path`` as a new
-        immutable version. ``version`` must be monotonic per caller
-        (the streaming path passes the micro-batch id, which Spark
-        guarantees monotonic under a checkpoint)."""
-        from data_lake_with_spark_spark.operators.relational import (
-            upsert_snapshot,
-        )
-
-        base = VersionedParquetFormat.read_snapshot(spark, path)
-        merged = updates if base is None else upsert_snapshot(
-            base, updates, keys=list(keys)
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(path, f"v{version:06d}")
-        )
-
-    @staticmethod
-    def delete_keys(
-        spark: SparkSession,
-        path: str,
-        tombstones: DataFrame,
-        keys: Sequence[str],
-        version: int,
-    ) -> None:
-        """GDPR-style erasure: write a new snapshot version without
-        any row matching a tombstone key (right-to-be-forgotten /
-        opt-out removal — the deletion half of the MERGE seam).
-
-        One left_anti join on the key: the snapshot side stays
-        hash-partitioned on its key, and AQE broadcasts the tombstone
-        side when it is small (the usual case — deletion lists are
-        KBs against a 100 TB table), so at scale this is a map-side
-        filter over the snapshot scan, never a shuffle of the table.
-        Writing a fresh immutable version keeps readers consistent
-        and leaves prior versions for audit until compaction/vacuum
-        removes them (real erasure compliance must also expire old
-        versions — same lifecycle as Delta VACUUM).
-
-        No-op (still writes the new version) when the table is empty;
-        raises if no snapshot exists, since deleting from nothing is
-        almost certainly a caller bug (wrong path).
-        """
-        base = VersionedParquetFormat.read_snapshot(spark, path)
-        if base is None:
-            raise ValueError(
-                f"delete_keys: no snapshot at {path!r} — nothing to delete from"
-            )
-        kept = base.join(
-            tombstones.select(*keys).distinct(), on=list(keys), how="left_anti"
-        )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(path, f"v{version:06d}")
-        )
-
-    @staticmethod
-    def apply_cdc(
-        spark: SparkSession,
-        path: str,
-        latest: DataFrame,
-        keys: Sequence[str],
-        order_cols: Sequence[str],
-        version: int,
-        op_col: str | None = None,
-        delete_op: str = "D",
-    ) -> None:
-        """Ordering-safe CDC apply in ONE new snapshot version.
-
-        ``latest`` must already be reduced to one row per key (the
-        caller's per-batch winner). Semantics, identical for any
-        batch split of the same change set:
-
-        - a change replaces the snapshot row only when it is NEWER by
-          ``order_cols`` (lexicographic, descending — ties keep the
-          existing snapshot row), so an out-of-order/replayed batch
-          can never clobber a newer state;
-        - when ``op_col`` is given and the key's winning change has
-          ``op == delete_op``, the key is REMOVED — but only if the
-          delete is newer than the snapshot row it tombstones.
-
-        One union + row_number per key + anti-join, one atomic
-        version-directory write; shuffles on the merge keys only.
-        """
-        from pyspark.sql import Window
-        from pyspark.sql import functions as SF
-
-        base = VersionedParquetFormat.read_snapshot(spark, path)
-        ups, dels = _split_ops(latest, op_col, delete_op)
-        if base is None:
-            merged = ups
-        else:
-            order = [SF.col(c).desc() for c in order_cols]
-            w = Window.partitionBy(*keys).orderBy(
-                *order, SF.col("_is_base").desc()
-            )
-            merged = (
-                ups.withColumn("_is_base", SF.lit(0))
-                .unionByName(base.withColumn("_is_base", SF.lit(1)))
-                .withColumn("_rn", SF.row_number().over(w))
-                .where(SF.col("_rn") == 1)
-                .drop("_is_base", "_rn")
-            )
-        if dels is not None:
-            # remove a key only when the delete is at least as new as
-            # the merged row (lexicographic >= over order_cols): an
-            # out-of-order delete must not tombstone a newer state.
-            ge = None  # d >= m, built as (d>m at first diff) OR all-eq
-            eq = SF.lit(True)
-            for c in order_cols:
-                gt = eq & (SF.col(f"d.{c}") > SF.col(f"m.{c}"))
-                ge = gt if ge is None else (ge | gt)
-                eq = eq & (SF.col(f"d.{c}") == SF.col(f"m.{c}"))
-            ge = eq if ge is None else (ge | eq)
-            keys_eq = SF.lit(True)
-            for k in keys:
-                keys_eq = keys_eq & SF.col(f"m.{k}").eqNullSafe(
-                    SF.col(f"d.{k}")
-                )
-            merged = merged.alias("m").join(
-                dels.alias("d"), keys_eq & ge, how="left_anti"
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(path, f"v{version:06d}")
-        )
+def read_snapshot(spark: SparkSession, path: str) -> DataFrame | None:
+    """Latest committed snapshot, or None before the first commit."""
+    versions = list_versions(spark, path)
+    if not versions:
+        return None
+    return spark.read.parquet(versions[-1])
 
 
-class DeltaFormat:
-    """Real ACID MERGE through delta-spark, when its jars exist."""
+def merge_upsert(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    keys: Sequence[str],
+    version: int,
+) -> None:
+    """Upsert ``updates`` into the snapshot at ``path`` as a new
+    immutable version. ``version`` must be monotonic per caller
+    (the streaming path passes the micro-batch id, which Spark
+    guarantees monotonic under a checkpoint)."""
+    from data_lake_with_spark_spark.operators.relational import (
+        upsert_snapshot,
+    )
 
-    name = "delta"
-
-    @staticmethod
-    def available(spark: SparkSession | None = None) -> bool:
-        try:
-            import delta  # noqa: F401
-        except ImportError:
-            return False
-        if spark is not None:
-            # jars present AND the session was built with the Delta
-            # catalog/extension (required for MERGE to parse)
-            ext = spark.conf.get("spark.sql.extensions", "") or ""
-            return "DeltaSparkSessionExtension" in ext
-        return True
-
-    @staticmethod
-    def read_snapshot(spark: SparkSession, path: str) -> DataFrame | None:
-        if not _exists(spark, os.path.join(path, "_delta_log")):
-            return None
-        return spark.read.format("delta").load(path)
-
-    @staticmethod
-    def merge_upsert(
-        spark: SparkSession,
-        path: str,
-        updates: DataFrame,
-        keys: Sequence[str],
-        version: int,  # unused: Delta's log numbers commits itself
-    ) -> None:
-        from delta.tables import DeltaTable
-
-        if not _exists(spark, os.path.join(path, "_delta_log")):
-            updates.write.format("delta").mode("overwrite").save(path)
-            return
-        target = DeltaTable.forPath(spark, path)
-        cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-        (
-            target.alias("t")
-            .merge(updates.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    @staticmethod
-    def delete_keys(
-        spark: SparkSession,
-        path: str,
-        tombstones: DataFrame,
-        keys: Sequence[str],
-        version: int,  # unused: Delta's log numbers commits itself
-    ) -> None:
-        """Erasure through a real ACID MERGE-delete: matched rows are
-        removed in-place in the Delta log (plus VACUUM for physical
-        file removal, which the caller schedules)."""
-        from delta.tables import DeltaTable
-
-        if not _exists(spark, os.path.join(path, "_delta_log")):
-            raise ValueError(
-                f"delete_keys: no Delta table at {path!r} — nothing to delete from"
-            )
-        target = DeltaTable.forPath(spark, path)
-        cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-        (
-            target.alias("t")
-            .merge(tombstones.select(*keys).distinct().alias("s"), cond)
-            .whenMatchedDelete()
-            .execute()
-        )
-
-    @staticmethod
-    def apply_cdc(
-        spark: SparkSession,
-        path: str,
-        latest: DataFrame,
-        keys: Sequence[str],
-        order_cols: Sequence[str],
-        version: int,  # unused: Delta's log numbers commits itself
-        op_col: str | None = None,
-        delete_op: str = "D",
-    ) -> None:
-        """Ordering-safe CDC apply as one ACID MERGE: updates win
-        only when strictly newer by ``order_cols`` (ties keep the
-        target row), deletes tombstone only an at-most-as-new row,
-        inserts skip delete-ops. Same semantics as the versioned-
-        parquet branch, expressed as MERGE conditions."""
-        from delta.tables import DeltaTable
-        from pyspark.sql import functions as SF
-
-        ups, dels = _split_ops(latest, op_col, delete_op)
-        # lexicographic s > t over order_cols as a SQL condition
-        newer_terms = []
-        eq_prefix: list[str] = []
-        for c in order_cols:
-            prefix = " AND ".join(eq_prefix + [f"s.`{c}` > t.`{c}`"])
-            newer_terms.append(f"({prefix})")
-            eq_prefix.append(f"s.`{c}` = t.`{c}`")
-        newer = " OR ".join(newer_terms) if newer_terms else "true"
-        all_eq = " AND ".join(eq_prefix) if eq_prefix else "true"
-        cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-        if not _exists(spark, os.path.join(path, "_delta_log")):
-            ups.write.format("delta").mode("overwrite").save(path)
-        else:
-            (
-                DeltaTable.forPath(spark, path)
-                .alias("t")
-                .merge(ups.alias("s"), cond)
-                .whenMatchedUpdateAll(condition=newer)
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-        if dels is not None and _exists(
-            spark, os.path.join(path, "_delta_log")
-        ):
-            # separate delete merge: its source keeps the order/op
-            # columns (conditions only — nothing is written from it)
-            (
-                DeltaTable.forPath(spark, path)
-                .alias("t")
-                .merge(dels.alias("s"), cond)
-                .whenMatchedDelete(condition=f"({newer}) OR ({all_eq})")
-                .execute()
-            )
+    base = read_snapshot(spark, path)
+    merged = updates if base is None else upsert_snapshot(
+        base, updates, keys=list(keys)
+    )
+    merged.write.mode("overwrite").parquet(
+        os.path.join(path, f"v{version:06d}")
+    )
 
 
-FORMATS = {f.name: f for f in (VersionedParquetFormat, DeltaFormat)}
+def delete_keys(
+    spark: SparkSession,
+    path: str,
+    tombstones: DataFrame,
+    keys: Sequence[str],
+    version: int,
+) -> None:
+    """GDPR-style erasure: write a new snapshot version without
+    any row matching a tombstone key (right-to-be-forgotten /
+    opt-out removal — the deletion half of the MERGE family).
 
+    One left_anti join on the key: the snapshot side stays
+    hash-partitioned on its key, and AQE broadcasts the tombstone
+    side when it is small (the usual case — deletion lists are
+    KBs against a 100 TB table), so at scale this is a map-side
+    filter over the snapshot scan, never a shuffle of the table.
+    Writing a fresh immutable version keeps readers consistent
+    and leaves prior versions for audit until compaction/vacuum
+    removes them (real erasure compliance must also expire old
+    versions — same lifecycle as Delta VACUUM).
 
-def resolve_format(name: str, spark: SparkSession | None = None):
-    """``"parquet"`` / ``"delta"`` / ``"auto"`` → a TableFormat class.
-
-    ``auto`` prefers Delta when its jars and session extension are
-    present and silently degrades to versioned parquet otherwise — the
-    caller's operator code is identical either way.
+    No-op (still writes the new version) when the table is empty;
+    raises if no snapshot exists, since deleting from nothing is
+    almost certainly a caller bug (wrong path).
     """
-    if name == "auto":
-        return DeltaFormat if DeltaFormat.available(spark) else VersionedParquetFormat
-    fmt = FORMATS.get(name)
-    if fmt is None:
-        raise ValueError(f"unknown table format {name!r}; use {sorted(FORMATS)}")
-    if not fmt.available(spark):
+    base = read_snapshot(spark, path)
+    if base is None:
         raise ValueError(
-            f"table format {name!r} is not available in this session "
-            "(missing jars or session extension); use 'auto' to degrade "
-            "to versioned parquet"
+            f"delete_keys: no snapshot at {path!r} — nothing to delete from"
         )
-    return fmt
+    kept = base.join(
+        tombstones.select(*keys).distinct(), on=list(keys), how="left_anti"
+    )
+    kept.write.mode("overwrite").parquet(
+        os.path.join(path, f"v{version:06d}")
+    )
+
+
+def apply_cdc(
+    spark: SparkSession,
+    path: str,
+    latest: DataFrame,
+    keys: Sequence[str],
+    order_cols: Sequence[str],
+    version: int,
+    op_col: str | None = None,
+    delete_op: str = "D",
+) -> None:
+    """Ordering-safe CDC apply in ONE new snapshot version.
+
+    ``latest`` must already be reduced to one row per key (the
+    caller's per-batch winner). Semantics, identical for any
+    batch split of the same change set:
+
+    - a change replaces the snapshot row only when it is NEWER by
+      ``order_cols`` (lexicographic, descending — ties keep the
+      existing snapshot row), so an out-of-order/replayed batch
+      can never clobber a newer state;
+    - when ``op_col`` is given and the key's winning change has
+      ``op == delete_op``, the key is REMOVED — but only if the
+      delete is newer than the snapshot row it tombstones.
+
+    One union + row_number per key + anti-join, one atomic
+    version-directory write; shuffles on the merge keys only.
+    """
+    from pyspark.sql import Window
+    from pyspark.sql import functions as SF
+
+    base = read_snapshot(spark, path)
+    ups, dels = latest, None
+    if op_col is not None:
+        dels = latest.where(SF.col(op_col) == delete_op)
+        ups = latest.where(
+            SF.col(op_col).isNull() | (SF.col(op_col) != delete_op)
+        ).drop(op_col)
+    if base is None:
+        merged = ups
+    else:
+        order = [SF.col(c).desc() for c in order_cols]
+        w = Window.partitionBy(*keys).orderBy(
+            *order, SF.col("_is_base").desc()
+        )
+        merged = (
+            ups.withColumn("_is_base", SF.lit(0))
+            .unionByName(base.withColumn("_is_base", SF.lit(1)))
+            .withColumn("_rn", SF.row_number().over(w))
+            .where(SF.col("_rn") == 1)
+            .drop("_is_base", "_rn")
+        )
+    if dels is not None:
+        # remove a key only when the delete is at least as new as
+        # the merged row (lexicographic >= over order_cols): an
+        # out-of-order delete must not tombstone a newer state.
+        ge = None  # d >= m, built as (d>m at first diff) OR all-eq
+        eq = SF.lit(True)
+        for c in order_cols:
+            gt = eq & (SF.col(f"d.{c}") > SF.col(f"m.{c}"))
+            ge = gt if ge is None else (ge | gt)
+            eq = eq & (SF.col(f"d.{c}") == SF.col(f"m.{c}"))
+        ge = eq if ge is None else (ge | eq)
+        keys_eq = SF.lit(True)
+        for k in keys:
+            keys_eq = keys_eq & SF.col(f"m.{k}").eqNullSafe(
+                SF.col(f"d.{k}")
+            )
+        merged = merged.alias("m").join(
+            dels.alias("d"), keys_eq & ge, how="left_anti"
+        )
+    merged.write.mode("overwrite").parquet(
+        os.path.join(path, f"v{version:06d}")
+    )
 
 
 def compaction_plan(

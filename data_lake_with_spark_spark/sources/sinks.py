@@ -109,7 +109,7 @@ def compact_parquet(
     row count job), and the rewrite uses ``coalesce`` — a NO-shuffle
     narrow repack of existing partitions — not ``repartition``.
     Writing to a fresh directory keeps the swap atomic at directory
-    granularity (same contract as lakehouse.VersionedParquetFormat);
+    granularity (same contract as the lakehouse snapshot versions);
     readers of ``path`` are never disturbed.
     """
     import math

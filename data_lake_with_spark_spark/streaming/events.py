@@ -314,17 +314,15 @@ def cdc_apply_stream(
     snapshot_dir: str,
     keys: tuple[str, ...],
     order_col: str,
-    table_format: str = "auto",
     tiebreak_cols: tuple[str, ...] = (),
     op_col: str | None = None,
     delete_op: str = "D",
 ) -> "object":
     """Streaming CDC apply: each micro-batch is reduced to its latest
     row per key (``order_col`` descending, then ``tiebreak_cols``)
-    and applied to the target table through the lakehouse
-    table-format seam (sources.lakehouse.resolve_format,
-    ``apply_cdc``) — the foreachBatch escape hatch that gives any
-    lake Delta-style upsert/delete semantics.
+    and applied to the target table through
+    ``sources.lakehouse.apply_cdc`` — the foreachBatch escape hatch
+    that gives any lake Delta-style upsert/delete semantics.
 
     Ordering-safe since round 5: a change replaces the snapshot row
     only when NEWER by ``(order_col, *tiebreak_cols)`` — so the final
@@ -343,23 +341,20 @@ def cdc_apply_stream(
     full generality needs retained tombstones, which the versioned
     snapshots make easy to add (keep the delete row with a flag).
 
-    ``table_format="auto"`` uses a real ACID format (Delta MERGE)
-    when its jars are on the classpath and degrades to immutable
-    versioned parquet snapshots (``v000042/``) otherwise: each batch
-    reads the latest version and writes the next, so readers never
-    observe a half-written snapshot and the swap is atomic at
-    directory granularity (object-store safe). State never lives in
-    the stream — a restart resumes from the last committed version +
-    source offsets.
+    The table is immutable versioned parquet snapshots
+    (``v000042/``): each batch reads the latest version and writes
+    the next, so readers never observe a half-written snapshot and
+    the swap is atomic at directory granularity (object-store safe).
+    State never lives in the stream — a restart resumes from the last
+    committed version + source offsets.
     """
     import os
 
     from pyspark.sql import Window
     from pyspark.sql import functions as SF
 
-    from data_lake_with_spark_spark.sources.lakehouse import resolve_format
+    from data_lake_with_spark_spark.sources import lakehouse
 
-    fmt = resolve_format(table_format, updates.sparkSession)
     order_cols = (order_col, *tiebreak_cols)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -373,7 +368,7 @@ def cdc_apply_stream(
             .where(SF.col("_rn") == 1)
             .drop("_rn")
         )
-        fmt.apply_cdc(
+        lakehouse.apply_cdc(
             batch_df.sparkSession,
             snapshot_dir,
             latest,
@@ -437,8 +432,8 @@ def fuzzy_dedup_ingest(
     offline when precision matters). At 100 TB the index side should
     be written bucketed on ``band_key`` (sinks.write_bucketed) or
     kept in a lakehouse table; file appends here are at-least-once
-    under task retries — production points both sinks at the
-    table-format seam (sources/lakehouse.py) for ACID appends.
+    under task retries — production points both sinks at a
+    transactional table format for ACID appends.
     """
     import os
 
@@ -473,7 +468,7 @@ def fuzzy_dedup_ingest(
             )
             # index presence probed through the Hadoop FileSystem API
             # (not os.listdir) so the ingest works against s3a://hdfs://
-            # index locations, matching the lakehouse seam's contract
+            # index locations, as the lakehouse snapshot listing does
             from data_lake_with_spark_spark.sources.lakehouse import (
                 _hadoop_fs,
             )
@@ -646,7 +641,7 @@ def _require_stripe(family, batch, centroid_mod, consequence) -> None:
         )
 
 
-def _admit_vectors(family, centroid_mod, vec_dim, spark, cur, batch):
+def _admit_vectors(family, vec_dim, spark, cur, batch):
     """Admit a vector batch against the frozen quantizers carried at
     ``cur``: returns the rows to merge, or None for a pure bootstrap
     replay.
@@ -661,12 +656,11 @@ def _admit_vectors(family, centroid_mod, vec_dim, spark, cur, batch):
       as replays, else the batch raises.
     - Fresh stripes: a NEW id on a stripe a build trains on raises. The
       rule is keyed to the mod stamped in the meta sidecar, so a
-      retrain that changes the budget re-keys it (``centroid_mod``
-      only stands in for IVF layouts that predate the sidecar)."""
+      retrain that changes the budget re-keys it."""
     op, stripes, into, kind = _VEC_INGEST[family]
     frozen = _sim._VEC_LAYOUT[family][2]
     retrain = f"quiesce the stream and retrain_{family}_index the root"
-    meta = _sim._vec_meta(spark, family, cur) or {}
+    meta = _sim._vec_meta(spark, family, cur)
     replays = []
     if "centroids" in frozen:
         cents = cow.read_component(spark, cur, "centroids")
@@ -709,8 +703,7 @@ def _admit_vectors(family, centroid_mod, vec_dim, spark, cur, batch):
         fresh = batch.join(replay_ids, "vec_id", "left_anti")
     if fresh.limit(1).count() == 0:
         return None
-    eff_mod = meta.get("centroid_mod", centroid_mod)
-    if fresh.where((F.col("vec_id") % eff_mod).isin(*stripes)).limit(1).count() > 0:
+    if fresh.where((F.col("vec_id") % meta["centroid_mod"]).isin(*stripes)).limit(1).count() > 0:
         ids = " or ".join(f"≡ {s}" for s in stripes)
         raise ValueError(
             f"{op}: batch carries a NEW id {ids} (mod centroid_mod) after "
@@ -822,8 +815,7 @@ def vector_index_maintenance_ingest(
     the same corpus would train it as a centroid, and
     ``merge_ivf_index`` only checks batch ids against EXISTING
     centroids. That rule follows the mod stamped in ``ivf_meta.json``,
-    so a retrain that changes the budget re-keys it (layouts without
-    the sidecar fall back to ``centroid_mod``).
+    so a retrain that changes the budget re-keys it.
 
     Replay rule: ordinary ids upsert onto themselves. A replayed
     bootstrap re-delivers the stripe ids: one whose vector is
@@ -846,7 +838,7 @@ def vector_index_maintenance_ingest(
         vacuum_on_compact, stats_dir,
         project=lambda b: b.select("vec_id", "embedding"),
         bootstrap=bootstrap,
-        admit=partial(_admit_vectors, "ivf", centroid_mod, vec_dim),
+        admit=partial(_admit_vectors, "ivf", vec_dim),
         merge=partial(_sim.merge_ivf_index, vec_dim=vec_dim),
         compact=_sim.compact_ivf_index,
         components=_sim._vec_components("ivf"),
@@ -951,7 +943,7 @@ def ivfpq_index_maintenance_ingest(
             _sim.build_ivfpq_index, dim=dim, m=m,
             centroid_mod=centroid_mod, vec_dim=vec_dim, **kw,
         ),
-        admit=partial(_admit_vectors, "ivfpq", centroid_mod, vec_dim),
+        admit=partial(_admit_vectors, "ivfpq", vec_dim),
         merge=partial(_sim.merge_ivfpq_index, vec_dim=vec_dim),
         compact=_sim.compact_ivfpq_index,
         components=_sim._vec_components("ivfpq"),
@@ -1006,7 +998,7 @@ def pq_index_maintenance_ingest(
         vacuum_on_compact, stats_dir,
         project=lambda b: b.select("vec_id", "embedding"),
         bootstrap=bootstrap,
-        admit=partial(_admit_vectors, "pq", centroid_mod, None),
+        admit=partial(_admit_vectors, "pq", None),
         merge=_sim.merge_pq_index,
         compact=_sim.compact_pq_index,
         components=_sim._vec_components("pq"),

@@ -120,6 +120,15 @@ def _size_cat(v: int) -> int:
     return int(v).bit_length() if v != 0 else 0
 
 
+def _encode_codes(bits: list[int], vals: list[int]) -> dict:
+    """{symbol: (code, length)}: the decoder's canonical code map
+    inverted."""
+    return {
+        sym: (code, length)
+        for (length, code), sym in _canonical_codes(bits, vals).items()
+    }
+
+
 def _encode_block(
     bw: _BitWriter, zz: np.ndarray, pred: int,
     dc_enc: dict, ac_enc: dict,
@@ -181,10 +190,10 @@ def encode_jpeg(
 
     qlum = _scaled_quant(QUANT_LUM, quality)
     qchrom = _scaled_quant(QUANT_CHROM, quality)
-    _dcl_dec, dcl = _canonical_codes(_DC_LUM_BITS, _DC_LUM_VALS)
-    _acl_dec, acl = _canonical_codes(_AC_LUM_BITS, _AC_LUM_VALS)
-    _dcc_dec, dcc = _canonical_codes(_DC_CHROM_BITS, _DC_CHROM_VALS)
-    _acc_dec, acc = _canonical_codes(_AC_CHROM_BITS, _AC_CHROM_VALS)
+    dcl = _encode_codes(_DC_LUM_BITS, _DC_LUM_VALS)
+    acl = _encode_codes(_AC_LUM_BITS, _AC_LUM_VALS)
+    dcc = _encode_codes(_DC_CHROM_BITS, _DC_CHROM_VALS)
+    acc = _encode_codes(_AC_CHROM_BITS, _AC_CHROM_VALS)
 
     if grayscale:
         ch_factors = [(1, 1, 1, 0, qlum)]

@@ -15,9 +15,7 @@ import random
 from pyspark.sql import functions as F
 
 from data_lake_with_spark_spark.operators import similarity, text
-from data_lake_with_spark_spark.sources.lakehouse import (
-    VersionedParquetFormat,
-)
+from data_lake_with_spark_spark.sources import lakehouse
 
 
 def _plan(df) -> str:
@@ -51,7 +49,7 @@ def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
     )
 
     # v0 snapshot + all four serving indexes over the full corpus
-    VersionedParquetFormat.merge_upsert(spark, table, docs, ["doc_id"], 0)
+    lakehouse.merge_upsert(spark, table, docs, ["doc_id"], 0)
     text.build_bm25_index(docs, bm25_full, n_buckets=16)
     similarity.build_ivf_index(vecs, ivf_full, centroid_mod=20)
     similarity.build_pq_index(
@@ -68,7 +66,7 @@ def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
     doomed = sorted({3, 57, 91, 142, 201})
     tomb = spark.createDataFrame([(i,) for i in doomed], ["doc_id"])
 
-    VersionedParquetFormat.delete_keys(spark, table, tomb, ["doc_id"], 1)
+    lakehouse.delete_keys(spark, table, tomb, ["doc_id"], 1)
     text.delete_from_bm25_index(
         spark, bm25_full, tomb, bm25_del, layout=layout
     )
@@ -119,7 +117,7 @@ def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
     # 1) the three surfaces agree on the surviving id universe
     snap_ids = {
         r["doc_id"]
-        for r in VersionedParquetFormat.read_snapshot(spark, table)
+        for r in lakehouse.read_snapshot(spark, table)
         .select("doc_id")
         .collect()
     }

@@ -3,18 +3,15 @@ and a compaction, ``cow.read_component`` resolves every component of
 all five index families to the schema Parquet footer inference gives
 for the same files, without running a Spark job — in the links and the
 manifest layout. A fully emptied component still serves its columns,
-and a layout without schema records (written before records existed)
-still reads through footer inference."""
+and a component without a schema record raises."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import random
+import shutil
 
 import pytest
-from pyspark.sql.types import StructType
 
 from data_lake_with_spark_spark.operators import graph, similarity, text
 from data_lake_with_spark_spark.sources import cow
@@ -179,53 +176,16 @@ def test_component_schema_record(spark, tmp_path, bases, family, layout):
         assert schema == _read_schema(spark, compacted, comp)[0], comp
     assert cow.read_component(spark, emptied, comps[0]).count() == 0
 
-    # a layout without schema records reads through footer inference
-    expected = {
-        (p, c): _read_schema(spark, p, c)[0]
-        for p in (merged, compacted)
-        for c in comps
-    }
-    records = glob.glob(f"{tmp_path}/*/*/_schema.json")
-    assert records
-    for rec in records:
-        os.remove(rec)
-    for (path, comp), schema in expected.items():
-        got = cow.read_component(spark, path, comp)
-        assert got.schema == schema == _inferred(spark, path, comp), (path, comp)
-        assert got.count() > 0, (path, comp)
-    if family in ("ivf", "ivfpq"):
-        served = similarity.ivf_topk_indexed if family == "ivf" else similarity.ivfpq_topk_indexed
-        qs = corpus(spark, [100], seed=11)
-        assert served(spark, compacted, qs, k=2, nprobe=2).count() == 2
-    if family == "bm25":
-        qs = spark.createDataFrame([(1, "w1 w5")], "query_id long, text string")
-        assert text.bm25_topk_indexed(spark, compacted, qs, k=3).count()
 
-
-def test_recordless_empty_related_items_component(spark, tmp_path):
-    """A related-items state without schema records whose plain
-    ``topk`` is legitimately empty (no pair reaches ``min_count``, so
-    the directory holds only ``_SUCCESS``) serves the columns its
-    ``ri_meta.json`` recorded."""
-    path = str(tmp_path / "state")
-    graph.build_related_items_state(
-        _baskets(spark, range(30)), path, k=3, min_count=50, n_buckets=1
-    )
-    assert not glob.glob(f"{path}/topk/*.parquet")
-    records = glob.glob(f"{path}/*/_schema.json")
-    assert len(records) == 4
-    for rec in records:
-        os.remove(rec)
-    recorded = cow.read_json(spark, f"{path}/ri_meta.json")["schemas"]["topk"]
-    columns = [
-        (f.name, f.dataType.simpleString())
-        for f in StructType.fromJson(json.loads(recorded)).fields
-    ]
-    topk = cow.read_component(spark, path, "topk")
-    assert [(f.name, f.dataType.simpleString()) for f in topk.schema] == columns
-    assert topk.count() == 0
-    served = graph.related_items_topk(spark, path)
-    assert served.columns == ["item", "other", "n_ab", "score", "rank"]
-    assert served.count() == 0
-    # the non-empty components still read through footer inference
-    assert cow.read_component(spark, path, "pairs").count() > 0
+def test_component_without_schema_record_raises(spark, tmp_path, bases):
+    """An index component missing its ``_schema.json`` (a layout from
+    before schema records) has no second read path: ``read_component``
+    raises, naming the directory and asking for a rebuild."""
+    path = str(tmp_path / "copy")
+    shutil.copytree(bases("ivf"), path)
+    os.remove(f"{path}/lists/_schema.json")
+    with pytest.raises(FileNotFoundError, match="rebuild") as err:
+        cow.read_component(spark, path, "lists")
+    assert repr(f"{path}/lists") in str(err.value)
+    # the component that kept its record still reads
+    assert cow.read_component(spark, path, "centroids").count() > 0

@@ -1,51 +1,30 @@
-"""The lakehouse table-format seam (sources/lakehouse.py): format
-resolution, the versioned-parquet MERGE implementation, and — when
-delta-spark jars are present — the Delta MERGE twin (skipped here)."""
+"""The versioned-parquet snapshot tables of sources/lakehouse.py:
+MERGE upsert, key erasure, ordering-safe CDC apply, and the
+small-file compaction planner."""
 
 from __future__ import annotations
 
 import pytest
 
-from data_lake_with_spark_spark.sources.lakehouse import (
-    DeltaFormat,
-    VersionedParquetFormat,
-    resolve_format,
-)
-
-
-def test_resolve_format_auto_degrades_without_delta(spark):
-    fmt = resolve_format("auto", spark)
-    if DeltaFormat.available(spark):
-        assert fmt is DeltaFormat
-    else:
-        assert fmt is VersionedParquetFormat
-
-
-def test_resolve_format_rejects_unknown_and_unavailable(spark):
-    with pytest.raises(ValueError, match="unknown table format"):
-        resolve_format("hudi", spark)
-    if not DeltaFormat.available(spark):
-        with pytest.raises(ValueError, match="not available"):
-            resolve_format("delta", spark)
+from data_lake_with_spark_spark.sources import lakehouse
 
 
 def test_versioned_parquet_merge_upsert_roundtrip(spark, tmp_path):
-    fmt = VersionedParquetFormat
     path = str(tmp_path / "tbl")
-    assert fmt.read_snapshot(spark, path) is None
+    assert lakehouse.read_snapshot(spark, path) is None
 
     base = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0)], ["k", "name", "v"]
     )
-    fmt.merge_upsert(spark, path, base, keys=["k"], version=0)
-    got0 = {r["k"]: (r["name"], r["v"]) for r in fmt.read_snapshot(spark, path).collect()}
+    lakehouse.merge_upsert(spark, path, base, keys=["k"], version=0)
+    got0 = {r["k"]: (r["name"], r["v"]) for r in lakehouse.read_snapshot(spark, path).collect()}
     assert got0 == {1: ("a", 10.0), 2: ("b", 20.0)}
 
     updates = spark.createDataFrame(
         [(2, "b2", 21.0), (3, "c", 30.0)], ["k", "name", "v"]
     )
-    fmt.merge_upsert(spark, path, updates, keys=["k"], version=1)
-    got1 = {r["k"]: (r["name"], r["v"]) for r in fmt.read_snapshot(spark, path).collect()}
+    lakehouse.merge_upsert(spark, path, updates, keys=["k"], version=1)
+    got1 = {r["k"]: (r["name"], r["v"]) for r in lakehouse.read_snapshot(spark, path).collect()}
     # update wins, insert lands, unmatched base row carries over
     assert got1 == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0)}
     # both immutable versions remain on disk
@@ -75,25 +54,10 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     assert len(list(Path(src).glob("*.parquet"))) == 64
 
 
-@pytest.mark.skipif(
-    not DeltaFormat.available(), reason="delta-spark jars not installed"
-)
-def test_delta_merge_upsert_roundtrip(spark, tmp_path):
-    fmt = DeltaFormat
-    path = str(tmp_path / "delta_tbl")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "name"])
-    fmt.merge_upsert(spark, path, base, keys=["k"], version=0)
-    updates = spark.createDataFrame([(2, "b2"), (3, "c")], ["k", "name"])
-    fmt.merge_upsert(spark, path, updates, keys=["k"], version=1)
-    got = {r["k"]: r["name"] for r in fmt.read_snapshot(spark, path).collect()}
-    assert got == {1: "a", 2: "b2", 3: "c"}
-
-
 def test_versioned_parquet_delete_keys_erasure(spark, tmp_path):
-    fmt = VersionedParquetFormat
     path = str(tmp_path / "tbl_del")
     with pytest.raises(ValueError, match="nothing to delete"):
-        fmt.delete_keys(
+        lakehouse.delete_keys(
             spark,
             path,
             spark.createDataFrame([(1,)], ["k"]),
@@ -103,33 +67,18 @@ def test_versioned_parquet_delete_keys_erasure(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (4, "d")], ["k", "name"]
     )
-    fmt.merge_upsert(spark, path, base, keys=["k"], version=0)
+    lakehouse.merge_upsert(spark, path, base, keys=["k"], version=0)
     # tombstones: one matching twice (dedup), one absent (no-op)
     tombs = spark.createDataFrame([(2,), (2,), (9,)], ["k"])
-    fmt.delete_keys(spark, path, tombs, keys=["k"], version=1)
-    got = {r["k"]: r["name"] for r in fmt.read_snapshot(spark, path).collect()}
+    lakehouse.delete_keys(spark, path, tombs, keys=["k"], version=1)
+    got = {r["k"]: r["name"] for r in lakehouse.read_snapshot(spark, path).collect()}
     assert got == {1: "a", 3: "c", 4: "d"}
     # prior version remains for audit until compaction expires it
     assert (tmp_path / "tbl_del" / "v000000").exists()
     # erasure is idempotent
-    fmt.delete_keys(spark, path, tombs, keys=["k"], version=2)
-    got2 = {r["k"]: r["name"] for r in fmt.read_snapshot(spark, path).collect()}
+    lakehouse.delete_keys(spark, path, tombs, keys=["k"], version=2)
+    got2 = {r["k"]: r["name"] for r in lakehouse.read_snapshot(spark, path).collect()}
     assert got2 == got
-
-
-@pytest.mark.skipif(
-    not DeltaFormat.available(), reason="delta-spark jars not installed"
-)
-def test_delta_delete_keys_erasure(spark, tmp_path):
-    fmt = DeltaFormat
-    path = str(tmp_path / "delta_del")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "name"])
-    fmt.merge_upsert(spark, path, base, keys=["k"], version=0)
-    fmt.delete_keys(
-        spark, path, spark.createDataFrame([(2,)], ["k"]), keys=["k"], version=1
-    )
-    got = {r["k"]: r["name"] for r in fmt.read_snapshot(spark, path).collect()}
-    assert got == {1: "a"}
 
 
 def test_apply_cdc_batch_split_invariance(spark, tmp_path):
@@ -144,10 +93,6 @@ def test_apply_cdc_batch_split_invariance(spark, tmp_path):
     boundary the cdc_apply_stream docstring scopes out."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
-
-    from data_lake_with_spark_spark.sources.lakehouse import (
-        VersionedParquetFormat as VP,
-    )
 
     changes = [
         # (event_id, ts_minute, user_id, value, op)
@@ -173,11 +118,11 @@ def test_apply_cdc_batch_split_invariance(spark, tmp_path):
                 .where(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            VP.apply_cdc(
+            lakehouse.apply_cdc(
                 spark, path, latest, ("user_id",), ("ts", "event_id"),
                 version=i, op_col="op",
             )
-        snap = VP.read_snapshot(spark, path)
+        snap = lakehouse.read_snapshot(spark, path)
         return {
             r["user_id"]: (r["event_id"], r["value"])
             for r in snap.collect()
@@ -205,56 +150,29 @@ def test_apply_cdc_null_key_and_composite_keys(spark, tmp_path):
     """apply_cdc joins with eqNullSafe: a NULL key is a real key (it
     can be upserted and deleted), and composite keys route by the
     full tuple."""
-    from data_lake_with_spark_spark.sources.lakehouse import (
-        VersionedParquetFormat as VP,
-    )
-
     path = str(tmp_path / "nulls")
     cols = ["k1", "k2", "ts", "v", "op"]
     b1 = spark.createDataFrame(
         [(None, 1, 1, 10.0, "U"), (1, 1, 1, 11.0, "U"), (1, 2, 1, 12.0, "U")],
         cols,
     )
-    VP.apply_cdc(spark, path, b1, ("k1", "k2"), ("ts",), 0, op_col="op")
+    lakehouse.apply_cdc(spark, path, b1, ("k1", "k2"), ("ts",), 0, op_col="op")
     got = {
         (r["k1"], r["k2"]): r["v"]
-        for r in VP.read_snapshot(spark, path).collect()
+        for r in lakehouse.read_snapshot(spark, path).collect()
     }
     assert got == {(None, 1): 10.0, (1, 1): 11.0, (1, 2): 12.0}
 
     b2 = spark.createDataFrame(
         [(None, 1, 2, 0.0, "D"), (1, 1, 2, 21.0, "U")], cols
     )
-    VP.apply_cdc(spark, path, b2, ("k1", "k2"), ("ts",), 1, op_col="op")
+    lakehouse.apply_cdc(spark, path, b2, ("k1", "k2"), ("ts",), 1, op_col="op")
     got2 = {
         (r["k1"], r["k2"]): r["v"]
-        for r in VP.read_snapshot(spark, path).collect()
+        for r in lakehouse.read_snapshot(spark, path).collect()
     }
     # NULL-keyed row deleted; (1,1) updated; (1,2) untouched
     assert got2 == {(1, 1): 21.0, (1, 2): 12.0}
-
-
-@pytest.mark.skipif(
-    not DeltaFormat.available(), reason="delta-spark jars not installed"
-)
-def test_delta_apply_cdc_roundtrip(spark, tmp_path):
-    """Delta twin of the apply_cdc semantics (conditioned MERGEs):
-    exercised automatically once delta-spark jars are present."""
-    fmt = DeltaFormat
-    path = str(tmp_path / "delta_cdc")
-    cols = ["event_id", "ts", "user_id", "value", "op"]
-    b1 = spark.createDataFrame(
-        [(1, 1, 1, 1.0, "U"), (2, 1, 2, 2.0, "U")], cols
-    )
-    fmt.apply_cdc(spark, path, b1, ("user_id",), ("ts", "event_id"), 0, op_col="op")
-    b2 = spark.createDataFrame(
-        [(3, 0, 1, 9.0, "U"),  # older: must not clobber
-         (4, 2, 2, 0.0, "D")], cols
-    )
-    fmt.apply_cdc(spark, path, b2, ("user_id",), ("ts", "event_id"), 1, op_col="op")
-    got = {r["user_id"]: r["event_id"]
-           for r in fmt.read_snapshot(spark, path).collect()}
-    assert got == {1: 1}
 
 
 def test_compaction_plan_packs_bins(spark):

@@ -161,13 +161,11 @@ def test_connected_components_regimes_agree(spark, edges):
 def test_apply_cdc_split_invariance_property(spark, tmp_path_factory, data):
     """For ANY change set whose deletes are each their key's final
     change (the documented tombstone scope), every contiguous
-    micro-batch split applied through VersionedParquetFormat.apply_cdc
+    micro-batch split applied through lakehouse.apply_cdc
     yields the same final snapshot as the batch argmax-per-key twin."""
     from pyspark.sql import Window
 
-    from data_lake_with_spark_spark.sources.lakehouse import (
-        VersionedParquetFormat as VP,
-    )
+    from data_lake_with_spark_spark.sources import lakehouse
 
     n = data.draw(st.integers(min_value=3, max_value=12))
     changes = []
@@ -207,13 +205,13 @@ def test_apply_cdc_split_invariance_property(spark, tmp_path_factory, data):
                 .where(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            VP.apply_cdc(
+            lakehouse.apply_cdc(
                 spark, path, latest, ("user_id",), ("ts", "event_id"),
                 version=bi, op_col="op",
             )
         got = {
             r["user_id"]: r["event_id"]
-            for r in VP.read_snapshot(spark, path).collect()
+            for r in lakehouse.read_snapshot(spark, path).collect()
         }
         assert got == expect, (si, got, expect)
 

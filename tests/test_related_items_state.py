@@ -333,11 +333,8 @@ def test_state_format_version_gates_maintenance(spark, tmp_path):
     old-format state died with an opaque Spark column-resolution
     error mid-plan. The meta sidecar now stamps ``format``; every
     maintenance op checks it FIRST and raises a descriptive
-    'rebuild from source history' error. r13 ADVICE refinement: a
-    MISSING stamp whose schema sidecar shows the v2 (basket, item)
-    incidence is an UNSTAMPED v2 — states built before the stamp
-    existed are compatible and must keep working; the hard error is
-    reserved for ledgers that actually lack the incidence."""
+    'rebuild from source history' error. A meta without the stamp
+    raises the same error: every build writes it."""
     import json
 
     rows = [(1, "a"), (1, "b"), (2, "a"), (2, "c")]
@@ -346,23 +343,10 @@ def test_state_format_version_gates_maintenance(spark, tmp_path):
     graph.build_related_items_state(df, p, k=3, min_count=1, n_buckets=4)
     meta = json.load(open(f"{p}/ri_meta.json"))
     assert meta["format"] == graph._RI_FORMAT
-    # unstamped v2 (a state persisted by pre-stamp code, which already
-    # wrote the (basket, item) incidence): maintenance must ACCEPT it
     unstamped = dict(meta)
     del unstamped["format"]
     json.dump(unstamped, open(f"{p}/ri_meta.json", "w"))
     batch = spark.createDataFrame([(9, "a"), (9, "b")], ["basket", "item"])
-    merged = str(tmp_path / "o_ok")
-    graph.merge_related_items_state(spark, p, batch, merged)
-    assert graph.related_items_topk(spark, merged).count() > 0
-    # true v1 (ledger schema lacks the item field): descriptive raise
-    v1 = dict(unstamped)
-    baskets_schema = json.loads(v1["schemas"]["baskets"])
-    baskets_schema["fields"] = [
-        f for f in baskets_schema["fields"] if f["name"] != "item"
-    ]
-    v1["schemas"] = dict(v1["schemas"], baskets=json.dumps(baskets_schema))
-    json.dump(v1, open(f"{p}/ri_meta.json", "w"))
     with pytest.raises(ValueError, match="rebuild the state from the source"):
         graph.merge_related_items_state(spark, p, batch, str(tmp_path / "o1"))
     with pytest.raises(ValueError, match="rebuild the state from the source"):
