@@ -1194,8 +1194,8 @@ def build_related_items_state(
 def related_items_topk(spark, path: str) -> DataFrame:
     """The serving table of a :func:`build_related_items_state`
     layout — (item, other, n_ab, score, rank), resolved through
-    ``cow.read_component`` so plain, link-promoted, and manifest
-    epochs serve identically."""
+    ``cow.read_component`` so plain layouts and manifest epochs serve
+    identically."""
     from data_lake_with_spark_spark.sources import cow
 
     return cow.read_component(spark, path, "topk").select(
@@ -1312,7 +1312,7 @@ def merge_related_items_state(
     out_path: str,
     basket_col: str = "basket",
     item_col: str = "item",
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Delta-update the related-items serving state with a batch of
     NEW baskets (the nightly order feed) — the q108
@@ -1341,15 +1341,16 @@ def merge_related_items_state(
     (:func:`_related_topk`), and the floor applies at derivation so
     pairs crossing ``min_count`` in this batch appear exactly as a
     rebuild would have them. Every component commits through
-    ``sources.cow`` (fresh ``out_path``, ``layout`` ``"links"`` or
-    ``"manifest"``). Returns the pairs-component promotion stats plus
-    ``affected_items``/``changed_topk_partitions`` counters."""
+    ``sources.cow`` into a manifest epoch at a fresh ``out_path``
+    (``layout`` accepts only ``"manifest"``) that reads its unchanged
+    buckets from ``base_path``: keep the base until
+    :func:`compact_related_items_state` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Returns the pairs-component
+    promotion stats plus ``affected_items``/``changed_topk_partitions``
+    counters."""
     from data_lake_with_spark_spark.sources import cow
 
-    cow.check_target(
-        spark, "merge_related_items_state", base_path, out_path, layout,
-        "pairs",
-    )
+    cow.check_target("merge_related_items_state", base_path, out_path, layout)
     meta = _ri_meta(spark, base_path)
     n_buckets = meta["n_buckets"]
     nb = (
@@ -1384,7 +1385,6 @@ def merge_related_items_state(
         base_path,
         nb,
         out_path,
-        layout,
         meta,
         sign=1,
         pre_write_check=_replay_check,
@@ -1398,7 +1398,7 @@ def delete_from_related_items_state(
     basket_ids: DataFrame,
     out_path: str,
     basket_col: str = "basket",
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """GDPR erasure for the related-items serving state — the exact
     INVERSE of :func:`merge_related_items_state` (r11 verdict #2: the
@@ -1437,9 +1437,14 @@ def delete_from_related_items_state(
     vs ``matched_baskets`` (how many were actually in the ledger);
     an erasure pipeline should assert the coverage it expects
     (first-time erasure: matched == requested; replay: matched may
-    be 0) instead of trusting the call's success alone. Physical
-    erasure still requires the epoch lifecycle tail: delete →
-    compact → set_current → vacuum, gated in
+    be 0) instead of trusting the call's success alone. The result is
+    a manifest epoch at a fresh ``out_path`` (``layout`` accepts only
+    ``"manifest"``) that reads its unchanged buckets from
+    ``base_path``: keep the base until
+    :func:`compact_related_items_state` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Until then the base still holds
+    the erased baskets' bytes, so physical erasure requires the epoch
+    lifecycle tail: delete → compact → set_current → vacuum, gated in
     tests/test_gdpr_pipeline.py as the fifth serving surface.
 
     Returns the pairs promotion stats plus ``deleted_basket_rows``,
@@ -1449,8 +1454,7 @@ def delete_from_related_items_state(
     from data_lake_with_spark_spark.sources import cow
 
     cow.check_target(
-        spark, "delete_from_related_items_state", base_path, out_path,
-        layout, "pairs",
+        "delete_from_related_items_state", base_path, out_path, layout
     )
     meta = _ri_meta(spark, base_path)
     n_buckets = meta["n_buckets"]
@@ -1487,7 +1491,6 @@ def delete_from_related_items_state(
                 base_path,
                 victims,
                 out_path,
-                layout,
                 meta,
                 sign=-1,
                 ch_baskets=ch,
@@ -1505,8 +1508,8 @@ def delete_from_related_items_state(
 
 
 def compact_related_items_state(spark, path: str, out_path: str) -> dict:
-    """Collapse a related-items state (plain, link-promoted, or a
-    MANIFEST epoch chain) into one self-contained plain layout at
+    """Collapse a related-items state (plain, or a MANIFEST epoch
+    chain) into one self-contained plain layout at
     ``out_path`` — the vacuum/OPTIMIZE step (``cow.compact``); the
     meta sidecar carries verbatim. NOTE the ledger is history-sized
     (the full incidence), so a compact rewrites it whole — that is
@@ -1531,7 +1534,6 @@ def _apply_ri_state_delta(
     base_path: str,
     nb: DataFrame,
     out_path: str,
-    layout: str,
     meta: dict,
     sign: int,
     pre_write_check=None,
@@ -1689,7 +1691,7 @@ def _apply_ri_state_delta(
     def _commit(comp, frame, ch):
         return cow.commit(
             spark, _ri_bucketed(comp, frame, n_buckets), base_path,
-            out_path, layout, comp, _RI_LAYOUT[comp][0], ch,
+            out_path, comp, _RI_LAYOUT[comp][0], ch,
         )
 
     def _updated(comp, rows, ch):

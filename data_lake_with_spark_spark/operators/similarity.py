@@ -999,7 +999,7 @@ def merge_ivf_index(
     vec_col: str = "embedding",
     vec_dim: int | None = None,
     validate_centroids: bool = True,
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Incremental IVF index maintenance — the dense-side twin of
     :func:`text.merge_bm25_index`: merge an embedding batch into an
@@ -1023,12 +1023,18 @@ def merge_ivf_index(
     Only the BATCH is assigned. The changed ``cent_id=`` partitions
     (those receiving batch vectors ∪ those losing a replaced id,
     found by a column-pruned ``(cent_id, id)`` scan) commit through
-    ``sources.cow``: ``out_path`` must be fresh, ``layout`` is
-    ``"links"`` or ``"manifest"``. Returns the promotion stats dict.
+    ``sources.cow`` as a manifest epoch at a fresh ``out_path``
+    (``layout`` accepts only ``"manifest"``). The epoch reads its
+    unchanged partitions and centroids from ``base_path``, so keep
+    the base until :func:`compact_ivf_index` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Returns the promotion stats dict.
     """
+    from data_lake_with_spark_spark.sources import cow
+
+    cow.check_target("merge_ivf_index", base_path, out_path, layout)
     return _merge_vectors(
         spark, "ivf", base_path, new_vecs, out_path, id_col, vec_col,
-        validate_centroids and "validate_centroids", layout,
+        validate_centroids and "validate_centroids",
         lambda batch, meta, centroids: _assign(
             batch, centroids, id_col, vec_col, vec_dim
         ),
@@ -1070,22 +1076,13 @@ def _vec_meta(spark, family, base_path):
     return meta
 
 
-def _vec_target(spark, family, op, base_path, out_path, layout):
-    """Check the commit target and return the base's meta sidecar."""
-    from data_lake_with_spark_spark.sources import cow
-
-    comp = _VEC_LAYOUT[family][0]
-    cow.check_target(spark, op, base_path, out_path, layout, comp)
-    return _vec_meta(spark, family, base_path)
-
-
-def _vec_commit(spark, family, rows, base_path, out_path, layout, changed):
+def _vec_commit(spark, family, rows, base_path, out_path, changed):
     """Write ``rows`` as the changed partitions and promote the rest."""
     from data_lake_with_spark_spark.sources import cow
 
     comp, cols, frozen, meta_name = _VEC_LAYOUT[family]
     return cow.commit(
-        spark, rows, base_path, out_path, layout, comp, cols, changed,
+        spark, rows, base_path, out_path, comp, cols, changed,
         frozen=frozen, sidecars=(meta_name,),
     )
 
@@ -1100,7 +1097,7 @@ _FROZEN_SOURCE = {
 
 def _merge_vectors(
     spark, family, base_path, new_vecs, out_path, id_col, vec_col,
-    validate, layout, batch_rows,
+    validate, batch_rows,
 ) -> dict:
     """The upsert body of ``merge_{family}_index`` for IVF, PQ and
     IVFPQ: batch ids replace their old rows, fresh ids append, and the
@@ -1121,7 +1118,7 @@ def _merge_vectors(
     from data_lake_with_spark_spark.sources import cow
 
     op = f"merge_{family}_index"
-    meta = _vec_target(spark, family, op, base_path, out_path, layout)
+    meta = _vec_meta(spark, family, base_path)
     comp, cols, frozen = _VEC_LAYOUT[family][:3]
     parts = {f: cow.read_component(spark, base_path, f) for f in frozen}
     new_ids = new_vecs.select(F.col(id_col))
@@ -1179,12 +1176,12 @@ def _merge_vectors(
     )
     return _vec_commit(
         spark, family, base_keep.unionByName(rows), base_path, out_path,
-        layout, changed,
+        changed,
     )
 
 
 def _delete_vectors(
-    spark, family, op, base_path, delete_ids, out_path, id_col, layout
+    spark, family, base_path, delete_ids, out_path, id_col
 ) -> dict:
     """The delete body shared by IVF, PQ and IVFPQ: a column-pruned
     ``(partition, id)`` scan finds the partitions that actually hold a
@@ -1193,7 +1190,7 @@ def _delete_vectors(
     vanishes from the layout."""
     from data_lake_with_spark_spark.sources import cow
 
-    _vec_target(spark, family, op, base_path, out_path, layout)
+    _vec_meta(spark, family, base_path)
     comp, cols = _VEC_LAYOUT[family][:2]
     ids = delete_ids.select(F.col(id_col))
     changed = cow.partitions_holding(
@@ -1204,9 +1201,7 @@ def _delete_vectors(
         .where(cow.in_partitions(cols[0], changed))
         .join(ids, id_col, "left_anti")
     )
-    return _vec_commit(
-        spark, family, kept, base_path, out_path, layout, changed
-    )
+    return _vec_commit(spark, family, kept, base_path, out_path, changed)
 
 
 def _compact_vectors(spark, family, index_path: str, out_path: str) -> dict:
@@ -1227,7 +1222,7 @@ def delete_from_ivf_index(
     delete_ids: DataFrame,
     out_path: str,
     id_col: str = "vec_id",
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Erasure that reaches the serving index — the GDPR path that
     :func:`sources.lakehouse.delete_keys` starts must END here, or a
@@ -1239,31 +1234,36 @@ def delete_from_ivf_index(
     ``remove_ids`` contract; re-train to move centroids).
     Serve-after-delete is gated identical to an index rebuilt without
     the ids over the same centroid set. Only the ``cent_id=``
-    partitions holding a deleted id are rewritten. Returns the
+    partitions holding a deleted id are rewritten, into a manifest
+    epoch at a fresh ``out_path`` (``layout`` accepts only
+    ``"manifest"``) that reads its unchanged partitions from
+    ``base_path``: keep the base until :func:`compact_ivf_index` or a
+    lifecycle root's ``cow.vacuum_index`` retires it. Returns the
     promotion stats dict.
 
-    GDPR retention caveat (manifest layout): erasure is POINTER-LEVEL
-    until compaction — the deleted ids' vectors physically remain in
+    GDPR retention caveat: erasure is POINTER-LEVEL until compaction —
+    the deleted ids' vectors physically remain in the base and in
     earlier epoch directories (an epoch still holds the stale
-    pre-delete version of the partitions this delete re-owned) and in
-    the links layout's base directory. No reader resolving through
-    the new manifest can reach them, but the bytes exist on disk
-    until :func:`compact_ivf_index` rewrites the resolved view and
-    ``cow.vacuum_index`` retires the unreferenced epochs. A
-    regulatory PHYSICAL-deletion obligation therefore requires the
-    full delete → compact → vacuum sequence (composed and gated in
-    tests/test_gdpr_pipeline.py).
+    pre-delete version of the partitions this delete re-owned). No
+    reader resolving through the new manifest can reach them, but
+    the bytes exist on disk until :func:`compact_ivf_index` rewrites
+    the resolved view and ``cow.vacuum_index`` retires the
+    unreferenced epochs. A regulatory PHYSICAL-deletion obligation
+    therefore requires the full delete → compact → vacuum sequence
+    (composed and gated in tests/test_gdpr_pipeline.py).
     """
+    from data_lake_with_spark_spark.sources import cow
+
+    cow.check_target("delete_from_ivf_index", base_path, out_path, layout)
     return _delete_vectors(
-        spark, "ivf", "delete_from_ivf_index", base_path, delete_ids,
-        out_path, id_col, layout,
+        spark, "ivf", base_path, delete_ids, out_path, id_col
     )
 
 
 def compact_ivf_index(spark, index_path: str, out_path: str) -> dict:
-    """Collapse an IVF index (plain, link-promoted, or a MANIFEST
-    epoch chain) into one self-contained plain layout at ``out_path``
-    — the vacuum/OPTIMIZE step that bounds manifest read
+    """Collapse an IVF index (plain, or a MANIFEST epoch chain) into
+    one self-contained plain layout at ``out_path`` — the
+    vacuum/OPTIMIZE step that bounds manifest read
     amplification (``cow.compact``). Serving from the compacted index
     is bit-identical (gated in tests/test_index_manifest.py). Returns
     the ``lists`` compaction stats."""
@@ -1293,10 +1293,10 @@ def ivf_topk_indexed(
     set so large it probes every list degenerates to the full scan —
     use :func:`ivf_topk` for that batch-join shape.
 
-    Reads resolve through ``cow.read_component``, so plain,
-    link-promoted, and manifest-maintained layouts serve through the
-    same code path (for a manifest layout the probe filter prunes
-    partitions within each owning epoch's explicit dir list).
+    Reads resolve through ``cow.read_component``, so plain and
+    manifest-maintained layouts serve through the same code path (for
+    a manifest layout the probe filter prunes partitions within each
+    owning epoch's explicit dir list).
     """
     from data_lake_with_spark_spark.sources import cow
 
@@ -2026,7 +2026,7 @@ def merge_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     validate_codebooks: bool = True,
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Incremental PQ index maintenance: merge an embedding batch into
     a :func:`build_pq_index` layout with UPSERT semantics (batch ids
@@ -2045,12 +2045,18 @@ def merge_pq_index(
     n_buckets)``), so the changed set is EXACTLY the batch ids'
     buckets — an upsert's new rows and the rows they replace share a
     partition, and no base scan is needed to locate them. The commit
-    goes through ``sources.cow`` (fresh ``out_path``, ``layout``
-    ``"links"`` or ``"manifest"``). Returns the promotion stats
+    goes through ``sources.cow`` as a manifest epoch at a fresh
+    ``out_path`` (``layout`` accepts only ``"manifest"``) that reads
+    its unchanged buckets and codebooks from ``base_path``: keep the
+    base until :func:`compact_pq_index` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Returns the promotion stats
     dict."""
+    from data_lake_with_spark_spark.sources import cow
+
+    cow.check_target("merge_pq_index", base_path, out_path, layout)
     return _merge_vectors(
         spark, "pq", base_path, new_vecs, out_path, id_col, vec_col,
-        validate_codebooks and "validate_codebooks", layout,
+        validate_codebooks and "validate_codebooks",
         lambda batch, meta, codebooks: pq_encode(
             batch, codebooks, dim=meta["dim"], m=meta["m"],
             id_col=id_col, vec_col=vec_col,
@@ -2064,7 +2070,7 @@ def delete_from_pq_index(
     delete_ids: DataFrame,
     out_path: str,
     id_col: str = "vec_id",
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Erasure reaching the PQ serving index: drop the ids' code rows
     from a :func:`build_pq_index` layout. Codebooks stay FROZEN
@@ -2073,22 +2079,27 @@ def delete_from_pq_index(
     ``remove_ids`` contract; retrain to move codebooks).
     Serve-after-delete is gated identical to an index rebuilt without
     the ids over the same codebook set; a fully-emptied component
-    still serves an empty typed frame. Returns the promotion stats
-    dict.
+    still serves an empty typed frame. The result is a manifest epoch
+    at a fresh ``out_path`` (``layout`` accepts only ``"manifest"``)
+    that reads its unchanged buckets from ``base_path``: keep the base
+    until :func:`compact_pq_index` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Returns the promotion stats dict.
 
-    GDPR retention caveat (manifest layout): erasure is pointer-level
-    until ``compact_pq_index`` + ``cow.vacuum_index`` — see
+    GDPR retention caveat: erasure is pointer-level until
+    ``compact_pq_index`` + ``cow.vacuum_index`` — see
     :func:`delete_from_ivf_index`; the same delete → compact → vacuum
     sequence applies."""
+    from data_lake_with_spark_spark.sources import cow
+
+    cow.check_target("delete_from_pq_index", base_path, out_path, layout)
     return _delete_vectors(
-        spark, "pq", "delete_from_pq_index", base_path, delete_ids,
-        out_path, id_col, layout,
+        spark, "pq", base_path, delete_ids, out_path, id_col
     )
 
 
 def compact_pq_index(spark, index_path: str, out_path: str) -> dict:
-    """Collapse a PQ index (plain, link-promoted, or a MANIFEST epoch
-    chain) into one self-contained plain layout at ``out_path`` (see
+    """Collapse a PQ index (plain, or a MANIFEST epoch chain) into one
+    self-contained plain layout at ``out_path`` (see
     :func:`compact_ivf_index`); pair with ``cow.vacuum_index`` to
     retire the old epochs. Returns the ``codes`` compaction stats."""
     return _compact_vectors(spark, "pq", index_path, out_path)
@@ -2356,7 +2367,7 @@ def merge_ivfpq_index(
     vec_col: str = "embedding",
     vec_dim: int | None = None,
     validate_frozen: bool = True,
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Incremental IVFPQ maintenance under a DOUBLY-frozen quantizer
     contract: both the coarse centroids AND the residual codebooks
@@ -2376,11 +2387,18 @@ def merge_ivfpq_index(
     EXACTLY the batch ids' ≤ min(|batch|, n_buckets) ``id_bucket=``
     partitions (see :func:`build_ivfpq_index` on why the maintenance
     unit is the bucket, not the cell), committed through
-    ``sources.cow`` (fresh ``out_path``, ``layout`` ``"links"`` or
-    ``"manifest"``). Returns the promotion stats dict."""
+    ``sources.cow`` as a manifest epoch at a fresh ``out_path``
+    (``layout`` accepts only ``"manifest"``) that reads its unchanged
+    buckets and both frozen components from ``base_path``: keep the
+    base until :func:`compact_ivfpq_index` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Returns the promotion stats
+    dict."""
+    from data_lake_with_spark_spark.sources import cow
+
+    cow.check_target("merge_ivfpq_index", base_path, out_path, layout)
     return _merge_vectors(
         spark, "ivfpq", base_path, new_vecs, out_path, id_col, vec_col,
-        validate_frozen and "validate_frozen", layout,
+        validate_frozen and "validate_frozen",
         lambda batch, meta, centroids, codebooks: _encode(
             _assign(batch, centroids, id_col, vec_col, vec_dim, resid=True),
             codebooks, meta["dim"], meta["m"], id_col, "rv", ("cent_id",),
@@ -2394,7 +2412,7 @@ def delete_from_ivfpq_index(
     delete_ids: DataFrame,
     out_path: str,
     id_col: str = "vec_id",
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Erasure reaching the IVFPQ serving index: drop the ids' code
     rows from a :func:`build_ivfpq_index` layout. Both frozen
@@ -2402,22 +2420,27 @@ def delete_from_ivfpq_index(
     removes it from every result set but keeps the geometric anchor —
     the FAISS ``remove_ids`` contract; retrain to move quantizers).
     Serve-after-delete is gated identical to a rebuild without the
-    ids over the same seed sets. Returns the promotion stats dict.
-    GDPR retention caveat (manifest layout): erasure is
-    pointer-level until ``compact_ivfpq_index`` + ``cow.vacuum_index``
-    — see :func:`delete_from_ivf_index`."""
+    ids over the same seed sets. The result is a manifest epoch at a
+    fresh ``out_path`` (``layout`` accepts only ``"manifest"``) that
+    reads its unchanged buckets from ``base_path``: keep the base
+    until :func:`compact_ivfpq_index` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Returns the promotion stats dict.
+    GDPR retention caveat: erasure is pointer-level until
+    ``compact_ivfpq_index`` + ``cow.vacuum_index`` — see
+    :func:`delete_from_ivf_index`."""
+    from data_lake_with_spark_spark.sources import cow
+
+    cow.check_target("delete_from_ivfpq_index", base_path, out_path, layout)
     return _delete_vectors(
-        spark, "ivfpq", "delete_from_ivfpq_index", base_path, delete_ids,
-        out_path, id_col, layout,
+        spark, "ivfpq", base_path, delete_ids, out_path, id_col
     )
 
 
 def compact_ivfpq_index(spark, index_path: str, out_path: str) -> dict:
-    """Collapse an IVFPQ index (plain, link-promoted, or a MANIFEST
-    epoch chain) into one self-contained plain layout (see
-    :func:`compact_ivf_index`); the nested ``(id_bucket, cent_id)``
-    codes layout is preserved. Returns the ``codes`` compaction
-    stats."""
+    """Collapse an IVFPQ index (plain, or a MANIFEST epoch chain) into
+    one self-contained plain layout (see :func:`compact_ivf_index`);
+    the nested ``(id_bucket, cent_id)`` codes layout is preserved.
+    Returns the ``codes`` compaction stats."""
     return _compact_vectors(spark, "ivfpq", index_path, out_path)
 
 

@@ -1185,11 +1185,11 @@ def build_bm25_index(
 
 
 def compact_bm25_index(spark, index_path: str, out_path: str) -> dict:
-    """Collapse a BM25 index (plain, link-promoted, or a MANIFEST
-    epoch chain) into one self-contained plain layout at ``out_path``
-    (the vacuum/OPTIMIZE step, ``cow.compact``): postings re-sort
-    within buckets so the tok-sorted row-group-skipping contract holds
-    in the compacted files; doclens and stats rewrite verbatim.
+    """Collapse a BM25 index (plain, or a MANIFEST epoch chain) into
+    one self-contained plain layout at ``out_path`` (the
+    vacuum/OPTIMIZE step, ``cow.compact``): postings re-sort within
+    buckets so the tok-sorted row-group-skipping contract holds in the
+    compacted files; doclens and stats rewrite verbatim.
     Returns the ``postings`` compaction stats."""
     from data_lake_with_spark_spark.sources import cow
 
@@ -1687,8 +1687,8 @@ def boilerplate_prefixes(
 
 
 def _bm25_commit(
-    spark, base_path, out_path, layout, post, changed, n_buckets, ids,
-    id_col, new_dl=None,
+    spark, base_path, out_path, post, changed, n_buckets, ids, id_col,
+    new_dl=None,
 ):
     """Commit a BM25 maintenance epoch: the changed postings buckets
     (sorted by ``tok`` per task, as the build does) through
@@ -1698,8 +1698,8 @@ def _bm25_commit(
     from data_lake_with_spark_spark.sources import cow
 
     stats = cow.commit(
-        spark, post, base_path, out_path, layout, "postings", "tok_bucket",
-        changed, sort_col="tok",
+        spark, post, base_path, out_path, "postings", "tok_bucket", changed,
+        sort_col="tok",
     )
     dl = cow.read_component(spark, base_path, "doclens").join(
         ids, id_col, "left_anti"
@@ -1711,14 +1711,6 @@ def _bm25_commit(
     return stats
 
 
-def _bm25_n_buckets(spark, op, base_path, out_path, layout) -> int:
-    """Check the commit target; return the base's bucket count."""
-    from data_lake_with_spark_spark.sources import cow
-
-    cow.check_target(spark, op, base_path, out_path, layout, "postings")
-    return _bm25_stats(spark, base_path)["n_buckets"]
-
-
 def merge_bm25_index(
     spark,
     base_path: str,
@@ -1726,7 +1718,7 @@ def merge_bm25_index(
     out_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Incremental BM25 index maintenance — the operation that makes
     a persisted index viable at 100 TB, where "re-run
@@ -1748,8 +1740,11 @@ def merge_bm25_index(
 
     Only the CHANGED ``tok_bucket=`` partitions (buckets the batch's
     tokens hash to ∪ buckets holding a replaced id's postings) are
-    rewritten, through ``sources.cow`` (fresh ``out_path``, ``layout``
-    ``"links"`` or ``"manifest"``). Honest caveat: natural-language
+    rewritten, through ``sources.cow``, as a manifest epoch at a fresh
+    ``out_path`` (``layout`` accepts only ``"manifest"``) that reads
+    its unchanged buckets from ``base_path``: keep the base until
+    :func:`compact_bm25_index` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Honest caveat: natural-language
     batches have broad vocabulary coverage, so a doc batch touches
     ~min(|batch vocab|, n_buckets) buckets; the win is large exactly
     when it matters (small/targeted batches, or production bucket
@@ -1761,9 +1756,8 @@ def merge_bm25_index(
     """
     from data_lake_with_spark_spark.sources import cow
 
-    n_buckets = _bm25_n_buckets(
-        spark, "merge_bm25_index", base_path, out_path, layout
-    )
+    cow.check_target("merge_bm25_index", base_path, out_path, layout)
+    n_buckets = _bm25_stats(spark, base_path)["n_buckets"]
     new_ids = new_docs.select(F.col(id_col)).distinct()
     bucket = F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).cast("int")
     new_ctf = _bm25_tf(new_docs, id_col, text_col)
@@ -1784,8 +1778,8 @@ def merge_bm25_index(
     )
     new_dl = _bm25_doclens(new_ctf, id_col)
     return _bm25_commit(
-        spark, base_path, out_path, layout, merged, changed, n_buckets,
-        new_ids, id_col, new_dl,
+        spark, base_path, out_path, merged, changed, n_buckets, new_ids,
+        id_col, new_dl,
     )
 
 
@@ -1795,7 +1789,7 @@ def delete_from_bm25_index(
     delete_ids: DataFrame,
     out_path: str,
     id_col: str = "doc_id",
-    layout: str = "links",
+    layout: str = "manifest",
 ) -> dict:
     """Erasure that reaches the serving index — the GDPR path that
     ``lakehouse.delete_keys`` starts must END here, or a deleted
@@ -1812,25 +1806,27 @@ def delete_from_bm25_index(
     a deleted doc's postings live wherever its tokens hashed, so the
     changed set is ~min(|deleted docs' vocab|, n_buckets) buckets and
     small GDPR batches touch few. The bucket layout (n_buckets)
-    carries unchanged. Returns the promotion stats dict.
+    carries unchanged. The result is a manifest epoch at a fresh
+    ``out_path`` (``layout`` accepts only ``"manifest"``) that reads
+    its unchanged buckets from ``base_path``: keep the base until
+    :func:`compact_bm25_index` or a lifecycle root's
+    ``cow.vacuum_index`` retires it. Returns the promotion stats dict.
 
-    GDPR retention caveat (manifest layout): erasure is POINTER-LEVEL
-    until compaction — the deleted docs' postings physically remain
-    in earlier epoch directories (an epoch still holds the stale
-    pre-delete version of the buckets this delete re-owned) and in
-    the links layout's base directory. Readers resolving through the
-    new manifest cannot reach them, but the bytes exist on disk until
-    :func:`compact_bm25_index` rewrites the resolved view and
-    ``cow.vacuum_index`` retires the unreferenced epochs. A
-    regulatory PHYSICAL-deletion obligation therefore requires the
-    full delete → compact → vacuum sequence (composed and gated in
-    tests/test_gdpr_pipeline.py).
+    GDPR retention caveat: erasure is POINTER-LEVEL until compaction —
+    the deleted docs' postings physically remain in the base and in
+    earlier epoch directories (an epoch still holds the stale
+    pre-delete version of the buckets this delete re-owned). Readers
+    resolving through the new manifest cannot reach them, but the
+    bytes exist on disk until :func:`compact_bm25_index` rewrites the
+    resolved view and ``cow.vacuum_index`` retires the unreferenced
+    epochs. A regulatory PHYSICAL-deletion obligation therefore
+    requires the full delete → compact → vacuum sequence (composed
+    and gated in tests/test_gdpr_pipeline.py).
     """
     from data_lake_with_spark_spark.sources import cow
 
-    n_buckets = _bm25_n_buckets(
-        spark, "delete_from_bm25_index", base_path, out_path, layout
-    )
+    cow.check_target("delete_from_bm25_index", base_path, out_path, layout)
+    n_buckets = _bm25_stats(spark, base_path)["n_buckets"]
     ids = delete_ids.select(F.col(id_col)).distinct()
     changed = cow.partitions_holding(
         spark, base_path, "postings", "tok_bucket", ids, id_col
@@ -1841,8 +1837,8 @@ def delete_from_bm25_index(
         .join(ids, id_col, "left_anti")
     )
     return _bm25_commit(
-        spark, base_path, out_path, layout, kept_post, changed, n_buckets,
-        ids, id_col,
+        spark, base_path, out_path, kept_post, changed, n_buckets, ids,
+        id_col,
     )
 
 

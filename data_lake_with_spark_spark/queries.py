@@ -5447,7 +5447,9 @@ def q176_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a plan. The delta deliberately excludes centroid-source ids
     (merge_ivf_index raises on replacing one — the frozen-coarse-
     quantizer contract); the base keeps them, so the carried centroid
-    set equals the full-corpus set the oracle derives."""
+    set equals the full-corpus set the oracle derives. The merge
+    commits a manifest epoch that reads its unchanged cells and the
+    centroids from the base, so both directories outlive the pin."""
     from data_lake_with_spark_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
@@ -6404,84 +6406,17 @@ GROUP BY l2.label
 
 
 def q192_ivf_manifest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q176's incremental IVF merge through the MANIFEST layout
-    (similarity.merge_ivf_index layout="manifest" — the object-store
-    copy-on-write: S3 has no link primitive, so the links layout's
-    remote fallback would copy corpus bytes; the manifest epoch
-    writes ONLY the changed cent_id= partitions plus one small JSON
-    re-pointing them, and ivf_topk_indexed resolves through
-    cow.read_component). The oracle is O_Q113 VERBATIM — the same
-    rebuild pin q176 carries — so the driver hash-verifies that
-    metadata-promoted maintenance serves indistinguishably from a
-    from-scratch build over the merged corpus with the same frozen
-    centroid set."""
-    from data_lake_with_spark_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_indexed,
-        merge_ivf_index,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    md = max(1, emb.count() // 40)
-    is_delta = (F.col("vec_id") % md != 0) & (F.col("vec_id") % 5 == 0)
-    with tempfile.TemporaryDirectory(
-        prefix="dlws_ivfm_base_", ignore_cleanup_errors=True
-    ) as base_idx, tempfile.TemporaryDirectory(
-        prefix="dlws_ivfm_epoch1_", ignore_cleanup_errors=True
-    ) as out_idx:
-        build_ivf_index(
-            emb.where(~is_delta), base_idx, centroid_mod=md, vec_dim=64
-        )
-        merge_ivf_index(
-            spark,
-            base_idx,
-            emb.where(is_delta),
-            out_idx,
-            vec_dim=64,
-            layout="manifest",
-        )
-        out = ivf_topk_indexed(
-            spark,
-            out_idx,
-            emb.where(F.col("vec_id") < 10),
-            k=5,
-            nprobe=4,
-            vec_dim=64,
-        )
-        # pin before the epoch dirs vanish (the q102 pattern) — the
-        # manifest resolves into base_idx, so BOTH dirs must outlive
-        # the lazy read
-        return out.localCheckpoint(eager=True)
+    """The IVF merge committed as a manifest epoch, kept under its name
+    because the driver lists it. Every merge commits a manifest epoch,
+    so this is q176: same batch, same O_Q113 rebuild pin."""
+    return q176_ivf_incremental(spark, sf_dir)
 
 
 def q193_bm25_manifest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q178's GDPR erasure through the MANIFEST layout
-    (text.delete_from_bm25_index layout="manifest"): only the buckets
-    holding the deleted stripe's postings are rewritten into the
-    epoch; every other bucket stays a manifest pointer at the shared
-    q140 index's bytes. Served scores resolve through
-    cow.read_component and the oracle — O_Q178, the from-scratch
-    rebuild without the ids — hash-gates that the metadata promotion
-    loses nothing (no ghost documents, no stale idf)."""
-    d = _t(spark, sf_dir, "documents")
-    qs = d.where(F.col("doc_id") % 200 == 0).select(
-        F.col("doc_id").alias("query_id"), "text"
-    )
-    dead = d.where(
-        (F.col("doc_id") % 200 != 0) & (F.col("doc_id") % 7 == 3)
-    ).select("doc_id")
-    with tempfile.TemporaryDirectory(
-        prefix="dlws_bm25m_epoch1_", ignore_cleanup_errors=True
-    ) as del_idx:
-        text.delete_from_bm25_index(
-            spark,
-            _bm25_index(spark, sf_dir, "q140"),
-            dead,
-            del_idx,
-            layout="manifest",
-        )
-        out = text.bm25_topk_indexed(spark, del_idx, qs, k=5)
-        return out.localCheckpoint(eager=True)
+    """The BM25 erasure committed as a manifest epoch, kept under its
+    name because the driver lists it. Every delete commits a manifest
+    epoch, so this is q178: same stripe, same O_Q178 rebuild pin."""
+    return q178_bm25_delete(spark, sf_dir)
 
 
 def q194_hits_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6701,7 +6636,6 @@ def q198_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 emb.where(is_delta & (F.col("vec_id") % 2 == half)),
                 out,
                 vec_dim=64,
-                layout="manifest",
             )
             cow.set_current(spark, root, out, expected=base)
             epochs.append(out)
@@ -7349,7 +7283,6 @@ def q208_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             base,
             emb.where(F.col("vec_id") % 9 == 4).select("vec_id"),
             e1,
-            layout="manifest",
         )
         cow.set_current(spark, root, e1, expected=base)
         retrain_ivfpq_index(
@@ -8847,17 +8780,13 @@ def _maint_root(spark: SparkSession, sf_dir: str) -> str:
             spark, root, text.bm25_staleness_report(spark, root)
         )
         e1 = cow.new_epoch_path(spark, root, label="merge")
-        text.merge_bm25_index(
-            spark, cow.get_current(spark, root), b, e1, layout="manifest"
-        )
+        text.merge_bm25_index(spark, cow.get_current(spark, root), b, e1)
         cow.set_current(spark, root, e1, expected=e0)
         e2 = cow.new_epoch_path(spark, root, label="compact")
         text.compact_bm25_index(spark, cow.get_current(spark, root), e2)
         cow.set_current(spark, root, e2, expected=e1)  # NO vacuum: debt
         e3 = cow.new_epoch_path(spark, root, label="merge2")
-        text.merge_bm25_index(
-            spark, cow.get_current(spark, root), c, e3, layout="manifest"
-        )
+        text.merge_bm25_index(spark, cow.get_current(spark, root), c, e3)
         cow.set_current(spark, root, e3, expected=e2)
 
     return _cached_dir("dlws_maint_plan_", sf_dir, "current.json", build)

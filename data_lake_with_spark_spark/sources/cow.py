@@ -9,10 +9,8 @@ sequence:
 
 1. :func:`check_target` — ``out_path`` is fresh (an op reads its base
    lazily while ``mode("overwrite")`` deletes the target, so an
-   in-place rewrite would destroy the index mid-read), ``layout`` is
-   ``"links"`` or ``"manifest"``, and a manifest base requires
-   ``layout="manifest"`` (its partitions live across epochs, so there
-   is no complete directory to link from).
+   in-place rewrite would destroy the index mid-read) and ``layout``
+   is ``"manifest"``.
 2. Changed-partition discovery — :func:`partition_values` collects the
    distinct partition values of a batch-sized frame (the partition is
    a pure hash of the batch keys, so no base scan is needed), and
@@ -22,10 +20,11 @@ sequence:
 3. :func:`commit` — Spark-writes ONLY the changed partitions to
    ``{out_path}/{component}`` (keyed repartition with a pool-scaled
    task count: one file per partition directory, directory creation
-   spread over the executors), promotes every unchanged partition from
-   the base, promotes the frozen whole components (centroids,
-   codebooks) and carries the JSON meta sidecars. A changed partition
-   with no surviving rows vanishes from the layout.
+   spread over the executors), writes the manifest that carries every
+   unchanged partition's owner forward from the base, references the
+   frozen whole components (centroids, codebooks) and carries the JSON
+   meta sidecars. A changed partition with no surviving rows vanishes
+   from the layout.
 4. :func:`compact` — rewrites the resolved view of a {component:
    partition columns} map into one self-contained plain layout, the
    vacuum/OPTIMIZE step that ends a manifest chain.
@@ -35,22 +34,16 @@ epoch path, write, compare-and-set :func:`set_current`, optional
 vacuum), the one tail shared by the streaming ingests, their in-stream
 compactions and the retrain ops.
 
-Promotion comes in two layouts:
-
-- **links** (default): unchanged partition directories are hard-linked
-  from the base (same bytes, new name — zero data written), with a
-  per-file copy fallback where links are refused and a Hadoop
-  ``FileUtil`` copy on remote schemes, which have no link primitive.
-  The result is a complete, self-contained directory.
-- **manifest**: the metadata redirect (the Iceberg/Delta answer, and
-  the only truly incremental option on an object store). A small
-  ``{component}_manifest.json`` maps every partition directory name to
-  the epoch URI that owns its current bytes; chains stay flat (owners
-  are resolved, never recursive) and readers resolve through
-  :func:`read_component`. Bytes written are the changed partitions
-  plus one small JSON. The trade: epochs accumulate until
-  :func:`compact` collapses them and :func:`vacuum_index` retires the
-  unreferenced ones.
+Promotion is a metadata redirect (the Iceberg/Delta answer, and the
+only incremental one on an object store, which has no link primitive).
+A small ``{component}_manifest.json`` maps every partition directory
+name to the epoch URI that owns its current bytes; chains stay flat
+(owners are resolved, never recursive) and readers resolve through
+:func:`read_component`. Bytes written are the changed partitions plus
+one small JSON. The trade: an epoch reads its unchanged partitions from
+the epochs before it, so those stay until :func:`compact` collapses the
+chain and :func:`vacuum_index` retires the unreferenced epochs. A plain
+layout (a build, a compaction) serves and maintains as a base.
 
 Every component records its schema in ``{component}/_schema.json``:
 the column types made nullable (Spark reads Parquet as nullable), data
@@ -59,8 +52,7 @@ writers :func:`write_partitioned` and :func:`write_whole`, which every
 family's build (hence the retrains and the streaming bootstraps) and
 :func:`compact` use, write it after the Spark write; :func:`commit`
 records the base's resolved view widened by the columns the epoch
-wrote — in the record under the links layout, in the manifest's
-``schema`` field under the manifest layout. Reader:
+wrote in the manifest's ``schema`` field. Reader:
 :func:`read_component` hands the record's data columns to the Parquet
 reader, so no read pays a footer-inference job; partition columns keep
 the types Spark infers from the directory names (a ``bigint``
@@ -72,11 +64,9 @@ listing skips names starting with ``_``, so the record never reaches a
 scan.
 
 :func:`commit` returns the promotion stats dict (``partition_col``,
-``changed_partitions``, ``promoted_dirs``, ``linked_files``,
-``copied_files``, ``linked_bytes``, ``remote_copied_dirs``, plus
-``carried_entries``/``rewritten_entries`` for manifests) — the ops
-return it so tests can assert bytes-written-∝-batch instead of
-trusting it.
+``changed_partitions``, ``promoted_dirs``, ``carried_entries`` and
+``rewritten_entries``) — the ops return it so tests can assert
+bytes-written-∝-batch instead of trusting it.
 """
 
 from __future__ import annotations
@@ -130,121 +120,19 @@ def assert_fresh_out(op: str, base_path: str, out_path: str) -> None:
         )
 
 
-def _link_or_copy_tree(src_dir: str, dst_dir: str) -> tuple[int, int, int]:
-    """Replicate ``src_dir`` into ``dst_dir`` (one level of files plus
-    nested dirs, recursively), hard-linking each regular file and
-    falling back to a byte copy where the filesystem refuses links.
-    Returns (n_linked, n_copied, linked_bytes)."""
-    linked = copied = linked_bytes = 0
-    os.makedirs(dst_dir, exist_ok=True)
-    for name in os.listdir(src_dir):
-        src = os.path.join(src_dir, name)
-        dst = os.path.join(dst_dir, name)
-        if os.path.isdir(src):
-            sub = _link_or_copy_tree(src, dst)
-            linked, copied, linked_bytes = (
-                linked + sub[0],
-                copied + sub[1],
-                linked_bytes + sub[2],
-            )
-            continue
-        try:
-            os.link(src, dst)
-            linked += 1
-            linked_bytes += os.path.getsize(src)
-        except OSError:
-            shutil.copy2(src, dst)
-            copied += 1
-    return linked, copied, linked_bytes
-
-
-def _hadoop_copy_dir(spark, src: str, dst: str) -> None:
-    """Remote-scheme fallback: Hadoop FileUtil directory copy (object
-    stores expose no link primitive)."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    src_p = jvm.org.apache.hadoop.fs.Path(src)
-    dst_p = jvm.org.apache.hadoop.fs.Path(dst)
-    src_fs = src_p.getFileSystem(conf)
-    dst_fs = dst_p.getFileSystem(conf)
-    jvm.org.apache.hadoop.fs.FileUtil.copy(
-        src_fs, src_p, dst_fs, dst_p, False, conf
-    )
-
-
 def written_bytes(path: str) -> int:
-    """Total size of files under ``path`` that exist ONLY there
-    (st_nlink == 1) — i.e. bytes this layout actually materialized,
-    excluding hard-linked promotions. Local paths only (tests /
-    measurements)."""
+    """Total size of the files under ``path`` — for a manifest epoch,
+    the bytes it wrote (its changed partitions, manifests and
+    sidecars), since the partitions it carries stay with their owners.
+    Local paths only (tests / measurements)."""
     local = _local_path(path)
     if local is None:
         raise ValueError(f"written_bytes: non-local path {path!r}")
     total = 0
     for root, _dirs, files in os.walk(local):
         for name in files:
-            st = os.stat(os.path.join(root, name))
-            if st.st_nlink == 1:
-                total += st.st_size
+            total += os.path.getsize(os.path.join(root, name))
     return total
-
-
-def _promote_partitions(
-    spark,
-    base_dir: str,
-    out_dir: str,
-    partition_col: str,
-    changed_values,
-) -> dict:
-    """Links layout: promote every ``{partition_col}=value`` directory
-    of ``base_dir`` whose value is NOT in ``changed_values`` into
-    ``out_dir`` by hard link (copy fallback; Hadoop copy on remote
-    schemes). Values compare as Hive directory-suffix strings (Spark
-    writes ``cent_id=5`` for bigint 5), so ints and their string forms
-    match either way. The changed set is exact by construction, so
-    anything outside it is byte-identical to the base."""
-    changed = {str(v) for v in changed_values}
-    stats = {
-        "partition_col": partition_col,
-        "changed_partitions": sorted(changed),
-        "promoted_dirs": 0,
-        "linked_files": 0,
-        "copied_files": 0,
-        "linked_bytes": 0,
-        "remote_copied_dirs": 0,
-    }
-    local_base = _local_path(base_dir)
-    local_out = _local_path(out_dir)
-    prefix = f"{partition_col}="
-    if local_base is not None and local_out is not None:
-        os.makedirs(local_out, exist_ok=True)
-        for name in sorted(os.listdir(local_base)):
-            if not name.startswith(prefix):
-                continue
-            if name[len(prefix):] in changed:
-                continue
-            n_l, n_c, b_l = _link_or_copy_tree(
-                os.path.join(local_base, name),
-                os.path.join(local_out, name),
-            )
-            stats["promoted_dirs"] += 1
-            stats["linked_files"] += n_l
-            stats["copied_files"] += n_c
-            stats["linked_bytes"] += b_l
-        return stats
-    # remote scheme: FileUtil per-directory copy (no link primitive)
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    base_p = jvm.org.apache.hadoop.fs.Path(base_dir)
-    fs = base_p.getFileSystem(conf)
-    for status in fs.listStatus(base_p):
-        name = status.getPath().getName()
-        if not name.startswith(prefix) or name[len(prefix):] in changed:
-            continue
-        _hadoop_copy_dir(spark, f"{base_dir}/{name}", f"{out_dir}/{name}")
-        stats["promoted_dirs"] += 1
-        stats["remote_copied_dirs"] += 1
-    return stats
 
 
 def _abs_uri(path: str) -> str:
@@ -389,10 +277,9 @@ def _read_dir(spark, comp_dir: str):
 def read_component(spark, index_path: str, component: str):
     """Read an index component resolving a manifest if one exists —
     THE entry point every index reader and maintenance op uses, so
-    plain, link-promoted, and manifest layouts serve identically.
-    Plain and link-promoted components read with their schema record,
-    a whole-component manifest with the record of the directory it
-    points at.
+    plain and manifest layouts serve identically. A plain component
+    reads with its schema record, a whole-component manifest with the
+    record of the directory it points at.
 
     Manifest resolution groups partition names by owning epoch URI
     and reads each owner with ``basePath`` = the owner (partition
@@ -499,7 +386,7 @@ def _promote_manifest(
     changed_values,
     schema,
 ) -> dict:
-    """Manifest layout: after the changed partitions landed in
+    """After the changed partitions landed in
     ``{out_path}/{component}``, write a manifest that points those
     names at the new epoch and carries every unchanged name's owner
     forward from the base (flat chain — owners are final URIs). The
@@ -538,33 +425,19 @@ def _promote_manifest(
         "changed_partitions": sorted(changed),
         "carried_entries": len(carried),
         "rewritten_entries": len(written),
-        "linked_files": 0,
-        "copied_files": 0,
-        "linked_bytes": 0,
         "promoted_dirs": len(carried),
-        "remote_copied_dirs": 0,
     }
 
 
-def _promote_whole(
-    spark, base_path: str, out_path: str, component: str, layout: str
-) -> None:
+def _promote_whole(spark, base_path: str, out_path: str, component: str) -> None:
     """Promote an UNPARTITIONED frozen component (centroids,
-    codebooks) whole: linked (links layout) or referenced by a
-    whole-component manifest pointing at the URI that owns the base's
-    bytes, following an existing reference so chains stay flat (a
-    reader takes the schema from that directory's record)."""
+    codebooks) whole: a whole-component manifest pointing at the URI
+    that owns the base's bytes, following an existing reference so
+    chains stay flat (a reader takes the schema from that directory's
+    record)."""
     import json
 
     base_dir = f"{base_path}/{component}"
-    if layout == "links":
-        local_base = _local_path(base_dir)
-        local_out = _local_path(f"{out_path}/{component}")
-        if local_base is not None and local_out is not None:
-            _link_or_copy_tree(local_base, local_out)
-        else:
-            _hadoop_copy_dir(spark, base_dir, f"{out_path}/{component}")
-        return
     m = read_manifest(spark, base_path, component)
     owner = m["whole"] if m is not None and m.get("whole") else _abs_uri(base_dir)
     _fs_write_text(
@@ -678,20 +551,17 @@ def write_whole(frame, path: str) -> None:
     _record_schema(frame.sparkSession, path, frame.schema)
 
 
-def check_target(
-    spark, op: str, base_path: str, out_path: str, layout: str, component: str
-) -> None:
-    """Commit step 1: raise unless ``out_path`` is fresh, ``layout``
-    is valid, and a manifest base (judged by ``component``, the
-    partitioned one) is maintained with ``layout="manifest"``."""
+def check_target(op: str, base_path: str, out_path: str, layout: str) -> None:
+    """Commit step 1: raise unless ``out_path`` is fresh and ``layout``
+    is ``"manifest"``, the one commit layout (a self-contained
+    directory is what the family's ``compact_*_index`` writes)."""
     assert_fresh_out(op, base_path, out_path)
-    if layout not in ("links", "manifest"):
-        raise ValueError(f"layout must be 'links' or 'manifest', got {layout!r}")
-    if layout == "links" and read_manifest(spark, base_path, component):
+    if layout != "manifest":
         raise ValueError(
-            f"{op}: base index uses a manifest layout — its partitions "
-            "live across epochs, so there is no complete directory to "
-            "link from; pass layout='manifest'"
+            f"{op}: layout must be 'manifest', got {layout!r}; every "
+            "merge and delete commits a manifest epoch — compact it "
+            "with the family's compact_*_index for a self-contained "
+            "directory"
         )
 
 
@@ -731,7 +601,6 @@ def commit(
     frame,
     base_path: str,
     out_path: str,
-    layout: str,
     component: str,
     partition_cols: "str | list[str]",
     changed,
@@ -740,35 +609,28 @@ def commit(
     sort_col: str | None = None,
 ) -> dict:
     """Commit step 3: write ``frame`` — the full new content of the
-    ``changed`` partitions — to ``{out_path}/{component}``, then
-    promote the base's unchanged partitions by ``layout``, promote the
-    ``frozen`` whole components and carry the ``sidecars``. The write is
-    :func:`write_partitioned`'s with a task count scaled to the
-    executor pool, so leaf creation runs pool-wide; ``sort_col`` sorts
-    each file's rows, as the family's build does. The component's
-    schema — the base's view widened by ``frame``'s columns — goes to
-    the manifest, or to the schema record under the links layout.
-    Returns the promotion stats."""
+    ``changed`` partitions — to ``{out_path}/{component}``, then write
+    the manifest that carries the base's unchanged partitions forward,
+    promote the ``frozen`` whole components and carry the
+    ``sidecars``. The write is :func:`write_partitioned`'s with a task
+    count scaled to the executor pool, so leaf creation runs
+    pool-wide; ``sort_col`` sorts each file's rows, as the family's
+    build does. The component's schema — the base's view widened by
+    ``frame``'s columns — goes to the manifest. Returns the promotion
+    stats."""
     cols = _cols(partition_cols)
     par = (
         max(len(changed), spark.sparkContext.defaultParallelism)
         if changed
         else 1
     )
-    comp_dir = f"{out_path}/{component}"
-    _spark_write_partitioned(frame, comp_dir, cols, par, sort_col)
+    _spark_write_partitioned(frame, f"{out_path}/{component}", cols, par, sort_col)
     schema = _widened_schema(spark, base_path, component, frame.schema, cols)
-    if layout == "manifest":
-        stats = _promote_manifest(
-            spark, base_path, out_path, component, cols[0], changed, schema
-        )
-    else:
-        _record_schema(spark, comp_dir, schema, cols)
-        stats = _promote_partitions(
-            spark, f"{base_path}/{component}", comp_dir, cols[0], changed
-        )
+    stats = _promote_manifest(
+        spark, base_path, out_path, component, cols[0], changed, schema
+    )
     for name in frozen:
-        _promote_whole(spark, base_path, out_path, name, layout)
+        _promote_whole(spark, base_path, out_path, name)
     for name in sidecars:
         _carry_sidecar(spark, base_path, out_path, name)
     return stats
@@ -782,8 +644,8 @@ def compact(
     sidecars=(),
     sort_cols: "dict | None" = None,
 ) -> dict:
-    """Commit step 4: collapse an index (plain, link-promoted, or a
-    manifest epoch chain) into one self-contained plain layout at
+    """Commit step 4: collapse an index (plain, or a manifest epoch
+    chain) into one self-contained plain layout at
     ``out_path``. ``components`` maps each component to its partition
     column(s), None for an unpartitioned one; ``sort_cols`` names the
     per-file sort a component's build applies (BM25's ``tok``). The
@@ -1202,13 +1064,8 @@ def publish(spark, root: str, label: str, expected, write, vacuum=()):
 
 
 def _tree_bytes(spark, path: str) -> int:
-    local = _local_path(path)
-    if local is not None:
-        total = 0
-        for r, _d, files in os.walk(local):
-            for name in files:
-                total += os.path.getsize(os.path.join(r, name))
-        return total
+    if _local_path(path) is not None:
+        return written_bytes(path)
     jvm = spark._jvm  # noqa: SLF001
     conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
     p = jvm.org.apache.hadoop.fs.Path(path)
@@ -1262,7 +1119,7 @@ def live_epochs(
     on — the current epoch itself plus every epoch under
     ``{root}/epochs`` that owns bytes per the current manifests for
     the given ``components`` — and the set of owner URIs OUTSIDE the
-    root (links-layout bases elsewhere; reported, never touched).
+    root (a plain base outside the root; reported, never touched).
 
     This live set is the chain length a reader pays (read
     amplification = number of distinct owner epochs a resolve spans),
@@ -1341,7 +1198,7 @@ def vacuum_index(
       ``["postings"]`` for BM25, ``["codes", "codebooks"]`` for PQ).
     - removed = every other epoch dir under ``{root}/epochs``.
       Nothing outside that directory is ever touched; owners outside
-      the root (a links-layout base elsewhere) are reported under
+      the root (a plain base outside the root) are reported under
       ``external_refs`` and left alone.
 
     RETENTION GUARD (r13 verdict #1): an epoch younger than
@@ -1406,9 +1263,9 @@ def lifecycle_report(spark, root: str, components: "list[str]") -> dict:
     RETIRED-but-unvacuumed count and bytes (what a vacuum would
     reclaim — nonzero means ``vacuum_on_compact=False`` deployments
     owe an out-of-band vacuum after quiesce), and any owners OUTSIDE
-    the root (links-layout bases vacuum must never touch). Pure
-    metadata: reads the pointer, the epoch listing, and the current
-    manifests — no parquet data is opened. Returns
+    the root (a plain base outside the root, which vacuum must never
+    touch). Pure metadata: reads the pointer, the epoch listing, and
+    the current manifests — no parquet data is opened. Returns
     ``{"current", "n_epochs", "live", "read_amplification",
     "retired", "retired_bytes", "external_refs"}``."""
     cur = get_current(spark, root)

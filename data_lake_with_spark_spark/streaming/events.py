@@ -576,9 +576,9 @@ def _maintain(
     ``bootstrap(batch, epoch)`` builds a root's first epoch;
     ``admit(spark, cur, batch)`` returns the rows to merge, or None to
     skip a replayed batch (no ``admit`` takes every row);
-    ``merge(spark, cur, rows, epoch, layout=...)`` writes a manifest
-    epoch; ``compact(spark, base, out)`` flattens the chain into a
-    plain epoch; ``components`` are what the compaction's vacuum
+    ``merge(spark, cur, rows, epoch)`` writes a manifest epoch;
+    ``compact(spark, base, out)`` flattens the chain into a plain
+    epoch; ``components`` are what the compaction's vacuum
     resolves; ``report(spark, root)`` is the ``stats_dir`` health row.
     ``prefix`` names the temporary checkpoint directory."""
 
@@ -595,7 +595,7 @@ def _maintain(
             rows = batch if admit is None else admit(spark, cur, batch)
             if rows is None:
                 return  # a verified replay: nothing to merge
-            write = partial(merge, spark, cur, rows, layout="manifest")
+            write = partial(merge, spark, cur, rows)
         cow.publish(spark, root, f"b{batch_id}", cur, write)
         if compact_every is not None and (
             _epochs_since_compact(spark, root) >= compact_every

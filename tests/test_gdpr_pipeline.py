@@ -25,9 +25,8 @@ def _plan(df) -> str:
 import pytest
 
 
-@pytest.mark.parametrize("layout", ["links", "manifest"])
 @pytest.mark.slow
-def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
+def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path):
     rnd = random.Random(42)
     n = 240
     docs_rows = [
@@ -67,29 +66,24 @@ def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
     tomb = spark.createDataFrame([(i,) for i in doomed], ["doc_id"])
 
     lakehouse.delete_keys(spark, table, tomb, ["doc_id"], 1)
-    text.delete_from_bm25_index(
-        spark, bm25_full, tomb, bm25_del, layout=layout
-    )
+    text.delete_from_bm25_index(spark, bm25_full, tomb, bm25_del)
     similarity.delete_from_ivf_index(
         spark,
         ivf_full,
         tomb.withColumnRenamed("doc_id", "vec_id"),
         ivf_del,
-        layout=layout,
     )
     similarity.delete_from_pq_index(
         spark,
         pq_full,
         tomb.withColumnRenamed("doc_id", "vec_id"),
         pq_del,
-        layout=layout,
     )
     similarity.delete_from_ivfpq_index(
         spark,
         ivfpq_full,
         tomb.withColumnRenamed("doc_id", "vec_id"),
         ivfpq_del,
-        layout=layout,
     )
     # fifth surface: the related-items co-occurrence state, keyed by
     # the user's baskets (same tombstone ids as baskets); the delete
@@ -111,7 +105,6 @@ def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
         ri_full,
         tomb.withColumnRenamed("doc_id", "basket"),
         ri_del,
-        layout=layout,
     )
 
     # 1) the three surfaces agree on the surviving id universe
@@ -127,8 +120,8 @@ def test_gdpr_erasure_reaches_table_and_both_indexes(spark, tmp_path, layout):
         .select("doc_id")
         .collect()
     }
-    # lists resolve through read_component: under the manifest layout
-    # the epoch dir holds ONLY the changed partitions
+    # lists resolve through read_component: the manifest epoch's dir
+    # holds ONLY the changed partitions
     from data_lake_with_spark_spark.sources import cow
 
     ivf_ids = {

@@ -1,12 +1,13 @@
 """Copy-on-write index maintenance: bytes written must scale with the
 BATCH's partition footprint, not the corpus (the round-9 verdict's
 headline gap — merge/delete used to rewrite the entire lists/postings
-layout). These tests assert the I/O contract structurally: unchanged
-partition directories are HARD-LINKED from the base (st_nlink ≥ 2 —
-zero new bytes), only changed partitions contain freshly-written
-files, and the materialized-bytes fraction is small when the batch
-is; serving equality with a from-scratch rebuild stays pinned by the
-pre-existing merge/delete tests and the q176–q178 driver oracles."""
+layout). These tests assert the I/O contract structurally on the
+manifest epoch every merge and delete commits: the epoch directory
+holds only the changed partitions, its manifest points every other
+partition (and every frozen component) at the base, a fully emptied
+partition vanishes, and the written-bytes fraction is small when the
+batch is; serving equality with a from-scratch rebuild stays pinned by
+the merge/delete tests and the q176–q178 driver oracles."""
 
 from __future__ import annotations
 
@@ -20,66 +21,73 @@ from data_lake_with_spark_spark.operators import similarity, text
 from data_lake_with_spark_spark.sources import cow
 
 
-def _part_dirs(path: str) -> dict[str, list[os.stat_result]]:
-    out = {}
-    for name in sorted(os.listdir(path)):
-        full = os.path.join(path, name)
-        if os.path.isdir(full) and "=" in name:
-            out[name] = [
-                os.stat(os.path.join(full, f)) for f in os.listdir(full)
-            ]
-    return out
+def _part_dirs(path: str) -> set[str]:
+    """The partition directory names under ``path`` (none if absent)."""
+    if not os.path.isdir(path):
+        return set()
+    return {
+        n for n in os.listdir(path)
+        if "=" in n and os.path.isdir(os.path.join(path, n))
+    }
 
 
-def test_merge_ivf_cow_links_unchanged_partitions(spark, tmp_path):
-    """A small append+replace batch rewrites ONLY the partitions it
-    touches; every other cent_id= dir arrives by hard link and the
-    frozen centroids component is linked whole."""
+def _owners(spark, idx: str, comp: str) -> dict[str, set[str]]:
+    """The manifest's partition names of ``comp`` grouped by the
+    index directory that owns them."""
+    by_owner: dict[str, set[str]] = {}
+    for name, owner in cow.read_manifest(spark, idx, comp)["entries"].items():
+        by_owner.setdefault(os.path.dirname(owner), set()).add(name)
+    return by_owner
+
+
+def _value(name: str) -> str:
+    return name.split("=", 1)[1]
+
+
+def test_merge_ivf_cow_writes_only_changed_partitions(spark, tmp_path):
+    """A small append+replace batch writes ONLY the partitions it
+    touches; the manifest points every other cent_id= dir at the base
+    and the frozen centroids component at the base's whole."""
     rnd = random.Random(3)
     mk = lambda: [rnd.uniform(-1, 1) for _ in range(4)]  # noqa: E731
     base_rows = [(i, mk()) for i in range(200)]
     base = spark.createDataFrame(base_rows, ["vec_id", "embedding"])
     # replace one non-centroid id + append one fresh id: ≤ 3 changed
     # partitions (old home of 7, new homes of 7 and 201) out of 20
+    new7 = mk()
     batch = spark.createDataFrame(
-        [(7, mk()), (201, mk())], ["vec_id", "embedding"]
+        [(7, new7), (201, mk())], ["vec_id", "embedding"]
     )
     base_idx, out_idx = str(tmp_path / "base"), str(tmp_path / "out")
     similarity.build_ivf_index(base, base_idx, centroid_mod=10)
     stats = similarity.merge_ivf_index(spark, base_idx, batch, out_idx)
-    n_parts = len(_part_dirs(f"{base_idx}/lists"))
+    base_parts = _part_dirs(f"{base_idx}/lists")
     changed = set(stats["changed_partitions"])
-    assert 1 <= len(changed) <= 3 < n_parts
-    assert stats["promoted_dirs"] == len(
-        _part_dirs(f"{out_idx}/lists")
-    ) - len(
-        [
-            d
-            for d in _part_dirs(f"{out_idx}/lists")
-            if d.split("=", 1)[1] in changed
-        ]
+    assert 1 <= len(changed) <= 3 < len(base_parts)
+    owners = _owners(spark, out_idx, "lists")
+    assert set(owners) == {base_idx, out_idx}
+    # the epoch holds exactly the changed partitions, and owns them
+    written = _part_dirs(f"{out_idx}/lists")
+    assert written == owners[out_idx]
+    assert {_value(n) for n in written} == changed
+    # every other partition is the base's, untouched
+    carried = owners[base_idx]
+    assert carried == {n for n in base_parts if _value(n) not in changed}
+    assert stats["promoted_dirs"] == len(carried)
+    # centroids referenced whole (frozen contract → no bytes written)
+    assert not os.path.exists(f"{out_idx}/centroids")
+    assert cow.read_manifest(spark, out_idx, "centroids")["whole"] == (
+        f"{base_idx}/centroids"
     )
-    assert stats["linked_files"] > 0 and stats["copied_files"] == 0
-    # structural link check: unchanged dirs hold only multiply-linked
-    # files; changed dirs hold only freshly-materialized ones
-    for name, file_stats in _part_dirs(f"{out_idx}/lists").items():
-        value = name.split("=", 1)[1]
-        if value in changed:
-            assert all(st.st_nlink == 1 for st in file_stats), name
-        else:
-            assert all(st.st_nlink >= 2 for st in file_stats), name
-    # centroids linked whole (frozen contract → identical bytes free)
-    assert cow.written_bytes(f"{out_idx}/centroids") == 0
     # bytes materialized ∝ batch footprint, not corpus
-    written = cow.written_bytes(f"{out_idx}/lists")
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _d, files in os.walk(f"{out_idx}/lists")
-        for f in files
+    assert 0 < cow.written_bytes(f"{out_idx}/lists") < 0.5 * (
+        cow.written_bytes(f"{base_idx}/lists")
     )
-    assert 0 < written < 0.5 * total
-    # the merged layout still serves: replaced id has new vector,
-    # appended id is findable
+    # the resolved view holds the replaced vector and the fresh id
+    lists = cow.read_component(spark, out_idx, "lists")
+    assert lists.count() == 201
+    (row,) = lists.where(F.col("vec_id") == 7).collect()
+    assert list(row["embedding"]) == new7
     qs = base.where(F.col("vec_id").isin(1, 9))
     got = similarity.ivf_topk_indexed(spark, out_idx, qs, k=3, nprobe=2)
     assert got.count() > 0
@@ -97,7 +105,7 @@ def test_delete_ivf_cow_rewrites_only_touched_partitions(spark, tmp_path):
     similarity.build_ivf_index(full, full_idx, centroid_mod=10)
     # find one partition and delete EVERY id in it, plus one id from
     # another partition
-    lists = spark.read.parquet(f"{full_idx}/lists")
+    lists = cow.read_component(spark, full_idx, "lists")
     first_cent = lists.select("cent_id").orderBy("cent_id").first()["cent_id"]
     doomed = [
         r["vec_id"]
@@ -117,14 +125,18 @@ def test_delete_ivf_cow_rewrites_only_touched_partitions(spark, tmp_path):
     stats = similarity.delete_from_ivf_index(spark, full_idx, tomb, del_idx)
     changed = set(stats["changed_partitions"])
     assert str(first_cent) in changed and len(changed) == 2
-    out_parts = _part_dirs(f"{del_idx}/lists")
-    # fully-emptied partition is absent, not present-but-empty
-    assert f"cent_id={first_cent}" not in out_parts
-    # all other partitions except the two changed arrived by link
-    assert stats["promoted_dirs"] == len(_part_dirs(f"{full_idx}/lists")) - 2
+    owners = _owners(spark, del_idx, "lists")
+    # fully-emptied partition is absent, not present-but-empty: the
+    # epoch holds only the other changed partition
+    assert f"cent_id={first_cent}" not in set().union(*owners.values())
+    assert _part_dirs(f"{del_idx}/lists") == owners[del_idx]
+    assert {_value(n) for n in owners[del_idx]} == changed - {str(first_cent)}
+    # all other partitions stay with the base
+    n_full = len(_part_dirs(f"{full_idx}/lists"))
+    assert stats["promoted_dirs"] == len(owners[full_idx]) == n_full - 2
     survivors = {
         r["vec_id"]
-        for r in spark.read.parquet(f"{del_idx}/lists")
+        for r in cow.read_component(spark, del_idx, "lists")
         .select("vec_id")
         .collect()
     }
@@ -132,11 +144,11 @@ def test_delete_ivf_cow_rewrites_only_touched_partitions(spark, tmp_path):
     assert len(survivors) == 200 - len(doomed) - 1
 
 
-def test_merge_bm25_cow_links_untouched_buckets(spark, tmp_path):
+def test_merge_bm25_cow_writes_only_touched_buckets(spark, tmp_path):
     """A batch with a NARROW vocabulary touches only the buckets its
-    tokens hash to (plus replaced-id homes); the rest of the postings
-    layout is promoted by link. Single-token docs pin the bucket
-    footprint exactly."""
+    tokens hash to (plus replaced-id homes); the manifest points the
+    rest of the postings layout at the base. Single-token docs pin the
+    bucket footprint exactly."""
     vocab = [f"tok{i:03d}" for i in range(120)]
     base_docs = spark.createDataFrame(
         [(i, f"{vocab[i % 120]} {vocab[(i * 7) % 120]}") for i in range(300)],
@@ -150,18 +162,17 @@ def test_merge_bm25_cow_links_untouched_buckets(spark, tmp_path):
     stats = text.merge_bm25_index(spark, base_idx, batch, out_idx)
     changed = set(stats["changed_partitions"])
     assert len(changed) == 1  # one distinct token → one bucket
-    n_base = len(_part_dirs(f"{base_idx}/postings"))
-    assert stats["promoted_dirs"] == n_base - len(
-        changed & {d.split("=", 1)[1] for d in _part_dirs(f"{base_idx}/postings")}
+    base_parts = _part_dirs(f"{base_idx}/postings")
+    owners = _owners(spark, out_idx, "postings")
+    assert {_value(n) for n in owners[out_idx]} == changed
+    assert _part_dirs(f"{out_idx}/postings") == owners[out_idx]
+    assert owners[base_idx] == {
+        n for n in base_parts if _value(n) not in changed
+    }
+    assert stats["promoted_dirs"] == len(owners[base_idx])
+    assert 0 < cow.written_bytes(f"{out_idx}/postings") < 0.3 * (
+        cow.written_bytes(f"{base_idx}/postings")
     )
-    assert stats["linked_files"] > 0
-    written = cow.written_bytes(f"{out_idx}/postings")
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _d, files in os.walk(f"{out_idx}/postings")
-        for f in files
-    )
-    assert 0 < written < 0.3 * total
     # merged index serves the new doc and the untouched corpus alike
     qs = spark.createDataFrame(
         [(1, "tok001"), (2, "tok005")], ["query_id", "text"]
@@ -171,7 +182,7 @@ def test_merge_bm25_cow_links_untouched_buckets(spark, tmp_path):
     assert 1000 in ids
 
 
-def test_delete_bm25_cow_links_untouched_buckets(spark, tmp_path):
+def test_delete_bm25_cow_writes_only_touched_buckets(spark, tmp_path):
     """GDPR-delete of one doc rewrites only the buckets its tokens
     hash to; the deleted id is gone from the postings and doclens."""
     vocab = [f"w{i:03d}" for i in range(120)]
@@ -186,29 +197,29 @@ def test_delete_bm25_cow_links_untouched_buckets(spark, tmp_path):
     changed = set(stats["changed_partitions"])
     # doc 17 has ≤ 2 distinct tokens → ≤ 2 changed buckets
     assert 1 <= len(changed) <= 2
-    assert stats["linked_files"] > 0
+    owners = _owners(spark, del_idx, "postings")
+    written = owners.get(del_idx, set())
+    assert {_value(n) for n in written} <= changed
+    assert _part_dirs(f"{del_idx}/postings") == written
+    assert stats["promoted_dirs"] == len(owners[full_idx])
     post_ids = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{del_idx}/postings")
+        for r in cow.read_component(spark, del_idx, "postings")
         .select("doc_id")
         .distinct()
         .collect()
     }
     dl_ids = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{del_idx}/doclens")
+        for r in cow.read_component(spark, del_idx, "doclens")
         .select("doc_id")
         .collect()
     }
     assert 17 not in post_ids and 17 not in dl_ids
     assert len(dl_ids) == 299
-    written = cow.written_bytes(f"{del_idx}/postings")
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _d, files in os.walk(f"{del_idx}/postings")
-        for f in files
+    assert 0 < cow.written_bytes(f"{del_idx}/postings") < 0.3 * (
+        cow.written_bytes(f"{full_idx}/postings")
     )
-    assert 0 < written < 0.3 * total
 
 
 def test_norm_uri_guard_catches_remote_spellings(spark, tmp_path):

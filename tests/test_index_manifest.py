@@ -57,7 +57,6 @@ def test_ivf_manifest_merge_then_delete_chain(spark, tmp_path):
         n for n in os.listdir(f"{e1}/lists") if n.startswith("cent_id=")
     }
     assert {d.split("=", 1)[1] for d in e1_dirs} == changed1
-    assert st1["linked_bytes"] == 0 and st1["copied_files"] == 0
     m1 = cow.read_manifest(spark, e1, "lists")
     base_owner = os.path.abspath(f"{base_idx}/lists")
     for name, owner in m1["entries"].items():
@@ -97,11 +96,12 @@ def test_ivf_manifest_merge_then_delete_chain(spark, tmp_path):
     exp = _ivf_rows(spark, scratch, qs, k=5, nprobe=3)
     assert got == exp and len(got) > 0
     assert st2["rewritten_entries"] <= len(changed1) + 2
-    # links mode cannot consume a manifest base
-    with pytest.raises(ValueError, match="manifest"):
+    # the manifest epoch is the only commit layout
+    with pytest.raises(ValueError, match="compact_"):
         similarity.merge_ivf_index(
-            spark, e1, batch.limit(1), str(tmp_path / "x")
+            spark, e1, batch.limit(1), str(tmp_path / "x"), layout="links"
         )
+    assert not os.path.exists(tmp_path / "x")
 
 
 @pytest.mark.slow
@@ -128,7 +128,6 @@ def test_bm25_manifest_merge_delete_serving(spark, tmp_path):
     )
     text.build_bm25_index(base_docs, base_idx, n_buckets=32)
     st1 = text.merge_bm25_index(spark, base_idx, batch, e1, layout="manifest")
-    assert st1["linked_bytes"] == 0
     e1_dirs = {
         n for n in os.listdir(f"{e1}/postings") if n.startswith("tok_bucket=")
     }
@@ -162,12 +161,13 @@ def test_bm25_manifest_merge_delete_serving(spark, tmp_path):
         .collect()
     }
     assert ids.isdisjoint(dead) and 17 in ids
-    with pytest.raises(ValueError, match="manifest"):
+    with pytest.raises(ValueError, match="compact_"):
         text.delete_from_bm25_index(
             spark,
             e1,
             spark.createDataFrame([(1,)], ["doc_id"]),
             str(tmp_path / "y"),
+            layout="links",
         )
 
 
@@ -273,7 +273,7 @@ def test_compaction_collapses_epoch_chain(spark, tmp_path):
 @pytest.mark.slow
 def test_randomized_maintenance_chain_equals_rebuild(spark, tmp_path):
     """Randomized (seeded, deterministic) maintenance chains: from a
-    links-layout base, apply a random sequence of manifest merges
+    plain base, apply a random sequence of manifest merges
     (append + replace) and deletes, then assert the final served
     top-k is BIT-identical to a from-scratch build over the corpus
     state tracked in plain Python — the strongest correctness net
@@ -357,7 +357,6 @@ def test_randomized_maintenance_chain_equals_rebuild(spark, tmp_path):
     assert got == exp and len(got) > 0
 
 
-@pytest.mark.slow
 def test_randomized_bm25_chain_equals_rebuild(spark, tmp_path):
     """The BM25 twin of the randomized IVF chain: seeded merge/delete
     manifest epochs vs a tracked corpus dict; final served scores

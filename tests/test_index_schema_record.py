@@ -1,9 +1,10 @@
 """Schema records of index components: after a build, a merge, a delete
 and a compaction, ``cow.read_component`` resolves every component of
 all five index families to the schema Parquet footer inference gives
-for the same files, without running a Spark job — in the links and the
-manifest layout. A fully emptied component still serves its columns,
-and a component without a schema record raises."""
+for the same files, without running a Spark job — through a plain
+layout and the manifest epochs that maintain it. A fully emptied
+component still serves its columns, and a component without a schema
+record raises."""
 
 from __future__ import annotations
 
@@ -134,7 +135,7 @@ def _read_schema(spark, path, comp):
 
 @pytest.fixture(scope="module")
 def bases(spark, tmp_path_factory):
-    """One plain build per family, shared by both layouts."""
+    """One plain build per family."""
     built = {}
 
     def get(family):
@@ -148,7 +149,7 @@ def bases(spark, tmp_path_factory):
     return get
 
 
-@pytest.mark.parametrize("layout", ["links", "manifest"])
+@pytest.mark.parametrize("layout", ["manifest"])
 @pytest.mark.parametrize("family", list(FAMILIES))
 def test_component_schema_record(spark, tmp_path, bases, family, layout):
     corpus, _build, merge, delete, compact, id_col, comps = FAMILIES[family]

@@ -138,12 +138,12 @@ def test_ivfpq_serve_job_budget_and_local_relation(spark, ivfpq_layouts, layout)
 @pytest.mark.parametrize("layout", ["plain", "manifest"])
 def test_ivfpq_maintenance_job_budgets(spark, ivfpq_layouts, layout, tmp_path):
     """An IVFPQ merge runs at most 11 Spark jobs and a delete at most 6,
-    on either base layout. The batch and the delete ids are scanned from
-    Parquet, as a pipeline stages them: their id frames feed only semi
-    and anti joins and distinct collects, so a ``distinct`` of their own
-    would add a shuffle stage job to each."""
+    on either base layout, each committing a manifest epoch. The batch
+    and the delete ids are scanned from Parquet, as a pipeline stages
+    them: their id frames feed only semi and anti joins and distinct
+    collects, so a ``distinct`` of their own would add a shuffle stage
+    job to each."""
     path = ivfpq_layouts[layout]
-    commit = "links" if layout == "plain" else "manifest"
     _vectors(spark, range(200, 210), seed=13).repartition(2).write.parquet(
         str(tmp_path / "batch")
     )
@@ -157,13 +157,13 @@ def test_ivfpq_maintenance_job_budgets(spark, ivfpq_layouts, layout, tmp_path):
     n_merge, _ = _jobs(
         spark,
         lambda: similarity.merge_ivfpq_index(
-            spark, path, batch, str(tmp_path / "merged"), layout=commit
+            spark, path, batch, str(tmp_path / "merged")
         ),
     )
     n_delete, _ = _jobs(
         spark,
         lambda: similarity.delete_from_ivfpq_index(
-            spark, path, dels, str(tmp_path / "deleted"), layout=commit
+            spark, path, dels, str(tmp_path / "deleted")
         ),
     )
     assert n_merge <= 11 and n_delete <= 6, (n_merge, n_delete)

@@ -215,13 +215,13 @@ def test_ivfpq_rerank_recall_vs_exact(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivfpq_merge_links_upsert_cow(spark, tmp_path):
-    """Links-layout merge: upsert (one replace + appends) serves
-    identically to a from-scratch build over the merged corpus with
-    the same seed stripes; the changed set is EXACTLY the batch ids'
-    hash buckets (a pure function — cell moves stay local to the id's
-    bucket); unchanged bucket partitions are hard links, nested
-    cell dirs included."""
+def test_ivfpq_merge_upsert_cow(spark, tmp_path):
+    """Upsert (one replace + appends) serves identically to a
+    from-scratch build over the merged corpus with the same seed
+    stripes; the changed set is EXACTLY the batch ids' hash buckets (a
+    pure function — cell moves stay local to the id's bucket), the
+    epoch writes only those buckets (nested cell dirs inside) and its
+    manifest points every other bucket at the base."""
     rnd = random.Random(23)
     state = dict(_mk_corpus(rnd, range(200)))
     # appended ids avoid % 10 in (0, 1) so the scratch rebuild derives
@@ -250,19 +250,15 @@ def test_ivfpq_merge_links_upsert_cow(spark, tmp_path):
         ).collect()
     }
     assert changed == exp_changed
-    assert stats["linked_files"] > 0
-    for name in os.listdir(f"{out_idx}/codes"):
-        if not name.startswith("id_bucket="):
-            continue
-        b = int(name.split("=")[1])
-        if b in changed:
-            continue
-        for root, _dirs, files in os.walk(
-            os.path.join(f"{out_idx}/codes", name)
-        ):
-            for f in files:
-                st = os.stat(os.path.join(root, f))
-                assert st.st_nlink >= 2, (name, f)
+    written = {n for n in os.listdir(f"{out_idx}/codes") if "=" in n}
+    assert {int(n.split("=")[1]) for n in written} == changed
+    entries = cow.read_manifest(spark, out_idx, "codes")["entries"]
+    base_owner = f"{base_idx}/codes"
+    assert {n for n, o in entries.items() if o != base_owner} == written
+    assert stats["promoted_dirs"] == len(entries) - len(written)
+    assert 0 < cow.written_bytes(f"{out_idx}/codes") < 0.5 * (
+        cow.written_bytes(f"{base_idx}/codes")
+    )
     similarity.build_ivfpq_index(
         spark.createDataFrame(sorted(state.items()), ["vec_id", "embedding"]),
         scratch, dim=DIM, m=M, centroid_mod=10, n_buckets=16,
@@ -316,7 +312,6 @@ def test_ivfpq_manifest_chain_merge_delete_compact_vacuum(spark, tmp_path):
     )
     cow.set_current(spark, root, e1)
     state.update(batch)
-    assert st1["linked_bytes"] == 0 and st1["copied_files"] == 0
     e1_dirs = {
         n.split("=")[1]
         for n in os.listdir(f"{e1}/codes")

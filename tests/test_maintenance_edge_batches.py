@@ -1,10 +1,10 @@
 """Edge batches through the copy-on-write commit path of all five index
 families: merging an empty batch and deleting ids the index does not
-hold must change no partition and serve exactly what the base serves,
-in both the links and the manifest layout. For the three vector
-families an upsert batch must leave the same components and serve the
-same rows as a from-scratch build over the merged corpus, and a batch
-holding a frozen quantizer's source id must raise before writing."""
+hold must change no partition and serve exactly what the base serves.
+For the three vector families an upsert batch must leave the same
+components and serve the same rows as a from-scratch build over the
+merged corpus, and a batch holding a frozen quantizer's source id must
+raise before writing."""
 
 from __future__ import annotations
 
@@ -149,7 +149,7 @@ def bases(spark, tmp_path_factory):
     return get
 
 
-@pytest.mark.parametrize("layout", ["links", "manifest"])
+@pytest.mark.parametrize("layout", ["manifest"])
 @pytest.mark.parametrize("family", list(FAMILIES))
 def test_empty_merge_and_absent_delete_change_nothing(
     spark, tmp_path, bases, family, layout
@@ -186,8 +186,7 @@ FROZEN_ERRORS = {
 
 @pytest.fixture(scope="module")
 def rebuilt(tmp_path_factory):
-    """One from-scratch build per family over its merged corpus (the
-    same under both layouts)."""
+    """One from-scratch build per family over its merged corpus."""
     built = {}
 
     def get(family, corpus):
@@ -199,7 +198,7 @@ def rebuilt(tmp_path_factory):
     return get
 
 
-@pytest.mark.parametrize("layout", ["links", "manifest"])
+@pytest.mark.parametrize("layout", ["manifest"])
 @pytest.mark.parametrize("family", list(VEC_BUILDS))
 def test_vector_upsert_equals_rebuild(
     spark, tmp_path, bases, rebuilt, family, layout

@@ -32,14 +32,14 @@ def _topk_rows(df):
     )
 
 
-@pytest.mark.parametrize("layout", ["links", "manifest"])
+@pytest.mark.parametrize("layout", ["manifest"])
 def test_merge_equals_rebuild_over_full_history(spark, tmp_path, layout):
     rnd = random.Random(77)
     items = list(range(100, 160))
     hist = _mk_baskets(rnd, range(300), items)
     # a NARROW batch (4 baskets): its pair deltas hash into a small
     # bucket subset, so the CoW promotion has unchanged buckets to
-    # link — the same written-∝-batch contract the index families
+    # carry — the same written-∝-batch contract the index families
     # assert (a broad batch honestly touches ~every bucket)
     batch = _mk_baskets(rnd, range(300, 304), items)
     base_df = spark.createDataFrame(hist, ["basket", "item"])
@@ -62,17 +62,13 @@ def test_merge_equals_rebuild_over_full_history(spark, tmp_path, layout):
         graph.related_items(base_df, k=5, min_count=2)
     )
     assert stats["affected_items"] >= 1
-    if layout == "links":
-        assert stats["linked_files"] > 0
-    else:
-        assert stats["linked_bytes"] == 0 and stats["copied_files"] == 0
-        # epoch dirs hold ONLY the changed pair buckets
-        e_dirs = {
-            n.split("=")[1]
-            for n in os.listdir(f"{out_p}/pairs")
-            if n.startswith("pair_bucket=")
-        }
-        assert e_dirs == set(stats["changed_partitions"])
+    # epoch dirs hold ONLY the changed pair buckets
+    e_dirs = {
+        n.split("=")[1]
+        for n in os.listdir(f"{out_p}/pairs")
+        if n.startswith("pair_bucket=")
+    }
+    assert e_dirs == set(stats["changed_partitions"])
 
 
 def test_replayed_basket_rejected_and_floor_crossing(spark, tmp_path):
@@ -114,7 +110,7 @@ def _incidence(spark, baskets):
     )
 
 
-@pytest.mark.parametrize("layout", ["links", "manifest"])
+@pytest.mark.parametrize("layout", ["manifest"])
 @pytest.mark.parametrize("op", ["merge", "delete"])
 def test_zero_pair_delta_batch_keeps_serving_table(spark, tmp_path, op, layout):
     """A single-item basket adds or removes no pair support, only an
@@ -147,7 +143,6 @@ def test_zero_pair_delta_batch_keeps_serving_table(spark, tmp_path, op, layout):
     assert _topk_rows(graph.related_items_topk(spark, out_p)) == exp
 
 
-@pytest.mark.slow
 def test_randomized_merge_chain_equals_rebuild(spark, tmp_path):
     """Seeded random chain of manifest merge epochs vs a tracked
     history list: after every epoch the served top-k equals the
@@ -187,9 +182,7 @@ def test_randomized_merge_chain_equals_rebuild(spark, tmp_path):
         assert got == exp and len(got) > 0
 
 
-@pytest.mark.parametrize("layout", ["links", "manifest"])
-@pytest.mark.slow
-def test_delete_equals_rebuild_over_survivors(spark, tmp_path, layout):
+def test_delete_equals_rebuild_over_survivors(spark, tmp_path):
     """GDPR erasure (delete_from_related_items_state): tombstoning a
     basket-id set must serve bit-identical to a from-scratch
     related_items over the SURVIVING baskets. Ledger-driven: the op
@@ -209,16 +202,12 @@ def test_delete_equals_rebuild_over_survivors(spark, tmp_path, layout):
     graph.build_related_items_state(
         full_df, base_p, k=5, min_count=2, n_buckets=64
     )
-    stats = graph.delete_from_related_items_state(
-        spark, base_p, ids_df, out_p, layout=layout
-    )
+    stats = graph.delete_from_related_items_state(spark, base_p, ids_df, out_p)
     got = _topk_rows(graph.related_items_topk(spark, out_p))
     exp = _topk_rows(graph.related_items(surv_df, k=5, min_count=2))
     assert got == exp and len(got) > 0
     assert stats["deleted_basket_rows"] > 0
     assert stats["affected_items"] >= 1
-    if layout == "links":
-        assert stats["linked_files"] > 0
     # the ledger no longer holds the victims' rows (erasure at the
     # resolved-view level; physical bytes go at compact+vacuum, gated
     # in test_gdpr_pipeline.py)
@@ -226,9 +215,7 @@ def test_delete_equals_rebuild_over_survivors(spark, tmp_path, layout):
     assert led.where(F.col("basket").isin(victims)).count() == 0
     # idempotent replay: same ids again → identical serving table
     out2 = str(tmp_path / "o2")
-    graph.delete_from_related_items_state(
-        spark, out_p, ids_df, out2, layout=layout
-    )
+    graph.delete_from_related_items_state(spark, out_p, ids_df, out2)
     assert _topk_rows(graph.related_items_topk(spark, out2)) == exp
 
 
@@ -314,8 +301,7 @@ def test_delta_core_negative_support_raises(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NEGATIVE"):
         graph._apply_ri_state_delta(
-            spark, base_p, phantom, str(tmp_path / "o"), "links",
-            meta, sign=-1,
+            spark, base_p, phantom, str(tmp_path / "o"), meta, sign=-1,
         )
     # r15 (r14 ADVICE): the integrity gates run in the read-only
     # phase A, so a detected-corrupt state raises BEFORE any

@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_lake_with_spark_spark.operators import similarity
+from data_lake_with_spark_spark.sources import cow
 
 VECS = [
     (0, [1.0, 0.0, 0.0, 0.0]),
@@ -636,7 +637,7 @@ def test_merge_ivf_index_upsert_equals_scratch(spark, tmp_path):
     # centroids carried verbatim
     c_m = sorted(
         r["cent_id"]
-        for r in spark.read.parquet(f"{merged_idx}/centroids").collect()
+        for r in cow.read_component(spark, merged_idx, "centroids").collect()
     )
     assert c_m == [0, 10, 20]
     # replacing a centroid-source vector would leave the frozen
@@ -695,7 +696,7 @@ def test_delete_from_ivf_index_reaches_serving(spark, tmp_path):
     assert not any(n == 10 for (_, _, n, _) in got2)
     c2 = sorted(
         r["cent_id"]
-        for r in spark.read.parquet(f"{del2_idx}/centroids").collect()
+        for r in cow.read_component(spark, del2_idx, "centroids").collect()
     )
     assert c2 == [0, 10, 20]
     with pytest.raises(ValueError, match="in-place"):

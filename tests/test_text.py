@@ -697,7 +697,6 @@ def test_boilerplate_prefixes_hand_case(spark):
         text.boilerplate_prefixes(docs, prefix_len=0)
 
 
-@pytest.mark.slow
 def test_merge_bm25_index_upsert_equals_scratch(spark, tmp_path):
     """The incremental-maintenance contract: merging a batch that
     APPENDS new docs AND REPLACES an existing one yields an index
@@ -749,7 +748,6 @@ def test_merge_bm25_index_upsert_equals_scratch(spark, tmp_path):
         text.merge_bm25_index(spark, base_idx, batch, base_idx)
 
 
-@pytest.mark.slow
 def test_delete_from_bm25_index_equals_scratch(spark, tmp_path):
     """Erasure propagates to the sparse serving index: after
     delete_from_bm25_index, served scores are BIT-identical to an

@@ -391,8 +391,7 @@ def main() -> int:
             _cow.set_current(spark, root, e0)
             e1 = _cow.new_epoch_path(spark, root, label="drift")
             similarity.delete_from_ivfpq_index(
-                spark, e0, emb.where(doomed_pred).select("vec_id"), e1,
-                layout="manifest",
+                spark, e0, emb.where(doomed_pred).select("vec_id"), e1
             )
             _cow.set_current(spark, root, e1)
             # queries: 20 survivors of the erased clusters (the
