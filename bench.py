@@ -62,9 +62,9 @@ SKIP = {
     # build (priced in-entry by the benched q201).
     "q208_ivfpq_retrain",
     # same semantics as q33_dedup_clusters (which IS benched) through
-    # the iterative distributed CC branches: on local mode their cost
-    # is pure per-round scheduler latency, which measures the
-    # harness, not the plan.
+    # the iterative distributed CC loop (q91 is an alias of q100): on
+    # local mode its cost is pure per-round scheduler latency, which
+    # measures the harness, not the plan.
     "q91_dedup_clusters_distributed",
     "q100_dedup_clusters_two_phase",
     # builds a persisted IVF index (one-time maintenance op) before

@@ -13,7 +13,8 @@ conscious DataFrame composition:
   materialized — the scale path for fuzzy dedup.
 - :func:`ngram_jaccard_pairs` — exact n-gram Jaccard via
   shingle-explode + self-join on shingle (inverted-index join). Exact
-  but heavier; use as the verifier behind MinHash candidates.
+  but heavier; :func:`jaccard_verify_pairs` is the verifier behind
+  MinHash candidates.
 - :func:`simhash` — 16-bit SimHash over whitespace tokens with a
   portable md5-derived per-token hash; near-dups share (or nearly
   share) a fingerprint.
@@ -291,14 +292,13 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_k: int = 5,
     threshold: float = 0.0,
-    prefilter: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for all pairs sharing ≥1 shingle.
 
     Inverted-index self-join: |A∩B| from the join, |A|,|B| from a
-    per-doc count, J = inter/(|A|+|B|-inter). Pass ``prefilter``
-    (id_a,id_b candidate pairs, e.g. from MinHash) to bound the join
-    at scale.
+    per-doc count, J = inter/(|A|+|B|-inter). To verify only given
+    candidate pairs (e.g. from MinHash), use
+    :func:`jaccard_verify_pairs`, which never builds the full join.
     """
     sh = _shingle_frame(df, id_col, text_col, shingle_k)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
@@ -310,8 +310,6 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    if prefilter is not None:
-        inter = inter.join(prefilter, on=["id_a", "id_b"], how="left_semi")
     sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     return (
@@ -407,17 +405,14 @@ def _cc_two_phase(
     id_col: str,
     max_iterations: int,
 ) -> DataFrame:
-    """Web-scale regime for :func:`connected_components`: alternating
-    large-star / small-star rounds (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14 — the algorithm
-    Google ran on trillion-edge graphs; no counterpart in the
-    reference repo). Unlike min-label propagation, whose per-round
-    state is one label row per NODE but whose round count is
-    O(log diameter) only after pointer-jumping's self-join, each star
-    round here is a pure per-neighborhood min over the EDGE set —
-    two window shuffles, no self-join — and the edge set provably
-    shrinks toward a star forest in O(log² n) rounds (O(log n)
-    observed). The win at scale: every operation is per-source-
+    """Distributed regime for :func:`connected_components`:
+    alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — the
+    algorithm Google ran on trillion-edge graphs; no counterpart in
+    the reference repo). Each round is a pure per-neighborhood min
+    over the EDGE set — two window shuffles, no self-join — and the
+    edge set provably shrinks toward a star forest in O(log² n)
+    rounds (O(log n) observed). Every operation is per-source-
     neighborhood (map-side after one hash partition on src), so hot
     components never concentrate on one reducer the way a global
     label join can.
@@ -429,10 +424,12 @@ def _cc_two_phase(
 
     Convergence: the edge set is a fixpoint of both operations, at
     which point every edge is (child, component-min). Checked with
-    ``exceptAll`` both ways only when counts match (cheap guard
-    first). Each round is ``localCheckpoint``-truncated like the
-    pointer-jump loop — the edge frame is rebuilt from itself every
-    round, so lineage would otherwise double.
+    one ``exceptAll`` only when counts match (cheap guard first; both
+    frames are distinct sets, so equal counts and an empty difference
+    mean equal sets). Each round is ``localCheckpoint``-truncated:
+    the edge frame is rebuilt from itself every round, so the logical
+    plan would otherwise grow every iteration, and ``cache()`` does
+    not stop Catalyst from re-analyzing that lineage on every action.
     """
     ed = (
         edges.select("id_a", "id_b")
@@ -486,7 +483,7 @@ def _cc_two_phase(
         ed = new_ed
     if not converged:
         warnings.warn(
-            f"connected_components(two_phase): max_iterations="
+            "connected_components: max_iterations="
             f"{max_iterations} exhausted before the edge set reached "
             "its star-forest fixpoint; returned clusters may be "
             "under-merged (rounds needed is O(log^2 n)).",
@@ -549,7 +546,6 @@ def connected_components(
     id_col: str = "doc_id",
     max_iterations: int = 20,
     collect_threshold: int = 1_500_000,
-    algorithm: str = "pointer_jump",
 ) -> DataFrame:
     """Connected components over a candidate-pair graph: every node
     labeled with the MINIMUM id reachable from it — the clustering
@@ -571,116 +567,25 @@ def connected_components(
       64.6s vs 24.0s at 8M — the collect + Python loop grows
       super-linearly past it); on a real cluster the driver collect
       also pays network, so err lower, not higher.
-    - larger: iterative distributed min-label propagation (below).
-      This is the 100 TB path — star-edge inputs
-      (:func:`minhash_star_edges`) keep the edge count linear in
-      docs, and each round is a pair of shuffles over (id, label)
-      rows, never materializing anything quadratic.
-
-    Iterative min-label propagation with pointer jumping: each round
-    (a) pulls the minimum neighbor label across edges and (b) jumps
-    through the label mapping itself (``cluster := cluster[cluster]``),
-    so chains collapse in O(log diameter) rounds, not O(diameter).
-    Each round's result is truncated with ``localCheckpoint(eager)``
-    before the next round builds on it. ``cache()`` is NOT enough
-    here: the pointer-jump self-join references the round's frame
-    twice, so the LOGICAL plan doubles every iteration, and caching
-    only short-circuits physical execution — Catalyst still
-    re-analyzes the full exponential lineage on every action (at
-    ~8 rounds that is minutes of driver time with zero tasks
-    running; observed 18+ min on a 5k-doc graph). Checkpointing
-    makes each round's plan a flat scan of materialized blocks. On a
-    cluster, pass a reliable ``spark.sparkContext.setCheckpointDir``
-    path and swap ``checkpoint`` for ``localCheckpoint`` if executor
-    loss matters — same interface.
-
-    ``algorithm`` selects the distributed regime (graphs above
-    ``collect_threshold``): ``"pointer_jump"`` (min-label
-    propagation, below) or ``"two_phase"`` (alternating large-star /
-    small-star, :func:`_cc_two_phase` — the web-scale choice: pure
-    per-neighborhood edge transforms, no global label self-join).
-    Both converge to the same min-id labeling; both are
-    value-verified against the q33 oracle (q91 / q100).
+    - larger: alternating large-star / small-star rounds
+      (:func:`_cc_two_phase`, Kiveris et al. SoCC'14). This is the
+      100 TB path — star-edge inputs (:func:`minhash_star_edges`)
+      keep the edge count linear in docs, and each round is two
+      window shuffles over the edge set, never a global label
+      self-join nor anything quadratic. Each round is truncated with
+      ``localCheckpoint(eager)``; on a cluster, pass a reliable
+      ``spark.sparkContext.setCheckpointDir`` path and swap
+      ``checkpoint`` for ``localCheckpoint`` if executor loss
+      matters — same interface. Both regimes give the same min-id
+      labeling, value-verified against one oracle (q33 / q100).
 
     ``edges`` must have columns (id_a, id_b). Returns (id, cluster)
     with cluster = min reachable id.
     """
-    if algorithm not in ("pointer_jump", "two_phase"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}; use 'pointer_jump' or 'two_phase'"
-        )
     ed = edges.select("id_a", "id_b").localCheckpoint(eager=True)
     if collect_threshold and ed.count() <= collect_threshold:
         return _cc_driver_union_find(nodes, ed, id_col)
-    if algorithm == "two_phase":
-        return _cc_two_phase(nodes, ed, id_col, max_iterations)
-
-    labels = nodes.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("cluster")
-    ).localCheckpoint(eager=True)
-    bidir = (
-        ed.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(ed.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            bidir.join(labels, on=[bidir["src"] == labels["id"]])
-            .groupBy("dst")
-            .agg(F.min("cluster").alias("n_min"))
-        )
-        pulled = (
-            labels.join(
-                neighbor_min, on=[labels["id"] == neighbor_min["dst"]], how="left"
-            )
-            .select(
-                "id",
-                F.col("cluster").alias("_old"),
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("n_min"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-        )
-        mapping = pulled.select(
-            F.col("id").alias("_mid"), F.col("cluster").alias("_mcluster")
-        )
-        new_labels = (
-            pulled.join(mapping, on=[pulled["cluster"] == mapping["_mid"]], how="left")
-            .select(
-                "id",
-                "_old",
-                F.least(
-                    F.col("cluster"),
-                    F.coalesce(F.col("_mcluster"), F.col("cluster")),
-                ).alias("cluster"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # Convergence: labels only ever decrease (every update is a
-        # least(old, ...)), so changed == 0 <=> fixpoint. The previous
-        # label rides along as _old, so the check is one scan of the
-        # checkpointed round — no extra confirm round and no join
-        # against the previous iteration (each local round costs
-        # seconds of scheduler latency regardless of data size).
-        changed = (
-            new_labels.agg(
-                F.count(F.when(F.col("cluster") != F.col("_old"), 1)).alias("c")
-            ).collect()[0]["c"]
-        )
-        labels = new_labels.select("id", "cluster")
-        if changed == 0:
-            return labels
-    warnings.warn(
-        f"connected_components: max_iterations={max_iterations} exhausted "
-        "without reaching the fixpoint (a round with zero label changes); "
-        "returned clusters may be "
-        "under-merged. Raise max_iterations (rounds needed is "
-        "O(log(graph diameter)) with pointer jumping).",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    return labels
+    return _cc_two_phase(nodes, ed, id_col, max_iterations)
 
 
 def token_jaccard_blas(

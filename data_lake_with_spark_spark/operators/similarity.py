@@ -1346,9 +1346,10 @@ def all_pairs_blas(
       the cluster path; per-worker work scales with the executor's
       split only.
     - larger: raises instead of OOM-ing the driver, naming the scale
-      path — :func:`lsh_sign_buckets` /
-      :func:`dedup.embedding_near_dup_lsh` (bucket first, exact-pair
-      within bucket), same results filtered to same-bucket pairs.
+      path — :func:`dedup.embedding_near_dup_pairs` with
+      ``bucket_dims`` (:func:`lsh_sign_buckets` first, exact pairs
+      within each bucket), same results filtered to same-bucket
+      pairs.
     """
     import numpy as np
 
@@ -1361,8 +1362,8 @@ def all_pairs_blas(
             f"all_pairs_blas: corpus exceeds max_broadcast_rows="
             f"{max_broadcast_rows}; the exact all-pairs path requires a "
             "driver-broadcastable corpus. Use the LSH-bucketed path "
-            "(similarity.lsh_sign_buckets / dedup.embedding_near_dup_lsh) "
-            "for larger corpora."
+            "dedup.embedding_near_dup_pairs(bucket_dims=...) for larger "
+            "corpora."
         )
     if len(pdf) == 0:
         return local_frame(
@@ -1505,38 +1506,12 @@ def bucketed_topk(
 
     The equi-join on bucket replaces the cross join — at scale, write
     the corpus bucketed/partitioned by ``bucket`` and the probe is a
-    partition-pruned co-located join.
+    partition-pruned co-located join. This is
+    :func:`bucketed_topk_multiprobe` with a probe budget of 0.
     """
-    cb = _attach_norm(
-        lsh_sign_buckets(corpus, vec_col, dims).select(
-            F.col("bucket"),
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-        ),
-        "cv",
-        "_cn",
-        vec_dim,
+    return bucketed_topk_multiprobe(
+        corpus, queries, k, id_col, vec_col, dims, vec_dim, max_flips=0
     )
-    qb = _attach_norm(
-        lsh_sign_buckets(queries, vec_col, dims).select(
-            F.col("bucket"),
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-        ),
-        "qv",
-        "_qn",
-        vec_dim,
-    )
-    scored = (
-        cb.join(F.broadcast(qb), on="bucket", how="inner")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _paired_cos(vec_dim, "cv", "qv", "_cn", "_qn").alias("cos"),
-        )
-    )
-    return _topk(scored, "cos", k, desc=True)
 
 
 def bucketed_topk_multiprobe(

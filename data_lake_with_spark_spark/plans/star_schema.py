@@ -107,7 +107,6 @@ def build_songplays(
     log_df: DataFrame,
     song_df: DataFrame,
     parity: bool = True,
-    broadcast_songs: bool = True,
 ) -> DataFrame:
     """songplays fact: NextSong events matched to songs on
     (title, artist_name) — the E1 2-condition natural-string join
@@ -125,9 +124,8 @@ def build_songplays(
     skew-join handles the rest at scale.
     """
     events = next_song_events(log_df)
-    songs = F.broadcast(song_df) if broadcast_songs else song_df
     joined = events.join(
-        songs,
+        F.broadcast(song_df),
         on=[song_df["title"] == events["song"], song_df["artist_name"] == events["artist"]],
         how="inner",
     )

@@ -3075,37 +3075,27 @@ WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <
 
 
 def q91_dedup_clusters_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup clustering through connected_components' distributed
+    regime, kept under its name because the driver lists it. That
+    regime is one loop, so this is q100: same edges, same O_Q33 pin."""
+    return q100_dedup_clusters_two_phase(spark, sf_dir)
+
+
+def q100_dedup_clusters_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup clustering through connected_components' DISTRIBUTED
     regime: identical semantics (and oracle) to q33_dedup_clusters,
-    but with ``collect_threshold=0`` so the iterative min-label /
-    pointer-jumping loop runs instead of the driver union-find —
-    value-level proof that the 100 TB branch (the one a real cluster
-    would take on a billion-edge graph) converges to the same
-    transitive closure, not just the collect-when-small shortcut."""
+    but with ``collect_threshold=0`` so the alternating large-star /
+    small-star loop (Kiveris et al. SoCC'14, dedup._cc_two_phase)
+    runs instead of the driver union-find — value-level proof that
+    the 100 TB branch (the one a real cluster would take on a
+    billion-edge graph) converges to the same transitive closure, not
+    just the collect-when-small shortcut."""
     d = _t(spark, sf_dir, "documents")
     edges = dedup.minhash_star_edges(
         d, num_hashes=_MINHASH_N, shingle_k=_SHINGLE_K, bands=2
     )
     return dedup.connected_components(
         d.select("doc_id"), edges, collect_threshold=0
-    ).select(
-        F.col("id").alias("doc_id"), F.col("cluster").cast("bigint").alias("cluster")
-    )
-
-
-def q100_dedup_clusters_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup clustering through connected_components' THIRD regime:
-    alternating large-star/small-star (Kiveris et al. SoCC'14,
-    dedup._cc_two_phase) — same semantics and oracle as
-    q33/q91, value-level proof that the web-scale algorithm (pure
-    per-neighborhood edge transforms, no global label self-join)
-    reaches the same transitive closure."""
-    d = _t(spark, sf_dir, "documents")
-    edges = dedup.minhash_star_edges(
-        d, num_hashes=_MINHASH_N, shingle_k=_SHINGLE_K, bands=2
-    )
-    return dedup.connected_components(
-        d.select("doc_id"), edges, collect_threshold=0, algorithm="two_phase"
     ).select(
         F.col("id").alias("doc_id"), F.col("cluster").cast("bigint").alias("cluster")
     )
@@ -3705,7 +3695,7 @@ def q41_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     label_centroids). The full iterative loop (similarity.kmeans) is
     convergence-tested in tests/test_similarity.py; this proves one
     step's values against the SQL oracle — same strategy as the
-    connected-components pair (q33 driver regime / q91 distributed)."""
+    connected-components pair (q33 driver regime / q100 distributed)."""
     from data_lake_with_spark_spark.operators.similarity import (
         kmeans_assign,
         label_centroids,

@@ -60,6 +60,18 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def _driver_mem() -> str:
+    """Driver heap of a local session: ``$SPARK_GRAFT_DRIVER_MEM``,
+    else half of physical memory, between 1g and 24g."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        total = 8 << 30
+    return f"{max(1, min(24, total // (2 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "data_lake_with_spark_spark",
     master: str | None = None,
@@ -72,8 +84,10 @@ def get_spark(
     ``local[*]``); on a real cluster pass ``yarn``/``k8s://...`` or let
     spark-submit set it. ``shuffle_partitions`` defaults to 32 locally;
     at 100 TB size it to ~2-3× total executor cores with AQE coalescing
-    the tail. A local master also gets the engine's Python-worker
-    daemon (:mod:`data_lake_with_spark_spark.worker_daemon`) unless
+    the tail. A local master gets a driver heap of
+    ``$SPARK_GRAFT_DRIVER_MEM``, else half of physical memory between
+    1g and 24g, and the engine's Python-worker daemon
+    (:mod:`data_lake_with_spark_spark.worker_daemon`) unless
     ``extra_conf`` names its own ``spark.python.daemon.module``; a
     caller's ``spark.executorEnv.PYTHONPATH`` is kept, with the
     package's parent directory appended.
@@ -89,9 +103,7 @@ def get_spark(
     if master.startswith("local"):
         # single-JVM mode: the driver heap IS the executor heap;
         # the 1g default OOMs at sf0.1 (only applies on first JVM launch)
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-        )
+        builder = builder.config("spark.driver.memory", _driver_mem())
         # Workers run on this host, so they can import the daemon from
         # the driver's own package directory.
         if "spark.python.daemon.module" not in extra_conf:

@@ -58,14 +58,6 @@ def test_ngram_jaccard_exact_values(spark):
     assert (1, 3) not in rows or rows[(1, 3)] < 0.1
 
 
-def test_ngram_jaccard_prefilter_bounds_join(spark):
-    pre = spark.createDataFrame([(1, 4)], ["id_a", "id_b"])
-    out = dedup.ngram_jaccard_pairs(
-        _docs(spark), shingle_k=5, threshold=0.0, prefilter=pre
-    )
-    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(1, 4)}
-
-
 def test_jaccard_verify_size_bound_is_result_invariant(spark):
     """The size-ratio early exit (J <= min/max) must be invisible in
     the output: threshold=t survivors are bit-identical to filtering
@@ -149,16 +141,13 @@ def test_star_edges_same_components_as_pairs(spark):
 
 
 @pytest.mark.parametrize(
-    ("collect_threshold", "algorithm"),
+    "collect_threshold",
     [
-        (2_000_000, "pointer_jump"),  # driver union-find regime
-        (0, "pointer_jump"),  # distributed min-label loop
-        (0, "two_phase"),  # large-star/small-star (Kiveris et al.)
+        2_000_000,  # driver union-find regime
+        0,  # large-star/small-star (Kiveris et al.)
     ],
 )
-def test_connected_components_transitive_chain(
-    spark, collect_threshold, algorithm
-):
+def test_connected_components_transitive_chain(spark, collect_threshold):
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
     # chain 1-2-3, pair 4-5, singleton 6: greedy drop-lower-id would
     # miss that 3 belongs with 1; CC must label all of 1,2,3 with 1
@@ -168,15 +157,14 @@ def test_connected_components_transitive_chain(
     out = {
         r["id"]: r["cluster"]
         for r in connected_components(
-            nodes, edges, collect_threshold=collect_threshold, algorithm=algorithm
+            nodes, edges, collect_threshold=collect_threshold
         ).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-@pytest.mark.parametrize("algorithm", ["pointer_jump", "two_phase"])
-def test_connected_components_adversarial_chains(spark, algorithm):
-    """Both distributed regimes on shapes that stress convergence:
+def test_connected_components_adversarial_chains(spark):
+    """The distributed regime on shapes that stress convergence:
     a long descending-id chain (worst case for min propagation — the
     label must travel the full diameter), a star rooted at its max
     id, and two components sharing no ids."""
@@ -190,9 +178,7 @@ def test_connected_components_adversarial_chains(spark, algorithm):
 
     out = {
         r["id"]: r["cluster"]
-        for r in connected_components(
-            nodes, edges, collect_threshold=0, algorithm=algorithm
-        ).collect()
+        for r in connected_components(nodes, edges, collect_threshold=0).collect()
     }
     expect = {i: 100 for i in range(100, 100 + n + 1)}
     expect.update({50: 40, 40: 40, 41: 40, 42: 40, 43: 40})
@@ -217,9 +203,8 @@ def test_duplicated_spans(spark):
     assert got == {g1: (2, 2), g2: (2, 2)}
 
 
-@pytest.mark.parametrize("algorithm", ["pointer_jump", "two_phase"])
-def test_connected_components_warns_on_iteration_exhaustion(spark, algorithm):
-    """Both distributed regimes must WARN (not silently return) when
+def test_connected_components_warns_on_iteration_exhaustion(spark):
+    """The distributed regime must WARN (not silently return) when
     max_iterations runs out before the fixpoint — an under-merged
     clustering that looks complete is the dangerous failure mode."""
     import warnings as _warnings
@@ -234,14 +219,13 @@ def test_connected_components_warns_on_iteration_exhaustion(spark, algorithm):
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
         connected_components(
-            nodes, edges, collect_threshold=0, max_iterations=1,
-            algorithm=algorithm,
+            nodes, edges, collect_threshold=0, max_iterations=1
         ).collect()
     assert any(
         issubclass(w.category, RuntimeWarning)
         and "max_iterations" in str(w.message)
         for w in caught
-    ), algorithm
+    )
 
 
 def _low_dup_corpus(spark, n_docs, vocab=20000, doc_len=30, dup_rate=0.01):
@@ -407,8 +391,7 @@ def test_two_phase_truncated_labels_are_fixed_points(spark):
         labels = {
             r["id"]: r["cluster"]
             for r in dedup.connected_components(
-                nodes, e, collect_threshold=0, max_iterations=1,
-                algorithm="two_phase",
+                nodes, e, collect_threshold=0, max_iterations=1
             ).collect()
         }
     for x, lab in labels.items():

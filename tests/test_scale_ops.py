@@ -5,7 +5,10 @@ hand-computed facts."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
+import pytest
 
 from data_lake_with_spark_spark.operators import dedup
 from data_lake_with_spark_spark.operators.profile import summarize
@@ -100,6 +103,17 @@ def test_all_pairs_blas_equals_crossjoin_pairs(spark):
     assert driver_path == naive
     assert blas_path == naive
     assert (0, 1, 0.993884) in {(a, b, round(c, 6)) for a, b, c in naive}
+
+
+def test_all_pairs_blas_oversize_names_an_existing_scale_path(spark):
+    emb = _emb(spark).where(F.col("vec_id") < 2)
+    with pytest.raises(ValueError, match="max_broadcast_rows=1") as err:
+        all_pairs_blas(emb, threshold=0.5, max_broadcast_rows=1)
+    for text in (str(err.value), all_pairs_blas.__doc__):
+        named = re.findall(r"dedup\.(\w+)", text)
+        assert named == ["embedding_near_dup_pairs"], text
+        assert "bucket_dims" in text
+    assert callable(dedup.embedding_near_dup_pairs)
 
 
 def test_ivf_topk_finds_same_cluster_neighbor(spark):

@@ -71,6 +71,18 @@ def test_unchanged_archive_is_not_reread_and_changed_one_is(tmp_path, monkeypatc
     assert importlib.import_module("dlws_zip_mod_b").Y == 2
 
 
+@pytest.mark.parametrize(
+    ("phys_gib", "expect"), [(0.5, "1g"), (15, "7g"), (32, "16g"), (256, "24g")]
+)
+def test_driver_mem_is_half_of_physical_memory(monkeypatch, phys_gib, expect):
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": int(phys_gib * (1 << 30)) // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session._driver_mem() == expect
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._driver_mem() == "3g"
+
+
 def test_worker_task_rereads_no_zip_archive(spark):
     """At the stock daemon this reads ~16: one per zipimporter that
     ``pyspark.zip`` leaves on the worker."""
